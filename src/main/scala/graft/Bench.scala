@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, GraftSqlAccess, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlAccess}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 
 /** Per-round benchmark: times every registered query at
@@ -173,9 +173,33 @@ object Bench {
     else asked
   }
 
+  private def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.US, v)
+
+  /** The compact final stdout line: headline totals, per-family
+    * subtotals and the 24 most expensive entries — sized to fit whole
+    * inside a 2 KB tail capture. Every name and the sf path go through
+    * [[Json.str]], so an odd path cannot break the parse.
+    */
+  private[graft] def compactLine(total: Double, totalOp: Double, n: Int,
+                                 summed: Seq[(String, (Double, Double))],
+                                 load: String, sfDir: String): String = {
+    val famOf = (n: String) =>
+      if (n.startsWith("_")) "_" + n.stripPrefix("_").takeWhile(_ != '_')
+      else n.takeWhile(_ != '_')
+    val fams = summed.groupBy { case (k, _) => famOf(k) }.toSeq.sortBy(_._1)
+      .map { case (f, es) => s"${Json.str(f)}:${fmt(es.map(_._2._1).filter(_ >= 0).sum)}" }
+      .mkString("{", ",", "}")
+    val topQs = summed.sortBy(-_._2._1).take(24)
+      .map { case (k, (full, _)) => s"${Json.str(k)}:${fmt(full)}" }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
+      s""""total_op":${fmt(totalOp)},"n":$n,"families":$fams,""" +
+      s""""queries":$topQs,"load":$load,"sf":${Json.str(sfDir)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Engine.cpus
     val cores = Runtime.getRuntime.availableProcessors()
     // Bounded wait-for-idle (round-8 verdict #5): every driver-tail
     // record to date was taken on a contended host and is noise for
@@ -254,59 +278,7 @@ object Bench {
       System.err.println(f"[bench] WARNING: host 1-min load $loadStart%.1f exceeds " +
         f"half of $cores cores at start — this record is contention-distorted; " +
         "re-run on an idle host before comparing per-query numbers")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Broadcast discipline (scale safety): static auto-broadcast OFF —
-      // Catalyst's static size estimates for aggregate/cache-derived
-      // frames read tiny and would broadcast corpus-scale build sides
-      // (measured driver OOM at the 30x ScaleBench corpus); AQE promotes
-      // joins to broadcast only from ACTUAL runtime sizes. Explicit
-      // broadcast() on bounded frames is unaffected.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      // Partition discovery of cell-partitioned artifacts (up to 1024
-      // geo/IVF cell dirs) runs DRIVER-SIDE below this threshold: a
-      // 1024-task listing JOB costs ~1.7 s of pure task overhead per
-      // query CONSTRUCTION (measured, geo probe r8) vs ~50 ms of
-      // driver listStatus calls. Above ~8k dirs the distributed
-      // listing wins again - exactly Spark's intended use of the knob.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // Shuffle-partition scaling: sizing for the FIXTURE (32) starves
-      // a 100x corpus - each of 32 partitions then carries 100x the
-      // rows and the sort/shuffle spills (measured: the substring
-      // finder's real 1.2 slope at 30->100x collapses to ~linear at
-      // 512 initial partitions, 154 -> 107 s at 100x). The
-      // scale-correct discipline is a HIGH initial count with AQE
-      // coalescing down to the data: small queries still run ~32
-      // effective partitions, big shuffles get the fan-out they need.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached-plan builds go through AQE too (r14): the library's
-      // pinned frames (posting lists, candidate grams, LM type tables)
-      // are AGGREGATE outputs persisted for multiple consumers; with
-      // this off (the upstream default, kept for partitioning-stability
-      // conservatism) the cache materializes at the raw
-      // initialPartitionNum=512 and every consumer scan pays 512 tasks
-      // regardless of data size — measured 7x on the PMI unigram table
-      // at sf0.1. With it on, AQE coalesces the cache build exactly
-      // like any other shuffle, at every scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Local small-SF stand-in for cluster file parallelism: the
-      // fixture files are a few MB, far below the 128m default, so
-      // every scan would be ONE partition and per-row compute would
-      // single-thread. At real scale (multi-GB files) the default is
-      // correct and this override is harmless.
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      // FAIR scheduling so the concurrent multi-table import bench
-      // shares executor slots across per-table pools instead of FIFO
-      // head-of-line blocking behind the biggest table.
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(cpus)
 
     // Shuffle-volume accounting: bytes written to shuffle per query is
     // the scale-limiting quantity (network at 1000 executors) — worth
@@ -594,7 +566,7 @@ object Bench {
       val store = new etl.IndexStore(spark, out)
       val li = Tables(spark, sfDir, "lineitem")
       val t0 = System.nanoTime()
-      val n = store.bulkImport(li, "lineitem", "l_orderkey", numShards = cpus.toInt)
+      val n = store.bulkImport(li, "lineitem", "l_orderkey", numShards = cpus)
       val dt = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] bulk_import: $n rows in $dt%.2fs (${n / dt}%.0f rows/s)")
       Pins.release(spark)
@@ -846,11 +818,10 @@ object Bench {
     val results = coldResults ++ warmResults ++
       specialResults.flatMap(_._2).map { case (n, s) => n -> ((s, s)) }
 
-    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.US, v)
-    val qs = results.map { case (k, (full, _)) => s""""$k":${fmt(full)}""" }.mkString("{", ",", "}")
-    val qsOp = results.map { case (k, (_, op)) => s""""$k":${fmt(op)}""" }.mkString("{", ",", "}")
+    val qs = results.map { case (k, (full, _)) => s"${Json.str(k)}:${fmt(full)}" }.mkString("{", ",", "}")
+    val qsOp = results.map { case (k, (_, op)) => s"${Json.str(k)}:${fmt(op)}" }.mkString("{", ",", "}")
     val sh = shuffleByQuery
-      .map { case (k, v) => s""""$k":${fmt(v / 1e6)}""" }
+      .map { case (k, v) => s"${Json.str(k)}:${fmt(v / 1e6)}" }
       .mkString("{", ",", "}")
     // Percentile pseudo-entries stay first-class in `queries` but are
     // excluded from the headline sums — they are percentiles of batch
@@ -884,7 +855,7 @@ object Bench {
       s""""foreign_sys_cores_max":${fmt(foreignSysMax.get())},""" +
       s""""steal_cores_max":${fmt(stealMax.get())},""" +
       s""""cores":$cores,"contended":$contended,"rerun_skipped":$rerunSkipped,""" +
-      rerunAll.map(n => s""""$n"""").mkString(""""reruns":[""", ",", "]}")
+      rerunAll.map(Json.str).mkString(""""reruns":[""", ",", "]}")
     // Two emissions: the full record (per-query op times + shuffle) goes
     // to a committed file; stdout gets a LEAN driver-contract line —
     // round 1's full line was truncated by the driver's stdout capture,
@@ -896,14 +867,14 @@ object Bench {
     // round-trip adjudication.
     val probeJson = probes
       .map { case (k, p) =>
-        s""""$k":{"foreign":${fmt(p.foreign)},"majflt":${p.majflt},""" +
+        s"""${Json.str(k)}:{"foreign":${fmt(p.foreign)},"majflt":${p.majflt},""" +
           s""""read_mb":${fmt(p.readMb)},"io_wait_s":${fmt(p.ioWaitS)},""" +
           s""""steal_cores":${fmt(p.stealCores)}}""" }
       .mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_op":${fmt(totalOp)},"queries":$qs,"queries_op":$qsOp,"shuffle_mb":$sh,"probe":$probeJson,"load":$loadJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_op":${fmt(totalOp)},"queries":$qs,"queries_op":$qsOp,"shuffle_mb":$sh,"probe":$probeJson,"load":$loadJson,"sf":${Json.str(sfDir)}}"""
     val lean =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_op":${fmt(totalOp)},"queries":$qs,"load":$loadJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_op":${fmt(totalOp)},"queries":$qs,"load":$loadJson,"sf":${Json.str(sfDir)}}"""
     // Subset runs are dev probes — don't clobber the committed full
     // record by DEFAULT; an explicit SPARK_GRAFT_BENCH_OUT target is
     // intentional (per-family isolated records, adjudication repeats)
@@ -944,22 +915,10 @@ object Bench {
     // individual entries — sized to always fit whole inside a 2 KB
     // tail. Nothing is removed or renamed: the full per-query record
     // is still printed and written; this line is additive.
-    val famOf = (n: String) =>
-      if (n.startsWith("_")) "_" + n.stripPrefix("_").takeWhile(_ != '_')
-      else n.takeWhile(_ != '_')
-    val fams = summed.groupBy { case (k, _) => famOf(k) }.toSeq.sortBy(_._1)
-      .map { case (f, es) => s""""$f":${fmt(es.map(_._2._1).filter(_ >= 0).sum)}""" }
-      .mkString("{", ",", "}")
-    val topQs = summed.sortBy(-_._2._1).take(24)
-      .map { case (k, (full, _)) => s""""$k":${fmt(full)}""" }
-      .mkString("{", ",", "}")
     val loadCompact = s"""{"steal_cores_max":${fmt(stealMax.get())},""" +
       s""""foreign_cores_max":${fmt(foreignMax.get())},"contended":$contended,""" +
       s""""rerun_skipped":$rerunSkipped}"""
-    println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-        s""""total_op":${fmt(totalOp)},"n":${results.size},"families":$fams,""" +
-        s""""queries":$topQs,"load":$loadCompact,"sf":"$sfDir"}""")
+    println(compactLine(total, totalOp, results.size, summed, loadCompact, sfDir))
     spark.stop()
   }
 }

@@ -1,12 +1,25 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
-/** Dev tool: dump formatted physical plans of the headline queries to
-  * one markdown file (committed as PLANS.md) — the plan-shape record
-  * backing COVERAGE.md's scale claims.
-  * Usage: tools/run.sh graft.PlanDump [outFile] [sfDir]
+/** Dev tool: physical plans of registered queries, on the same
+  * [[Engine]] session Bench and Verify run. Three modes:
+  *
+  *  - `headline [outFile] [sfDir]` (the default with no arguments):
+  *    the planned shape of every headline query into one markdown
+  *    file, committed as PLANS.md — the plan-shape record backing
+  *    COVERAGE.md's scale claims. Plans only; no query runs.
+  *  - `query <name> [sfDir]`: one query's formatted plan, then its
+  *    post-AQE executed plan after a noop run, to stdout.
+  *  - `list <outDir> <suffix> <q1,q2,...> [sfDir]`: the same two plans
+  *    per query into `<outDir>/<query>_<suffix>.txt` — the before/after
+  *    evidence an optimization commits under plans/. AQE join
+  *    promotions are what several optimizations change, hence the
+  *    post-AQE plan.
+  *
+  * Usage: tools/run.sh graft.PlanDump [headline|query|list] ...
   */
 object PlanDump {
   val headline: Seq[String] = Seq(
@@ -67,59 +80,50 @@ object PlanDump {
     "search_facets_cardinality", "rel_approx_agg")
 
   def main(args: Array[String]): Unit = {
-    val out = if (args.nonEmpty) args(0) else "PLANS.md"
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // Broadcast discipline (scale safety): static auto-broadcast OFF —
-      // Catalyst's static size estimates for aggregate/cache-derived
-      // frames read tiny and would broadcast corpus-scale build sides
-      // (measured driver OOM at the 30x ScaleBench corpus); AQE promotes
-      // joins to broadcast only from ACTUAL runtime sizes. Explicit
-      // broadcast() on bounded frames is unaffected.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      // Partition discovery of cell-partitioned artifacts (up to 1024
-      // geo/IVF cell dirs) runs DRIVER-SIDE below this threshold: a
-      // 1024-task listing JOB costs ~1.7 s of pure task overhead per
-      // query CONSTRUCTION (measured, geo probe r8) vs ~50 ms of
-      // driver listStatus calls. Above ~8k dirs the distributed
-      // listing wins again - exactly Spark's intended use of the knob.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // Shuffle-partition scaling: sizing for the FIXTURE (32) starves
-      // a 100x corpus - each of 32 partitions then carries 100x the
-      // rows and the sort/shuffle spills (measured: the substring
-      // finder's real 1.2 slope at 30->100x collapses to ~linear at
-      // 512 initial partitions, 154 -> 107 s at 100x). The
-      // scale-correct discipline is a HIGH initial count with AQE
-      // coalescing down to the data: small queries still run ~32
-      // effective partitions, big shuffles get the fan-out they need.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached-plan builds go through AQE too (r14): the library's
-      // pinned frames (posting lists, candidate grams, LM type tables)
-      // are AGGREGATE outputs persisted for multiple consumers; with
-      // this off (the upstream default, kept for partitioning-stability
-      // conservatism) the cache materializes at the raw
-      // initialPartitionNum=512 and every consumer scan pays 512 tasks
-      // regardless of data size — measured 7x on the PMI unigram table
-      // at sf0.1. With it on, AQE coalesces the cache build exactly
-      // like any other shuffle, at every scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    def arg(i: Int, default: String) = if (args.length > i) args(i) else default
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
+    arg(0, "headline") match {
+      case "headline" => dumpHeadline(spark, arg(1, "PLANS.md"), arg(2, "/root/testdata/sf0.001"))
+      case "query" => println(executed(spark, args(1), arg(2, "/root/testdata/sf0.001"))._1)
+      case "list" =>
+        val (outDir, suffix, sfDir) = (args(1), args(2), arg(4, "/root/testdata/sf0.1"))
+        Files.createDirectories(Paths.get(outDir))
+        args(3).split(",").foreach { name =>
+          val (txt, secs) = executed(spark, name, sfDir)
+          val file = Paths.get(outDir, s"${name}_$suffix.txt")
+          Files.writeString(file, s"== $name ($suffix, $sfDir, noop ${f"$secs%.2f"} s) ==\n\n" + txt)
+          println(f"[plandump] $name%-40s $secs%6.2f s -> $file")
+        }
+      case other => sys.error(s"unknown mode '$other': expected headline, query or list")
+    }
+    spark.stop()
+  }
+
+  /** Formatted initial plan + post-AQE executed plan after a noop run,
+    * and the run's seconds.
+    */
+  private def executed(spark: SparkSession, name: String, sfDir: String): (String, Double) = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    val formatted = df.queryExecution.explainString(FormattedMode)
+    val t0 = System.nanoTime()
+    df.write.format("noop").mode("overwrite").save()
+    val secs = (System.nanoTime() - t0) / 1e9
+    val txt = formatted + "\n\n== post-AQE executed plan ==\n\n" +
+      df.queryExecution.executedPlan.toString
+    Pins.release(spark)
+    (txt, secs)
+  }
+
+  private def dumpHeadline(spark: SparkSession, out: String, sfDir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of headline queries\n\n")
-    sb.append(s"Generated by `graft.PlanDump` at sf0.001 (plan shapes are\n")
-    sb.append("scale-invariant; AQE may further split/coalesce at runtime).\n")
+    sb.append(s"Generated by `graft.PlanDump headline` at ${Paths.get(sfDir).getFileName} on the Engine session\n")
+    sb.append(s"(${spark.sparkContext.defaultParallelism} cores; plan shapes are scale-invariant,\n")
+    sb.append("AQE may further split/coalesce at runtime).\n")
     headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
       sb.append(s"\n## $name\n\n```\n")
-      val plan = df.queryExecution.executedPlan.toString
       sb.append(plan.take(8000))
       if (plan.length > 8000) {
         // Keep the scan evidence (PushedFilters / PartitionFilters /
@@ -129,9 +133,9 @@ object PlanDump {
           .foreach(l => sb.append(l.trim.take(700)).append('\n'))
       }
       sb.append("\n```\n")
+      Pins.release(spark)
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")
-    spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import java.nio.file.{Files, Paths}
@@ -23,51 +22,7 @@ object Recall {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outFile = if (args.length > 1) args(1) else "RECALL.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Broadcast discipline (scale safety): static auto-broadcast OFF —
-      // Catalyst's static size estimates for aggregate/cache-derived
-      // frames read tiny and would broadcast corpus-scale build sides
-      // (measured driver OOM at the 30x ScaleBench corpus); AQE promotes
-      // joins to broadcast only from ACTUAL runtime sizes. Explicit
-      // broadcast() on bounded frames is unaffected.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      // Partition discovery of cell-partitioned artifacts (up to 1024
-      // geo/IVF cell dirs) runs DRIVER-SIDE below this threshold: a
-      // 1024-task listing JOB costs ~1.7 s of pure task overhead per
-      // query CONSTRUCTION (measured, geo probe r8) vs ~50 ms of
-      // driver listStatus calls. Above ~8k dirs the distributed
-      // listing wins again - exactly Spark's intended use of the knob.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // Shuffle-partition scaling: sizing for the FIXTURE (32) starves
-      // a 100x corpus - each of 32 partitions then carries 100x the
-      // rows and the sort/shuffle spills (measured: the substring
-      // finder's real 1.2 slope at 30->100x collapses to ~linear at
-      // 512 initial partitions, 154 -> 107 s at 100x). The
-      // scale-correct discipline is a HIGH initial count with AQE
-      // coalescing down to the data: small queries still run ~32
-      // effective partitions, big shuffles get the fan-out they need.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached-plan builds go through AQE too (r14): the library's
-      // pinned frames (posting lists, candidate grams, LM type tables)
-      // are AGGREGATE outputs persisted for multiple consumers; with
-      // this off (the upstream default, kept for partitioning-stability
-      // conservatism) the cache materializes at the raw
-      // initialPartitionNum=512 and every consumer scan pays 512 tasks
-      // regardless of data size — measured 7x on the PMI unigram table
-      // at sf0.1. With it on, AQE coalesces the cache build exactly
-      // like any other shuffle, at every scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
     def pairsOf(name: String): Set[(Long, Long)] = {
       val s = SparkEntry.queries(name)(spark, sfDir)

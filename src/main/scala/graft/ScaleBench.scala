@@ -134,8 +134,9 @@ object ScaleBench {
     // cluster centers in [-1,1]^64, each vector = its cluster's center
     // + per-dim U(-0.1, 0.1) noise — the real-embedding-corpus geometry
     // (near-dup clusters, inter-center distance ≈ 6.5 vs within-cluster
-    // spread ≈ 0.5) that the i.i.d. fixture lacks; IvfDiag re-runs its
-    // probe-recall curve on this table unchanged, closing the "the
+    // spread ≈ 0.5) that the i.i.d. fixture lacks; the IvfDiag tool
+    // (last in commit a7d2fb6) ran its probe-recall curve on this
+    // table unchanged, closing the "the
     // 9/10 is the fixture's geometry, clustered data reads 10/10
     // cheaply" footnote with a measurement.
     val K = 32L
@@ -151,55 +152,6 @@ object ScaleBench {
         (col("cl") % 10).cast("int").as("label"))
       .repartition(spark.sparkContext.defaultParallelism)
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    fs.create(ready, true).close()
-  }
-
-  /** [[zipfCorpus]]'s multi-threshold sibling for the BANDING sweep
-    * (round-10 verdict #2): same Zipf(s=1) 50k-word vocabulary and
-    * document shape, but twins plant every 31st doc at a CYCLING
-    * token-mutation rate from `ratesPct` — 2/4/6% map to word-3-gram
-    * Jaccard ≈ (1−m)³/(2−(1−m)³) ≈ 0.90/0.79/0.71, i.e. one corpus
-    * carries planted pairs across the whole production near-dup
-    * operating range (the committed witness corpus plants only the
-    * 5% ≈ J 0.75 point). Docs-only (the sweep times no embedding
-    * operator). Fully deterministic like its sibling.
-    */
-  private[graft] def zipfCorpusMultiJ(spark: SparkSession, outDir: String,
-                                      nDocs: Long,
-                                      ratesPct: Seq[Int] = Seq(2, 4, 6)): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val ready = new org.apache.hadoop.fs.Path(s"$outDir/_READY")
-    if (fs.exists(ready)) return
-    fs.delete(new org.apache.hadoop.fs.Path(outDir), true)
-    import org.apache.spark.sql.Column
-    val V = 50000.0
-    def zipfWord(seed: Column, p: Column, salt: Int): Column = {
-      val u = pmod(xxhash64(seed, p, lit(salt)), lit(1000000L))
-        .cast("double") / lit(1000000.0)
-      concat(lit("w"), floor(pow(lit(V), u)).cast("long").cast("string"))
-    }
-    val rateLit = array(ratesPct.map(r => lit(r.toLong)): _*)
-    val base = spark.range(nDocs).select(col("id").as("i"),
-      col("id").as("doc_id"), lit(-1L).as("rate"))
-    val twins = spark.range(nDocs).filter(col("id") % 31 === 0)
-      .select(col("id").as("i"),
-        (col("id") + lit(ZipfTwinOffset)).as("doc_id"),
-        element_at(rateLit,
-          (pmod(col("id") / 31, lit(ratesPct.length.toLong)) + 1).cast("int")).as("rate"))
-    base.unionByName(twins)
-      .withColumn("n_tok",
-        (pmod(xxhash64(col("i"), lit(1)), lit(151L)) + lit(50L)).cast("int"))
-      .withColumn("text", concat_ws(" ",
-        transform(sequence(lit(1), col("n_tok")), p => {
-          val w = zipfWord(col("i"), p, 0)
-          val mutate = pmod(xxhash64(col("i"), p, lit(77)), lit(100L)) < col("rate")
-          when(col("rate") >= 0 && mutate, zipfWord(col("i"), p, 99)).otherwise(w)
-        })))
-      .select(col("doc_id"), col("text"), lit("en").as("lang"),
-        lit("zipf").as("source"), length(col("text")).cast("long").as("n_chars"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     fs.create(ready, true).close()
   }
 
@@ -305,50 +257,9 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scaledDir = s"/tmp/graft_scale_${factor}x"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalebench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Broadcast discipline (scale safety): static auto-broadcast OFF —
-      // Catalyst's static size estimates for aggregate/cache-derived
-      // frames read tiny and would broadcast corpus-scale build sides
-      // (measured driver OOM at the 30x ScaleBench corpus); AQE promotes
-      // joins to broadcast only from ACTUAL runtime sizes. Explicit
-      // broadcast() on bounded frames is unaffected.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      // Partition discovery of cell-partitioned artifacts (up to 1024
-      // geo/IVF cell dirs) runs DRIVER-SIDE below this threshold: a
-      // 1024-task listing JOB costs ~1.7 s of pure task overhead per
-      // query CONSTRUCTION (measured, geo probe r8) vs ~50 ms of
-      // driver listStatus calls. Above ~8k dirs the distributed
-      // listing wins again - exactly Spark's intended use of the knob.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // Shuffle-partition scaling: sizing for the FIXTURE (32) starves
-      // a 100x corpus - each of 32 partitions then carries 100x the
-      // rows and the sort/shuffle spills (measured: the substring
-      // finder's real 1.2 slope at 30->100x collapses to ~linear at
-      // 512 initial partitions, 154 -> 107 s at 100x). The
-      // scale-correct discipline is a HIGH initial count with AQE
-      // coalescing down to the data: small queries still run ~32
-      // effective partitions, big shuffles get the fan-out they need.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached-plan builds go through AQE too (r14): the library's
-      // pinned frames (posting lists, candidate grams, LM type tables)
-      // are AGGREGATE outputs persisted for multiple consumers; with
-      // this off (the upstream default, kept for partitioning-stability
-      // conservatism) the cache materializes at the raw
-      // initialPartitionNum=512 and every consumer scan pays 512 tasks
-      // regardless of data size — measured 7x on the PMI unigram table
-      // at sf0.1. With it on, AQE coalesces the cache build exactly
-      // like any other shuffle, at every scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${1 << 20}")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
+    val spark = Engine.session(extra = Map(
+      "spark.sql.streaming.forceDeleteTempCheckpointLocation" -> "true",
       // Shuffle/spill codec passthrough for the disk-bound witness
       // decades (lz4 default — Spark's own): the 1000× substring
       // witness's transient on-disk peak (shuffle files + sort spill
@@ -359,10 +270,7 @@ object ScaleBench {
       // a record is base-vs-scaled of the same run, same codec, so
       // slopes stay valid; cross-record byte comparisons must check
       // the stamp.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.io.compression.codec" -> sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")))
 
     // Controlled-probe mode (dev-only; the per-round records run the
     // full set once): SPARK_GRAFT_SCALE_ONLY=a,b limits the timed set,
@@ -378,8 +286,8 @@ object ScaleBench {
     // shuffle-slope claim. Zipf mode defaults the timed set to the
     // three char/word-gram dedup finders whose shuffle slopes the
     // witness exists to measure; the corpus DOES carry a (clustered)
-    // embeddings table, but its recall curve is measured separately
-    // by IvfDiag, not timed here.
+    // embeddings table, but its recall curve was measured separately
+    // (IvfDiag, last in commit a7d2fb6; SCALE.md), not timed here.
     // Whole-run load watermark (round-9 verdict #7 — the same
     // continuous sampling + foreign-cpu discrimination Bench uses):
     // the committed SCALE_*.json self-identifies when a co-scheduled

@@ -30,53 +30,10 @@ import org.apache.spark.sql.functions._
   * sampling noise, and the S=1 census equals substringIslands' own
   * nEligible accounting.
   *
-  * Usage: tools/run.sh graft.SubstrFrac <corpusDir> [k] [cap] [S] [tag]
-  * Prints one JSON line; appends to SUBSTRFRAC.jsonl when tag given.
+  * The CLI that wrote SUBSTRFRAC.jsonl last exists in commit a7d2fb6.
   */
 object SubstrFrac {
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val k = if (args.length > 1) args(1).toInt else llm.DedupQueries.SpanK
-    val cap = if (args.length > 2) args(2).toInt else llm.DedupQueries.MaxSpanGramDf
-    val s0 = if (args.length > 3) args(3).toLong else 1L
-    val tag = if (args.length > 4) Some(args(4)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-substrfrac")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached-plan builds go through AQE too (r14): the library's
-      // pinned frames (posting lists, candidate grams, LM type tables)
-      // are AGGREGATE outputs persisted for multiple consumers; with
-      // this off (the upstream default, kept for partitioning-stability
-      // conservatism) the cache materializes at the raw
-      // initialPartitionNum=512 and every consumer scan pays 512 tasks
-      // regardless of data size — measured 7x on the PMI unigram table
-      // at sf0.1. With it on, AQE coalesces the cache build exactly
-      // like any other shuffle, at every scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${1 << 20}")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Mechanism decades past the join's reach need corpora ScaleBench
-    // never ran: SPARK_GRAFT_GEN_ZIPF_DOCS=N generates the standard
-    // Zipf witness corpus at `dir` first (same generator, _READY-gated
-    // — a no-op when the corpus already exists).
-    sys.env.get("SPARK_GRAFT_GEN_ZIPF_DOCS").foreach { n =>
-      ScaleBench.zipfCorpus(spark, dir, n.toLong)
-    }
-    println(measureJson(spark, dir, k, cap, s0, tag))
-    spark.stop()
-  }
-
-  /** One measurement — shared with the LlmSpec estimator validation.
+  /** One measurement — the LlmSpec estimator validation runs it.
     *
     * Returns (pos_total, pos_band, pos_hot, grams_total, grams_band,
     * pairs_band): pairs_band is the SELF-JOIN OUTPUT mass the band
@@ -122,30 +79,5 @@ object SubstrFrac {
     ).head
     def g(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
     (g(0), g(1), g(2), g(3), g(4), g(5))
-  }
-
-  private def measureJson(spark: SparkSession, dir: String, k: Int,
-                          cap: Int, s0: Long, tag: Option[String]): String = {
-    val t0 = System.nanoTime()
-    val (posT, posB, posH, grT, grB, prB) = measure(spark, dir, k, cap, s0)
-    val secs = (System.nanoTime() - t0) / 1e9
-    val nDocs = Tables(spark, dir, "documents").count()
-    def fmt(d: Double) = "%.6f".formatLocal(java.util.Locale.US, d)
-    val json =
-      s"""{"dir":"$dir","docs":$nDocs,"k":$k,"cap":$cap,"sample_mod":$s0,""" +
-        s""""pos_sampled":$posT,"pos_band":$posB,"pos_hot":$posH,""" +
-        s""""grams_sampled":$grT,"grams_band":$grB,"pairs_band":$prB,""" +
-        s""""frac_band":${fmt(posB.toDouble / math.max(posT, 1L))},""" +
-        s""""frac_hot":${fmt(posH.toDouble / math.max(posT, 1L))},""" +
-        s""""pairs_per_pos":${fmt(prB.toDouble / math.max(posT, 1L))},""" +
-        s""""est_pos_band_total":${posB * s0},"secs":${fmt(secs)}""" +
-        tag.map(t => s""","tag":"$t"}""").getOrElse("}")
-    tag.foreach { _ =>
-      java.nio.file.Files.write(java.nio.file.Paths.get("SUBSTRFRAC.jsonl"),
-        (json + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
-    json
   }
 }

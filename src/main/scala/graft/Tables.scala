@@ -52,9 +52,8 @@ object Tables {
     * The ANN shortlist knobs (R = N/50) and quantizer-size knobs
     * (k = N/2000) need the corpus size N at plan-construction time.
     * A plain `df.count()` there runs a full count JOB during DataFrame
-    * construction — so plan-only consumers (PlanDump, Explain,
-    * PlanAudit) pay real scans, and every bench run pays one extra
-    * scan per query. This instead compiles count(*) to
+    * construction — so plan-only consumers (PlanDump) pay real scans,
+    * and every bench run pays one extra scan per query. This instead compiles count(*) to
     * `PushedAggregation` on the DSv2 parquet scan (the
     * rel_agg_pushdown cloned-session pattern — own SQLConf, shared
     * SparkContext), which answers from a few KB of row-group footers
@@ -77,13 +76,12 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.parquet's ts encoding varies by driver round: some rounds
     // ship TIMESTAMP(NANOS) — which Spark's vectorized reader rejects,
-    // so it is read as long (nanosAsLong) and truncated to micros here
-    // — and some ship micros TIMESTAMP_NTZ, which is cast to TIMESTAMP
-    // (identical values: every session here pins UTC) because
-    // Structured Streaming refuses watermarks on NTZ event time.
-    // Either way callers see one canonical TIMESTAMP column; DuckDB
-    // oracles see the same micros via epoch math.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // so it is read as long (Engine's nanosAsLong setting) and
+    // truncated to micros here — and some ship micros TIMESTAMP_NTZ,
+    // which is cast to TIMESTAMP (identical values: Engine pins UTC)
+    // because Structured Streaming refuses watermarks on NTZ event
+    // time. Either way callers see one canonical TIMESTAMP column;
+    // DuckDB oracles see the same micros via epoch math.
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events") df.schema("ts").dataType match {
       case LongType =>

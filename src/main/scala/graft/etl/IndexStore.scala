@@ -584,9 +584,7 @@ class IndexStore(spark: SparkSession, root: String) {
       // A created-but-never-loaded index has no parquet footers to
       // infer a schema from; it can't match anything, so it simply
       // contributes zero hits instead of failing the whole fan-out.
-      // (listIndexes already guarantees the dir exists.)
-      .filter(idx => fs.listStatus(dir(idx))
-        .exists(_.getPath.getName.endsWith(".parquet")))
+      .filter(idx => hasData(dir(idx)))
       .map { idx =>
         val df = read(idx)
         df.filter(graft.search.SearchQueries.anyFieldContains(df, keyword))
@@ -786,7 +784,6 @@ class IndexStore(spark: SparkSession, root: String) {
   def readByName(name: String): DataFrame =
     read(resolveAlias(name).getOrElse(name))
 
-  /** Doc count — parquet footer metadata only, no data scan. */
   /** Doc count; 0 for a created-but-never-written index (ES `_count`
     * on an empty index returns 0 — and a freshly rolled-over
     * generation IS such an index until its first bulk, so schema
@@ -794,16 +791,20 @@ class IndexStore(spark: SparkSession, root: String) {
     */
   def count(indexName: String): Long = {
     val d = dir(indexName)
-    // Data present = a top-level part file (flat layout) OR a hive
-    // partition directory (cell-/key-partitioned artifacts, which
-    // have ONLY `col=value` dirs at the top level — they counted as
-    // forever-empty before this check).
-    val hasFiles = fs.exists(d) &&
-      fs.listStatus(d).exists(st =>
-        (st.isFile && !st.getPath.getName.startsWith("_")) ||
-        (st.isDirectory && st.getPath.getName.contains("=")))
-    if (!hasFiles) 0L else spark.read.parquet(d.toString).count()
+    if (!hasData(d)) 0L else spark.read.parquet(d.toString).count()
   }
+
+  /** Data present = a top-level parquet part file (flat layout) OR a
+    * hive partition directory (cell-/key-partitioned artifacts, which
+    * have ONLY `col=value` dirs at the top level). Sidecars and commit
+    * markers (`_`-prefixed) and checksums (`.`-prefixed) are not data.
+    */
+  private def hasData(d: Path): Boolean =
+    fs.exists(d) && fs.listStatus(d).exists { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".") &&
+        (if (st.isFile) name.endsWith(".parquet") else name.contains("="))
+    }
 
   def read(indexName: String): DataFrame =
     spark.read.parquet(dir(indexName).toString)

@@ -157,14 +157,15 @@ object BpeQueries {
     * word-type aggregation 3–6× (what the entry checkpoint saves)
     * outweighs the checkpoint's eager-materialization floor.
     * Scale-adaptive, not a local[32] tune: the threshold is a corpus
-    * ROW count read from parquet footers (cheap, memoized), env-
-    * overridable, defaulting far above every fixture (5 000 docs at
-    * sf0.1) and far below any production corpus — at 100 TB the gate
-    * is always open and the r14 multi-pass saving stands.
+    * ROW count read from parquet footers (cheap, memoized), set far
+    * above every fixture (5 000 docs at sf0.1) and far below any
+    * production corpus — at 100 TB the gate is always open and the
+    * r14 multi-pass saving stands.
     */
   private[graft] def trainerEntryCheckpoint(s: SparkSession, dir: String): Boolean =
-    Tables.rowCount(s, dir, "documents") >=
-      sys.env.getOrElse("SPARK_GRAFT_TRAINER_CKPT_MIN_DOCS", "100000").toLong
+    Tables.rowCount(s, dir, "documents") >= TrainerCkptMinDocs
+
+  private val TrainerCkptMinDocs = 100000L
 
   private val NMerges = 12
 

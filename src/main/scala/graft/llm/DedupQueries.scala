@@ -129,8 +129,7 @@ object DedupQueries {
     * Choosing (b, r): candidate recall at exact Jaccard J is the
     * classic S-curve 1−(1−J^r)^b — more bands of fewer rows catch
     * lower-J twins at more candidates (the banding sweep measures the
-    * actual tradeoff on the Zipf witness corpus; see BandingSweep +
-    * SCALE.md). The registered query's default stays 8×4 (recall
+    * actual tradeoff on the Zipf witness corpus; see SCALE.md). The registered query's default stays 8×4 (recall
     * ≥0.9998 at the J≥0.9 fixture operating range, measured 0 false
     * candidates surviving verification); pipelines targeting the
     * production J 0.7–0.8 band should run 16×2 (the sweep's measured
@@ -1199,7 +1198,7 @@ object DedupQueries {
     "llm_dedup_minhash_banded" -> ((s, dir) =>
       // Default operating point 8×4 at exact J ≥ 0.2 — see
       // [[bandedCandidates]] for the (bands × rowsPerBand) dial and
-      // the measured recall/cost curve (BandingSweep → SCALE.md).
+      // the measured recall/cost curve (SCALE.md's banding sweep).
       bandedNearDup(Tables.forCompute(s, dir, "documents"),
           bands = 8, rowsPerBand = 4)
         .orderBy(col("doc_a"), col("doc_b"))),

@@ -718,7 +718,7 @@ object SimilarityQueries {
     // Measured recall honesty (historical — the IVF-probed family on
     // the i.i.d. fixture): a pure nProbe probe read 10/10 at sf0.01
     // but 9/10 at sf0.1, a Voronoi-BOUNDARY fact with a PUBLISHED
-    // probe-vs-recall curve (graft.IvfDiag; SCALE.md round-9 section):
+    // probe-vs-recall curve (SCALE.md round-9 section):
     // the missed neighbor's nearest cell is the query's 10th-ranked
     // of 16, so the curve is FLAT at 9/10 for nProbe 1..9 and reaches
     // 10/10 only at a 62% scan. SOAR-style spilled assignment (the
@@ -1519,8 +1519,8 @@ object SimilarityQueries {
     * nProbe is reliable (the honest flat-at-9/10 curve). The index
     * build therefore measures the margin ONCE — the fraction of rows
     * whose 2nd-nearest cell sits within τ²=[[MarginSpillTau2]] of
-    * their nearest (exactly the SOAR spill-selectivity census IvfDiag
-    * runs) — stores it in the model sidecar, and the served query
+    * their nearest (exactly the SOAR spill-selectivity census of
+    * SCALE.md's round-9 section) — stores it in the model sidecar, and the served query
     * auto-escalates a low-margin index
     * (frac ≥ [[MarginEscalateFrac]]) to the EXHAUSTIVE quantized
     * path: ADC over every cell's codes (still never raw floats until

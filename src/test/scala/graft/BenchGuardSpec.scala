@@ -54,7 +54,8 @@ class BenchGuardSpec extends AnyFunSuite {
   }
 
   test("scale/banding records ride the same guard (round-12 verdict #4)") {
-    // ScaleBench and BandingSweep write through Bench.recordTarget too:
+    // ScaleBench (and BandingSweep, last in commit a7d2fb6) write
+    // through Bench.recordTarget too:
     // SCALE_ZIPF_*.json are the cross-round slope references and
     // BANDING.json the (b,r) operating table — a steal-burst run must
     // divert, not replace, a committed idle record at those names.
@@ -68,5 +69,17 @@ class BenchGuardSpec extends AnyFunSuite {
       """{"docs":50520,"load":{"contended":false},"configs":{}}""")
     assert(Bench.recordTarget(banding, contended = true) ==
       banding.stripSuffix(".json") + "_contended.json")
+  }
+
+  test("the compact final line escapes names and the sf path into valid JSON") {
+    val sfDir = "/data/sf\"0.1\\odd\tdir"
+    val line = Bench.compactLine(3.5, 2.5, 2,
+      Seq("rel_a\"b" -> ((1.5, 1.0)), "_warm_x\ty" -> ((2.0, 1.5))),
+      """{"contended":false}""", sfDir)
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(tree.get("sf").asText == sfDir)
+    assert(tree.get("n").asInt == 2)
+    assert(tree.get("queries").get("rel_a\"b").asDouble == 1.5)
+    assert(tree.get("families").get("_warm").asDouble == 2.0)
   }
 }

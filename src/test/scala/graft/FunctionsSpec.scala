@@ -464,6 +464,18 @@ class FunctionsSpec extends AnyFunSuite {
     val n = spark.sql(
       "SELECT simhash64_native(text) AS sh FROM docs_fn").count()
     assert(n == Tables(spark, sf, "documents").count())
+    // A wrong argument count fails naming the function; hll_est alone
+    // takes one or two.
+    def err(q: String): String = {
+      val e = intercept[Exception](spark.sql(q).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    assert(err("SELECT cosine_sim(array(1d))").contains("cosine_sim expects 2"))
+    assert(err("SELECT simhash_md5('a', 'b')").contains("simhash_md5 expects 1"))
+    assert(err("SELECT hll_est(id, 64, 3) FROM range(4)").contains("hll_est expects 1 or 2"))
+    assert(spark.sql("SELECT hll_est(string(id)), hll_est(string(id), 128) FROM range(10)")
+      .count() == 1)
   }
 
   test("broadcast codebook == typedlit codebook on the full corpus (bit-exact)") {

@@ -122,6 +122,21 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(store.searchAll("no_such_token_anywhere").count() == 0)
   }
 
+  test("searchAll reaches hive-partitioned indexes") {
+    // A bulkImportPartitioned index has only `col=value` dirs at its
+    // top level and no top-level part file; it is loaded all the same.
+    val store = newStore
+    val orders = Tables(spark, sf, "orders")
+      .withColumn("o_bucket", col("o_orderkey") % 4)
+    store.bulkImportPartitioned(orders, "orders_live", "o_orderkey", "o_bucket")
+    val urgent = orders.filter(col("o_orderpriority") === "1-URGENT").count()
+    assert(urgent > 0)
+    val hits = store.searchAll("1-URGENT")
+    assert(hits.count() == urgent)
+    assert(hits.select("index_name").distinct().collect()
+      .map(_.getString(0)).toSeq == Seq("orders_live"))
+  }
+
   test("deleteWhere keeps NULL-predicate rows (ES matches-only semantics)") {
     import spark.implicits._
     val store = newStore

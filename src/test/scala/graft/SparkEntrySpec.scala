@@ -4,52 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // Broadcast discipline (scale safety): static auto-broadcast OFF —
-      // Catalyst's static size estimates for aggregate/cache-derived
-      // frames read tiny and would broadcast corpus-scale build sides
-      // (measured driver OOM at the 30x ScaleBench corpus); AQE promotes
-      // joins to broadcast only from ACTUAL runtime sizes. Explicit
-      // broadcast() on bounded frames is unaffected.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      // Partition discovery of cell-partitioned artifacts (up to 1024
-      // geo/IVF cell dirs) runs DRIVER-SIDE below this threshold: a
-      // 1024-task listing JOB costs ~1.7 s of pure task overhead per
-      // query CONSTRUCTION (measured, geo probe r8) vs ~50 ms of
-      // driver listStatus calls. Above ~8k dirs the distributed
-      // listing wins again - exactly Spark's intended use of the knob.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // Shuffle-partition scaling: sizing for the FIXTURE (32) starves
-      // a 100x corpus - each of 32 partitions then carries 100x the
-      // rows and the sort/shuffle spills (measured: the substring
-      // finder's real 1.2 slope at 30->100x collapses to ~linear at
-      // 512 initial partitions, 154 -> 107 s at 100x). The
-      // scale-correct discipline is a HIGH initial count with AQE
-      // coalescing down to the data: small queries still run ~32
-      // effective partitions, big shuffles get the fan-out they need.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Local small-SF stand-in for cluster file parallelism: the
-      // fixture files are a few MB, far below the 128m default, so
-      // every scan would be ONE partition and per-row compute would
-      // single-thread. At real scale (multi-GB files) the default is
-      // correct and this override is harmless.
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The engine session at 4 cores, with a throwaway warehouse. */
+  lazy val spark: SparkSession = Engine.session(4, Map(
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_warehouse").toString))
   val sf = "/root/testdata/sf0.001"
 
   /** Events fixture staged for streaming file sources: the

@@ -27,7 +27,8 @@ class VecIndexSpec extends AnyFunSuite {
     * deterministic centers in [-1,1]^64 + U(-0.1,0.1) noise — the
     * real-embedding-corpus shape), at an arbitrary size. Same xxhash
     * construction as ScaleBench's witness corpus, where the build
-    * margin measures 0.04 and IvfDiag reads 10/10 at nProbe=1.
+    * margin measures 0.04 and the probe curve reads 10/10 at nProbe=1
+    * (SCALE.md).
     */
   private def clusteredCorpus(n: Long) = {
     val K = 32L
