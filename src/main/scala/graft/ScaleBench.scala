@@ -171,6 +171,25 @@ object ScaleBench {
     "llm_ann_pq_topk",        // PQ encode (native) + ADC + re-rank
     "llm_ann_ivf_topk")       // KMeans cells + probe
 
+  /** The SCALE_*.json record. The base dir, corpus mode, io codec,
+    * query and witness names and probe keys go through [[Json.str]], so
+    * a base dir holding a quote, backslash or tab still yields a record
+    * a JSON reader parses. `load` and each query's and probe run's
+    * object are JSON already (numbers and booleans only).
+    */
+  private[graft] def record(base: String, baseDocs: Long, factor: Int,
+                            corpus: String, scaledDocs: Long, repeat: Int,
+                            ioCodec: String, heapMaxMb: Long, load: String,
+                            queries: Seq[(String, String)],
+                            probes: Seq[(String, Seq[String])]): String =
+    s"""{"base":${Json.str(base)},"base_docs":$baseDocs,"factor":$factor,""" +
+      s""""corpus":${Json.str(corpus)},"scaled_docs":$scaledDocs,"repeat":$repeat,""" +
+      s""""io_codec":${Json.str(ioCodec)},"heap_max_mb":$heapMaxMb,"load":$load,""" +
+      queries.map { case (n, obj) => s"${Json.str(n)}:$obj" }
+        .mkString(""""queries":{""", ",", "},") +
+      probes.map { case (k, runs) => s"${Json.str(k)}:[${runs.mkString(",")}]" }
+        .mkString(""""probes":{""", ",", "}}")
+
   private def timeNoop(df: DataFrame): Double = {
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()
@@ -686,7 +705,7 @@ object ScaleBench {
         if (repeat == 1) ""
         else s""","base_runs":[${bT.map(fmt).mkString(",")}]""" +
           s""","scaled_runs":[${sT.map(fmt).mkString(",")}]"""
-      s""""$n":{"base_s":${fmt(bT.min)},"scaled_s":${fmt(sT.min)},"ratio":${fmt(r)}$shJson$runsJson}"""
+      n -> s"""{"base_s":${fmt(bT.min)},"scaled_s":${fmt(sT.min)},"ratio":${fmt(r)}$shJson$runsJson}"""
     }
     val loadEnd = loadAvg()
     // `contended` = a TIMED window absorbed foreign cpu or steal (the
@@ -694,26 +713,21 @@ object ScaleBench {
     // `contendedAnyWindow` = the old whole-run view, still published.
     val contended = timedForeignMax.get() > 0.5 || timedStealMax.get() > 0.5
     val contendedAnyWindow = foreignMax.get() > 0.5 || stealMax.get() > 0.5
-    val json =
-      s"""{"base":"$baseDirEff","base_docs":$nBase,"factor":$factor,""" +
-        s""""corpus":"$corpusMode","scaled_docs":$nScaled,"repeat":$repeat,""" +
-        s""""io_codec":"${sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")}",""" +
-        s""""heap_max_mb":$heapMaxMb,""" +
-        s""""load":{"start":${fmt(loadStart)},"max":${fmt(loadMax.get())},""" +
+    val load =
+      s"""{"start":${fmt(loadStart)},"max":${fmt(loadMax.get())},""" +
         s""""end":${fmt(loadEnd)},"foreign_cores_max":${fmt(foreignMax.get())},""" +
         s""""steal_cores_max":${fmt(stealMax.get())},""" +
         s""""timed_foreign_max":${fmt(timedForeignMax.get())},""" +
         s""""timed_steal_max":${fmt(timedStealMax.get())},""" +
         s""""contended":$contended,""" +
-        s""""contended_any_window":$contendedAnyWindow},""" +
-        s""""queries":{${rows.mkString(",")}},""" +
-        // One probe object per timed run, keyed base/<op> and
-        // scaled/<op>, in run order — aligned with base_runs/
-        // scaled_runs so the min-selected number's own window is
-        // auditable (round-11 verdict #5/#6).
-        probeLog.map { case (k, runs) =>
-          s""""$k":[${runs.mkString(",")}]"""
-        }.mkString(""""probes":{""", ",", "}}")
+        s""""contended_any_window":$contendedAnyWindow}"""
+    // One probe object per timed run, keyed base/<op> and scaled/<op>,
+    // in run order — aligned with base_runs/scaled_runs so the
+    // min-selected number's own window is auditable (round-11 verdict
+    // #5/#6).
+    val json = record(baseDirEff, nBase, factor, corpusMode, nScaled, repeat,
+      sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"), heapMaxMb, load, rows,
+      probeLog.toSeq.map { case (k, runs) => k -> runs.toSeq })
     // Probe runs (explicit subset or off-record repeat count) get
     // their own file — the committed record name stays the full
     // canonical-config pass. Zipf mode's committed records run the

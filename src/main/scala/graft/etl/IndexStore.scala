@@ -32,6 +32,12 @@ class IndexStore(spark: SparkSession, root: String) {
 
   private def dir(index: String) = new Path(root, index.toLowerCase)
 
+  /** The session this store reads and writes through — for readers that
+    * build their own scan (a fixed schema, an artifact's hidden tables)
+    * and so must not pay [[read]]'s schema inference to get it.
+    */
+  private[graft] def session: SparkSession = spark
+
   /** Driver-side phase timings of the most recent partition-granular
     * maintenance call on THIS store instance — the `_stream_latency`
     * bench reads it per micro-batch to publish a lock/schema/probe/

@@ -54,16 +54,19 @@ object PrefixSum {
     // runs twice. Released the moment the checkpoint materializes —
     // nothing leaks to the caller, and the checkpoint carries all
     // later consumers (guide §5: persist the frame a multi-job
-    // operator re-reads, scoped to the operator).
-    val input = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // operator re-reads, scoped to the operator). A caller that cached
+    // `df` itself keeps its entry: `storageLevel` is the CacheManager
+    // lookup, and only an entry made here is released here.
+    val ownCache = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (ownCache) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sorted =
       try {
-        input
+        df
           .repartitionByRange(p, orderCols: _*)
           .sortWithinPartitions(orderCols: _*)
           .withColumn("__pid", spark_partition_id())
           .localCheckpoint(true)
-      } finally input.unpersist(false)
+      } finally if (ownCache) df.unpersist(false)
     // P subtotal rows to the driver — bounded by partition count.
     val subtotals = sorted.groupBy(col("__pid"))
       .agg(sum(valueCol).as("__sub"))

@@ -86,11 +86,33 @@ object SearchQueries {
     * index (ES stores the same; Lucene's "positions" index option).
     */
   private[graft] def postingsOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), size(tokens(col("text"))).as("n_tokens"),
-        posexplode(tokens(col("text"))).as(Seq("pos", "term")))
-      .groupBy(col("term"), col("doc_id"), col("n_tokens"))
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
+    castTo(PostingsSchema)(
+      docs.select(col("doc_id"), size(tokens(col("text"))).as("n_tokens"),
+          posexplode(tokens(col("text"))).as(Seq("pos", "term")))
+        .groupBy(col("term"), col("doc_id"), col("n_tokens"))
+        .agg(count(lit(1)).as("tf"),
+          sort_array(collect_list(col("pos"))).as("positions")))
+
+  /** The `seg=k` hive partition every table of the postings artifact
+    * carries in its directory names.
+    */
+  private val SegField = StructField("seg", IntegerType)
+
+  /** Schema of the postings artifact as read, `seg` last. [[postingsOf]]
+    * casts to it and [[resolvedPostings]] reads with it, so a read opens
+    * no footer to infer what the writer already fixed.
+    */
+  private[graft] val PostingsSchema = StructType(Seq(
+    StructField("term", StringType), StructField("doc_id", LongType),
+    StructField("n_tokens", IntegerType), StructField("tf", LongType),
+    StructField("positions", ArrayType(IntegerType)), SegField))
+
+  /** `df`'s columns named by `schema`, in its order and cast to its
+    * types — every field but `seg`, which the partition directory holds.
+    */
+  private def castTo(schema: StructType)(df: DataFrame): DataFrame =
+    df.select(schema.fields.toSeq.filter(_ != SegField)
+      .map(f => col(f.name).cast(f.dataType)): _*)
 
   /** (doc count, total token count) of a document frame. */
   private[graft] def corpusStatsOf(docs: DataFrame): (Double, Double) = {
@@ -145,6 +167,13 @@ object SearchQueries {
     */
   private[graft] val PostingsDeleted = "_deleted"
 
+  /** Schema of the `_deleted` rows: every row of `doc_id` in a segment
+    * at or below `kill_seg` is dead. [[upsertPostings]] casts its
+    * tombstones to it.
+    */
+  private[graft] val DeletedSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("kill_seg", IntegerType)))
+
   private def postingsDeletedPath(store: graft.etl.IndexStore): String =
     s"${store.artifactPath(PostingsName)}/$PostingsDeleted"
 
@@ -163,6 +192,13 @@ object SearchQueries {
     */
   private[graft] val PostingsDoclen = "_doclen"
 
+  /** Schema of the `_doclen` table as read, `seg` last; its writer
+    * [[writeDoclenRows]] casts to it.
+    */
+  private[graft] val DoclenSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("n_tokens", IntegerType),
+    SegField))
+
   private def postingsDoclenPath(store: graft.etl.IndexStore): String =
     s"${store.artifactPath(PostingsName)}/$PostingsDoclen"
 
@@ -175,7 +211,7 @@ object SearchQueries {
     */
   private def writeDoclenRows(store: graft.etl.IndexStore, rows: DataFrame,
                               seg: Int): Unit =
-    rows
+    castTo(DoclenSchema)(rows)
       .repartitionByRange(4, col("doc_id")).sortWithinPartitions("doc_id")
       .write.mode("overwrite")
       .parquet(s"${postingsDoclenPath(store)}/seg=$seg")
@@ -184,6 +220,42 @@ object SearchQueries {
                              seg: Int): Unit =
     writeDoclenRows(store, doclenOf(docs), seg)
 
+  private def fsOf(store: graft.etl.IndexStore): org.apache.hadoop.fs.FileSystem =
+    org.apache.hadoop.fs.FileSystem.get(
+      store.session.sparkContext.hadoopConfiguration)
+
+  /** The `seg=k` segment ids directly under `dir` (none if it is absent). */
+  private def segsOf(store: graft.etl.IndexStore, dir: String): Set[Int] = {
+    val fs = fsOf(store)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (!fs.exists(p)) Set.empty
+    else fs.listStatus(p)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg="))
+      .map(_.getPath.getName.stripPrefix("seg=").toInt).toSet
+  }
+
+  /** `rows` of a segmented table of the artifact (postings or doclen)
+    * minus the tombstoned ones: a row dies when some `_deleted` row has
+    * its doc_id and a kill_seg at or above its seg. Anti-joining the raw
+    * tombstones gives exactly the rows a join against max(kill_seg) per
+    * doc would keep, without that aggregate's shuffle. The broadcast is
+    * bounded by the updates since the last compaction. With no
+    * tombstones (the built-once case and every driver-gate query) the
+    * rows come back unjoined, so plans change only once maintenance
+    * has happened.
+    */
+  private def withoutTombstoned(store: graft.etl.IndexStore,
+                                rows: DataFrame): DataFrame = {
+    val deleted = postingsDeletedPath(store)
+    if (!fsOf(store).exists(new org.apache.hadoop.fs.Path(deleted))) rows
+    else {
+      val tomb = store.session.read.schema(DeletedSchema).parquet(deleted)
+      rows.join(broadcast(tomb),
+        rows("doc_id") === tomb("doc_id") && rows("seg") <= tomb("kill_seg"),
+        "left_anti")
+    }
+  }
+
   /** The resolved doclen view (tombstones applied — same rule as
     * [[resolvedPostings]]). Falls back to deriving from the resolved
     * postings when the `_doclen` dirs are absent (an artifact written
@@ -191,63 +263,30 @@ object SearchQueries {
     * correct under every history, fast on the normal path.
     */
   private def resolvedDoclen(store: graft.etl.IndexStore): DataFrame = {
-    val s = store.read(PostingsName).sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    val dl = new org.apache.hadoop.fs.Path(postingsDoclenPath(store))
-    def segsOf(p: org.apache.hadoop.fs.Path): Set[Int] =
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg="))
-        .map(_.getPath.getName.stripPrefix("seg=").toInt).toSet
+    val dl = postingsDoclenPath(store)
     // The doclen table is usable only when it covers EVERY live
     // postings segment — a pre-doclen artifact that received one
     // upsert has `_doclen/seg=<new>` but not the older segments, and
     // reading the partial table would silently under-count removed
     // docs. Coverage gaps (also: any crash window) fall back to
     // deriving from the postings; the next compaction heals the table.
-    val covered = fs.exists(dl) &&
-      segsOf(new org.apache.hadoop.fs.Path(store.artifactPath(PostingsName)))
-        .subsetOf(segsOf(dl))
-    if (!covered)
-      return resolvedPostings(store)
-        .select(col("doc_id"), col("n_tokens")).distinct()
-    val raw = s.read.parquet(dl.toString)
-    val deleted = new org.apache.hadoop.fs.Path(postingsDeletedPath(store))
-    if (!fs.exists(deleted)) raw.select(col("doc_id"), col("n_tokens"))
-    else {
-      val tomb = s.read.parquet(deleted.toString)
-        .groupBy(col("doc_id")).agg(max(col("kill_seg")).as("kill_seg"))
-      raw.join(broadcast(tomb),
-          raw("doc_id") === tomb("doc_id") && raw("seg") <= tomb("kill_seg"),
-          "left_anti")
+    val covered = fsOf(store).exists(new org.apache.hadoop.fs.Path(dl)) &&
+      segsOf(store, store.artifactPath(PostingsName)).subsetOf(segsOf(store, dl))
+    if (covered)
+      withoutTombstoned(store, store.session.read.schema(DoclenSchema).parquet(dl))
         .select(col("doc_id"), col("n_tokens"))
-    }
+    else resolvedPostings(store).select(col("doc_id"), col("n_tokens")).distinct()
   }
 
-  /** The SERVED view of the segmented postings: every segment's rows
+  /** The SERVED view of the segmented postings, read with the fixed
+    * [[PostingsSchema]] (no schema-inference job): every segment's rows
     * minus tombstoned (doc, seg<=kill_seg) rows — a doc updated in a
     * later segment leaves its old rows physically in place (segments
-    * are immutable) but logically dead. With no tombstones (the
-    * built-once case and every driver-gate query) this IS the raw
-    * scan: the anti-join is added only when `_deleted` exists, so
-    * query plans are unchanged until maintenance actually happens.
+    * are immutable) but logically dead. Building it runs no Spark job.
     */
-  private[graft] def resolvedPostings(store: graft.etl.IndexStore): DataFrame = {
-    val raw = store.read(PostingsName)
-    val s = raw.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    val deleted = new org.apache.hadoop.fs.Path(postingsDeletedPath(store))
-    if (!fs.exists(deleted)) raw
-    else {
-      val tomb = s.read.parquet(deleted.toString)
-        .groupBy(col("doc_id")).agg(max(col("kill_seg")).as("kill_seg"))
-      raw.join(broadcast(tomb),
-        raw("doc_id") === tomb("doc_id") && raw("seg") <= tomb("kill_seg"),
-        "left_anti")
-    }
-  }
+  private[graft] def resolvedPostings(store: graft.etl.IndexStore): DataFrame =
+    withoutTombstoned(store, store.session.read.schema(PostingsSchema)
+      .parquet(store.artifactPath(PostingsName)))
 
   /** Incremental postings maintenance for one ingest batch — the ES/
     * Lucene continuous-indexing loop for the SEARCH index, SEGMENT-
@@ -272,7 +311,6 @@ object SearchQueries {
                                     batch: DataFrame,
                                     fingerprint: String = "stream-maintained"): Long =
     store.withMaintenanceLock(PostingsName) {
-    val s = batch.sparkSession
     val ids = batch.select(col("doc_id")).distinct()
     val Array(oldN, oldDl) = store.artifactSidecar(PostingsName, PostingsStatsSidecar)
       .getOrElse(sys.error(s"$PostingsName has no corpus-stats sidecar"))
@@ -281,16 +319,8 @@ object SearchQueries {
     // a segment generation or write empty segment/tombstone files —
     // return the current max gen untouched (if/else, not `return`:
     // the lock body is by-name).
-    val curGen = {
-      val fs0 = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs0.listStatus(
-          new org.apache.hadoop.fs.Path(store.artifactPath(PostingsName)))
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg="))
-        .map(_.getPath.getName.stripPrefix("seg=").toInt)
-        .foldLeft(0)(math.max)
-    }
-    if (batch.isEmpty) curGen.toLong
+    val topGen = segsOf(store, store.artifactPath(PostingsName)).maxOption
+    if (batch.isEmpty) topGen.getOrElse(0).toLong
     else {
     // Stats-delta probe against the DOCLEN sidecar table, with the
     // batch's id list PUSHED into its doc-sorted scan when the batch
@@ -310,18 +340,12 @@ object SearchQueries {
       .agg(coalesce(count(lit(1)), lit(0L)).cast(DoubleType),
         coalesce(sum(col("n_tokens")), lit(0L)).cast(DoubleType)).head
     val (batchN, batchDl) = corpusStatsOf(batch)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    val gen = 1 + fs.listStatus(
-        new org.apache.hadoop.fs.Path(store.artifactPath(PostingsName)))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg="))
-      .map(_.getPath.getName.stripPrefix("seg=").toInt)
-      .foldLeft(-1)(math.max)
+    val gen = topGen.getOrElse(-1) + 1
     store.clearArtifactFingerprint(PostingsName)
     store.appendPartition(postingsOf(batch), PostingsName, "seg",
       gen.toString, rangeSortCols = Seq("term"))
     writeDoclenSeg(store, batch, gen)
-    ids.withColumn("kill_seg", lit(gen - 1))
+    castTo(DeletedSchema)(ids.withColumn("kill_seg", lit(gen - 1)))
       .write.mode("append").parquet(postingsDeletedPath(store))
     store.stampArtifact(PostingsName, fingerprint,
       sidecars = Map(PostingsStatsSidecar -> statsSidecarText(
@@ -357,35 +381,37 @@ object SearchQueries {
     // before this write is covered by resolvedDoclen's
     // derive-from-postings fallback).
     writeDoclenRows(store,
-      store.read(PostingsName).select(col("doc_id"), col("n_tokens")).distinct(),
+      resolvedPostings(store).select(col("doc_id"), col("n_tokens")).distinct(),
       0)
     }
 
-  /** BM25 top-k computed FROM postings (shared by the registered
-    * indexed query and the streaming-maintenance spec, which scores
-    * against a maintained — not rebuilt — index).
+  /** BM25 top-k computed FROM postings, as ONE lazy query with one
+    * postings scan (shared by the registered indexed query, the
+    * benchmark's reads and the maintenance specs, which score against
+    * a maintained — not rebuilt — index). The per-doc aggregate over
+    * (doc_id, n_tokens) yields every query term's tf; each term's df is
+    * the count of those groups with tf > 0, a 1-row ungrouped aggregate
+    * of the SAME frame broadcast back. That is exact because live
+    * postings are unique per (term, doc_id, n_tokens): [[postingsOf]]
+    * groups on that key, and every upsert tombstones all older
+    * segments of its docs. Both consumers share one exchange, so Spark
+    * reuses it and reads the postings once; building the frame runs no
+    * Spark job.
     */
   private[graft] def bm25FromPostings(postings: DataFrame, nDocs: Double,
                                       sumDl: Double, terms: Seq[String]): DataFrame = {
-    val pruned = postings.filter(col("term").isin(terms: _*))
-    val dfs: Map[String, Double] = pruned
-      .groupBy(col("term")).agg(count(lit(1)).cast(DoubleType).as("df"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    def tfOf(t: String): Column =
-      coalesce(max(when(col("term") === t, col("tf"))), lit(0L))
-    def part(tfc: Column, df: Double): Column =
-      log(lit(1.0) + (lit(nDocs) - lit(df) + lit(0.5)) / (lit(df) + lit(0.5))) *
-        ((tfc * lit(2.2)) /
-          (tfc + lit(1.2) *
-            (lit(0.25) + lit(0.75) * (col("n_tokens") * lit(nDocs) / lit(sumDl)))))
-    val tfCols = terms.indices.map(i => tfOf(terms(i)).as(s"tf_$i"))
-    pruned.groupBy(col("doc_id"), col("n_tokens"))
-      .agg(tfCols.head, tfCols.tail: _*)
+    val tfs = terms.indices.map(i =>
+      coalesce(max(when(col("term") === terms(i), col("tf"))), lit(0L)).as(s"tf_$i"))
+    val perDoc = postings.filter(col("term").isin(terms: _*))
+      .groupBy(col("doc_id"), col("n_tokens")).agg(tfs.head, tfs.tail: _*)
+    val dfs = terms.indices.map(i =>
+      count(when(col(s"tf_$i") > 0, lit(1))).cast(DoubleType).as(s"df_$i"))
+    perDoc.crossJoin(broadcast(perDoc.agg(dfs.head, dfs.tail: _*)))
       // Left-to-right sum in `terms` order — the same association the
       // scan query (and its DuckDB twin) writes out.
       .withColumn("score", round(
-        terms.indices.map(i => part(col(s"tf_$i"), dfs.getOrElse(terms(i), 0.0)))
-          .reduce(_ + _), 6))
+        terms.indices.map(i => bm25Part(col(s"tf_$i"), col(s"df_$i"),
+          col("n_tokens"), lit(nDocs), lit(sumDl))).reduce(_ + _), 6))
       .filter(col("score") > 0)
       .orderBy(col("score").desc, col("doc_id"))
       .select(col("doc_id"), col("n_tokens"), col("score"))
@@ -844,14 +870,15 @@ object SearchQueries {
     // but answered from the materialized inverted index instead of a
     // corpus scan: the query's terms prune the term-sorted postings
     // artifact (parquet min/max row-group skipping — the physical form
-    // of an ES term lookup), per-term document frequencies come from a
-    // bounded aggregation of the pruned postings (≤ one row per query
-    // term, collected like the ANN query vector), corpus scalars from
-    // the index sidecar, and the per-doc score is the IDENTICAL float
-    // expression — so this query hash-matches the SCAN-based oracle:
-    // the driver's DuckDB gate proves index-served == scan-computed.
-    // At 100 TB the cost is the probed posting lists + a top-k, never
-    // the corpus — the ES serving model, owned natively.
+    // of an ES term lookup), per-term document frequencies are a 1-row
+    // aggregate of the same per-doc tf frame inside the one scoring
+    // query (no collect while the query is built; the postings are
+    // scanned once), corpus scalars come from the index sidecar, and
+    // the per-doc score is the IDENTICAL float expression — so this
+    // query hash-matches the SCAN-based oracle: the driver's DuckDB
+    // gate proves index-served == scan-computed. At 100 TB the cost is
+    // the probed posting lists + a top-k, never the corpus — the ES
+    // serving model, owned natively.
     "search_topk_bm25_indexed" -> ((s, dir) => {
       val (postings, nDocs, sumDl) = materializedPostings(s, dir)
       bm25FromPostings(postings, nDocs, sumDl, Seq("spark", "vector", "join"))

@@ -82,4 +82,17 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(tree.get("queries").get("rel_a\"b").asDouble == 1.5)
     assert(tree.get("families").get("_warm").asDouble == 2.0)
   }
+
+  test("the scale record escapes the base dir, query and probe names into valid JSON") {
+    val base = "/data/sf\"0.1\\odd\tdir"
+    val json = ScaleBench.record(base, 500, 10, "zipf", 5000, 2, "lz4", 8192,
+      """{"contended":false}""",
+      Seq("llm_dedup_winnow_cap\"12" -> """{"base_s":1.000,"scaled_s":9.000}"""),
+      Seq("base/llm_dedup_winnow_cap\"12" -> Seq("""{"foreign":0.000}""")))
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(tree.get("base").asText == base)
+    assert(tree.get("queries").get("llm_dedup_winnow_cap\"12").get("scaled_s").asDouble == 9.0)
+    assert(tree.get("probes").get("base/llm_dedup_winnow_cap\"12").size == 1)
+    assert(!tree.get("load").get("contended").asBoolean)
+  }
 }

@@ -87,4 +87,21 @@ class CacheSpec extends AnyFunSuite {
           "cleanup handle cannot release it")
     }
   }
+
+  test("exclusivePrefixSum leaves a caller's cache of its input in place") {
+    // The operator persists its input for two jobs and releases what it
+    // persisted; a frame the CALLER cached must come out still cached.
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.storage.StorageLevel
+    spark.sharedState.cacheManager.clearCache()
+    val in = spark.range(0, 2000).select(col("id"), (col("id") % 7).as("v")).cache()
+    try {
+      in.count()
+      val out = relational.PrefixSum.exclusivePrefixSum(in, Seq(col("id")), col("v"), "pre")
+      assert(out.count() == 2000)
+      assert(in.storageLevel != StorageLevel.NONE,
+        "exclusivePrefixSum released a cache entry its caller made")
+    } finally in.unpersist(true)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

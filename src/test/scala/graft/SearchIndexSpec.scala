@@ -14,6 +14,29 @@ import search.SearchQueries
   */
 class SearchIndexSpec extends AnyFunSuite {
   import SparkTestSession._
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+
+  /** Docs [from, until) of a small corpus: 12 tokens each over six
+    * words, with the columns the `documents` table carries.
+    */
+  private def docsDf(from: Long, until: Long): DataFrame = {
+    val words = Seq("spark", "vector", "join", "table", "fast", "row")
+    spark.range(from, until).select(
+      col("id").as("doc_id"),
+      concat_ws(" ", (0 until 12).map(i =>
+        element_at(typedlit(words), ((col("id") + i * 7) % 6 + 1).cast("int"))): _*)
+        .as("text"),
+      lit("en").as("lang"), lit("src0").as("source"), lit(60L).as("n_chars"))
+  }
+
+  /** A fresh corpus dir holding docs [0, n) and its built postings. */
+  private def builtCorpus(prefix: String, n: Long): (String, etl.IndexStore) = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    docsDf(0, n).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    SearchQueries.materializedPostings(spark, dir)
+    (dir, new etl.IndexStore(spark, etl.IndexStore.artifactRoot(dir)))
+  }
 
   test("index-served BM25 equals the scan-based scoring exactly") {
     val scan = SparkEntry.queries("search_topk_bm25")(spark, sf).collect()
@@ -38,19 +61,7 @@ class SearchIndexSpec extends AnyFunSuite {
     // the same segment lifecycle; a PARTIAL table (e.g. a pre-doclen
     // artifact that received one upsert) must NOT be trusted — the
     // stats would silently under-count removed docs.
-    import org.apache.spark.sql.functions._
-    val words = Seq("spark", "vector", "join", "table", "fast", "row")
-    def docsDf(from: Long, until: Long) =
-      spark.range(from, until).select(
-        col("id").as("doc_id"),
-        concat_ws(" ", (0 until 12).map(i =>
-          element_at(typedlit(words), ((col("id") + i * 7) % 6 + 1).cast("int"))): _*)
-          .as("text"),
-        lit("en").as("lang"), lit("src0").as("source"), lit(60L).as("n_chars"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_doclen").toString
-    docsDf(0, 40).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    SearchQueries.materializedPostings(spark, dir)
-    val store = new etl.IndexStore(spark, etl.IndexStore.artifactRoot(dir))
+    val (_, store) = builtCorpus("graft_doclen", 40)
     val doclenDir = new java.io.File(
       store.artifactPath(SearchQueries.PostingsName), "_doclen")
     assert(new java.io.File(doclenDir, "seg=0").isDirectory,
@@ -142,21 +153,9 @@ class SearchIndexSpec extends AnyFunSuite {
     // a corpus rescan. Proof of correctness: BM25 served from the
     // MAINTAINED index equals the scan-based scoring over the grown
     // corpus, byte for byte.
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val words = Seq("spark", "vector", "join", "table", "fast", "row")
-    def docsDf(from: Long, until: Long) =
-      spark.range(from, until).select(
-        col("id").as("doc_id"),
-        concat_ws(" ", (0 until 12).map(i =>
-          element_at(typedlit(words), ((col("id") + i * 7) % 6 + 1).cast("int"))): _*)
-          .as("text"),
-        lit("en").as("lang"), lit("src0").as("source"), lit(60L).as("n_chars"))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_postings_s").toString
-    docsDf(0, 40).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    SearchQueries.materializedPostings(spark, dir)
-    val store = new etl.IndexStore(spark, etl.IndexStore.artifactRoot(dir))
+    val (dir, store) = builtCorpus("graft_postings_s", 40)
 
     val srcDir = java.nio.file.Files.createTempDirectory("postings_src")
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
@@ -265,10 +264,99 @@ class SearchIndexSpec extends AnyFunSuite {
     val (postings, nDocs, sumDl) = SearchQueries.materializedPostings(spark, sf)
     assert(listing == before, "unchanged corpus must not rebuild the postings")
     // Stats sidecar agrees with what the postings themselves say.
-    import org.apache.spark.sql.functions._
     val fromIndex = postings.select(col("doc_id"), col("n_tokens")).distinct()
       .agg(count(lit(1)).cast("double"), sum(col("n_tokens")).cast("double"))
       .head
     assert(fromIndex.getDouble(0) == nDocs && fromIndex.getDouble(1) == sumDl)
+  }
+
+  test("the postings, _doclen and _deleted schemas are what the writers leave on disk") {
+    // The readers pass these constants to .schema(...) instead of
+    // inferring; they must stay equal to what every writer produces.
+    val (_, store) = builtCorpus("graft_schemas", 30)
+    val root = store.artifactPath(SearchQueries.PostingsName)
+    val tables = Seq(
+      root -> SearchQueries.PostingsSchema,
+      s"$root/${SearchQueries.PostingsDoclen}" -> SearchQueries.DoclenSchema,
+      s"$root/${SearchQueries.PostingsDeleted}" -> SearchQueries.DeletedSchema)
+    def check(stage: String): Int = tables.count { case (path, want) =>
+      val present = new java.io.File(path).isDirectory
+      if (present) assert(spark.read.parquet(path).schema == want, s"$path after $stage")
+      present
+    }
+    assert(check("build") == 2)
+    SearchQueries.upsertPostings(store, docsDf(20, 35))
+    assert(check("upsert") == 3)
+    SearchQueries.compactPostings(store)
+    assert(check("compaction") == 2)
+  }
+
+  test("building search_topk_bm25_indexed over a built artifact runs no Spark job") {
+    SearchQueries.materializedPostings(spark, sf)
+    val sc = spark.sparkContext
+    val group = "bm25-build"
+    val marker = "bm25-marker"
+    @volatile var built = 0
+    @volatile var markerSeen = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => built += 1
+          case Some(`marker`) => markerSeen = true
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build the indexed BM25 query")
+      try SparkEntry.queries("search_topk_bm25_indexed")(spark, sf)
+      finally sc.clearJobGroup()
+      // Listener delivery is async but ordered: once the marker job's
+      // start arrives, every job started before it has been counted.
+      sc.setJobGroup(marker, "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(markerSeen, "marker job never reached the listener")
+      assert(built == 0, s"building the query ran $built Spark job(s)")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the indexed BM25 read scans the postings once; df reuses the tf exchange") {
+    val df = SparkEntry.queries("search_topk_bm25_indexed")(spark, sf)
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan.toString // the final plan alone, not the initial one
+      case p => p.toString
+    }
+    val scans = plan.linesIterator
+      .count(l => l.contains("FileScan") && l.contains(SearchQueries.PostingsName))
+    assert(scans == 1, s"expected one postings scan in:\n$plan")
+    assert(plan.linesIterator.exists(_.contains("ReusedExchange")),
+      s"the df aggregate does not reuse the tf exchange:\n$plan")
+  }
+
+  test("a doc upserted twice before compaction: two tombstones, BM25 still scan-exact") {
+    val (dir, store) = builtCorpus("graft_twice", 40)
+    val v1 = docsDf(30, 40).withColumn("text", lit("table row fast spark"))
+    val v2 = docsDf(35, 45).withColumn("text", lit("vector join vector row"))
+    SearchQueries.upsertPostings(store, v1)
+    SearchQueries.upsertPostings(store, v2)
+    val tomb = spark.read.schema(SearchQueries.DeletedSchema).parquet(
+      s"${store.artifactPath(SearchQueries.PostingsName)}/${SearchQueries.PostingsDeleted}")
+    assert(tomb.filter(col("doc_id") === 37).count() == 2,
+      "a doc upserted twice must leave one tombstone row per upsert")
+    // The corpus those upserts describe: 0..29, v1's 30..34, v2's 35..44.
+    docsDf(0, 30).unionByName(v1.filter(col("doc_id") < 35)).unionByName(v2)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val Array(nDocs, sumDl) = store.artifactSidecar(SearchQueries.PostingsName,
+      SearchQueries.PostingsStatsSidecar).get.split(' ').map(_.toDouble)
+    val served = SearchQueries.bm25FromPostings(SearchQueries.resolvedPostings(store),
+      nDocs, sumDl, Seq("spark", "vector", "join")).collect()
+    val scanned = SparkEntry.queries("search_topk_bm25")(spark, dir).collect()
+    assert(scanned.nonEmpty)
+    assert(served.map(_.toString).toSeq == scanned.map(_.toString).toSeq,
+      s"served=${served.mkString("; ")}\nscanned=${scanned.mkString("; ")}")
   }
 }

@@ -3,7 +3,9 @@
 # mirroring build.sbt's forked-JVM options. Usage:
 #   tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
 set -euo pipefail
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+# The checkout this script lives in, so a second checkout runs its own classes.
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
