@@ -33,109 +33,6 @@ object Bench {
       case _ => None
     }
 
-  /** 1-minute load average from /proc, -1 where unavailable. Sampled
-    * CONTINUOUSLY through the run (every 15 s, daemon thread), not
-    * just at the endpoints: round 9's record read `contended: false`
-    * from two idle endpoints while a co-scheduled driver gate
-    * mid-run inflated individual queries 5–12× — an endpoint flag
-    * BLESSES a contaminated record, which is worse than no flag.
-    */
-  private def loadAvg(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-      .split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
-
-  /** (total USER+NICE jiffies across all cpus, THIS process's utime,
-    * total SYSTEM jiffies, THIS process's stime) — the pairs whose
-    * per-interval deltas isolate OTHER processes' CPU.
-    * Raw loadavg cannot decide `contended`: a 32-core bench raises its
-    * OWN 1-min load past any fixed bar (max>1.0 would flag every
-    * honest record contended — a permanent false positive), while the
-    * co-scheduled-gate case round 9 exposed needs a mid-run signal.
-    * `max((Δtotal − Δself)/Δt)` over 15 s windows is that signal:
-    * self-load cancels exactly (Spark local mode is one process), and
-    * a concurrent sbt/driver gate shows as whole foreign cores.
-    * The DECIDING signal is USER time only, deliberately: kernel
-    * writeback of this bench's OWN shuffle/artifact files runs in
-    * kworker threads whose SYSTEM time would read as ~1 foreign core
-    * on every write-heavy family (measured: sql 1.25, llm 1.05 on an
-    * otherwise-idle host) — the contamination class that matters
-    * (another JVM: sbt, a driver gate, a second bench) is
-    * user-cpu-dominated. The SYSTEM pair is carried as an ADVISORY
-    * field only (`foreign_sys_cores_max`): a foreign rsync/backup is
-    * system-time-dominated and would slip the user-cpu bar, but the
-    * kworker allowance means the sys signal cannot gate `contended`
-    * without permanently false-positive-ing write-heavy families —
-    * so `contended:false` covers user-cpu-dominated co-processes and
-    * the record schema says so.
-    */
-  private def cpuJiffies(): (Long, Long, Long, Long) =
-    try {
-      val stat = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-        .linesIterator.next().trim.split("\\s+")
-      // cpu user nice system idle iowait irq softirq steal ...
-      val userTotal = stat(1).toLong + stat(2).toLong
-      val sysTotal = stat(3).toLong
-      val self = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")), "UTF-8").split(" ")
-      // fields 14/15 (1-based): utime/stime — after comm, which is
-      // parenthesized and contains no spaces for plain `java`.
-      (userTotal, self(13).toLong, sysTotal, self(14).toLong)
-    } catch { case _: Throwable => (-1L, -1L, -1L, -1L) }
-
-  /** (this process's MAJOR page faults, this process's storage-layer
-    * read bytes) — the per-entry I/O-pressure pair (round-10 verdict
-    * #1): a query that reads far over its committed idle time under
-    * `contended:false` needs a signal that names the cause, and
-    * foreign USER cpu misses page-cache eviction by a co-resident
-    * process (the suspected `_build_neardup_pairs` 52.9-vs-9.0 s
-    * mechanism — the gate's DuckDB/dataset work evicts the fixture
-    * from cache, this JVM then pays real disk reads it normally
-    * never does). majflt counts mapped-page misses that hit storage;
-    * /proc/self/io read_bytes counts ALL bytes fetched from the
-    * storage layer (a warm run reads ~0 — everything is page cache).
-    * Either spiking on an outlier entry names I/O pressure as the
-    * contaminant; both flat says the slowdown was CPU-side.
-    */
-  private def ioStat(): (Long, Long) =
-    try {
-      val st = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")), "UTF-8").split(" ")
-      val majflt = st(11).toLong // field 12 (1-based)
-      val rb = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/io")), "UTF-8")
-        .linesIterator.collectFirst {
-          case l if l.startsWith("read_bytes:") =>
-            l.substring("read_bytes:".length).trim.toLong
-        }.getOrElse(-1L)
-      (majflt, rb)
-    } catch { case _: Throwable => (-1L, -1L) }
-
-  /** (this process's block-I/O delay ticks, host STEAL jiffies) — the
-    * two contamination channels the first probe trio is blind to,
-    * exposed by a measured incident: a build-family record taken
-    * minutes after a 60 GB shuffle-spill run read uniformly ~2× slow
-    * with foreign-user ≈ 0, majflt = 0, read_mb ≈ 0 — neither a
-    * co-process nor cache eviction. delayacct_blkio_ticks
-    * (/proc/self/stat field 42) counts time THIS process sat blocked
-    * on block I/O — residual writeback throttling shows here and
-    * nowhere else; steal (/proc/stat cpu field 8) counts cycles the
-    * HYPERVISOR withheld — host-side co-tenancy on this virtualized
-    * box, invisible to every in-guest load metric.
-    */
-  private def stallStat(): (Long, Long) =
-    try {
-      val st = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")), "UTF-8").split(" ")
-      val blkio = st(41).toLong // field 42 (1-based): delayacct_blkio_ticks
-      val stat = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-        .linesIterator.next().trim.split("\\s+")
-      (blkio, stat(8).toLong)
-    } catch { case _: Throwable => (-1L, -1L) }
-
   /** queries_op map of the committed idle record (BENCH_LOCAL.json),
     * used to flag mid-run-contaminated outliers for a rerun — absent
     * file or parse failure degrades to "no reference" (empty map), it
@@ -209,71 +106,20 @@ object Bench {
     // starts loaded self-identifies via `contended: true` below.
     locally {
       val deadline = System.currentTimeMillis() + 10 * 60 * 1000L
-      var l = loadAvg()
+      var l = HostLoad.loadAvg()
       while (l > 1.0 && System.currentTimeMillis() < deadline) {
         System.err.println(f"[bench] host 1-min load $l%.2f — waiting for idle " +
           f"(bounded, ${(deadline - System.currentTimeMillis()) / 1000}s left)")
         Thread.sleep(15000)
-        l = loadAvg()
+        l = HostLoad.loadAvg()
       }
     }
-    val loadStart = loadAvg()
-    // Whole-run watermarks (see loadAvg/cpuJiffies scaladocs): every
-    // 15 s sample, not the endpoints, decides `contended` — and the
-    // deciding signal is FOREIGN cpu (Δtotal − Δself), because the
-    // bench's own 32-core work dominates raw loadavg.
-    val loadMax = new java.util.concurrent.atomic.AtomicReference[Double](loadStart)
-    val foreignMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    val foreignSysMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    val stealMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    locally {
-      val t = new Thread(() => {
-        var prev = cpuJiffies()
-        var prevSteal = stallStat()._2
-        var prevT = System.nanoTime()
-        while (true) {
-          Thread.sleep(15000)
-          loadMax.updateAndGet(m => math.max(m, loadAvg()))
-          val cur = cpuJiffies()
-          val curSteal = stallStat()._2
-          val curT = System.nanoTime()
-          // Hypervisor steal per 15 s window (see stallStat scaladoc):
-          // host-side co-tenancy withheld these cycles from the WHOLE
-          // guest — invisible to loadavg, foreign-cpu, majflt and
-          // read-bytes alike (measured: a build-family record read
-          // uniformly ~2× slow with every in-guest signal clean and
-          // steal_cores 3.7 on the slow entry). It gates `contended`
-          // below exactly like foreign user-cpu: stolen cores ARE a
-          // co-process, just one scheduled by the host.
-          if (prevSteal >= 0 && curSteal >= 0) {
-            val dt = (curT - prevT) / 1e9
-            stealMax.updateAndGet(m => math.max(m,
-              (curSteal - prevSteal) / 100.0 / math.max(dt, 1e-3)))
-          }
-          prevSteal = curSteal
-          if (prev._1 >= 0 && cur._1 >= 0) {
-            val dt = (curT - prevT) / 1e9
-            // jiffies are USER_HZ=100/s: foreign cores busy over the
-            // window = (Δtotal − Δself)/100/Δt.
-            val foreign =
-              ((cur._1 - prev._1) - (cur._2 - prev._2)) / 100.0 / math.max(dt, 1e-3)
-            foreignMax.updateAndGet(m => math.max(m, foreign))
-            // Advisory only (see cpuJiffies scaladoc): foreign SYSTEM
-            // time, which includes kworker writeback of this bench's
-            // own files — it cannot gate `contended`, but a
-            // sys-dominated co-process (rsync, compression) shows
-            // here when the user-cpu flag reads clean.
-            val foreignSys =
-              ((cur._3 - prev._3) - (cur._4 - prev._4)) / 100.0 / math.max(dt, 1e-3)
-            foreignSysMax.updateAndGet(m => math.max(m, foreignSys))
-          }
-          prev = cur
-          prevT = curT
-        }
-      }, "bench-load-sampler")
-      t.setDaemon(true)
-      t.start()
-    }
+    // Whole-run watermarks (see HostLoad): every 15 s sample, not the
+    // endpoints, decides `contended` — and the deciding signal is
+    // FOREIGN cpu (Δtotal − Δself), because the bench's own 32-core
+    // work dominates raw loadavg.
+    val sampler = new HostLoad.Sampler("bench-load-sampler")
+    import sampler.{foreignMax, foreignSysMax, loadMax, loadStart, stealMax}
     if (loadStart > 0.5 * cores)
       System.err.println(f"[bench] WARNING: host 1-min load $loadStart%.1f exceeds " +
         f"half of $cores cores at start — this record is contention-distorted; " +
@@ -316,20 +162,20 @@ object Bench {
                           ioWaitS: Double, stealCores: Double)
     val probes = scala.collection.mutable.LinkedHashMap[String, EntryProbe]()
     def probed[T](name: String)(body: => T): T = {
-      val j0 = cpuJiffies(); val io0 = ioStat(); val s0 = stallStat()
+      val j0 = HostLoad.cpuJiffies(); val io0 = HostLoad.ioStat()
+      val b0 = HostLoad.blkioTicks()
       val t0 = System.nanoTime()
       val r = body
       val dt = (System.nanoTime() - t0) / 1e9
-      val j1 = cpuJiffies(); val io1 = ioStat(); val s1 = stallStat()
-      val foreign =
-        if (j0._1 < 0 || j1._1 < 0) -1.0
-        else ((j1._1 - j0._1) - (j1._2 - j0._2)) / 100.0 / math.max(dt, 1e-3)
-      probes(name) = EntryProbe(foreign,
+      val j1 = HostLoad.cpuJiffies(); val io1 = HostLoad.ioStat()
+      val b1 = HostLoad.blkioTicks()
+      val jiffiesOk = j0._1 >= 0 && j1._1 >= 0
+      probes(name) = EntryProbe(
+        if (jiffiesOk) HostLoad.cores((j1._1 - j0._1) - (j1._2 - j0._2), dt) else -1.0,
         if (io0._1 < 0) -1L else io1._1 - io0._1,
         if (io0._2 < 0) -1.0 else (io1._2 - io0._2) / 1e6,
-        if (s0._1 < 0) -1.0 else (s1._1 - s0._1) / 100.0,
-        if (s0._2 < 0) -1.0
-        else (s1._2 - s0._2) / 100.0 / math.max(dt, 1e-3))
+        if (b0 < 0) -1.0 else (b1 - b0) / 100.0,
+        if (jiffiesOk) HostLoad.cores(j1._5 - j0._5, dt) else -1.0)
       r
     }
 
@@ -831,7 +677,7 @@ object Bench {
     val summed = results.filterNot(_._1.startsWith("_stream_latency_p"))
     val total = summed.map(_._2._1).filter(_ >= 0).sum
     val totalOp = summed.map(_._2._2).filter(_ >= 0).sum
-    val loadEnd = loadAvg()
+    val loadEnd = HostLoad.loadAvg()
     // `contended` rides on BOTH emissions: a driver-tail record taken
     // on a loaded host self-identifies, so a per-query regression in a
     // contended record is inadmissible without an idle re-measure
@@ -843,7 +689,7 @@ object Bench {
     // ran means some co-process was eating cycles mid-run.
     val loadPeak = math.max(loadMax.get(), loadEnd)
     val contended = foreignMax.get() > 0.5 || stealMax.get() > 0.5
-    // `foreign_sys_cores_max` is ADVISORY (see cpuJiffies scaladoc):
+    // `foreign_sys_cores_max` is ADVISORY (see HostLoad.cpuJiffies):
     // it includes kworker writeback of this bench's own files, so it
     // cannot gate `contended` — but a sys-dominated co-process
     // (rsync/compression/backup) shows here when the user-cpu flag

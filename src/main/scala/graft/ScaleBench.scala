@@ -313,57 +313,8 @@ object ScaleBench {
     // process contaminated it. Foreign cpu = (Δtotal − Δself) jiffies
     // per 15 s window — raw loadavg can't decide contention because a
     // 32-core scale run raises its OWN load past any fixed bar.
-    def loadAvg(): Double =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    // USER time only — kernel writeback of the run's own shuffle files
-    // would otherwise read as ~1 foreign core (see Bench.cpuJiffies).
-    // (total user+nice jiffies, self utime, host STEAL jiffies) — steal
-    // counts cycles the hypervisor withheld from the whole guest:
-    // host-side co-tenancy invisible to loadavg/foreign-cpu (measured
-    // via Bench's per-entry probes: a clean-looking record ran under
-    // 3.7 stolen cores), so it gates `contended` exactly like foreign
-    // user-cpu.
-    def cpuJiffies(): (Long, Long, Long) =
-      try {
-        val stat = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-          .linesIterator.next().trim.split("\\s+")
-        val userTotal = stat(1).toLong + stat(2).toLong
-        val self = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/self/stat")), "UTF-8").split(" ")
-        (userTotal, self(13).toLong, stat(8).toLong)
-      } catch { case _: Throwable => (-1L, -1L, -1L) }
-    val loadStart = loadAvg()
-    val loadMax = new java.util.concurrent.atomic.AtomicReference[Double](loadStart)
-    val foreignMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    val stealMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    locally {
-      val t = new Thread(() => {
-        var prev = cpuJiffies()
-        var prevT = System.nanoTime()
-        while (true) {
-          Thread.sleep(15000)
-          loadMax.updateAndGet(m => math.max(m, loadAvg()))
-          val cur = cpuJiffies()
-          val curT = System.nanoTime()
-          if (prev._1 >= 0 && cur._1 >= 0) {
-            val dt = (curT - prevT) / 1e9
-            val foreign =
-              ((cur._1 - prev._1) - (cur._2 - prev._2)) / 100.0 / math.max(dt, 1e-3)
-            foreignMax.updateAndGet(m => math.max(m, foreign))
-            stealMax.updateAndGet(m => math.max(m,
-              (cur._3 - prev._3) / 100.0 / math.max(dt, 1e-3)))
-          }
-          prev = cur
-          prevT = curT
-        }
-      }, "scale-load-sampler")
-      t.setDaemon(true)
-      t.start()
-    }
+    val sampler = new HostLoad.Sampler("scale-load-sampler")
+    import sampler.{foreignMax, loadMax, loadStart, stealMax}
 
     val corpusMode = sys.env.getOrElse("SPARK_GRAFT_SCALE_CORPUS", "replica")
     // WITNESS mode (round-11 verdict #1): SPARK_GRAFT_SCALE_WITNESS=
@@ -517,24 +468,6 @@ object ScaleBench {
     // flag can't name it. Same per-window channels as Bench.probed
     // (foreign user-cpu avg, majflt delta, storage-read MB, blkio
     // wait, hypervisor steal) plus the memory envelope above.
-    def ioStat(): (Long, Long) =
-      try {
-        val st = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/self/stat")), "UTF-8").split(" ")
-        val majflt = st(11).toLong // field 12 (1-based)
-        val rb = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/self/io")), "UTF-8")
-          .linesIterator.collectFirst {
-            case l if l.startsWith("read_bytes:") =>
-              l.substring("read_bytes:".length).trim.toLong
-          }.getOrElse(-1L)
-        (majflt, rb)
-      } catch { case _: Throwable => (-1L, -1L) }
-    def blkioTicks(): Long =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")), "UTF-8")
-        .split(" ")(41).toLong // field 42: delayacct_blkio_ticks
-      catch { case _: Throwable => -1L }
     def heapPools = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
@@ -560,7 +493,8 @@ object ScaleBench {
       // misattributed here — and again before sampling at the end, so
       // this window's own tail events land in its counters.
       Thread.sleep(150)
-      val j0 = cpuJiffies(); val io0 = ioStat(); val b0 = blkioTicks()
+      val j0 = HostLoad.cpuJiffies(); val io0 = HostLoad.ioStat()
+      val b0 = HostLoad.blkioTicks()
       taskPeakMem.set(0)
       val sd0 = spillDiskB.get(); val sm0 = spillMemB.get()
       heapPools.foreach(_.resetPeakUsage())
@@ -574,14 +508,13 @@ object ScaleBench {
       // inflates timed_foreign/steal and can spuriously divert a
       // record); the sleep below only guards the LISTENER-derived
       // counters (spill, taskPeakMem, shuffle).
-      val j1 = cpuJiffies(); val io1 = ioStat(); val b1 = blkioTicks()
+      val j1 = HostLoad.cpuJiffies(); val io1 = HostLoad.ioStat()
+      val b1 = HostLoad.blkioTicks()
       Thread.sleep(150)
+      val jiffiesOk = j0._1 >= 0 && j1._1 >= 0
       val foreign =
-        if (j0._1 < 0 || j1._1 < 0) -1.0
-        else ((j1._1 - j0._1) - (j1._2 - j0._2)) / 100.0 / math.max(dt, 1e-3)
-      val steal =
-        if (j0._3 < 0 || j1._3 < 0) -1.0
-        else (j1._3 - j0._3) / 100.0 / math.max(dt, 1e-3)
+        if (jiffiesOk) HostLoad.cores((j1._1 - j0._1) - (j1._2 - j0._2), dt) else -1.0
+      val steal = if (jiffiesOk) HostLoad.cores(j1._5 - j0._5, dt) else -1.0
       val heapMb = heapPools.map(_.getPeakUsage.getUsed).sum / 1e6
       timedForeignMax.updateAndGet(m => math.max(m, foreign))
       timedStealMax.updateAndGet(m => math.max(m, steal))
@@ -707,7 +640,7 @@ object ScaleBench {
           s""","scaled_runs":[${sT.map(fmt).mkString(",")}]"""
       n -> s"""{"base_s":${fmt(bT.min)},"scaled_s":${fmt(sT.min)},"ratio":${fmt(r)}$shJson$runsJson}"""
     }
-    val loadEnd = loadAvg()
+    val loadEnd = HostLoad.loadAvg()
     // `contended` = a TIMED window absorbed foreign cpu or steal (the
     // per-operator probes' own watermark — see the probeLog comment);
     // `contendedAnyWindow` = the old whole-run view, still published.

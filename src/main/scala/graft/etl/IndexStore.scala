@@ -49,8 +49,8 @@ class IndexStore(spark: SparkSession, root: String) {
   private[graft] val lastPhases =
     new java.util.concurrent.ConcurrentHashMap[String, Double]()
 
-  /** Column layout cache for the partition-granular streaming path:
-    * [[upsertPartitioned]] runs once per micro-batch and the index
+  /** Index schema cache for the partition-granular streaming path:
+    * [[upsertKeyed]] runs once per micro-batch and the index
     * schema CANNOT change mid-stream (that path rejects drift; schema
     * widening is [[upsert]]'s full-rewrite job), so the per-trigger
     * footer-read schema inference was a pure fixed cost on the hot
@@ -68,7 +68,7 @@ class IndexStore(spark: SparkSession, root: String) {
     * several things that break.
     */
   private val colsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   private def phase[T](name: String)(body: => T): T = {
     val t0 = System.nanoTime()
@@ -305,218 +305,198 @@ class IndexStore(spark: SparkSession, root: String) {
     * its few date partitions) per commit instead of [[upsert]]'s
     * O(index) copy-on-write — the difference between a stream you
     * can run forever and one whose commit cost grows with history.
-    * Same single-writer lock, key-probe, fingerprint-bracket and
-    * dynamic-overwrite discipline as the served-artifact upserts
-    * (postings/vec/geo); the incoming schema must match the index
-    * (schema widening is [[upsert]]'s full-rewrite job — a partition
-    * subset cannot widen the rest). Returns the number of docs
-    * UPSERTED (the ES bulk acknowledgment), NOT the index size —
-    * counting the index per commit would list every file, an
-    * O(index) driver step this O(batch) path must not hide.
+    * The algorithm is [[upsertKeyed]], shared with the geo and vector
+    * indexes; this caller's layout step is the stringify, done before
+    * the last-write-wins dedup as [[bulkImportPartitioned]] does. The
+    * incoming schema must match the index (schema widening is
+    * [[upsert]]'s full-rewrite job — a partition subset cannot widen
+    * the rest). Returns the number of docs UPSERTED (the ES bulk
+    * acknowledgment), NOT the index size — counting the index per
+    * commit would list every file, an O(index) driver step this
+    * O(batch) path must not hide.
     */
   def upsertPartitioned(incoming: DataFrame, indexName: String, idCol: String,
-                        partCol: String): Long = {
+                        partCol: String): Long =
+    upsertKeyed(Stringify.all(incoming), indexName, idCol, partCol, "live")(identity)._1
+
+  /** The one keyed partition upsert (the reference's `_id` overwrite,
+    * `BulkProcessImpl.java:124`, made partition-granular) behind
+    * [[upsertPartitioned]], `GeoQueries.upsertGeoPoints` and
+    * `SimilarityQueries.upsertVecIndex`. `batch` is deduplicated
+    * last-write-wins on `idCol` over ITS columns, then `layout` maps it
+    * to the index's columns (stringify, a cell id, an encoding), so the
+    * in-batch winner is the caller's. Runs under the artifact's
+    * maintenance lock; [[overwritePartitions]] brackets the commit
+    * with the fingerprint. Returns (distinct keys upserted, partitions
+    * touched); an empty batch writes nothing.
+    */
+  private[graft] def upsertKeyed(batch: DataFrame, indexName: String, idCol: String,
+                                 partCol: String, fingerprint: String)
+                                (layout: DataFrame => DataFrame): (Long, Int) = {
     val tEnter = System.nanoTime()
     withMaintenanceLock(indexName) {
       lastPhases.put("lock", (System.nanoTime() - tEnter) / 1e9)
-      val (indexCols, existing) = phase("schema") {
+      val laidOut = layout(batch)
+      val (schema, existing) = phase("schema") {
         // Layout from the instance cache (see colsCache) — a footer
         // read only on the FIRST batch of a stream, not per trigger.
-        val indexCols = colsCache.computeIfAbsent(indexName.toLowerCase,
-          _ => read(indexName).columns)
-        require(indexCols.sorted.sameElements(
-            Stringify.all(incoming).columns.sorted),
-          s"upsertPartitioned: incoming schema must match index $indexName " +
-            s"(got ${incoming.columns.sorted.mkString(",")}, index has " +
-            s"${indexCols.sorted.mkString(",")}); use upsert() to widen")
-        // Re-read under an EXPLICIT all-string schema (the store's
-        // bulkImportPartitioned contract: every column stringified). A
-        // user-supplied schema BYPASSES hive partition-value type
-        // inference, so partition values compare BYTE-IDENTICALLY to the
-        // directory names — an inferred-then-cast value diverges for any
+        val indexSchema = colsCache.computeIfAbsent(indexName.toLowerCase,
+          _ => read(indexName).schema)
+        require(indexSchema.fieldNames.sorted.sameElements(laidOut.columns.sorted),
+          s"keyed upsert: batch columns must match index $indexName " +
+            s"(got ${laidOut.columns.sorted.mkString(",")}, index has " +
+            s"${indexSchema.fieldNames.sorted.mkString(",")}); upsert() " +
+            "widens a document index")
+        // The partition column is read as the BATCH types it. A user-
+        // supplied schema bypasses hive partition-value type inference,
+        // so a string partition compares BYTE-IDENTICALLY to its
+        // directory name — an inferred-then-cast value diverges for any
         // value whose inferred-type string form differs from its
         // directory form (zero-padded numerics: dir `part=007`, inferred
-        // int reads back "7"), and the drop path `part=<cast value>`
-        // would then miss the real directory, leaving STALE rows of
-        // moved keys served next to the rewritten copy.
-        (indexCols, readAllString(indexName, indexCols))
+        // int reads back "7"), and the drop path `part=<value>` would
+        // then miss the real directory, leaving STALE rows of moved
+        // keys served next to the rewritten copy. Integer cells stay
+        // integers.
+        val partType = laidOut.schema(partCol).dataType
+        val schema = org.apache.spark.sql.types.StructType(indexSchema.map(f =>
+          if (f.name == partCol) f.copy(dataType = partType) else f))
+        (schema, spark.read.schema(schema).parquet(dir(indexName).toString))
       }
-      val stringified = Stringify.all(incoming)
-      // Driver push cap: below it the batch's (id, part) PAIRS collect
+      def deduped = layout(dedupByKey(batch, idCol))
+      val nullPart = s"keyed upsert: NULL $partCol in batch — null partition " +
+        "values do not round-trip hive partition directories; assign a " +
+        "sentinel value upstream"
+      // Driver push cap: below it the batch's (key, part) PAIRS collect
       // to the driver (a few MB at the cap — the same bounded-collect
       // class as every other probe here) and keys push into scans as
       // In/InSet filters; above it everything stays distributed. 50k
       // covers the real streaming micro-batch range (the fixture's
-      // events drain runs ~20k-row triggers); an In of 50k strings
+      // events drain runs ~20k-row triggers); an In of 50k keys
       // evaluates as a hash InSet, and the parquet pushdown above the
       // in-filter threshold degrades to min/max range pruning, which
-      // the within-file id sort keeps selective.
-      val MaxInPush = 50000
+      // the within-file key sort keeps selective.
       // ONE bounded SINGLE-STAGE batch job serves the key list, the
-      // new-partition values AND the null-partition guard: collect
-      // the RAW (id, part) pairs under a limit (CollectLimit — no
-      // shuffle) and dedup keys on the driver. This replaced what
-      // used to be three separate two-stage driver jobs (null-check
-      // isEmpty, key collect, newParts distinct) on the hot streaming
-      // path, where per-job scheduling overhead dominated the probe
-      // phase (~0.3 s/job at 100-doc batches). newParts from RAW rows
-      // is a superset of the survivors' partitions — a superseded
-      // row's partition rewrites unnecessarily but correctly — and
-      // the null guard is correspondingly stricter (a null part fails
-      // even in a row that would lose last-write-wins: loud beats
-      // subtle). The cap counts raw rows, not distinct keys, so a
-      // large batch falls to the distributed path slightly earlier —
-      // also safe.
+      // new-partition values AND the null-partition guard: collect the
+      // RAW pairs under a limit (CollectLimit — no shuffle) and dedup
+      // keys on the driver. newParts from RAW rows is a superset of the
+      // survivors' partitions — a superseded row's partition rewrites
+      // unnecessarily but correctly — and the null guard is
+      // correspondingly stricter (a null part fails even in a row that
+      // would lose last-write-wins: loud beats subtle). The cap counts
+      // raw rows, not distinct keys, so a large batch falls to the
+      // distributed path slightly earlier — also safe.
       val raw = phase("probe") {
-        stringified.select(col(idCol), col(partCol))
-          .limit(MaxInPush + 1).collect()
+        laidOut.select(col(idCol), col(partCol)).limit(IndexStore.MaxInPush + 1).collect()
       }
-      val capped = raw.length <= MaxInPush
-      // Hive writes a NULL partition value to the
-      // __HIVE_DEFAULT_PARTITION__ sentinel directory, which would not
-      // round-trip the touched-value compare or the drop path — fail
-      // fast rather than corrupt silently. (Past the cap the collected
-      // prefix may miss a null — the distributed guard on the bulk
-      // path below covers it.)
-      require(!capped || raw.forall(!_.isNullAt(1)),
-        s"upsertPartitioned: NULL $partCol in batch — null partition " +
-          "values do not round-trip hive partition directories; assign " +
-          "a sentinel value upstream")
-      if (capped) {
-        // MICRO-BATCH fast path (the per-trigger streaming commit —
-        // every per-trigger cost here is a latency floor): the key
-        // list is already on the driver, so (a) key removal is an
-        // In-filter fused into the stage scan, never an anti-join;
-        // (b) a batch whose raw keys are UNIQUE (the normal event-
-        // stream shape) skips the last-write-wins dedup shuffle
-        // outright — its survivors ARE the batch; (c) the moved-key
-        // probe (partitions the batch keys currently occupy OUTSIDE
-        // the batch's target partitions — almost always none for a
-        // time-local stream) runs CONCURRENTLY with the stage job
-        // instead of serially before it, so its wall cost hides
-        // behind the write; the rare non-empty result pays one extra
-        // bounded rewrite after the main commit.
-        val keyList: Array[Any] = raw.map(_.get(0)).distinct.toArray
-        // The In()-filter rewrites below run under SQL three-valued
-        // logic: a NULL in the In-list makes `NOT id IN (...)` evaluate
-        // NULL (= dropped) for EVERY non-matching row, and a NULL id in
-        // an existing row evaluates NULL against any list. The bulk
-        // path's anti-join KEEPS null-id rows on both sides (a null key
-        // never join-matches), so the fast path must match: the In-list
-        // carries only non-null keys (a batch null-id row never
-        // replaces anything — exactly the anti-join outcome) and every
-        // keep-filter below carries an explicit `id IS NULL OR` arm so
-        // existing null-id rows survive the rewrite.
-        val nonNullKeys: Array[Any] = keyList.filter(_ != null)
-        val keepNotInBatch =
-          col(idCol).isNull || !col(idCol).isin(nonNullKeys.toSeq: _*)
-        val newParts = raw.map(_.get(1).toString).toSet
-        if (keyList.isEmpty) 0L
+      if (raw.length <= IndexStore.MaxInPush) {
+        // Hive writes a NULL partition value to the
+        // __HIVE_DEFAULT_PARTITION__ sentinel directory, which would
+        // not round-trip the touched-value compare or the drop path.
+        require(raw.forall(!_.isNullAt(1)), nullPart)
+        // MICRO-BATCH path (the per-trigger streaming commit — every
+        // per-trigger cost here is a latency floor): the key list is
+        // already on the driver, so (a) key removal is an In-filter
+        // fused into the stage scan, never an anti-join; (b) a batch
+        // whose raw keys are UNIQUE (the normal event-stream shape)
+        // skips the last-write-wins dedup shuffle outright — its
+        // survivors ARE the batch; (c) the moved-key probe (partitions
+        // the batch keys currently occupy OUTSIDE the batch's target
+        // partitions — almost always none for a time-local stream)
+        // runs CONCURRENTLY with the stage job instead of serially
+        // before it, so its wall cost hides behind the write; the rare
+        // non-empty result pays one extra bounded rewrite after the
+        // main commit.
+        val keyList: Array[Any] = raw.map(_.get(0)).distinct
+        // The In() filters below run under SQL three-valued logic: a
+        // NULL in the In-list makes `NOT id IN (...)` evaluate NULL (=
+        // dropped) for EVERY non-matching row, and a NULL id in an
+        // existing row evaluates NULL against any list. The past-cap
+        // anti-join KEEPS null-id rows on both sides (a null key never
+        // join-matches), so this path must match: the In-list carries
+        // only non-null keys (a batch null-id row never replaces
+        // anything) and every keep-filter carries an explicit
+        // `id IS NULL OR` arm so existing null-id rows survive.
+        val nonNullKeys = keyList.filter(_ != null).toSeq
+        val keepNotInBatch = col(idCol).isNull || !col(idCol).isin(nonNullKeys: _*)
+        val newParts: Set[Any] = raw.map(_.get(1)).toSet
+        if (keyList.isEmpty) (0L, 0)
         else {
           import scala.concurrent.ExecutionContext.Implicits.global
           val movedFut = scala.concurrent.Future(phase("probe_idx") {
-            // In-pushed + row-group pruned by the within-file id sort;
+            // In-pushed + row-group pruned by the within-file key sort;
             // reads ONLY partitions outside newParts (partition filter),
             // which the concurrent commit never touches — no race with
             // the stage/rename of newParts directories.
             existing
-              .filter(!col(partCol).isInCollection(newParts.toSeq) &&
-                col(idCol).isin(nonNullKeys.toSeq: _*))
+              .filter(!col(partCol).isInCollection(newParts) &&
+                col(idCol).isin(nonNullKeys: _*))
               .select(col(partCol)).distinct()
-              .collect().map(_.get(0).toString).toSet
+              .collect().map(_.get(0)).toSet
           })
           // Deliberately NOT persisted: caching was measured SLOWER on
           // the micro-batch path (the InMemoryRelation build roughly
           // doubled the probe job, +0.6 s/batch at 100-doc batches) —
           // recomputing a batch-bounded dedup is cheaper than
           // materializing it columnar.
-          val b =
-            if (keyList.length == raw.length) stringified
-            else dedupByKey(stringified, idCol)
-          val replacement = existing
-            .filter(col(partCol).isInCollection(newParts.toSeq) &&
-              keepNotInBatch)
-            .unionByName(b)
-          overwritePartitions(replacement, indexName, partCol,
-            fingerprint = "live",
-            dropEmptiedOf = newParts,
-            withinFileSortCols = Seq(idCol))
+          val b = if (keyList.length == raw.length) laidOut else deduped
+          overwritePartitions(
+            existing.filter(col(partCol).isInCollection(newParts) && keepNotInBatch)
+              .unionByName(b),
+            indexName, partCol, fingerprint,
+            withinFileSortCols = Seq(idCol), dropEmptiedOf = newParts.map(_.toString))
           val moved = scala.concurrent.Await.result(movedFut,
             scala.concurrent.duration.Duration.Inf) -- newParts
-          if (moved.nonEmpty) {
-            // A key changed its locality value: remove its stale copy
-            // from each old partition. FRESH read (not `existing`) —
-            // the commit above already replaced newParts files under
-            // the old frame's file-index snapshot; this scan touches
-            // only `moved` partitions, which both commits rewrite
+          if (moved.nonEmpty)
+            // A key changed its partition: remove its stale copy from
+            // each old partition. FRESH read (not `existing`) — the
+            // commit above already replaced newParts files under the
+            // old frame's file-index snapshot; this scan touches only
+            // `moved` partitions, which both commits rewrite
             // exclusively here, under the same maintenance lock. A
             // crash between the two commits leaves the stale copy one
             // more batch — the streaming checkpoint replays the batch
             // and this idempotent merge converges.
-            val freshScan = readAllString(indexName, indexCols)
-              .filter(col(partCol).isInCollection(moved.toSeq) &&
-                keepNotInBatch)
-            overwritePartitions(freshScan, indexName, partCol,
-              fingerprint = "live",
-              dropEmptiedOf = moved,
-              withinFileSortCols = Seq(idCol))
-          }
-          keyList.length.toLong
+            overwritePartitions(
+              spark.read.schema(schema).parquet(dir(indexName).toString)
+                .filter(col(partCol).isInCollection(moved) && keepNotInBatch),
+              indexName, partCol, fingerprint,
+              withinFileSortCols = Seq(idCol), dropEmptiedOf = moved.map(_.toString))
+          (keyList.length.toLong, (newParts ++ moved).size)
         }
       } else {
-        // BULK path (past the driver push cap): distributed guards and
-        // probes — a plain semi-join, no broadcast HINT (a bulk
-        // batch's key set is unbounded, and the session's AQE promotes
-        // the join from ACTUAL runtime sizes — the broadcast-
-        // discipline rule every probe here follows), and the classic
-        // anti-join merge over all touched partitions at once.
-        val b = dedupByKey(stringified, idCol)
-        require(b.filter(col(partCol).isNull).isEmpty,
-          s"upsertPartitioned: NULL $partCol in batch — null partition " +
-            "values do not round-trip hive partition directories; assign " +
-            "a sentinel value upstream")
+        // BULK path (past the driver push cap): distributed probes — a
+        // plain semi-join, no broadcast HINT (a bulk batch's key set is
+        // unbounded, and the session's AQE promotes the join from
+        // ACTUAL runtime sizes — the broadcast-discipline rule every
+        // probe here follows), and the classic anti-join merge over
+        // all touched partitions at once.
+        val b = deduped
+        val newParts: Set[Any] = b.select(col(partCol)).distinct()
+          .collect().map(_.get(0)).toSet
+        require(!newParts.contains(null), nullPart)
         val keys = b.select(col(idCol)).distinct()
         val oldParts = phase("probe_idx") {
           existing.join(keys, Seq(idCol), "left_semi")
             .select(col(partCol)).distinct()
-            .collect().map(_.get(0).toString).toSet
+            .collect().map(_.get(0)).toSet
         }
-        val newParts = b.select(col(partCol)).distinct()
-          .collect().map(_.get(0).toString).toSet
         val touched = oldParts ++ newParts
+        // Counted BEFORE the commit: a batch whose lineage reads this
+        // index would count a different frame after it.
         val upserted = keys.count()
-        if (touched.isEmpty) 0L
-        else {
-          val replacement = existing
-            .filter(col(partCol).isInCollection(touched.toSeq))
+        // The merge plan executes ONCE: overwritePartitions stages it to
+        // parquet and finds emptied partitions (touched minus staged)
+        // by listing the stage.
+        overwritePartitions(
+          existing.filter(col(partCol).isInCollection(touched))
             .join(keys, Seq(idCol), "left_anti")
-            .unionByName(b.select(existing.columns.map(col).toSeq: _*))
-          // The merge plan executes ONCE: overwritePartitions stages it
-          // to parquet and derives emptied partitions (touched minus
-          // staged) from the cheap staged scan — collecting `remaining`
-          // here would run the touched-scan + anti-join + union a
-          // second time per commit.
-          overwritePartitions(replacement, indexName, partCol,
-            fingerprint = "live",
-            dropEmptiedOf = touched,
-            withinFileSortCols = Seq(idCol))
-          upserted
-        }
+            .unionByName(b.select(existing.columns.map(col).toSeq: _*)),
+          indexName, partCol, fingerprint,
+          withinFileSortCols = Seq(idCol), dropEmptiedOf = touched.map(_.toString))
+        (upserted, touched.size)
       }
     }
   }
-
-  /** The index under an EXPLICIT all-string read schema — see the
-    * partition-type-inference note in [[upsertPartitioned]]'s schema
-    * phase (zero-padded partition values must round-trip the
-    * directory names byte-identically).
-    */
-  private def readAllString(indexName: String, indexCols: Array[String]): DataFrame =
-    spark.read
-      .schema(org.apache.spark.sql.types.StructType(indexCols.map(c =>
-        org.apache.spark.sql.types.StructField(c,
-          org.apache.spark.sql.types.StringType))))
-      .parquet(dir(indexName).toString)
 
   /** Delete-by-query (ES `_delete_by_query`): rewrite the index
     * without matching docs. Copy-on-write like [[upsert]]; returns
@@ -729,16 +709,7 @@ class IndexStore(spark: SparkSession, root: String) {
   }
 
   /** The index an alias points at, if set. */
-  def resolveAlias(alias: String): Option[String] = {
-    val p = aliasPath(alias)
-    if (!fs.exists(p)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(buf) finally in.close()
-      Some(new String(buf, java.nio.charset.StandardCharsets.UTF_8))
-    }
-  }
+  def resolveAlias(alias: String): Option[String] = readSmallFile(aliasPath(alias))
 
   def dropAlias(alias: String): Unit = fs.delete(aliasPath(alias), false)
 
@@ -913,22 +884,36 @@ class IndexStore(spark: SparkSession, root: String) {
             .write
         else df.repartition(numShards).write
       writer.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      (sidecars + (MetaFile -> fingerprint)).foreach { case (file, content) =>
-        require(file.startsWith("_"),
-          s"sidecar must be underscore-prefixed (hidden from scans): $file")
-        val out = fs.create(new Path(tmp, file), true)
-        try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
+      writeSidecars(tmp, sidecars + (MetaFile -> fingerprint))
     }
 
+  /** Write small UTF-8 sidecar files into `d`, each overwritten whole.
+    * Names must be underscore-prefixed, so parquet scans skip them.
+    */
+  private def writeSidecars(d: Path, files: Map[String, String]): Unit =
+    files.foreach { case (file, content) =>
+      require(file.startsWith("_"),
+        s"sidecar must be underscore-prefixed (hidden from scans): $file")
+      val out = fs.create(new Path(d, file), true)
+      try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+
+  /** A small file's UTF-8 contents, None when it does not exist. */
+  private def readSmallFile(p: Path): Option[String] =
+    try {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
   /** Partition-granular incremental maintenance of a hive-PARTITIONED
-    * artifact: rewrite ONLY the partitions present in `df` (plus
-    * explicit `dropPartitionValues` for partitions the batch emptied),
-    * leaving every other partition's files physically untouched — the
-    * cell-local upsert path for cell-partitioned indexes (geo cells,
-    * IVF cells). At 100 TB a moved point costs its source and target
-    * CELL rewrites, never a corpus rebuild.
+    * artifact: rewrite ONLY the partitions present in `df`, drop those
+    * of `dropEmptiedOf` that `df` leaves empty, and leave every other
+    * partition's files physically untouched. This is the commit step of
+    * [[upsertKeyed]], where the keyed upsert of the document, geo and
+    * vector indexes lives; at 100 TB a moved point costs its source and
+    * target CELL rewrites, never a corpus rebuild.
     *
     * Failure contract (the upsertPostings discipline, made
     * partition-granular): partition swaps commit PER PARTITION, so a
@@ -951,11 +936,10 @@ class IndexStore(spark: SparkSession, root: String) {
     * escapes in directory names): every caller partitions by dates,
     * integer cells, or stringified numerics, and the byte-identity
     * contract between values and directory names is already load-
-    * bearing in [[upsertPartitioned]]'s probe and the drop path.
+    * bearing in [[upsertKeyed]]'s probe and the drop path.
     */
   def overwritePartitions(df: DataFrame, name: String, partitionCol: String,
                           fingerprint: String,
-                          dropPartitionValues: Seq[String] = Nil,
                           withinFileSortCols: Seq[String] = Nil,
                           dropEmptiedOf: Set[String] = Set.empty): Unit = {
     val d = dir(name)
@@ -1015,10 +999,7 @@ class IndexStore(spark: SparkSession, root: String) {
             throw new java.io.IOException(
               s"overwritePartitions: failed to commit partition $live")
         }
-        val emptied: Seq[String] =
-          if (dropEmptiedOf.isEmpty) Nil
-          else (dropEmptiedOf -- stagedParts).toSeq.sorted
-        (dropPartitionValues ++ emptied).foreach { v =>
+        (dropEmptiedOf -- stagedParts).toSeq.sorted.foreach { v =>
           val p = new Path(d, s"$partitionCol=$v")
           if (!fs.delete(p, true) && fs.exists(p))
             throw new java.io.IOException(
@@ -1026,9 +1007,7 @@ class IndexStore(spark: SparkSession, root: String) {
         }
       }
     } finally fs.delete(stage, true)
-    val out = fs.create(new Path(d, MetaFile), true)
-    try out.write(fingerprint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeSidecars(d, Map(MetaFile -> fingerprint))
   }
 
   /** Clear an artifact's provenance fingerprint — the FIRST step of a
@@ -1148,13 +1127,7 @@ class IndexStore(spark: SparkSession, root: String) {
     * unreadable/absent.
     */
   private def readLockToken(lock: Path): Option[String] =
-    try {
-      val in = fs.open(lock)
-      val bos = new java.io.ByteArrayOutputStream()
-      try org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-      finally in.close()
-      Some(new String(bos.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: java.io.IOException => None }
+    try readSmallFile(lock) catch { case _: java.io.IOException => None }
 
   /** Re-stamp fingerprint + sidecars — the LAST step of a maintenance
     * bracket opened by [[clearArtifactFingerprint]].
@@ -1181,14 +1154,7 @@ class IndexStore(spark: SparkSession, root: String) {
               "the batch may have interleaved with another writer; the " +
               "cleared fingerprint forces readers to rebuild")
     }
-    val d = dir(name)
-    (sidecars + (MetaFile -> fingerprint)).foreach { case (file, content) =>
-      require(file.startsWith("_"),
-        s"sidecar must be underscore-prefixed (hidden from scans): $file")
-      val out = fs.create(new Path(d, file), true)
-      try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    writeSidecars(dir(name), sidecars + (MetaFile -> fingerprint))
   }
 
   /** Append ONE new hive partition — a SEGMENT — to a partitioned
@@ -1227,16 +1193,8 @@ class IndexStore(spark: SparkSession, root: String) {
   def artifactPath(name: String): String = dir(name).toString
 
   /** A sidecar metadata file of an artifact, if present. */
-  def artifactSidecar(name: String, file: String): Option[String] = {
-    val p = new Path(dir(name), file)
-    if (!fs.exists(p)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(buf) finally in.close()
-      Some(new String(buf, java.nio.charset.StandardCharsets.UTF_8))
-    }
-  }
+  def artifactSidecar(name: String, file: String): Option[String] =
+    readSmallFile(new Path(dir(name), file))
 
   /** The fingerprint an artifact was built from, if it exists. */
   def artifactFingerprint(name: String): Option[String] =
@@ -1262,6 +1220,14 @@ object IndexStore {
     * the hour.
     */
   private[graft] val LockHeartbeatMs: Long = 5 * 60 * 1000L
+
+  /** Driver push cap of the keyed probes ([[IndexStore.upsertKeyed]],
+    * `upsertPostings`): a batch of at most this many rows collects its
+    * keys to the driver and pushes them into scans as In filters; a
+    * larger one stays distributed. Sized above the ~20k-row triggers of
+    * the `_stream_latency` events drain.
+    */
+  private[graft] val MaxInPush = 50000
 
   /** Live maintenance leases held by THIS JVM: (artifact root, name) →
     * owner token. [[IndexStore.stampArtifact]] consults it to refuse

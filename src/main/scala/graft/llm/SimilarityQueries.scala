@@ -1638,71 +1638,24 @@ object SimilarityQueries {
     * batch's vectors now land in plus the cells its keys currently
     * occupy, so a re-encoded vector leaves no stale code in its
     * source cell (and a source cell the batch emptied is dropped
-    * outright). Locating current cells is a column-pruned key probe
-    * of the (vec_id, cell) projection. Cost is O(batch) encode +
-    * O(touched cells) rewrite — at 100 TB a micro-batch costs its
-    * ~nProbe-scale cell set, never a corpus re-write (the previous
-    * whole-artifact upsert re-staged every cell per batch). The model
-    * sidecar lives at the artifact root, which the partition-granular
-    * path never clears, so served probes before and after the upsert
-    * run the same geometry; the failure contract is
-    * [[graft.etl.IndexStore.overwritePartitions]]'s fingerprint-
-    * cleared-first discipline.
+    * outright). Cost is O(batch) encode + O(touched cells) rewrite.
+    * The algorithm is [[graft.etl.IndexStore.upsertKeyed]]; this
+    * caller supplies the encode. The model sidecar lives at the
+    * artifact root, which the partition-granular path never clears,
+    * so served probes before and after the upsert run the same
+    * geometry. Returns the index's row count after the batch.
     */
   private[graft] def upsertVecIndex(store: graft.etl.IndexStore,
                                     batch: DataFrame,
-                                    fingerprint: String): Long =
-    store.withMaintenanceLock(VecIndexName) {
+                                    fingerprint: String): Long = {
     val model = IvfPqModel.parse(
       store.artifactSidecar(VecIndexName, ModelSidecar).getOrElse(
         sys.error(s"$VecIndexName has no model sidecar — build the index " +
           "before upserting into it")))
-    // A micro-batch can carry TWO updates to one vec_id; without a
-    // batch-internal dedup both rows survive the union below and the
-    // index serves duplicate keys — violating the last-write-wins
-    // contract. Survivor is the deterministic per-key struct-max
-    // (same discipline as bulkImport's dedupByKey); callers that care
-    // which in-batch write wins must carry an order column themselves.
-    val b = store.dedupByKey(batch, "vec_id")
-    val enc = encodeWithModel(embDouble(b), model)
-    val idx = store.read(VecIndexName)
-    val keys = b.select(col("vec_id")).distinct()
-    // Locating the batch keys' CURRENT cells: for a micro-batch the id
-    // list pushes into the index scan as an In filter — the build's
-    // within-cell vec_id sort turns it into row-group pruning, so the
-    // probe reads O(batch) row groups instead of the whole (vec_id,
-    // cell) projection; a bulk batch past the push cap falls back to
-    // the distributed semi-join probe (same rule as the postings
-    // doclen probe).
-    val MaxInPush = 10000
-    val keyList = keys.limit(MaxInPush + 1).collect().map(_.getLong(0))
-    val oldCellsDf =
-      if (keyList.length <= MaxInPush)
-        idx.filter(col("vec_id").isin(keyList.toSeq: _*))
-      else idx.join(broadcast(keys), Seq("vec_id"))
-    val oldCells = oldCellsDf
-      .select(col("cell")).distinct().collect().map(_.getInt(0)).toSet
-    val newCells = enc.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val touched = oldCells ++ newCells
-    // An empty micro-batch (routine under foreachBatch) touches no
-    // cells — return before staging: overwritePartitions would write
-    // an empty stage dir that parquet cannot re-read (no schema).
-    // (A `return` inside the lock body would bypass the by-name
-    // wrapper's finally on some Scala lowerings — use if/else.)
-    if (touched.isEmpty) store.count(VecIndexName)
-    else {
-      val replacement = idx.filter(col("cell").isInCollection(touched.toSeq))
-        .join(broadcast(keys), Seq("vec_id"), "left_anti")
-        .unionByName(enc.select(idx.columns.map(col).toSeq: _*))
-      val remaining = replacement.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      store.overwritePartitions(replacement, VecIndexName, "cell", fingerprint,
-        dropPartitionValues = (touched -- remaining).toSeq.sorted.map(_.toString),
-        withinFileSortCols = Seq("vec_id"))
-      store.count(VecIndexName)
-    }
-    }
+    store.upsertKeyed(batch, VecIndexName, "vec_id", "cell", fingerprint)(
+      b => encodeWithModel(embDouble(b), model))
+    store.count(VecIndexName)
+  }
 
   val oracleSql: Map[String, String] = Map(
     "llm_cosine_topk" ->

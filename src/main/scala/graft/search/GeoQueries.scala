@@ -254,61 +254,15 @@ object GeoQueries {
     * only the CELLS involved are rewritten — the cells the batch's new
     * coordinates land in plus the cells its keys currently occupy, so
     * a moved point leaves no stale row in its source cell (and a
-    * source cell the batch emptied is dropped outright). Locating
-    * current cells is a column-pruned key probe of the index (at
-    * 100 TB a key→cell sidecar would serve it; the (c_custkey, gh)
-    * projection scan is the documented stand-in) — the REWRITE cost is
-    * bounded by the touched partitions, never the corpus. Failure
-    * contract lives in [[graft.etl.IndexStore.overwritePartitions]].
-    * Returns the number of touched cells.
+    * source cell the batch emptied is dropped outright). The algorithm
+    * is [[graft.etl.IndexStore.upsertKeyed]]; this caller supplies the
+    * cell projection. Returns the number of touched cells.
     */
   private[graft] def upsertGeoPoints(s: SparkSession, dir: String,
-                                     batch: DataFrame): Int = {
-    val store = new graft.etl.IndexStore(s, graft.etl.IndexStore.artifactRoot(dir))
-    store.withMaintenanceLock(GeoIndexName) {
-    val idx = store.read(GeoIndexName)
-    // Batch-internal key dedup: two updates to one c_custkey in a
-    // micro-batch would BOTH survive the union (the anti-join only
-    // removes OLD index rows) and the index would serve duplicate
-    // keys. Deterministic per-key struct-max survivor, same
-    // discipline as bulkImport's dedupByKey.
-    val batchG = withCell(store.dedupByKey(batch, "c_custkey"))
-    val keys = batchG.select(col("c_custkey")).distinct()
-    // Current-cell probe: micro-batch id lists push into the index
-    // scan as an In filter (row-group-pruned by the within-cell key
-    // sort); past the cap, the distributed semi-join (the doclen
-    // probe rule).
-    val MaxInPush = 10000
-    val keyList = keys.limit(MaxInPush + 1).collect().map(_.getLong(0))
-    val oldCellsDf =
-      if (keyList.length <= MaxInPush)
-        idx.filter(col("c_custkey").isin(keyList.toSeq: _*))
-      else idx.join(broadcast(keys), Seq("c_custkey"))
-    val oldCells = oldCellsDf
-      .select(col("gh")).distinct().collect().map(_.getInt(0)).toSet
-    val newCells = batchG.select(col("gh")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val touched = oldCells ++ newCells
-    // An empty micro-batch (routine under foreachBatch) touches no
-    // cells — return before staging: overwritePartitions would write
-    // an empty stage dir that parquet cannot re-read (no schema).
-    // (if/else, not `return`: a non-local return from the lock's
-    // by-name body would skip its release path.)
-    if (touched.isEmpty) 0
-    else {
-      val replacement = idx.filter(col("gh").isInCollection(touched.toSeq))
-        .join(broadcast(keys), Seq("c_custkey"), "left_anti")
-        .unionByName(batchG)
-      val remaining = replacement.select(col("gh")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      store.overwritePartitions(replacement, GeoIndexName, "gh",
-        "geo_points_v1_gh2:stream-maintained",
-        dropPartitionValues = (touched -- remaining).toSeq.sorted.map(_.toString),
-        withinFileSortCols = Seq("c_custkey"))
-      touched.size
-    }
-    }
-  }
+                                     batch: DataFrame): Int =
+    new graft.etl.IndexStore(s, graft.etl.IndexStore.artifactRoot(dir))
+      .upsertKeyed(batch, GeoIndexName, "c_custkey", "gh",
+        "geo_points_v1_gh2:stream-maintained")(withCell)._2
 
   /** The 10-bit cell id of bucket coordinates — the Scala mirror of
     * [[geohash2BitsExpr]] (lon gets the odd bits, lat the even,

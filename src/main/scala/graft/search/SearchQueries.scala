@@ -249,7 +249,9 @@ object SearchQueries {
     val deleted = postingsDeletedPath(store)
     if (!fsOf(store).exists(new org.apache.hadoop.fs.Path(deleted))) rows
     else {
-      val tomb = store.session.read.schema(DeletedSchema).parquet(deleted)
+      // Through its part files: Spark ignores (and warns about) a
+      // root path whose own name starts with `_`.
+      val tomb = store.session.read.schema(DeletedSchema).parquet(s"$deleted/*.parquet")
       rows.join(broadcast(tomb),
         rows("doc_id") === tomb("doc_id") && rows("seg") <= tomb("kill_seg"),
         "left_anti")
@@ -273,7 +275,10 @@ object SearchQueries {
     val covered = fsOf(store).exists(new org.apache.hadoop.fs.Path(dl)) &&
       segsOf(store, store.artifactPath(PostingsName)).subsetOf(segsOf(store, dl))
     if (covered)
-      withoutTombstoned(store, store.session.read.schema(DoclenSchema).parquet(dl))
+      // Through its `seg=k` dirs (see withoutTombstoned's read), with
+      // `_doclen` as the base path the `seg` partition is parsed from.
+      withoutTombstoned(store, store.session.read.schema(DoclenSchema)
+        .option("basePath", dl).parquet(s"$dl/seg=*"))
         .select(col("doc_id"), col("n_tokens"))
     else resolvedPostings(store).select(col("doc_id"), col("n_tokens")).distinct()
   }
@@ -311,16 +316,21 @@ object SearchQueries {
                                     batch: DataFrame,
                                     fingerprint: String = "stream-maintained"): Long =
     store.withMaintenanceLock(PostingsName) {
-    val ids = batch.select(col("doc_id")).distinct()
     val Array(oldN, oldDl) = store.artifactSidecar(PostingsName, PostingsStatsSidecar)
       .getOrElse(sys.error(s"$PostingsName has no corpus-stats sidecar"))
       .split(' ').map(_.toDouble)
+    val topGen = segsOf(store, store.artifactPath(PostingsName)).maxOption
+    // ONE bounded single-stage job over the batch's (doc_id, n_tokens)
+    // rows answers whether it is empty, which ids it carries and its
+    // (doc count, token sum) — exact, as sums of integer lengths. Past
+    // the push cap the ids and stats stay distributed.
+    val raw = doclenOf(batch).limit(graft.etl.IndexStore.MaxInPush + 1).collect()
+    val capped = raw.length <= graft.etl.IndexStore.MaxInPush
     // An empty micro-batch (routine under foreachBatch) must not burn
     // a segment generation or write empty segment/tombstone files —
     // return the current max gen untouched (if/else, not `return`:
     // the lock body is by-name).
-    val topGen = segsOf(store, store.artifactPath(PostingsName)).maxOption
-    if (batch.isEmpty) topGen.getOrElse(0).toLong
+    if (raw.isEmpty) topGen.getOrElse(0).toLong
     else {
     // Stats-delta probe against the DOCLEN sidecar table, with the
     // batch's id list PUSHED into its doc-sorted scan when the batch
@@ -329,17 +339,23 @@ object SearchQueries {
     // the push cap falls back to the distributed semi-join, still
     // over the 1-row-per-doc table rather than the full postings.
     val doclen = resolvedDoclen(store)
-    val MaxInPush = 10000
-    val idList = ids.limit(MaxInPush + 1).collect().map(_.getLong(0))
+    val idList = raw.map(_.getLong(0)).distinct.toSeq
+    // Below the cap the tombstones come from the collected list, as
+    // one file (a local frame would otherwise write one per core).
+    val ids =
+      if (capped) { val s = store.session; import s.implicits._; idList.toDF("doc_id").coalesce(1) }
+      else batch.select(col("doc_id")).distinct()
     val probe =
-      if (idList.length <= MaxInPush)
-        doclen.filter(col("doc_id").isin(idList.toSeq: _*))
+      if (capped) doclen.filter(col("doc_id").isin(idList: _*))
       else doclen.join(ids, Seq("doc_id"), "left_semi")
     val removed = probe
       .select(col("doc_id"), col("n_tokens")).distinct()
       .agg(coalesce(count(lit(1)), lit(0L)).cast(DoubleType),
         coalesce(sum(col("n_tokens")), lit(0L)).cast(DoubleType)).head
-    val (batchN, batchDl) = corpusStatsOf(batch)
+    val (batchN, batchDl) =
+      if (capped) (raw.length.toDouble,
+        raw.filterNot(_.isNullAt(1)).map(_.getInt(1).toDouble).sum)
+      else corpusStatsOf(batch)
     val gen = topGen.getOrElse(-1) + 1
     store.clearArtifactFingerprint(PostingsName)
     store.appendPartition(postingsOf(batch), PostingsName, "seg",

@@ -680,6 +680,44 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(store.count("nidx") == 6)
   }
 
+  test("upsertPartitioned past the push cap equals a last-write-wins fold") {
+    import spark.implicits._
+    val (store, root) = newStoreWithRoot
+    // Keys 50..99 sit alone in partition `gone`; the batch moves them
+    // all out, so the distributed path must drop that partition.
+    store.bulkImportPartitioned((0L until 1000L).map(k =>
+        (k, if (k >= 50 && k < 100) "gone" else s"p${k % 4}", s"old$k"))
+      .toDF("doc_id", "part", "payload"), "capidx", "doc_id", "part")
+    val batchRows = (50L to 50050L).map(k => (k, s"p${(k / 7) % 4}", s"new$k"))
+    val batch = batchRows.toDF("doc_id", "part", "payload")
+    assert(batch.count() > etl.IndexStore.MaxInPush, "the batch must pass the push cap")
+    assert(store.upsertPartitioned(batch, "capidx", "doc_id", "part") == batchRows.size)
+    val fold = ((0L until 50L).map(k => (k, s"p${k % 4}", s"old$k")) ++ batchRows)
+      .map { case (k, p, v) => (k.toString, p, v) }.toSet
+    val got = store.read("capidx").select("doc_id", "part", "payload").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(got.length == fold.size, "one row per key")
+    assert(got.toSet == fold)
+    assert(!new java.io.File(s"$root/capidx/part=gone").exists(),
+      "the emptied partition must drop")
+  }
+
+  test("keyed upsert on an integer-partitioned artifact drops a partition it empties") {
+    import spark.implicits._
+    val (store, root) = newStoreWithRoot
+    store.writeArtifact(Seq((1L, "a", 0), (2L, "b", 0), (3L, "c", 7)).toDF("id", "v", "p"),
+      "intidx", "fp0", partitionCols = Seq("p"), withinFileSortCols = Seq("id"))
+    // Key 3 is partition 7's only key: moving it must drop p=7 whole.
+    val (upserted, touched) = store.upsertKeyed(
+      Seq((3L, "c2", 0)).toDF("id", "v", "p"), "intidx", "id", "p", "fp1")(identity)
+    assert((upserted, touched) == ((1L, 2)))
+    assert(!new java.io.File(s"$root/intidx/p=7").exists(), "emptied partition must drop")
+    val rows = store.read("intidx").select("id", "v", "p").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+    assert(rows == Set((1L, "a", 0), (2L, "b", 0), (3L, "c2", 0)), s"stale row left: $rows")
+    assert(store.artifactFingerprint("intidx").contains("fp1"))
+  }
+
   test("pathFingerprint tracks file metadata, not path strings only") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_fp")
     val f = tmp.resolve("t.parquet")

@@ -309,6 +309,49 @@ class RelevanceTileSpec extends AnyFunSuite {
     assert(store.count(graft.search.GeoQueries.GeoIndexName) == before)
   }
 
+  test("a 2-row geo upsert runs 7 Spark jobs") {
+    // Schema footer, the (key, cell) collect, the moved-key probe, the
+    // stage write and the moved cell's rewrite — no second run of the
+    // merge plan to learn which cells emptied.
+    import spark.implicits._
+    val store = new etl.IndexStore(spark, etl.IndexStore.artifactRoot(sf))
+    store.deleteIndex(graft.search.GeoQueries.GeoIndexName)
+    graft.search.GeoQueries.materializedGeoIndex(spark, sf)
+    val batch = Seq((1L, 111111L, 222222L), (987654321L, -333333L, 444444L))
+      .toDF("c_custkey", "lat_e4", "lon_e4")
+    val sc = spark.sparkContext
+    val marker = "geo-jobs-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markers = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).map(_.getProperty("spark.jobGroup.id")).contains(marker))
+          markers.incrementAndGet()
+        else jobs.incrementAndGet()
+    }
+    // Listener delivery is async but ordered: once a marker job's start
+    // arrives, every job started before it has been counted.
+    def drain(): Unit = {
+      val want = markers.get() + 1
+      sc.setJobGroup(marker, "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (markers.get() < want && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(markers.get() >= want, "marker job never reached the listener")
+    }
+    sc.addSparkListener(listener)
+    try {
+      drain()
+      jobs.set(0)
+      assert(graft.search.GeoQueries.upsertGeoPoints(spark, sf, batch) == 3)
+      drain()
+      assert(jobs.get() == 7, s"a 2-row geo upsert ran ${jobs.get()} Spark jobs")
+    } finally {
+      sc.removeSparkListener(listener)
+      store.deleteIndex(graft.search.GeoQueries.GeoIndexName)
+    }
+  }
+
   // --- pipeline bucket aggs ---------------------------------------------
 
   private lazy val dailyCounts: Seq[Long] = {

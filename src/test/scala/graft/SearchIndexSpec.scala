@@ -359,4 +359,39 @@ class SearchIndexSpec extends AnyFunSuite {
     assert(served.map(_.toString).toSeq == scanned.map(_.toString).toSeq,
       s"served=${served.mkString("; ")}\nscanned=${scanned.mkString("; ")}")
   }
+
+  test("upserts and BM25 reads log no 'All paths were ignored' for _deleted or _doclen") {
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    val (_, store) = builtCorpus("graft_hidden", 40)
+    val ignored = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "ignored-paths", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("All paths were ignored")) ignored.add(m)
+      }
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager.getLogger(
+      classOf[org.apache.spark.sql.execution.datasources.DataSource]).asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    try {
+      // Two upserts: the second reads the first's tombstones and doclen.
+      SearchQueries.upsertPostings(store, docsDf(30, 45))
+      SearchQueries.upsertPostings(store, docsDf(40, 50))
+      val Array(nDocs, sumDl) = store.artifactSidecar(SearchQueries.PostingsName,
+        SearchQueries.PostingsStatsSidecar).get.split(' ').map(_.toDouble)
+      assert(SearchQueries.bm25FromPostings(SearchQueries.resolvedPostings(store),
+        nDocs, sumDl, Seq("spark", "vector")).collect().nonEmpty)
+      assert(ignored.isEmpty, s"hidden-path warnings: ${ignored.toArray.mkString("; ")}")
+      // The capture itself works: reading the hidden root directly warns.
+      spark.read.schema(SearchQueries.DeletedSchema).parquet(
+        s"${store.artifactPath(SearchQueries.PostingsName)}/${SearchQueries.PostingsDeleted}")
+      assert(ignored.size == 1, "the logger capture saw no warning from a hidden root")
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
 }
