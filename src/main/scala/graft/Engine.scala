@@ -54,12 +54,23 @@ object Engine {
   /** Local core count: `SPARK_GRAFT_CPUS` if set, else every core. */
   def cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
 
-  private[graft] def parseCpus(v: Option[String]): Int = v match {
-    case None => Runtime.getRuntime.availableProcessors()
-    case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
-  }
+  private[graft] def parseCpus(v: Option[String]): Int =
+    positiveInt("SPARK_GRAFT_CPUS", v, Runtime.getRuntime.availableProcessors())
+
+  /** The positive integer env var `name` holds, or `default` if unset. */
+  private[graft] def positiveIntEnv(name: String, default: => Int): Int =
+    positiveInt(name, sys.env.get(name), default)
+
+  /** `v` as a positive integer, `default` when absent; any other value
+    * fails naming the variable it came from.
+    */
+  private[graft] def positiveInt(name: String, v: Option[String], default: => Int): Int =
+    v match {
+      case None => default
+      case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be a positive integer, got '$s'"))
+    }
 
   /** Every setting goes on the builder: sessions cloned with
     * `newSession()` inherit builder settings, not runtime `conf.set`s.

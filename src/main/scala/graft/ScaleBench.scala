@@ -275,7 +275,7 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
+    val factor = Engine.positiveIntEnv("SPARK_GRAFT_SCALE_FACTOR", 10)
     val scaledDir = s"/tmp/graft_scale_${factor}x"
     val spark = Engine.session(extra = Map(
       "spark.sql.streaming.forceDeleteTempCheckpointLocation" -> "true",
@@ -385,7 +385,7 @@ object ScaleBench {
       .orElse(if (corpusMode == "zipf")
         Some(Set("llm_dedup_minhash_banded", "llm_dedup_substring",
           "llm_dedup_winnow")) else None)
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPEAT", "1").toInt
+    val repeat = Engine.positiveIntEnv("SPARK_GRAFT_SCALE_REPEAT", 1)
 
     // HEAP-FLOOR PRE-FLIGHT (round-12 verdict #7): the published
     // single-box envelope (SCALE.md round-12 table) has every zipf

@@ -1161,7 +1161,11 @@ class IndexStore(spark: SparkSession, root: String) {
     * artifact without touching any existing file: the Lucene-style
     * maintenance primitive (new postings land as a fresh range-sorted
     * segment dir; existing segments are immutable until compaction).
-    * The segment stages under an underscore-hidden dir inside the
+    * With `rangeSortCols`, the segment is `numShards` files that tile
+    * the sort-key space, placed by a range-partition sample; with
+    * `numShards = 1` it is one sorted file and no sample runs, the
+    * form for a small flush whose rows fit one file. The segment
+    * stages under an underscore-hidden dir inside the
     * artifact and renames into place, so readers never see a partial
     * segment. Does NOT manage the provenance fingerprint — callers
     * bracket the whole batch with [[clearArtifactFingerprint]] /
@@ -1178,7 +1182,8 @@ class IndexStore(spark: SparkSession, root: String) {
     fs.delete(stage, true)
     val w =
       if (rangeSortCols.nonEmpty)
-        df.repartitionByRange(numShards, rangeSortCols.map(col): _*)
+        (if (numShards == 1) df.coalesce(1)
+         else df.repartitionByRange(numShards, rangeSortCols.map(col): _*))
           .sortWithinPartitions(rangeSortCols.map(col): _*)
       else df.repartition(numShards)
     w.write.mode(SaveMode.Overwrite).parquet(stage.toString)
@@ -1224,8 +1229,9 @@ object IndexStore {
   /** Driver push cap of the keyed probes ([[IndexStore.upsertKeyed]],
     * `upsertPostings`): a batch of at most this many rows collects its
     * keys to the driver and pushes them into scans as In filters; a
-    * larger one stays distributed. Sized above the ~20k-row triggers of
-    * the `_stream_latency` events drain.
+    * larger one stays distributed. The postings tombstone set is read
+    * on the driver and applied as a Filter up to the same size. Sized
+    * above the ~20k-row triggers of the `_stream_latency` events drain.
     */
   private[graft] val MaxInPush = 50000
 

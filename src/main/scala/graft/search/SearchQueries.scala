@@ -207,14 +207,17 @@ object SearchQueries {
     docs.select(col("doc_id"), size(tokens(col("text"))).as("n_tokens"))
 
   /** Write one doclen SEGMENT (doc-sorted so a pushed In(doc_id) list
-    * prunes row groups to O(batch)).
+    * prunes row groups to O(batch)) as `numShards` doc_id-range files;
+    * one shard is one sorted file, with no range boundaries to sample.
     */
   private def writeDoclenRows(store: graft.etl.IndexStore, rows: DataFrame,
-                              seg: Int): Unit =
-    castTo(DoclenSchema)(rows)
-      .repartitionByRange(4, col("doc_id")).sortWithinPartitions("doc_id")
+                              seg: Int, numShards: Int = 4): Unit = {
+    val cast = castTo(DoclenSchema)(rows)
+    (if (numShards == 1) cast.coalesce(1) else cast.repartitionByRange(numShards, col("doc_id")))
+      .sortWithinPartitions("doc_id")
       .write.mode("overwrite")
       .parquet(s"${postingsDoclenPath(store)}/seg=$seg")
+  }
 
   private def writeDoclenSeg(store: graft.etl.IndexStore, docs: DataFrame,
                              seg: Int): Unit =
@@ -234,27 +237,79 @@ object SearchQueries {
       .map(_.getPath.getName.stripPrefix("seg=").toInt).toSet
   }
 
+  /** The `_deleted` set as doc_id → its highest kill_seg, read on the
+    * driver with parquet-mr (no Spark job), or None once more than
+    * [[graft.etl.IndexStore.MaxInPush]] rows have been read. A doc's
+    * highest kill_seg covers its lower ones, and a NULL doc_id or
+    * kill_seg matches no row, so those rows leave the set.
+    */
+  private def tombstonesOnDriver(store: graft.etl.IndexStore,
+                                 parts: Seq[org.apache.hadoop.fs.Path]): Option[Map[Long, Int]] = {
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    val conf = store.session.sparkContext.hadoopConfiguration
+    val cap = graft.etl.IndexStore.MaxInPush
+    val files = parts.iterator
+    val kill = scala.collection.mutable.HashMap.empty[Long, Int]
+    var n = 0
+    while (n <= cap && files.hasNext) {
+      val reader = ParquetReader.builder(new GroupReadSupport, files.next()).withConf(conf).build()
+      try {
+        var g = reader.read()
+        while (g != null && n <= cap) {
+          n += 1
+          if (g.getFieldRepetitionCount("doc_id") > 0 && g.getFieldRepetitionCount("kill_seg") > 0) {
+            val (id, k) = (g.getLong("doc_id", 0), g.getInteger("kill_seg", 0))
+            kill(id) = kill.get(id).fold(k)(math.max(_, k))
+          }
+          g = reader.read()
+        }
+      } finally reader.close()
+    }
+    if (n > cap) None else Some(kill.toMap)
+  }
+
   /** `rows` of a segmented table of the artifact (postings or doclen)
     * minus the tombstoned ones: a row dies when some `_deleted` row has
-    * its doc_id and a kill_seg at or above its seg. Anti-joining the raw
-    * tombstones gives exactly the rows a join against max(kill_seg) per
-    * doc would keep, without that aggregate's shuffle. The broadcast is
-    * bounded by the updates since the last compaction. With no
-    * tombstones (the built-once case and every driver-gate query) the
-    * rows come back unjoined, so plans change only once maintenance
-    * has happened.
+    * its doc_id and a kill_seg at or above its seg. Below the push cap
+    * the set is read on the driver and applied as a plain Filter — per
+    * kill_seg k, `seg <= k AND doc_id IN ids_k`, negated null-safely so
+    * a NULL-doc_id row survives — which adds no Spark job to any read,
+    * upsert probe or compaction. Past the cap the raw tombstones are
+    * broadcast and anti-joined; both forms keep exactly the rows a join
+    * against max(kill_seg) per doc would keep. The set grows with the
+    * updates since the last compaction. With no tombstones (the
+    * built-once case and every driver-gate query) the rows come back
+    * unfiltered, so plans change only once maintenance has happened.
+    *
+    * Snapshot rule: the frame carries the tombstone set as it was when
+    * the frame was built, as its scan carries the file listing of that
+    * moment. Tombstone files are only ever appended, and compaction
+    * swaps the whole artifact directory, so a built frame never mixes
+    * the segments of one state with the tombstones of another.
     */
   private def withoutTombstoned(store: graft.etl.IndexStore,
                                 rows: DataFrame): DataFrame = {
-    val deleted = postingsDeletedPath(store)
-    if (!fsOf(store).exists(new org.apache.hadoop.fs.Path(deleted))) rows
-    else {
-      // Through its part files: Spark ignores (and warns about) a
-      // root path whose own name starts with `_`.
-      val tomb = store.session.read.schema(DeletedSchema).parquet(s"$deleted/*.parquet")
-      rows.join(broadcast(tomb),
-        rows("doc_id") === tomb("doc_id") && rows("seg") <= tomb("kill_seg"),
-        "left_anti")
+    val deleted = new org.apache.hadoop.fs.Path(postingsDeletedPath(store))
+    // Its part files, listed: Spark ignores (and warns about) a root
+    // path whose own name starts with `_`.
+    val parts =
+      if (!fsOf(store).exists(deleted)) Nil
+      else fsOf(store).listStatus(deleted).toSeq.map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    if (parts.isEmpty) rows
+    else tombstonesOnDriver(store, parts) match {
+      case Some(kill) if kill.isEmpty => rows
+      case Some(kill) =>
+        val dies = kill.groupMap(_._2)(_._1).toSeq.sortBy(_._1).map { case (k, ids) =>
+          col("seg") <= k && col("doc_id").isin(ids.toSeq.sorted: _*)
+        }.reduce(_ || _)
+        rows.filter(!coalesce(dies, lit(false)))
+      case None =>
+        val tomb = store.session.read.schema(DeletedSchema).parquet(parts.map(_.toString): _*)
+        rows.join(broadcast(tomb),
+          rows("doc_id") === tomb("doc_id") && rows("seg") <= tomb("kill_seg"),
+          "left_anti")
     }
   }
 
@@ -272,13 +327,16 @@ object SearchQueries {
     // reading the partial table would silently under-count removed
     // docs. Coverage gaps (also: any crash window) fall back to
     // deriving from the postings; the next compaction heals the table.
-    val covered = fsOf(store).exists(new org.apache.hadoop.fs.Path(dl)) &&
-      segsOf(store, store.artifactPath(PostingsName)).subsetOf(segsOf(store, dl))
+    val dlSegs = segsOf(store, dl)
+    val covered = dlSegs.nonEmpty &&
+      segsOf(store, store.artifactPath(PostingsName)).subsetOf(dlSegs)
     if (covered)
-      // Through its `seg=k` dirs (see withoutTombstoned's read), with
-      // `_doclen` as the base path the `seg` partition is parsed from.
+      // Through the `seg=k` dirs just listed, with `_doclen` as the
+      // base path the `seg` partition is parsed from: Spark ignores a
+      // root whose own name starts with `_`, and warns with a stack
+      // trace when it probes a glob for a streaming-sink log.
       withoutTombstoned(store, store.session.read.schema(DoclenSchema)
-        .option("basePath", dl).parquet(s"$dl/seg=*"))
+        .option("basePath", dl).parquet(dlSegs.toSeq.sorted.map(g => s"$dl/seg=$g"): _*))
         .select(col("doc_id"), col("n_tokens"))
     else resolvedPostings(store).select(col("doc_id"), col("n_tokens")).distinct()
   }
@@ -296,16 +354,26 @@ object SearchQueries {
   /** Incremental postings maintenance for one ingest batch — the ES/
     * Lucene continuous-indexing loop for the SEARCH index, SEGMENT-
     * APPEND shaped: the batch's postings land as one new immutable
-    * range-sorted segment (O(batch) write — no existing file is
+    * term-sorted segment (O(batch) write — no existing file is
     * touched), the batch's doc ids tombstone their rows in every
     * older segment (so a changed doc that lost a term serves no stale
     * posting), and the corpus-stats sidecar advances by the batch
-    * DELTA (removed docs' contribution comes from the resolved index,
-    * one distinct row per doc — never a corpus rescan). At 100 TB a
+    * DELTA (removed docs' contribution comes from the resolved doclen
+    * table, one row per doc — never a corpus rescan). At 100 TB a
     * micro-batch therefore costs its own size, not a corpus rewrite —
     * the vec/geo cell-granularity discipline applied to an artifact
     * whose sort key (term) every batch straddles. Read amplification
     * grows with segment count; [[compactPostings]] folds it back.
+    *
+    * A batch of at most [[graft.etl.IndexStore.MaxInPush]] rows (the
+    * micro-batch case) is handled like a Lucene flush: its
+    * (doc_id, n_tokens) rows are collected once, the removed docs'
+    * stats are summed here from the at most |batch| probed doclen
+    * rows, and the postings, doclen and tombstone segments are each
+    * written as ONE sorted file with no range-sampling job. A larger
+    * batch keeps its ids and stats distributed and writes range-
+    * partitioned segments.
+    *
     * Crash contract: the whole batch runs inside a fingerprint
     * cleared-first bracket — segment, tombstones, or sidecar missing
     * at a crash leaves a mismatch that forces readers to rebuild.
@@ -345,13 +413,20 @@ object SearchQueries {
     val ids =
       if (capped) { val s = store.session; import s.implicits._; idList.toDF("doc_id").coalesce(1) }
       else batch.select(col("doc_id")).distinct()
-    val probe =
-      if (capped) doclen.filter(col("doc_id").isin(idList: _*))
-      else doclen.join(ids, Seq("doc_id"), "left_semi")
-    val removed = probe
-      .select(col("doc_id"), col("n_tokens")).distinct()
-      .agg(coalesce(count(lit(1)), lit(0L)).cast(DoubleType),
-        coalesce(sum(col("n_tokens")), lit(0L)).cast(DoubleType)).head
+    // The removed docs' (count, token sum), over distinct
+    // (doc_id, n_tokens) pairs either way.
+    val (removedN, removedDl) =
+      if (capped) {
+        val live = doclen.filter(col("doc_id").isin(idList: _*))
+          .select(col("doc_id"), col("n_tokens")).collect().distinct
+        (live.length.toDouble, live.filterNot(_.isNullAt(1)).map(_.getInt(1).toLong).sum.toDouble)
+      } else {
+        val r = doclen.join(ids, Seq("doc_id"), "left_semi")
+          .select(col("doc_id"), col("n_tokens")).distinct()
+          .agg(coalesce(count(lit(1)), lit(0L)).cast(DoubleType),
+            coalesce(sum(col("n_tokens")), lit(0L)).cast(DoubleType)).head
+        (r.getDouble(0), r.getDouble(1))
+      }
     val (batchN, batchDl) =
       if (capped) (raw.length.toDouble,
         raw.filterNot(_.isNullAt(1)).map(_.getInt(1).toDouble).sum)
@@ -359,14 +434,17 @@ object SearchQueries {
     val gen = topGen.getOrElse(-1) + 1
     store.clearArtifactFingerprint(PostingsName)
     store.appendPartition(postingsOf(batch), PostingsName, "seg",
-      gen.toString, rangeSortCols = Seq("term"))
-    writeDoclenSeg(store, batch, gen)
+      gen.toString, numShards = if (capped) 1 else 5, rangeSortCols = Seq("term"))
+    if (capped) {
+      val rows = java.util.Arrays.asList(raw.toSeq: _*)
+      writeDoclenRows(store, store.session.createDataFrame(rows, raw.head.schema), gen,
+        numShards = 1)
+    } else writeDoclenSeg(store, batch, gen)
     castTo(DeletedSchema)(ids.withColumn("kill_seg", lit(gen - 1)))
       .write.mode("append").parquet(postingsDeletedPath(store))
     store.stampArtifact(PostingsName, fingerprint,
       sidecars = Map(PostingsStatsSidecar -> statsSidecarText(
-        oldN - removed.getDouble(0) + batchN,
-        oldDl - removed.getDouble(1) + batchDl)))
+        oldN - removedN + batchN, oldDl - removedDl + batchDl)))
     gen.toLong // the new segment's id — O(1), unlike a resolved count
     }
     }

@@ -54,6 +54,17 @@ class EngineSpec extends AnyFunSuite {
     assert(Engine.parseCpus(None) == Runtime.getRuntime.availableProcessors())
   }
 
+  test("a bad ScaleBench factor or repeat fails naming its variable") {
+    Seq("SPARK_GRAFT_SCALE_FACTOR", "SPARK_GRAFT_SCALE_REPEAT").foreach { name =>
+      Seq("10x", "0", "-1", " ").foreach { bad =>
+        val e = intercept[IllegalArgumentException](Engine.positiveInt(name, Some(bad), 1))
+        assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+      assert(Engine.positiveInt(name, Some(" 30 "), 1) == 30)
+      assert(Engine.positiveInt(name, None, 10) == 10)
+    }
+  }
+
   test("no session builder under src/ outside Engine.scala") {
     val needle = "SparkSession" + ".builder"
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))

@@ -319,37 +319,11 @@ class RelevanceTileSpec extends AnyFunSuite {
     graft.search.GeoQueries.materializedGeoIndex(spark, sf)
     val batch = Seq((1L, 111111L, 222222L), (987654321L, -333333L, 444444L))
       .toDF("c_custkey", "lat_e4", "lon_e4")
-    val sc = spark.sparkContext
-    val marker = "geo-jobs-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val markers = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).map(_.getProperty("spark.jobGroup.id")).contains(marker))
-          markers.incrementAndGet()
-        else jobs.incrementAndGet()
-    }
-    // Listener delivery is async but ordered: once a marker job's start
-    // arrives, every job started before it has been counted.
-    def drain(): Unit = {
-      val want = markers.get() + 1
-      sc.setJobGroup(marker, "listener drain marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (markers.get() < want && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(markers.get() >= want, "marker job never reached the listener")
-    }
-    sc.addSparkListener(listener)
     try {
-      drain()
-      jobs.set(0)
-      assert(graft.search.GeoQueries.upsertGeoPoints(spark, sf, batch) == 3)
-      drain()
-      assert(jobs.get() == 7, s"a 2-row geo upsert ran ${jobs.get()} Spark jobs")
-    } finally {
-      sc.removeSparkListener(listener)
-      store.deleteIndex(graft.search.GeoQueries.GeoIndexName)
-    }
+      val (touched, jobs) = jobsRunBy(graft.search.GeoQueries.upsertGeoPoints(spark, sf, batch))
+      assert(touched == 3)
+      assert(jobs == 7, s"a 2-row geo upsert ran $jobs Spark jobs")
+    } finally store.deleteIndex(graft.search.GeoQueries.GeoIndexName)
   }
 
   // --- pipeline bucket aggs ---------------------------------------------

@@ -275,13 +275,18 @@ class SearchIndexSpec extends AnyFunSuite {
     // inferring; they must stay equal to what every writer produces.
     val (_, store) = builtCorpus("graft_schemas", 30)
     val root = store.artifactPath(SearchQueries.PostingsName)
-    val tables = Seq(
-      root -> SearchQueries.PostingsSchema,
-      s"$root/${SearchQueries.PostingsDoclen}" -> SearchQueries.DoclenSchema,
-      s"$root/${SearchQueries.PostingsDeleted}" -> SearchQueries.DeletedSchema)
-    def check(stage: String): Int = tables.count { case (path, want) =>
+    val doclen = s"$root/${SearchQueries.PostingsDoclen}"
+    val deleted = s"$root/${SearchQueries.PostingsDeleted}"
+    // The hidden tables are read the way the program reads them: their
+    // `seg=*` dirs under a base path, and their part files.
+    val tables = Seq[(String, () => DataFrame, org.apache.spark.sql.types.StructType)](
+      (root, () => spark.read.parquet(root), SearchQueries.PostingsSchema),
+      (doclen, () => spark.read.option("basePath", doclen).parquet(s"$doclen/seg=*"),
+        SearchQueries.DoclenSchema),
+      (deleted, () => spark.read.parquet(s"$deleted/*.parquet"), SearchQueries.DeletedSchema))
+    def check(stage: String): Int = tables.count { case (path, read, want) =>
       val present = new java.io.File(path).isDirectory
-      if (present) assert(spark.read.parquet(path).schema == want, s"$path after $stage")
+      if (present) assert(read().schema == want, s"$path after $stage")
       present
     }
     assert(check("build") == 2)
@@ -293,33 +298,8 @@ class SearchIndexSpec extends AnyFunSuite {
 
   test("building search_topk_bm25_indexed over a built artifact runs no Spark job") {
     SearchQueries.materializedPostings(spark, sf)
-    val sc = spark.sparkContext
-    val group = "bm25-build"
-    val marker = "bm25-marker"
-    @volatile var built = 0
-    @volatile var markerSeen = false
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => built += 1
-          case Some(`marker`) => markerSeen = true
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "build the indexed BM25 query")
-      try SparkEntry.queries("search_topk_bm25_indexed")(spark, sf)
-      finally sc.clearJobGroup()
-      // Listener delivery is async but ordered: once the marker job's
-      // start arrives, every job started before it has been counted.
-      sc.setJobGroup(marker, "listener drain marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(markerSeen, "marker job never reached the listener")
-      assert(built == 0, s"building the query ran $built Spark job(s)")
-    } finally sc.removeSparkListener(listener)
+    val (_, built) = jobsRunBy(SparkEntry.queries("search_topk_bm25_indexed")(spark, sf))
+    assert(built == 0, s"building the query ran $built Spark job(s)")
   }
 
   test("the indexed BM25 read scans the postings once; df reuses the tf exchange") {
@@ -344,7 +324,7 @@ class SearchIndexSpec extends AnyFunSuite {
     SearchQueries.upsertPostings(store, v1)
     SearchQueries.upsertPostings(store, v2)
     val tomb = spark.read.schema(SearchQueries.DeletedSchema).parquet(
-      s"${store.artifactPath(SearchQueries.PostingsName)}/${SearchQueries.PostingsDeleted}")
+      s"${store.artifactPath(SearchQueries.PostingsName)}/${SearchQueries.PostingsDeleted}/*.parquet")
     assert(tomb.filter(col("doc_id") === 37).count() == 2,
       "a doc upserted twice must leave one tombstone row per upsert")
     // The corpus those upserts describe: 0..29, v1's 30..34, v2's 35..44.
@@ -392,6 +372,91 @@ class SearchIndexSpec extends AnyFunSuite {
     } finally {
       logger.removeAppender(appender)
       appender.stop()
+    }
+  }
+
+  /** The tombstone rule as the broadcast anti-join states it, over the
+    * raw segments and `_deleted` part files of the artifact.
+    */
+  private def antiJoined(store: etl.IndexStore): DataFrame = {
+    val root = store.artifactPath(SearchQueries.PostingsName)
+    val rows = spark.read.schema(SearchQueries.PostingsSchema).parquet(root)
+    val tomb = spark.read.schema(SearchQueries.DeletedSchema)
+      .parquet(s"$root/${SearchQueries.PostingsDeleted}/*.parquet")
+    rows.join(broadcast(tomb),
+      rows("doc_id") === tomb("doc_id") && rows("seg") <= tomb("kill_seg"), "left_anti")
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  private def hasJoin(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join])
+
+  test("driver-applied tombstones keep exactly the anti-join's rows, also past the cap") {
+    val (_, store) = builtCorpus("graft_tomb_rule", 40)
+    val root = store.artifactPath(SearchQueries.PostingsName)
+    val deleted = s"$root/${SearchQueries.PostingsDeleted}"
+    // Docs 30..39 die in seg=0 and docs 35..44 in seg<=1: docs 35..39
+    // carry two kill_seg values.
+    SearchQueries.upsertPostings(store, docsDf(30, 40).withColumn("text", lit("table row fast")))
+    SearchQueries.upsertPostings(store, docsDf(35, 45).withColumn("text", lit("vector join")))
+    // A NULL-doc_id posting in seg=0; tombstones with a NULL doc_id,
+    // a NULL kill_seg, and a file with zero rows.
+    val posting = org.apache.spark.sql.Row("spark", null, 3, 1L, Seq(0))
+    spark.createDataFrame(java.util.Arrays.asList(posting),
+        org.apache.spark.sql.types.StructType(SearchQueries.PostingsSchema.dropRight(1)))
+      .coalesce(1).write.mode("append").parquet(s"$root/seg=0")
+    def appendTomb(rows: org.apache.spark.sql.Row*): Unit =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), SearchQueries.DeletedSchema)
+        .coalesce(1).write.mode("append").parquet(deleted)
+    appendTomb(org.apache.spark.sql.Row(null, 5), org.apache.spark.sql.Row(3L, null))
+    def parts = new java.io.File(deleted).listFiles().count(_.getName.endsWith(".parquet"))
+    val before = parts
+    appendTomb()
+    assert(parts == before + 1, "the empty append wrote no zero-row tombstone file")
+
+    val want = sortedRows(antiJoined(store))
+    val resolved = SearchQueries.resolvedPostings(store)
+    assert(!hasJoin(resolved), s"a small tombstone set was joined:\n${resolved.queryExecution.optimizedPlan}")
+    assert(sortedRows(resolved) == want)
+    assert(resolved.filter(col("doc_id").isNull).count() == 1,
+      "the NULL-doc_id posting must survive")
+    assert(resolved.filter(col("doc_id") === 37).select("seg").distinct()
+      .collect().map(_.getInt(0)).toSeq == Seq(2),
+      "a doc killed under two kill_segs must keep only its newest segment")
+
+    // Past the cap: MaxInPush + 1 rows in all take the broadcast path.
+    val have = spark.read.parquet(s"$deleted/*.parquet").count()
+    spark.range(etl.IndexStore.MaxInPush + 1 - have)
+      .select((col("id") + 1000000L).as("doc_id"), lit(0).as("kill_seg"))
+      .coalesce(1).write.mode("append").parquet(deleted)
+    val pastCap = SearchQueries.resolvedPostings(store)
+    assert(hasJoin(pastCap), "a tombstone set past the cap must be anti-joined")
+    assert(sortedRows(pastCap) == want)
+  }
+
+  test("a BM25 read over a tombstoned artifact runs 4 Spark jobs") {
+    val (_, store) = builtCorpus("graft_bm25_jobs", 40)
+    SearchQueries.upsertPostings(store, docsDf(30, 45))
+    val Array(nDocs, sumDl) = store.artifactSidecar(SearchQueries.PostingsName,
+      SearchQueries.PostingsStatsSidecar).get.split(' ').map(_.toDouble)
+    val (hits, jobs) = jobsRunBy(SearchQueries.bm25FromPostings(
+      SearchQueries.resolvedPostings(store), nDocs, sumDl, Seq("spark", "vector")).collect())
+    assert(hits.nonEmpty)
+    // The tf exchange, the df aggregate, its broadcast and the top-k:
+    // the tombstone set is applied on the driver, with no broadcast job.
+    assert(jobs == 4, s"a tombstoned BM25 read ran $jobs Spark jobs")
+  }
+
+  test("a small postings upsert runs at most 8 jobs and writes one file per segment") {
+    val (_, store) = builtCorpus("graft_upsert_jobs", 40)
+    val (gen, jobs) = jobsRunBy(SearchQueries.upsertPostings(store, docsDf(30, 45)))
+    assert(jobs <= 8, s"a 15-doc postings upsert ran $jobs Spark jobs")
+    val root = store.artifactPath(SearchQueries.PostingsName)
+    Seq(s"$root/seg=$gen", s"$root/${SearchQueries.PostingsDoclen}/seg=$gen").foreach { d =>
+      val files = new java.io.File(d).listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"$d holds ${files.mkString(", ")}")
     }
   }
 }
