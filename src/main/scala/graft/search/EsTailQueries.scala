@@ -247,10 +247,9 @@ object EsTailQueries {
     // Exact integer scoring ⇒ hash-oracle-able.
     "search_common_terms" -> ((s, dir) => {
       val qTerms = Seq("dup", "vector", "the", "a")
-      def tf(t: String): Column =
-        size(filter(tokens(col("text")), x => x === lit(t))).cast(LongType)
       val scored = Tables(s, dir, "documents")
-        .select(col("doc_id") +: qTerms.map(t => tf(t).as(s"tf_$t")): _*)
+        .select(col("doc_id") +:
+          qTerms.map(t => SearchQueries.tfOf("text", t).cast(LongType).as(s"tf_$t")): _*)
       val stats = scored.agg(
         count(lit(1)).as("n_docs"),
         qTerms.map(t =>
@@ -302,8 +301,7 @@ object EsTailQueries {
     // partial+final, the hits a TakeOrderedAndProject.
     "search_post_filter" -> ((s, dir) => {
       val scope = Tables(s, dir, "documents")
-        .withColumn("tf_data",
-          size(filter(tokens(col("text")), t => t === lit("data"))))
+        .withColumn("tf_data", SearchQueries.tfOf("text", "data"))
         .filter(col("tf_data") > 0)
       val aggs = scope.groupBy(col("lang"))
         .agg(count(lit(1)).as("v"))

@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -91,27 +91,14 @@ object RelevanceTailQueries {
     // twin, round 6) and its exact plan shape: scan + one broadcast
     // grand-aggregate stats row + TakeOrderedAndProject.
     "search_combined_fields" -> ((s, dir) => {
-      def tfText(term: String): Column =
-        size(filter(SearchQueries.tokens(col("text")), t => t === lit(term)))
-      def tfCombined(term: String): Column =
-        tfText(term) +
-          lit(CfSourceWeight) * (col("source") === term).cast(IntegerType)
-      val scored = Tables(s, dir, "documents")
-        .withColumn("dl",
-          size(SearchQueries.tokens(col("text"))) + lit(CfSourceWeight))
-        .withColumn("tf_data", tfCombined("data"))
-        .withColumn("tf_src3", tfCombined("src3"))
-      val stats = scored.agg(
-        count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum(col("dl")).cast(DoubleType).as("sum_dl"),
-        sum((col("tf_data") > 0).cast(LongType)).cast(DoubleType).as("df_data"),
-        sum((col("tf_src3") > 0).cast(LongType)).cast(DoubleType).as("df_src3"))
-      def part(tfc: Column, dfc: Column): Column =
-        SearchQueries.bm25Part(tfc, dfc, col("dl"), col("n_docs"), col("sum_dl"))
-      scored.crossJoin(broadcast(stats))
+      val terms = Seq("data", "src3")
+      SearchQueries.withCorpusStats(Tables(s, dir, "documents"),
+          Seq("dl" -> (size(SearchQueries.tokens(col("text"))) + lit(CfSourceWeight))),
+          terms.map(t => s"tf_$t" -> (SearchQueries.tfOf("text", t) +
+            lit(CfSourceWeight) * (col("source") === t).cast(IntegerType))))
         .withColumn("score", round(
-          part(col("tf_data"), col("df_data")) +
-            part(col("tf_src3"), col("df_src3")), 6))
+          terms.map(t => SearchQueries.bm25Part(col(s"tf_$t"), col(s"df_$t"),
+            col("dl"), col("n_docs"), col("sum_dl"))).reduce(_ + _), 6))
         .filter(col("score") > 0)
         .orderBy(col("score").desc, col("doc_id"))
         .select(col("doc_id"), col("source"), col("score"))

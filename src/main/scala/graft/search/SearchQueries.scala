@@ -10,13 +10,14 @@ import graft.Tables
   * (SURVEY.md §2.3; `indexView.html:13-20` — `q=<keyword>` across all
   * fields, BM25-ranked top-10), owned natively.
   *
-  * Scale design: every query here is a single scan + narrow per-row
-  * expressions (codegen'd), followed by either a filter (match) or a
-  * `TakeOrderedAndProject` top-k (rank). No shuffle except the final
-  * top-k merge of k rows per partition — this is the shape that survives
-  * a 100 TB corpus. Scoring is deterministic integer/rational arithmetic
-  * (term frequencies and single divisions), NOT a float accumulation, so
-  * the DuckDB oracle matches exactly.
+  * Scale design: match queries are a scan + narrow per-row expressions
+  * (codegen'd), followed by a filter or a `TakeOrderedAndProject` top-k.
+  * Relevance scorers that need corpus statistics add one bounded
+  * aggregate (the shape is stated once, at [[withCorpusStats]]).
+  * Scoring is deterministic integer/rational arithmetic or a float
+  * expression written with the same association as its DuckDB twin,
+  * never an order-dependent float accumulation, so the oracle matches
+  * exactly.
   */
 object SearchQueries {
 
@@ -56,19 +57,82 @@ object SearchQueries {
        |        / (CAST(n_b AS DOUBLE) * (n_b - 1)) / n_b), 6)
        |END""".stripMargin
 
+  /** Lucene's BM25 idf, ln(1 + (N − df + 0.5)/(df + 0.5)): the one copy
+    * behind [[bm25Part]] and `search_explain`'s reported idf.
+    */
+  private[search] def bm25Idf(dfc: Column, nDocs: Column): Column =
+    log(lit(1.0) + (nDocs - dfc + lit(0.5)) / (dfc + lit(0.5)))
+
   /** One term's Okapi BM25 contribution (k1=1.2, b=0.75, Lucene idf) —
-    * the ONE copy of the scoring arithmetic shared by the scan query,
-    * the boosted query-string scorer, and the rescorer (their DuckDB
-    * twins mirror this exact text, so the three must stay
-    * bit-identical). Constants written literally (2.2 = k1+1,
-    * 0.25 = 1−b) so both engines evaluate the same literals.
+    * the ONE copy of the scoring arithmetic, shared by every scan scorer
+    * built on [[withCorpusStats]] and by [[bm25FromPostings]]. Their
+    * DuckDB twins mirror this exact text, and the index-served read
+    * (`search_topk_bm25_indexed`, the benchmark's BM25 reads) must
+    * hash-match the scan, so the expression tree must not change.
+    * Constants written literally (2.2 = k1+1, 0.25 = 1−b) so both
+    * engines evaluate the same literals.
     */
   private[search] def bm25Part(tfc: Column, dfc: Column, nToks: Column,
                                nDocs: Column, sumDl: Column): Column =
-    log(lit(1.0) + (nDocs - dfc + lit(0.5)) / (dfc + lit(0.5))) *
+    bm25Idf(dfc, nDocs) *
       ((tfc * lit(2.2)) /
         (tfc + lit(1.2) *
           (lit(0.25) + lit(0.75) * (nToks * nDocs / sumDl))))
+
+  /** tf of `term` in `field`: the exact token-equality count (not
+    * substring) every scan scorer ranks by.
+    */
+  private[search] def tfOf(field: String, term: String): Column =
+    size(filter(tokens(col(field)), t => t === lit(term)))
+
+  /** The text field's length, as the `lens` of [[withCorpusStats]]. */
+  private[search] def textLen: Seq[(String, Column)] =
+    Seq("n_tokens" -> size(tokens(col("text"))))
+
+  /** One `tf_<term>` column per term over the text field, as the `tfs`
+    * of [[withCorpusStats]].
+    */
+  private[search] def textTfs(terms: String*): Seq[(String, Column)] =
+    terms.map(t => s"tf_$t" -> tfOf("text", t))
+
+  /** BM25 of a text query over a [[withCorpusStats]] frame built from
+    * [[textLen]] and [[textTfs]]: the per-term parts summed left to
+    * right in `terms` order, the association the DuckDB twins write.
+    */
+  private[search] def textBm25(terms: String*): Column =
+    terms.map(t => bm25Part(col(s"tf_$t"), col(s"df_$t"), col("n_tokens"),
+      col("n_docs"), col("sum_dl"))).reduce(_ + _)
+
+  /** The scan scorer: `docs` with each length and tf column added,
+    * narrowed by `candidates`, and cross-joined with one broadcast row
+    * of corpus statistics, all DOUBLE: `n_docs`; each length's sum (a
+    * per-field `n_toks_<f>` sums to `sum_dl_<f>`; the text `n_tokens`
+    * and a blended `dl` or `n_toks_all` sum to `sum_dl`); and
+    * `df<x>`, the docs with `tf<x>` > 0, for each `tf<x>`. The row is
+    * computed over every doc, never only the candidates, so a rescore
+    * window or an explained doc sees the corpus's idf.
+    *
+    * Plan shape: two `documents` scans, one feeding the scoring
+    * projection and one the stats aggregate, whose partial results meet
+    * in an `Exchange SinglePartition`; its 1-row result is broadcast to
+    * a `BroadcastNestedLoopJoin` (a grand aggregate, so PlanSpec's BNLJ
+    * audit proves the build side bounded). The caller adds its filter,
+    * score and `TakeOrderedAndProject` top-k on top.
+    */
+  private[graft] def withCorpusStats(docs: DataFrame, lens: Seq[(String, Column)],
+                                     tfs: Seq[(String, Column)],
+                                     candidates: DataFrame => DataFrame = identity): DataFrame = {
+    val scored = (lens ++ tfs).foldLeft(docs) { case (d, (name, c)) => d.withColumn(name, c) }
+    def sumDlOf(len: String): String = len match {
+      case s"n_toks_$f" if f != "all" => s"sum_dl_$f"
+      case _ => "sum_dl"
+    }
+    val aggs = count(lit(1)).cast(DoubleType).as("n_docs") +:
+      (lens.map { case (l, _) => sum(col(l)).cast(DoubleType).as(sumDlOf(l)) } ++
+        tfs.map { case (tf, _) =>
+          sum((col(tf) > 0).cast(LongType)).cast(DoubleType).as("df" + tf.stripPrefix("tf")) })
+    candidates(scored).crossJoin(broadcast(scored.agg(aggs.head, aggs.tail: _*)))
+  }
 
   /** Query set for the `_rank_eval` harness — all in the fixture
     * vocabulary so every ranking is non-vacuous.
@@ -729,9 +793,8 @@ object SearchQueries {
     // TakeOrderedAndProject(k) — each partition keeps 10 rows, driver
     // merges; no global sort at any scale.
     "search_topk_relevance" -> ((s, dir) => {
-      def tf(term: String): Column =
-        size(filter(tokens(col("text")), t => t === lit(term)))
-      val rawScore = tf("spark") * 3 + tf("vector") * 2 + tf("join")
+      val rawScore =
+        tfOf("text", "spark") * 3 + tfOf("text", "vector") * 2 + tfOf("text", "join")
       Tables(s, dir, "documents")
         .withColumn("n_tokens", size(tokens(col("text"))))
         .withColumn("score",
@@ -750,9 +813,8 @@ object SearchQueries {
     // OFFSET pagination would sort-and-skip the whole prefix: page 1000
     // of a 100 TB corpus scans everything before it; keyset doesn't.
     "search_page_after" -> ((s, dir) => {
-      def tf(term: String): Column =
-        size(filter(tokens(col("text")), t => t === lit(term)))
-      val rawScore = tf("spark") * 3 + tf("vector") * 2 + tf("join")
+      val rawScore =
+        tfOf("text", "spark") * 3 + tfOf("text", "vector") * 2 + tfOf("text", "join")
       val (curScore, curDoc) = (0.08, 0L) // last row of the previous page
       Tables(s, dir, "documents")
         .withColumn("n_tokens", size(tokens(col("text"))))
@@ -774,19 +836,8 @@ object SearchQueries {
     // regardless of corpus size; the scoring pass stays scan-speed.
     // round(6) absorbs last-ulp ln() differences across engines.
     "search_topk_tfidf" -> ((s, dir) => {
-      def tf(term: String): Column =
-        size(filter(tokens(col("text")), t => t === lit(term)))
-      val scored = Tables(s, dir, "documents")
-        .withColumn("n_tokens", size(tokens(col("text"))))
-        .withColumn("tf_spark", tf("spark"))
-        .withColumn("tf_vector", tf("vector"))
-        .withColumn("tf_join", tf("join"))
-      val stats = scored.agg(
-        count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum((col("tf_spark") > 0).cast(LongType)).cast(DoubleType).as("df_spark"),
-        sum((col("tf_vector") > 0).cast(LongType)).cast(DoubleType).as("df_vector"),
-        sum((col("tf_join") > 0).cast(LongType)).cast(DoubleType).as("df_join"))
-      scored.crossJoin(broadcast(stats))
+      withCorpusStats(Tables(s, dir, "documents"), textLen,
+          textTfs("spark", "vector", "join"))
         .withColumn("score", round(
           (col("tf_spark") * log(col("n_docs") / col("df_spark")) +
             col("tf_vector") * log(col("n_docs") / col("df_vector")) +
@@ -806,26 +857,9 @@ object SearchQueries {
     // DuckDB twin (ln/÷/× are cross-engine bit-stable here — proven by
     // the tf·idf query), then round(6).
     "search_topk_bm25" -> ((s, dir) => {
-      def tf(term: String): Column =
-        size(filter(tokens(col("text")), t => t === lit(term)))
-      val scored = Tables(s, dir, "documents")
-        .withColumn("n_tokens", size(tokens(col("text"))))
-        .withColumn("tf_spark", tf("spark"))
-        .withColumn("tf_vector", tf("vector"))
-        .withColumn("tf_join", tf("join"))
-      val stats = scored.agg(
-        count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum(col("n_tokens")).cast(DoubleType).as("sum_dl"),
-        sum((col("tf_spark") > 0).cast(LongType)).cast(DoubleType).as("df_spark"),
-        sum((col("tf_vector") > 0).cast(LongType)).cast(DoubleType).as("df_vector"),
-        sum((col("tf_join") > 0).cast(LongType)).cast(DoubleType).as("df_join"))
-      def part(tfc: Column, dfc: Column): Column =
-        bm25Part(tfc, dfc, col("n_tokens"), col("n_docs"), col("sum_dl"))
-      scored.crossJoin(broadcast(stats))
-        .withColumn("score", round(
-          part(col("tf_spark"), col("df_spark")) +
-            part(col("tf_vector"), col("df_vector")) +
-            part(col("tf_join"), col("df_join")), 6))
+      val terms = Seq("spark", "vector", "join")
+      withCorpusStats(Tables(s, dir, "documents"), textLen, textTfs(terms: _*))
+        .withColumn("score", round(textBm25(terms: _*), 6))
         .filter(col("score") > 0)
         .orderBy(col("score").desc, col("doc_id"))
         .select(col("doc_id"), col("n_tokens"), col("score"))
@@ -843,31 +877,12 @@ object SearchQueries {
     // TakeOrderedAndProject top-k) — minimum_should_match costs
     // nothing extra at any scale.
     "search_min_should_match" -> ((s, dir) => {
-      def tf(term: String): Column =
-        size(filter(tokens(col("text")), t => t === lit(term)))
-      val scored = Tables(s, dir, "documents")
-        .withColumn("n_tokens", size(tokens(col("text"))))
-        .withColumn("tf_spark", tf("spark"))
-        .withColumn("tf_vector", tf("vector"))
-        .withColumn("tf_join", tf("join"))
-      val stats = scored.agg(
-        count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum(col("n_tokens")).cast(DoubleType).as("sum_dl"),
-        sum((col("tf_spark") > 0).cast(LongType)).cast(DoubleType).as("df_spark"),
-        sum((col("tf_vector") > 0).cast(LongType)).cast(DoubleType).as("df_vector"),
-        sum((col("tf_join") > 0).cast(LongType)).cast(DoubleType).as("df_join"))
-      def part(tfc: Column, dfc: Column): Column =
-        bm25Part(tfc, dfc, col("n_tokens"), col("n_docs"), col("sum_dl"))
-      scored.crossJoin(broadcast(stats))
+      val terms = Seq("spark", "vector", "join")
+      withCorpusStats(Tables(s, dir, "documents"), textLen, textTfs(terms: _*))
         .withColumn("n_matched",
-          (col("tf_spark") > 0).cast(IntegerType) +
-            (col("tf_vector") > 0).cast(IntegerType) +
-            (col("tf_join") > 0).cast(IntegerType))
+          terms.map(t => (col(s"tf_$t") > 0).cast(IntegerType)).reduce(_ + _))
         .filter(col("n_matched") >= 2)
-        .withColumn("score", round(
-          part(col("tf_spark"), col("df_spark")) +
-            part(col("tf_vector"), col("df_vector")) +
-            part(col("tf_join"), col("df_join")), 6))
+        .withColumn("score", round(textBm25(terms: _*), 6))
         .orderBy(col("score").desc, col("doc_id"))
         .select(col("doc_id"), col("n_matched"), col("score"))
         .limit(10)
@@ -883,22 +898,11 @@ object SearchQueries {
     // the twin stays bit-identical). Same scan → project →
     // stats-broadcast → TakeOrderedAndProject shape as every scorer.
     "search_boosting" -> ((s, dir) => {
-      def tf(term: String): Column =
-        size(filter(tokens(col("text")), t => t === lit(term)))
-      val scored = Tables(s, dir, "documents")
-        .withColumn("n_tokens", size(tokens(col("text"))))
-        .withColumn("tf_dup", tf("dup"))
-        .withColumn("tf_slow", tf("slow"))
-      val stats = scored.agg(
-        count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum(col("n_tokens")).cast(DoubleType).as("sum_dl"),
-        sum((col("tf_dup") > 0).cast(LongType)).cast(DoubleType).as("df_dup"))
-      scored.crossJoin(broadcast(stats))
+      withCorpusStats(Tables(s, dir, "documents"), textLen, textTfs("dup", "slow"))
         .filter(col("tf_dup") > 0)
         .withColumn("demoted", col("tf_slow") > 0)
         .withColumn("score", round(
-          bm25Part(col("tf_dup"), col("df_dup"), col("n_tokens"),
-            col("n_docs"), col("sum_dl")) *
+          textBm25("dup") *
             when(col("demoted"), lit(0.5)).otherwise(lit(1.0)), 6))
         .orderBy(col("score").desc, col("doc_id"))
         .select(col("doc_id"), col("demoted"), col("score"))
@@ -1123,25 +1127,12 @@ object SearchQueries {
       // source: must not reference a never-computed text-length
       // column.
       val primaryField = terms.head._1
-      def tfCol(f: String, t: String) = s"tf_${f}_$t"
-      val base = fields.foldLeft(Tables(s, dir, "documents")) {
-        case (d, f) => d.withColumn(s"n_toks_$f", size(tokens(col(f))))
-      }
-      val withTf = terms.foldLeft(base) {
-        case (d, (f, t, _)) => d.withColumn(tfCol(f, t),
-          size(filter(tokens(col(f)), x => x === lit(t))))
-      }
-      val aggs = Seq(count(lit(1)).cast(DoubleType).as("n_docs")) ++
-        fields.map(f =>
-          sum(col(s"n_toks_$f")).cast(DoubleType).as(s"sum_dl_$f")) ++
-        terms.map { case (f, t, _) =>
-          sum((col(tfCol(f, t)) > 0).cast(LongType)).cast(DoubleType)
-            .as(s"df_${f}_$t") }
-      val stats = withTf.agg(aggs.head, aggs.tail: _*)
-      withTf.crossJoin(broadcast(stats))
+      withCorpusStats(Tables(s, dir, "documents"),
+          fields.map(f => s"n_toks_$f" -> size(tokens(col(f)))),
+          terms.map { case (f, t, _) => s"tf_${f}_$t" -> tfOf(f, t) })
         .withColumn("score", round(
           terms.map { case (f, t, w) =>
-            lit(w) * bm25Part(col(tfCol(f, t)), col(s"df_${f}_$t"),
+            lit(w) * bm25Part(col(s"tf_${f}_$t"), col(s"df_${f}_$t"),
               col(s"n_toks_$f"), col("n_docs"), col(s"sum_dl_$f")) }
             .reduce(_ + _), 6))
         .filter(col("score") > 0)
@@ -1175,20 +1166,9 @@ object SearchQueries {
     "search_cross_fields" -> ((s, dir) => {
       val fields = Seq("text", "source")
       val qTerms = Seq("spark", "src3")
-      val base = Tables(s, dir, "documents")
-        .withColumn("n_toks_all",
-          fields.map(f => size(tokens(col(f)))).reduce(_ + _))
-      val withTf = qTerms.foldLeft(base) { case (d, t) =>
-        d.withColumn(s"tf_$t",
-          fields.map(f => size(filter(tokens(col(f)), x => x === lit(t))))
-            .reduce(_ + _))
-      }
-      val aggs = Seq(count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum(col("n_toks_all")).cast(DoubleType).as("sum_dl")) ++
-        qTerms.map(t => sum((col(s"tf_$t") > 0).cast(LongType))
-          .cast(DoubleType).as(s"df_$t"))
-      val stats = withTf.agg(aggs.head, aggs.tail: _*)
-      withTf.crossJoin(broadcast(stats))
+      withCorpusStats(Tables(s, dir, "documents"),
+          Seq("n_toks_all" -> fields.map(f => size(tokens(col(f)))).reduce(_ + _)),
+          qTerms.map(t => s"tf_$t" -> fields.map(f => tfOf(f, t)).reduce(_ + _)))
         .withColumn("score", round(
           qTerms.map(t => bm25Part(col(s"tf_$t"), col(s"df_$t"),
             col("n_toks_all"), col("n_docs"), col("sum_dl"))).reduce(_ + _), 6))
@@ -1202,28 +1182,13 @@ object SearchQueries {
       val fields = Seq("text", "source")
       val qTerms = Seq("spark", "src3")
       val tieBreaker = 0.3
-      def tfCol(f: String, t: String) = s"tf_${f}_$t"
-      val base = fields.foldLeft(Tables(s, dir, "documents")) {
-        case (d, f) => d.withColumn(s"n_toks_$f", size(tokens(col(f))))
-      }
-      val withTf = fields.foldLeft(base) { case (d0, f) =>
-        qTerms.foldLeft(d0) { case (d, t) =>
-          d.withColumn(tfCol(f, t),
-            size(filter(tokens(col(f)), x => x === lit(t))))
-        }
-      }
-      val aggs = Seq(count(lit(1)).cast(DoubleType).as("n_docs")) ++
-        fields.map(f =>
-          sum(col(s"n_toks_$f")).cast(DoubleType).as(s"sum_dl_$f")) ++
-        fields.flatMap(f => qTerms.map(t =>
-          sum((col(tfCol(f, t)) > 0).cast(LongType)).cast(DoubleType)
-            .as(s"df_${f}_$t")))
-      val stats = withTf.agg(aggs.head, aggs.tail: _*)
       def fieldScore(f: String): Column =
-        qTerms.map(t => bm25Part(col(tfCol(f, t)), col(s"df_${f}_$t"),
+        qTerms.map(t => bm25Part(col(s"tf_${f}_$t"), col(s"df_${f}_$t"),
           col(s"n_toks_$f"), col("n_docs"), col(s"sum_dl_$f")))
           .reduce(_ + _)
-      withTf.crossJoin(broadcast(stats))
+      withCorpusStats(Tables(s, dir, "documents"),
+          fields.map(f => s"n_toks_$f" -> size(tokens(col(f)))),
+          fields.flatMap(f => qTerms.map(t => s"tf_${f}_$t" -> tfOf(f, t))))
         .withColumn("s_text", fieldScore("text"))
         .withColumn("s_source", fieldScore("source"))
         .withColumn("best", greatest(col("s_text"), col("s_source")))
@@ -1250,19 +1215,9 @@ object SearchQueries {
     // top-k plan as the unshaped query. (ES decay functions slot in
     // the same way — another per-row factor.)
     "search_function_score" -> ((s, dir) => {
-      def tf(term: String): Column =
-        size(filter(tokens(col("text")), t => t === lit(term)))
-      val scored = Tables(s, dir, "documents")
-        .withColumn("n_tokens", size(tokens(col("text"))))
-        .withColumn("tf_spark", tf("spark"))
-      val stats = scored.agg(
-        count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum(col("n_tokens")).cast(DoubleType).as("sum_dl"),
-        sum((col("tf_spark") > 0).cast(LongType)).cast(DoubleType).as("df_spark"))
-      scored.crossJoin(broadcast(stats))
+      withCorpusStats(Tables(s, dir, "documents"), textLen, textTfs("spark"))
         .withColumn("score", round(
-          bm25Part(col("tf_spark"), col("df_spark"), col("n_tokens"),
-            col("n_docs"), col("sum_dl")) *
+          textBm25("spark") *
             log(lit(1.0) + lit(0.01) * col("n_chars")) * lit(1.2), 6))
         .filter(col("score") > 0)
         .orderBy(col("score").desc, col("doc_id"))
@@ -1283,23 +1238,12 @@ object SearchQueries {
     // composition and rounded-6 compare follow search_function_score.
     // Same plan shape: scan + 1-row stats broadcast + top-k.
     "search_decay_scoring" -> ((s, dir) => {
-      def tf(term: String): Column =
-        size(filter(tokens(col("text")), t => t === lit(term)))
-      val scored = Tables(s, dir, "documents")
-        .withColumn("n_tokens", size(tokens(col("text"))))
-        .withColumn("tf_spark", tf("spark"))
-      val stats = scored.agg(
-        count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum(col("n_tokens")).cast(DoubleType).as("sum_dl"),
-        sum((col("tf_spark") > 0).cast(LongType)).cast(DoubleType).as("df_spark"))
       val dist = greatest(lit(0.0),
         abs(col("n_chars").cast(DoubleType) - lit(1000.0)) - lit(100.0))
       val gauss = exp(lit(-0.6931471805599453) * dist * dist / lit(250000.0))
-      scored.crossJoin(broadcast(stats))
+      withCorpusStats(Tables(s, dir, "documents"), textLen, textTfs("spark"))
         .withColumn("decay", round(gauss, 6))
-        .withColumn("score", round(
-          bm25Part(col("tf_spark"), col("df_spark"), col("n_tokens"),
-            col("n_docs"), col("sum_dl")) * gauss, 6))
+        .withColumn("score", round(textBm25("spark") * gauss, 6))
         .filter(col("score") > 0)
         .orderBy(col("score").desc, col("doc_id"))
         .select(col("doc_id"), col("n_chars"), col("decay"), col("score"))
@@ -1392,8 +1336,7 @@ object SearchQueries {
     // not N scans. Integer tf scoring → hash-exact oracle.
     "search_msearch" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      def tf(t: String): Column =
-        size(filter(tokens(col("text")), x => x === lit(t)))
+      def tf(t: String): Column = tfOf("text", t)
       val scored = Tables(s, dir, "documents")
         .withColumn("tf_spark", tf("spark")).withColumn("tf_join", tf("join"))
         .withColumn("tf_vector", tf("vector")).withColumn("tf_window", tf("window"))
@@ -1567,26 +1510,9 @@ object SearchQueries {
     // full hit list. Group count bounds the output, corpus size doesn't.
     "search_collapse_field" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      def tf(term: String): Column =
-        size(filter(tokens(col("text")), t => t === lit(term)))
-      val scored = Tables(s, dir, "documents")
-        .withColumn("n_tokens", size(tokens(col("text"))))
-        .withColumn("tf_spark", tf("spark"))
-        .withColumn("tf_vector", tf("vector"))
-        .withColumn("tf_join", tf("join"))
-      val stats = scored.agg(
-        count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum(col("n_tokens")).cast(DoubleType).as("sum_dl"),
-        sum((col("tf_spark") > 0).cast(LongType)).cast(DoubleType).as("df_spark"),
-        sum((col("tf_vector") > 0).cast(LongType)).cast(DoubleType).as("df_vector"),
-        sum((col("tf_join") > 0).cast(LongType)).cast(DoubleType).as("df_join"))
-      def part(tfc: Column, dfc: Column): Column =
-        bm25Part(tfc, dfc, col("n_tokens"), col("n_docs"), col("sum_dl"))
-      scored.crossJoin(broadcast(stats))
-        .withColumn("score", round(
-          part(col("tf_spark"), col("df_spark")) +
-            part(col("tf_vector"), col("df_vector")) +
-            part(col("tf_join"), col("df_join")), 6))
+      val terms = Seq("spark", "vector", "join")
+      withCorpusStats(Tables(s, dir, "documents"), textLen, textTfs(terms: _*))
+        .withColumn("score", round(textBm25(terms: _*), 6))
         .filter(col("score") > 0)
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("lang")).orderBy(col("score").desc, col("doc_id"))))
@@ -1754,11 +1680,10 @@ object SearchQueries {
     // the hit set.
     "search_facets_top_hits" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val tf = size(filter(tokens(col("text")), t => t === lit("merge")))
       val w = Window.partitionBy(col("source"))
         .orderBy(col("tf").desc, col("doc_id"))
       Tables(s, dir, "documents")
-        .withColumn("tf", tf)
+        .withColumn("tf", tfOf("text", "merge"))
         .filter(col("tf") > 0)
         .withColumn("hit_rank", row_number().over(w))
         .filter(col("hit_rank") <= 2)
@@ -1799,26 +1724,12 @@ object SearchQueries {
     // 6-decimal rounding as search_topk_bm25, so the DuckDB twin is
     // hash-exact.
     "search_rescore" -> ((s, dir) => {
-      def tf(term: String): Column =
-        size(filter(tokens(col("text")), t => t === lit(term)))
-      val base = Tables(s, dir, "documents")
-        .withColumn("n_tokens", size(tokens(col("text"))))
-        .withColumn("tf_table", tf("table"))
-        .withColumn("tf_scan", tf("scan"))
-      val stats = base.agg(
-        count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum(col("n_tokens")).cast(DoubleType).as("sum_dl"),
-        sum((col("tf_table") > 0).cast(LongType)).cast(DoubleType).as("df_table"),
-        sum((col("tf_scan") > 0).cast(LongType)).cast(DoubleType).as("df_scan"))
-      val window50 = base.filter(col("tf_table") > 0)
+      def window50(d: DataFrame): DataFrame = d.filter(col("tf_table") > 0)
         .orderBy(col("tf_table").desc, col("doc_id"))
         .limit(50)
-      def part(tfc: Column, dfc: Column): Column =
-        bm25Part(tfc, dfc, col("n_tokens"), col("n_docs"), col("sum_dl"))
-      window50.crossJoin(broadcast(stats))
-        .withColumn("score", round(
-          part(col("tf_table"), col("df_table")) +
-            part(col("tf_scan"), col("df_scan")), 6))
+      withCorpusStats(Tables(s, dir, "documents"), textLen,
+          textTfs("table", "scan"), window50)
+        .withColumn("score", round(textBm25("table", "scan"), 6))
         .orderBy(col("score").desc, col("doc_id"))
         .select(col("doc_id"), col("tf_table"), col("score"))
         .limit(10)
@@ -1940,32 +1851,18 @@ object SearchQueries {
     // doc lookup; the stats agg is the same bounded 1-row broadcast
     // the ranking query pays.
     "search_explain" -> ((s, dir) => {
-      def tf(term: String): Column =
-        size(filter(tokens(col("text")), t => t === lit(term)))
-      val scored = Tables(s, dir, "documents")
-        .withColumn("n_tokens", size(tokens(col("text"))))
-        .withColumn("tf_spark", tf("spark"))
-        .withColumn("tf_vector", tf("vector"))
-        .withColumn("tf_join", tf("join"))
-      val stats = scored.agg(
-        count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum(col("n_tokens")).cast(DoubleType).as("sum_dl"),
-        sum((col("tf_spark") > 0).cast(LongType)).cast(DoubleType).as("df_spark"),
-        sum((col("tf_vector") > 0).cast(LongType)).cast(DoubleType).as("df_vector"),
-        sum((col("tf_join") > 0).cast(LongType)).cast(DoubleType).as("df_join"))
-      scored.filter(col("doc_id") === 7L)
-        .crossJoin(broadcast(stats))
+      val terms = Seq("spark", "vector", "join")
+      withCorpusStats(Tables(s, dir, "documents"), textLen, textTfs(terms: _*),
+          _.filter(col("doc_id") === 7L))
         .select(col("doc_id"), col("n_tokens"), col("n_docs"), col("sum_dl"),
-          explode(array(Seq("spark", "vector", "join").map(t =>
+          explode(array(terms.map(t =>
             struct(lit(t).as("term"), col(s"tf_$t").as("tf"),
               col(s"df_$t").as("df"))): _*)).as("e"))
         .select(col("doc_id"), col("e.term").as("term"),
           col("e.tf").cast(LongType).as("tf"),
           col("e.df").cast(LongType).as("df"),
           col("n_tokens"),
-          round(log(lit(1.0) +
-            (col("n_docs") - col("e.df") + lit(0.5)) /
-              (col("e.df") + lit(0.5))), 6).as("idf"),
+          round(bm25Idf(col("e.df"), col("n_docs")), 6).as("idf"),
           round(bm25Part(col("e.tf"), col("e.df"), col("n_tokens"),
             col("n_docs"), col("sum_dl")), 6).as("contribution"))
         .orderBy(col("term"))
@@ -2317,14 +2214,8 @@ object SearchQueries {
     "search_rank_eval" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val metrics = RankEvalTerms.map { term =>
-        val base = Tables(s, dir, "documents")
-          .withColumn("n_tokens", size(tokens(col("text"))))
-          .withColumn("tf", size(filter(tokens(col("text")), x => x === lit(term))))
-        val stats = base.agg(
-          count(lit(1)).cast(DoubleType).as("n_docs"),
-          sum(col("n_tokens")).cast(DoubleType).as("sum_dl"),
-          sum((col("tf") > 0).cast(LongType)).cast(DoubleType).as("df"))
-        val ranked = base.crossJoin(broadcast(stats))
+        val ranked = withCorpusStats(Tables(s, dir, "documents"), textLen,
+            Seq("tf" -> tfOf("text", term)))
           .withColumn("score", round(
             bm25Part(col("tf"), col("df"), col("n_tokens"),
               col("n_docs"), col("sum_dl")), 6))
@@ -2367,20 +2258,9 @@ object SearchQueries {
     // index cost (the query-time/index-time tradeoff ES documents).
     "search_synonyms" -> ((s, dir) => {
       val syns = Seq("join", "merge")
-      val tf = syns.map(t =>
-        size(filter(tokens(col("text")), x => x === lit(t))))
-        .reduce(_ + _)
-      val base = Tables(s, dir, "documents")
-        .withColumn("n_tokens", size(tokens(col("text"))))
-        .withColumn("tf_concept", tf)
-      val stats = base.agg(
-        count(lit(1)).cast(DoubleType).as("n_docs"),
-        sum(col("n_tokens")).cast(DoubleType).as("sum_dl"),
-        sum((col("tf_concept") > 0).cast(LongType)).cast(DoubleType).as("df_concept"))
-      base.crossJoin(broadcast(stats))
-        .withColumn("score", round(
-          bm25Part(col("tf_concept"), col("df_concept"), col("n_tokens"),
-            col("n_docs"), col("sum_dl")), 6))
+      withCorpusStats(Tables(s, dir, "documents"), textLen,
+          Seq("tf_concept" -> syns.map(tfOf("text", _)).reduce(_ + _)))
+        .withColumn("score", round(textBm25("concept"), 6))
         .filter(col("score") > 0)
         .select(col("doc_id"), col("tf_concept"), col("n_tokens"), col("score"))
         .orderBy(col("score").desc, col("doc_id"))
@@ -2585,9 +2465,8 @@ object SearchQueries {
     // extra pass. Integer tf scoring → hash-exact.
     "search_pinned" -> ((s, dir) => {
       val pins = array(lit(17L), lit(5L), lit(42L))
-      val score = size(filter(tokens(col("text")), x => x === lit("spark")))
       Tables(s, dir, "documents")
-        .withColumn("score", score)
+        .withColumn("score", tfOf("text", "spark"))
         .withColumn("pin_pos", array_position(pins, col("doc_id")))
         .filter(col("score") > 0 || col("pin_pos") > 0)
         .withColumn("pinned", col("pin_pos") > 0)

@@ -214,8 +214,6 @@ class PlanSpec extends AnyFunSuite {
     val bnljAllowed: Map[String, String] = Map(
       "llm_mmr_rerank" -> "greedy MMR over a 50-row candidate window (explode of a bounded collect_list)",
       "llm_kmv_overlap" -> "sources x sources pair frame from per-source KMV sketches (|sources| = 20, a catalog not a corpus)",
-      "search_rank_eval" -> "per-rated-query stats frames (3 rated queries in the eval set)",
-      "search_synonyms" -> "per-concept stats (synonym dictionary rows, a lexicon not a corpus)",
       "llm_cosine_topk" -> qvec, "llm_cosine_range" -> qvec,
       "llm_cosine_topk_batch" -> qvec, "llm_cosine_topk_filtered" -> qvec,
       "llm_ann_ivf_topk" -> qvec, "llm_ann_pq_topk" -> qvec,
