@@ -70,7 +70,7 @@ object Bench {
     else asked
   }
 
-  private def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.US, v)
+  private def fmt(v: Double): String = Json.num(v)
 
   /** The compact final stdout line: headline totals, per-family
     * subtotals and the 24 most expensive entries — sized to fit whole
@@ -126,56 +126,29 @@ object Bench {
         "re-run on an idle host before comparing per-query numbers")
     val spark = Engine.session(cpus)
 
-    // Shuffle-volume accounting: bytes written to shuffle per query is
-    // the scale-limiting quantity (network at 1000 executors) — worth
-    // reporting next to seconds.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    val shuffleByQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
-    var lastShuffleSnap = 0L
-
-    def snapShuffle(name: String): Unit = {
-      Thread.sleep(150) // let async listener events drain
-      val snap = shuffleBytes.get()
-      shuffleByQuery(name) = snap - lastShuffleSnap
-      lastShuffleSnap = snap
+    // Two [[Metrics]] windows per entry. `probes`: the host probe over
+    // the entry's whole wall window (round-10 verdict #1), so an
+    // outlier in the committed record SELF-names its contaminant
+    // (foreign cores = a co-scheduled JVM; majflt/read_mb = page-cache
+    // eviction / I/O pressure — the class the whole-run `contended`
+    // flag structurally misses). `work`: the Spark work of the run the
+    // entry's counters describe — a registry query's END-TO-END run
+    // (the stripped re-run would double-count the same exchanges), a
+    // non-query unit's whole window. Shuffle bytes are the
+    // scale-limiting quantity (network at 1000 executors); jobs,
+    // stages, tasks and executor CPU are steal-free.
+    val probes = scala.collection.mutable.LinkedHashMap[String, Metrics.Window]()
+    val work = scala.collection.mutable.LinkedHashMap[String, Metrics.Window]()
+    def counted(name: String, w: Metrics.Window): Unit = {
+      work(name) = w
+      System.err.println(f"[bench] $name%-32s wall=${w.wallS}%7.2f s  jobs=${w.jobs}%3d  " +
+        f"stages=${w.stages}%4d  tasks=${w.tasks}%6d  cpu=${w.cpuNs / 1e9}%7.2f s  " +
+        f"shuffle=${w.shuffleWriteBytes / 1e6}%8.1f MB")
     }
-
-    // Per-entry contamination probe (round-10 verdict #1): EVERY
-    // measured entry — registry query, artifact build, write bench,
-    // stream drain — records its own foreign-user-cpu average,
-    // major-fault delta and storage-read delta over exactly its own
-    // wall window, so an outlier in the committed record SELF-names
-    // its contaminant (foreign cores = a co-scheduled JVM; majflt/
-    // read_mb = page-cache eviction / I/O pressure — the class the
-    // whole-run `contended` flag structurally misses) instead of
-    // waiting a round for a manual adjudication. A few /proc reads
-    // per entry; nothing on the data path.
-    case class EntryProbe(foreign: Double, majflt: Long, readMb: Double,
-                          ioWaitS: Double, stealCores: Double)
-    val probes = scala.collection.mutable.LinkedHashMap[String, EntryProbe]()
-    def probed[T](name: String)(body: => T): T = {
-      val j0 = HostLoad.cpuJiffies(); val io0 = HostLoad.ioStat()
-      val b0 = HostLoad.blkioTicks()
-      val t0 = System.nanoTime()
-      val r = body
-      val dt = (System.nanoTime() - t0) / 1e9
-      val j1 = HostLoad.cpuJiffies(); val io1 = HostLoad.ioStat()
-      val b1 = HostLoad.blkioTicks()
-      val jiffiesOk = j0._1 >= 0 && j1._1 >= 0
-      probes(name) = EntryProbe(
-        if (jiffiesOk) HostLoad.cores((j1._1 - j0._1) - (j1._2 - j0._2), dt) else -1.0,
-        if (io0._1 < 0) -1L else io1._1 - io0._1,
-        if (io0._2 < 0) -1.0 else (io1._2 - io0._2) / 1e6,
-        if (b0 < 0) -1.0 else (b1 - b0) / 100.0,
-        if (jiffiesOk) HostLoad.cores(j1._5 - j0._5, dt) else -1.0)
+    def probed[T](name: String, counts: Boolean = false)(body: => T): T = {
+      val (r, w) = Metrics.window(spark)(body)
+      probes(name) = w
+      if (counts) counted(name, w)
       r
     }
 
@@ -186,56 +159,50 @@ object Bench {
     }
 
     /** (end-to-end secs, operator secs with presentation sort stripped).
-      * Shuffle bytes are attributed from the END-TO-END run only; the
-      * stripped re-run's shuffle is excluded from per-query accounting
-      * (it would double-count the same exchanges).
+      * The end-to-end run's work is counted under `key`; a failed run
+      * bills its partial work to itself.
       */
-    def runOnce(name: String): (Double, Double) = {
+    def runOnce(name: String, key: String): (Double, Double) = {
       // Construction is timed WITH execution: for declarative queries
       // it is millisecond plan-building, but iterative operators
       // (connected components) run their convergence loop — real work
       // — during construction, and excluding it would under-report
       // them to near zero.
-      val tBuild = System.nanoTime()
-      val df =
-        try SparkEntry.queries(name)(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed to plan: ${e.getMessage}")
-          return (-1.0, -1.0)
-        }
-      val buildSecs = (System.nanoTime() - tBuild) / 1e9
-      System.err.println(f"[bench] $name build $buildSecs%.2f s")
-      val full =
-        try buildSecs + timeNoop(df)
-        catch { case e: Throwable =>
+      val (run, w) = Metrics.window(spark) {
+        val tBuild = System.nanoTime()
+        try {
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          val buildSecs = (System.nanoTime() - tBuild) / 1e9
+          System.err.println(f"[bench] $name build $buildSecs%.2f s")
+          Some((df, buildSecs, buildSecs + timeNoop(df)))
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          Pins.release(spark)
-          snapShuffle(name) // bill this query's partial shuffle to itself
-          return (-1.0, -1.0)
+          None
         }
-      snapShuffle(name)
-      // The stripped (no presentation sort) run goes BEFORE the release:
-      // queries that persist intermediates (inverted indexes,
-      // signatures) must re-run against the same cache state the e2e
-      // run ended with — a cold stripped run would recompute the
-      // persisted subtree on every consumer and report operator time
-      // far above the e2e number.
-      val op = stripTopSort(df) match {
-        case None => full
-        case Some(stripped) =>
-          // Construction work (iterative operators) is operator cost,
-          // not presentation cost — keep it in both numbers.
-          try buildSecs + timeNoop(stripped)
-          catch { case _: Throwable => full }
+      }
+      counted(key, w)
+      val times = run.fold((-1.0, -1.0)) { case (df, buildSecs, full) =>
+        // The stripped (no presentation sort) run goes BEFORE the
+        // release: queries that persist intermediates (inverted
+        // indexes, signatures) must re-run against the same cache state
+        // the e2e run ended with — a cold stripped run would recompute
+        // the persisted subtree on every consumer and report operator
+        // time far above the e2e number.
+        val op = stripTopSort(df) match {
+          case None => full
+          case Some(stripped) =>
+            // Construction work (iterative operators) is operator cost,
+            // not presentation cost — keep it in both numbers.
+            try buildSecs + timeNoop(stripped)
+            catch { case _: Throwable => full }
+        }
+        (full, op)
       }
       // Release persisted intermediates (the library's documented
       // cleanup handle) so later queries don't run under this query's
-      // memory pressure, and reset the shuffle baseline so the
-      // stripped run's shuffle doesn't leak into the NEXT query.
+      // memory pressure.
       Pins.release(spark)
-      Thread.sleep(150)
-      lastShuffleSnap = shuffleBytes.get()
-      (full, op)
+      times
     }
 
     // Dev-only subset runs (SPARK_GRAFT_ONLY=a,b,c); the driver never
@@ -250,8 +217,10 @@ object Bench {
         if (p.endsWith("*")) n.startsWith(p.dropRight(1)) else n == p)
     }
 
-    // Warm-up: JVM + codegen + parquet footer caches.
-    runOnce("rel_filter_project")
+    // Warm-up: JVM + codegen + parquet footer caches (its counts are
+    // not an entry's).
+    runOnce("rel_filter_project", "rel_filter_project")
+    work.clear()
     // spark.ml warm-up (class-loading + BLAS probe + fit codegen):
     // without it the alphabetically-first ml query absorbs ~3 s of
     // one-time cost and its number stops tracking the operator.
@@ -305,7 +274,7 @@ object Bench {
     // cycle, the stream drain with its percentiles) rerun and replace
     // as a UNIT, so percentiles always ride with the run that won.
     def buildArtifact(entry: String, artifactName: String)
-                     (build: => Unit): Double = probed(entry) {
+                     (build: => Unit): Double = probed(entry, counts = true) {
       val store = new etl.IndexStore(spark, etl.IndexStore.artifactRoot(sfDir))
       store.deleteIndex(artifactName)
       val t0 = System.nanoTime()
@@ -313,7 +282,6 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] $entry: $dt%.2f s")
       Pins.release(spark)
-      snapShuffle(entry)
       dt
     }
     def pairBuildF(): Seq[(String, Double)] = Seq(
@@ -347,7 +315,7 @@ object Bench {
     // from keep their pristine fingerprints — a maintenance batch
     // against the shared root would force every postings consumer
     // below into a silent rebuild and skew its cold number.
-    def postingsMaintF(): Seq[(String, Double)] = probed("_compact_postings") {
+    def postingsMaintF(): Seq[(String, Double)] = probed("_compact_postings", counts = true) {
       val maintDir = java.nio.file.Files.createTempDirectory("bench_maint").toString
       java.nio.file.Files.createSymbolicLink(
         java.nio.file.Paths.get(maintDir, "documents.parquet"),
@@ -371,7 +339,6 @@ object Bench {
       System.err.println(f"[bench] _upsert_postings_batch: $up%.2f s, " +
         f"_compact_postings: $comp%.2f s")
       Pins.release(spark)
-      snapShuffle("_compact_postings")
       Seq("_upsert_postings_batch" -> up, "_compact_postings" -> comp)
     }
 
@@ -407,7 +374,7 @@ object Bench {
     // Skipped in subset probes unless asked for — it is the single
     // most expensive bench item and would dominate a seconds-long
     // targeted measurement.
-    def writeBulkF(): Seq[(String, Double)] = probed("_write_bulk_import") {
+    def writeBulkF(): Seq[(String, Double)] = probed("_write_bulk_import", counts = true) {
       val out = java.nio.file.Files.createTempDirectory("bench_import").toString
       val store = new etl.IndexStore(spark, out)
       val li = Tables(spark, sfDir, "lineitem")
@@ -416,7 +383,6 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] bulk_import: $n rows in $dt%.2fs (${n / dt}%.0f rows/s)")
       Pins.release(spark)
-      snapShuffle("_write_bulk_import")
       Seq("_write_bulk_import" -> dt)
     }
 
@@ -424,7 +390,7 @@ object Bench {
     // headline scenario (its demo imports every MySQL table in
     // parallel threads, R/README.md:12). All 10 fixture tables through
     // bulkImportAll at parallelism 4, FAIR pools per table.
-    def writeImportAllF(): Seq[(String, Double)] = probed("_write_bulk_import_all") {
+    def writeImportAllF(): Seq[(String, Double)] = probed("_write_bulk_import_all", counts = true) {
       val out = java.nio.file.Files.createTempDirectory("bench_import_all").toString
       val store = new etl.IndexStore(spark, out)
       val keyed = Seq(
@@ -441,7 +407,6 @@ object Bench {
       System.err.println(f"[bench] bulk_import_all: ${counts.size} tables, " +
         f"${counts.values.sum} docs in $dt%.2fs (${counts.size / dt}%.2f tables/s)")
       Pins.release(spark)
-      snapShuffle("_write_bulk_import_all")
       Seq("_write_bulk_import_all" -> dt)
     }
 
@@ -459,7 +424,7 @@ object Bench {
     // GROWS with every batch — the anti-pattern this entry exists to
     // rule out). Wall seconds for the 5-batch drain; stderr carries
     // the per-batch mean. Checkpointed, AvailableNow trigger.
-    def streamLatencyF(): Seq[(String, Double)] = probed("_stream_latency") {
+    def streamLatencyF(): Seq[(String, Double)] = probed("_stream_latency", counts = true) {
       var streamP50 = -1.0
       var streamP95 = -1.0
       import org.apache.spark.sql.streaming.Trigger
@@ -512,7 +477,6 @@ object Bench {
         f"$dt%.2f s (${dt / nBatches}%.2f s/batch, p50=$streamP50%.2f " +
         f"p95=$streamP95%.2f, partition-granular keyed upsert)")
       Pins.release(spark)
-      snapShuffle("_stream_latency")
       // Per-batch percentiles as first-class record entries so the
       // micro-batch latency contract tracks round-over-round without
       // stderr archaeology. They are EXCLUDED from the headline
@@ -549,7 +513,7 @@ object Bench {
 
     val coldResults0 = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_(n)))
-      .map(n => n -> probed(n)(runOnce(n)))
+      .map(n => n -> probed(n)(runOnce(n, n)))
 
     // Contamination reruns: any measured entry — registry query OR
     // non-query unit — reading >3× its committed idle op-time gets
@@ -590,22 +554,27 @@ object Bench {
       }
     auditExclusions(coldResults0.map { case (n, (_, op)) => n -> op })
     auditExclusions(specialResults0.flatMap(_._2))
-    // First-run probes survive a slower rerun: the per-entry
-    // contamination signal must describe the run whose number the
-    // record keeps.
+    // First-run probes and counts survive a slower rerun: the
+    // per-entry signals must describe the run whose number the record
+    // keeps.
     val probesFirst = probes.toMap
+    val workFirst = work.toMap
+    def keepFirst(n: String): Unit = {
+      probesFirst.get(n).foreach(p => probes(n) = p)
+      workFirst.get(n).foreach(w => work(n) = w)
+    }
     val rerunNames = coldResults0.collect {
       case (n, (_, op)) if trips(n, op) => n
     }.take(15)
     val reruns = rerunNames.map { n =>
       System.err.println(s"[bench] rerun (>3x committed idle op-time): $n")
-      n -> probed(n)(runOnce(n))
+      n -> probed(n)(runOnce(n, n))
     }.toMap
     val coldResults = coldResults0.map { case (n, first) =>
       reruns.get(n).filter(_._2 >= 0).filter(_._2 < first._2) match {
         case Some(second) => n -> second
         case None =>
-          probesFirst.get(n).foreach(p => probes(n) = p)
+          keepFirst(n)
           n -> first
       }
     }
@@ -627,7 +596,7 @@ object Bench {
           if second.map(_._2).filter(_ >= 0).sum < first.map(_._2).filter(_ >= 0).sum =>
           gate -> second
         case _ =>
-          first.foreach { case (n, _) => probesFirst.get(n).foreach(p => probes(n) = p) }
+          first.foreach { case (n, _) => keepFirst(n) }
           gate -> first
       }
     }
@@ -659,15 +628,15 @@ object Bench {
     val warmResults = servedIndexQueries
       .filter(n => only.forall(_(n)))
       .filter(n => coldResults.exists(_._1 == n))
-      .map(n => s"_warm_$n" -> probed(s"_warm_$n")(runOnce(n)))
+      .map(n => s"_warm_$n" -> probed(s"_warm_$n")(runOnce(n, s"_warm_$n")))
 
     val results = coldResults ++ warmResults ++
       specialResults.flatMap(_._2).map { case (n, s) => n -> ((s, s)) }
 
     val qs = results.map { case (k, (full, _)) => s"${Json.str(k)}:${fmt(full)}" }.mkString("{", ",", "}")
     val qsOp = results.map { case (k, (_, op)) => s"${Json.str(k)}:${fmt(op)}" }.mkString("{", ",", "}")
-    val sh = shuffleByQuery
-      .map { case (k, v) => s"${Json.str(k)}:${fmt(v / 1e6)}" }
+    val sh = work
+      .map { case (k, w) => s"${Json.str(k)}:${fmt(w.shuffleWriteBytes / 1e6)}" }
       .mkString("{", ",", "}")
     // Percentile pseudo-entries stay first-class in `queries` but are
     // excluded from the headline sums — they are percentiles of batch
@@ -706,16 +675,15 @@ object Bench {
     // to a committed file; stdout gets a LEAN driver-contract line —
     // round 1's full line was truncated by the driver's stdout capture,
     // which zeroed the per-query record (`parsed: null`).
-    // Per-entry contamination probes (FULL record only — the lean
-    // driver line stays lean): foreign user-cpu cores averaged over
-    // the entry's own wall window, major-fault delta, storage-read MB
-    // delta. An outlier entry self-names its contaminant without a
-    // round-trip adjudication.
+    // Per-entry probes (FULL record only — the lean driver line stays
+    // lean): the host probe over the entry's own wall window, and the
+    // jobs, stages, tasks and executor-CPU seconds of its counted run.
     val probeJson = probes
       .map { case (k, p) =>
-        s"""${Json.str(k)}:{"foreign":${fmt(p.foreign)},"majflt":${p.majflt},""" +
-          s""""read_mb":${fmt(p.readMb)},"io_wait_s":${fmt(p.ioWaitS)},""" +
-          s""""steal_cores":${fmt(p.stealCores)}}""" }
+        val counts = work.get(k).fold("") { w =>
+          s""","jobs":${w.jobs},"stages":${w.stages},"tasks":${w.tasks},""" +
+            s""""cpu_s":${fmt(w.cpuNs / 1e9)}""" }
+        s"""${Json.str(k)}:{${p.hostJson}$counts}""" }
       .mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_op":${fmt(totalOp)},"queries":$qs,"queries_op":$qsOp,"shuffle_mb":$sh,"probe":$probeJson,"load":$loadJson,"sf":${Json.str(sfDir)}}"""

@@ -1,7 +1,8 @@
 package graft
 
-/** Host-contention probes read from /proc, shared by [[Bench]] and
-  * [[ScaleBench]] so both records measure contamination the same way.
+/** Host-contention probes read from /proc: [[Metrics]] windows and the
+  * whole-run [[Sampler]] of [[Bench]] and [[ScaleBench]], so both
+  * records measure contamination the same way.
   * Every reader returns -1 (in each field) where /proc is unavailable;
   * nothing here touches the data path.
   */

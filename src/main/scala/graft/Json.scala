@@ -16,4 +16,7 @@ object Json {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** A number with three decimals, whatever the default locale. */
+  def num(v: Double): String = "%.3f".formatLocal(java.util.Locale.US, v)
 }

@@ -190,6 +190,8 @@ object ScaleBench {
       probes.map { case (k, runs) => s"${Json.str(k)}:[${runs.mkString(",")}]" }
         .mkString(""""probes":{""", ",", "}}")
 
+  private def fmt(d: Double): String = Json.num(d)
+
   private def timeNoop(df: DataFrame): Double = {
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()
@@ -418,61 +420,30 @@ object ScaleBench {
       }
     }
 
-    // Shuffle-volume accounting (Bench's listener): bytes written to
-    // shuffle per timed run. At the sizes where a 100× corpus stops
-    // fitting a single local JVM comfortably, WALL TIME measures the
-    // harness (GC mode, spill thresholds — heap-config swings of ±2×
-    // were measured on the same operator and corpus), while shuffle
-    // BYTES measure the ALGORITHM: a linear operator's volume ratio
-    // equals the data ratio regardless of how the JVM struggled.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    // Memory-envelope channels (round-11 verdict #6): the 1000×-class
-    // runs are exactly where a single 32-core box runs out of executor
-    // memory (the combined 5M-doc JVM died of memory exhaustion; a
-    // 48 GB repeat-1 winnow re-run hit SparkOutOfMemoryError), so the
-    // record must carry what each operator PEAKED at, not just how
-    // long it took. Three channels per timed window:
+    // Per-operator probes (round-11 verdicts #5/#6): one [[Metrics]]
+    // window per timed run. SCALE records used to carry only whole-run
+    // watermarks, yet these are the LONGEST runs (30 min at 1000×) — a
+    // mid-run steal burst silently inflates exactly one operator and
+    // the whole-run flag can't name it. Each window records the host
+    // probe Bench records (foreign user-cpu avg, majflt delta,
+    // storage-read MB, blkio wait, hypervisor steal) and the memory
+    // envelope: the 1000×-class runs are exactly where a single 32-core
+    // box runs out of executor memory, so the record carries what each
+    // operator PEAKED at, not just how long it took —
     //  - peak_task_mem_mb: max single-task execution-memory peak
     //    (× concurrent tasks ≈ the executor-memory floor);
     //  - spilled_mem/disk_mb: Spark's own spill accounting — nonzero
     //    spill says the operator ALREADY didn't fit and wall time is
     //    partly disk;
-    //  - peak_heap_mb: JVM heap-pool peak (resettable per window) —
-    //    the number that actually OOMs the process.
-    val taskPeakMem = new java.util.concurrent.atomic.AtomicLong()
-    val spillDiskB = new java.util.concurrent.atomic.AtomicLong()
-    val spillMemB = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            taskPeakMem.updateAndGet(v => math.max(v, m.peakExecutionMemory))
-            spillDiskB.addAndGet(m.diskBytesSpilled)
-            spillMemB.addAndGet(m.memoryBytesSpilled)
-          }
-        }
-      })
-    def shuffleSnap(): Long = { Thread.sleep(150); shuffleBytes.get() }
-
-    // Per-operator contamination + memory probes (round-11 verdict
-    // #5): SCALE records used to carry only whole-run watermarks, yet
-    // these are the LONGEST runs (30 min at 1000×) — a mid-run steal
-    // burst silently inflates exactly one operator and the whole-run
-    // flag can't name it. Same per-window channels as Bench.probed
-    // (foreign user-cpu avg, majflt delta, storage-read MB, blkio
-    // wait, hypervisor steal) plus the memory envelope above.
-    def heapPools = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getType == java.lang.management.MemoryType.HEAP)
-    }
+    //  - peak_heap_mb: JVM heap-pool peak — the number that actually
+    //    OOMs the process.
+    // A window's shuffle bytes are its run's volume: at the sizes where a
+    // 100× corpus stops fitting a single local JVM comfortably, WALL
+    // TIME measures the harness (GC mode, spill thresholds — heap-
+    // config swings of ±2× were measured on the same operator and
+    // corpus), while shuffle BYTES measure the ALGORITHM: a linear
+    // operator's volume ratio equals the data ratio regardless of how
+    // the JVM struggled.
     val probeLog = scala.collection.mutable.LinkedHashMap[
       String, scala.collection.mutable.ArrayBuffer[String]]()
     // TIMED-window contamination watermarks (round-12 verdict #6): the
@@ -485,52 +456,19 @@ object ScaleBench {
     // `contended_any_window` + the raw watermarks.
     val timedForeignMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
     val timedStealMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    def pfmt(d: Double) = "%.3f".formatLocal(java.util.Locale.US, d)
-    def probedRun[T](key: String)(body: => T): T = {
-      // Listener events arrive on an async bus (the reason shuffleSnap
-      // sleeps 150 ms): drain BEFORE the reset — a late onTaskEnd from
-      // the previous window must not survive taskPeakMem.set(0) and be
-      // misattributed here — and again before sampling at the end, so
-      // this window's own tail events land in its counters.
-      Thread.sleep(150)
-      val j0 = HostLoad.cpuJiffies(); val io0 = HostLoad.ioStat()
-      val b0 = HostLoad.blkioTicks()
-      taskPeakMem.set(0)
-      val sd0 = spillDiskB.get(); val sm0 = spillMemB.get()
-      heapPools.foreach(_.resetPeakUsage())
-      val t0 = System.nanoTime()
-      val r = body
-      val dt = (System.nanoTime() - t0) / 1e9
-      // /proc samples FIRST, flush with the dt endpoint (ADVICE r13:
-      // they don't ride the async listener bus, and sampling them
-      // after the drain sleep charges 150 ms of post-window jiffies
-      // to a dt-length window — on short fixture-scale runs that
-      // inflates timed_foreign/steal and can spuriously divert a
-      // record); the sleep below only guards the LISTENER-derived
-      // counters (spill, taskPeakMem, shuffle).
-      val j1 = HostLoad.cpuJiffies(); val io1 = HostLoad.ioStat()
-      val b1 = HostLoad.blkioTicks()
-      Thread.sleep(150)
-      val jiffiesOk = j0._1 >= 0 && j1._1 >= 0
-      val foreign =
-        if (jiffiesOk) HostLoad.cores((j1._1 - j0._1) - (j1._2 - j0._2), dt) else -1.0
-      val steal = if (jiffiesOk) HostLoad.cores(j1._5 - j0._5, dt) else -1.0
-      val heapMb = heapPools.map(_.getPeakUsage.getUsed).sum / 1e6
-      timedForeignMax.updateAndGet(m => math.max(m, foreign))
-      timedStealMax.updateAndGet(m => math.max(m, steal))
+    def probedRun[T](key: String)(body: => T): (T, Metrics.Window) = {
+      val (r, w) = Metrics.window(spark)(body)
+      timedForeignMax.updateAndGet(m => math.max(m, w.foreignCores))
+      timedStealMax.updateAndGet(m => math.max(m, w.stealCores))
       val json =
-        s"""{"foreign":${pfmt(foreign)},""" +
-          s""""majflt":${if (io0._1 < 0) -1L else io1._1 - io0._1},""" +
-          s""""read_mb":${pfmt(if (io0._2 < 0) -1.0 else (io1._2 - io0._2) / 1e6)},""" +
-          s""""io_wait_s":${pfmt(if (b0 < 0) -1.0 else (b1 - b0) / 100.0)},""" +
-          s""""steal_cores":${pfmt(steal)},""" +
-          s""""peak_task_mem_mb":${pfmt(taskPeakMem.get() / 1e6)},""" +
-          s""""peak_heap_mb":${pfmt(heapMb)},""" +
-          s""""spilled_mem_mb":${pfmt((spillMemB.get() - sm0) / 1e6)},""" +
-          s""""spilled_disk_mb":${pfmt((spillDiskB.get() - sd0) / 1e6)}}"""
+        s"""{${w.hostJson},""" +
+          s""""peak_task_mem_mb":${fmt(w.peakTaskMemBytes / 1e6)},""" +
+          s""""peak_heap_mb":${fmt(w.peakHeapMb)},""" +
+          s""""spilled_mem_mb":${fmt(w.spilledMemBytes / 1e6)},""" +
+          s""""spilled_disk_mb":${fmt(w.spilledDiskBytes / 1e6)}}"""
       probeLog.getOrElseUpdate(key,
         scala.collection.mutable.ArrayBuffer[String]()) += json
-      r
+      (r, w)
     }
 
     val (baseDirEff, scaledDirEff) =
@@ -564,7 +502,7 @@ object ScaleBench {
         if (!only.forall(_.contains("_build_neardup_pairs"))) Nil
         else {
           val t = "_build_neardup_pairs" ->
-            Seq(probedRun(s"$kind/_build_neardup_pairs")(timePairBuild(spark, dir)))
+            Seq(probedRun(s"$kind/_build_neardup_pairs")(timePairBuild(spark, dir))._1)
           Pins.release(spark)
           System.gc()
           System.err.println(f"[scale] _build_neardup_pairs @ $dir: ${t._2.head}%.2f s")
@@ -577,7 +515,7 @@ object ScaleBench {
           // — the probe window covers the UNIT (keyed by its gate);
           // per-entry attribution inside it stays Bench's job.
           val t = probedRun(s"$kind/_build_text_postings_unit")(
-            timePostingsMaint(spark, dir)).map { case (n, s) => n -> Seq(s) }
+            timePostingsMaint(spark, dir))._1.map { case (n, s) => n -> Seq(s) }
           Pins.release(spark)
           System.gc()
           t.foreach { case (n, s) =>
@@ -588,7 +526,7 @@ object ScaleBench {
         if (!only.forall(_.contains("_build_docs_partitioned"))) Nil
         else {
           val t = probedRun(s"$kind/_build_docs_partitioned_unit")(
-            timePartitionedMaint(spark, dir)).map { case (n, s) => n -> Seq(s) }
+            timePartitionedMaint(spark, dir))._1.map { case (n, s) => n -> Seq(s) }
           Pins.release(spark)
           System.gc()
           t.foreach { case (n, s) =>
@@ -599,12 +537,11 @@ object ScaleBench {
         .filter(n => only.forall(_.contains(n))).map { name =>
         val thunk = extraQueries.getOrElse(name, SparkEntry.queries(name))
         val runs = (1 to repeat).map { i =>
-          val sh0 = shuffleSnap()
-          val secs = probedRun(s"$kind/$name")(
+          val (secs, w) = probedRun(s"$kind/$name")(
             timeNoop(thunk(spark, dir)))
           Pins.release(spark)
           System.gc()
-          val shMb = (shuffleSnap() - sh0) / 1e6
+          val shMb = w.shuffleWriteBytes / 1e6
           System.err.println(
             f"[scale] $name @ $dir run $i: $secs%.2f s, shuffle $shMb%.1f MB")
           (secs, shMb)
@@ -619,7 +556,6 @@ object ScaleBench {
     val base = runAll(baseDirEff, "base").toMap
     val scaled = runAll(scaledDirEff, "scaled").toMap
 
-    def fmt(d: Double) = "%.3f".formatLocal(java.util.Locale.US, d)
     val rows = base.keys.toSeq.sorted.map { n =>
       // Ratio of MINIMA when repeats were asked for: the minimum is
       // the standard noise-floor estimator — transient host I/O only

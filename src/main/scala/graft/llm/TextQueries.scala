@@ -266,7 +266,7 @@ object TextQueries {
       // HOF twin pinned in FunctionsSpec) — this projection runs per
       // CONSUMER (twice), so the regex split + per-gram concat_ws it
       // replaces was the query's dominant CPU (38.8 executor-CPU-s at
-      // sf0.1 by QueryProf).
+      // sf0.1, as Bench's per-entry `cpu_s` counts it).
       val grams = array_distinct(call_function("ngrams_ws", col("text"), lit(3)))
       val docGrams = Tables.forCompute(s, dir, "documents")
         .select(col("doc_id"), explode(grams).as("g"))

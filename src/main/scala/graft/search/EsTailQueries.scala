@@ -44,8 +44,6 @@ object EsTailQueries {
     */
   private val HwPeriod = 7
 
-  private def tokens(c: Column): Column = split(lower(c), "\\s+")
-
   /** Exact integer cents of the events `value` column (two-decimal
     * money stored as DOUBLE): floor(value·100) — both engines floor
     * the identical IEEE product, so the carrier hash-matches.
@@ -81,7 +79,7 @@ object EsTailQueries {
     "search_significant_text" -> ((s, dir) => {
       val deduped = Tables(s, dir, "documents")
         .groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
-      val toksCol = tokens(col("text"))
+      val toksCol = SearchQueries.tokens(col("text"))
       val base = deduped
         .withColumn("is_fg", array_contains(toksCol, "dup"))
         .select(col("doc_id"), col("is_fg"),

@@ -2,11 +2,12 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Narrow bridge into Spark's `private[sql]` Dataset construction, used
-  * by graft.Bench to re-plan a registered query minus its top-level
-  * presentation Sort (so operator cost and oracle-determinism cost can
-  * be reported separately). Lives in this package solely for access;
-  * no Spark behavior is modified.
+/** Narrow bridge into Spark's `private[sql]` and `private[spark]` API:
+  * Dataset construction (graft.Bench re-plans a registered query minus
+  * its top-level presentation Sort, so operator cost and
+  * oracle-determinism cost can be reported separately) and the listener
+  * bus's completion barrier (graft.Metrics). Lives in this package
+  * solely for access; no Spark behavior is modified.
   */
 object GraftSqlAccess {
   def ofRows(session: SparkSession, plan: LogicalPlan): DataFrame =
@@ -46,4 +47,10 @@ object GraftSqlAccess {
     session.asInstanceOf[classic.SparkSession].streams.stateStoreCoordinator
     ()
   }
+
+  /** Block until every listener event posted so far has reached every
+    * listener (Spark's own barrier; throws after a 10 s timeout).
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -99,27 +99,15 @@ class SimilaritySampleSpec extends AnyFunSuite {
       transform(sequence(lit(0), lit(dim - 1)), d =>
         (((col("id") % 40) * (d + 5) % 97) * 1000L +
           col("id") * (d + 3) % 13).cast("double")).as("emb"))
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
+    val (n, jobs) = jobsRunBy {
+      SimilarityQueries.twoLevelCells(e,
+        targetCellSize = 10, k2 = 8, k1Cap = 40).count()
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val assigned = SimilarityQueries.twoLevelCells(e,
-        targetCellSize = 10, k2 = 8, k1Cap = 40)
-      assert(assigned.count() == 4000)
-      // Listener delivery is async; wait until the count stabilizes.
-      var last = -1
-      var spins = 0
-      while (jobs != last && spins < 20) {
-        last = jobs; Thread.sleep(200); spins += 1
-      }
-      // count + trainCentroids(k1) + checkpoint + sizes + windowed
-      // sample + the assert's count, plus AQE sub-jobs — far below one
-      // job per oversized cell (40 here).
-      assert(jobs <= 15, s"expected O(1) jobs, saw $jobs for 40 oversized cells")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(n == 4000)
+    // count + trainCentroids(k1) + checkpoint + sizes + windowed
+    // sample + the count, plus AQE sub-jobs — far below one job per
+    // oversized cell (40 here).
+    assert(jobs <= 15, s"expected O(1) jobs, saw $jobs for 40 oversized cells")
   }
 
   test("SQ8 shortlist + exact re-rank recovers the exact-L2 top-10") {

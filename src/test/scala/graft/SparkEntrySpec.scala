@@ -31,38 +31,10 @@ object SparkTestSession {
     Tables(spark, sf, "events").schema
 
   /** `body`'s result and the number of Spark jobs started while it ran,
-    * from any thread. Listener delivery is async but ordered: a marker
-    * job runs before and after `body`, and once a marker's start event
-    * arrives, every job started before it has been counted.
+    * from any thread (a [[Metrics]] window).
     */
-  def jobsRunBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val marker = "jobs-run-by-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val markers = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).map(_.getProperty("spark.jobGroup.id")).contains(marker))
-          markers.incrementAndGet()
-        else jobs.incrementAndGet()
-    }
-    def drain(): Unit = {
-      val want = markers.get() + 1
-      sc.setJobGroup(marker, "listener drain marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (markers.get() < want && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(markers.get() >= want, "marker job never reached the listener")
-    }
-    sc.addSparkListener(listener)
-    try {
-      drain()
-      jobs.set(0)
-      val out = body
-      drain()
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
+  def jobsRunBy[T](body: => T): (T, Int) =
+    Metrics.window(spark)(body) match { case (out, w) => (out, w.jobs.toInt) }
 }
 
 class SparkEntrySpec extends AnyFunSuite {

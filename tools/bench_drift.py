@@ -6,7 +6,8 @@ Compares freshly-measured per-family isolated bench records
 ones (git show HEAD:...), per query, on OPERATOR time (queries_op),
 and prints a machine-made drift report with the repo's ±15% noise
 band applied — so a round's judge reads ratios instead of re-deriving
-them. Families whose fresh record equals the committed file byte-wise
+them. When both records carry per-entry job and task counts (`probe`),
+every entry whose count changed is listed too, with no band. Families whose fresh record equals the committed file byte-wise
 (nothing re-measured) are skipped.
 
 Usage:
@@ -32,6 +33,33 @@ def committed(path, ref):
         return json.loads(out.stdout)
     except Exception:
         return None
+
+
+def count_changes(fresh, base):
+    """Report lines for every entry whose job or task count changed.
+
+    The counts are exact and steal-free, so any change is listed, with
+    no noise band. Entries whose probe lacks either count in either
+    record (records written before the counts existed) are skipped.
+    """
+    fp, bp = fresh.get("probe", {}), base.get("probe", {})
+    keys = ("jobs", "tasks")
+    common = [k for k in fp if k in bp
+              and all(c in fp[k] and c in bp[k] for c in keys)]
+    compared = len(common)
+    changed = sorted(k for k in common
+                     if any(fp[k][c] != bp[k][c] for c in keys))
+    if not compared:
+        return []
+    if not changed:
+        return [f"- job and task counts unchanged ({compared} entries)"]
+    out = [f"- job or task count changed ({len(changed)}/{compared}):", "",
+           "| entry | committed jobs | fresh jobs | committed tasks "
+           "| fresh tasks |", "|---|---|---|---|---|"]
+    out += [f"| {k} | {bp[k]['jobs']} | {fp[k]['jobs']} "
+            f"| {bp[k]['tasks']} | {fp[k]['tasks']} |" for k in changed]
+    out.append("")
+    return out
 
 
 def main():
@@ -97,6 +125,7 @@ def main():
             lines.append("")
         else:
             lines.append(f"- every query inside the ±{int(args.band * 100)}% band")
+        lines.extend(count_changes(fresh, base))
         lines.append("")
     report = "\n".join(lines)
     print(report)
