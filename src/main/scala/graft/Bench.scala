@@ -304,7 +304,7 @@ object Bench {
         })
     // The postings maintenance CYCLE behind the lease story: a 100-doc
     // segment upsert (O(batch) — the flat ScaleBench row), then a FULL
-    // compaction (resolve tombstones, fold to seg=0 — the op that
+    // compaction (drop dead rows, fold to seg=0 — the op that
     // holds the maintenance lease for hours at 100 TB and motivated
     // the round-9 heartbeat renewal). Runs against the artifact the
     // build above just produced; compaction restores the single-

@@ -88,6 +88,18 @@ private[graft] object HostLoad {
     */
   def cores(jiffies: Long, dt: Double): Double = jiffies / 100.0 / math.max(dt, 1e-3)
 
+  /** Other processes' user cores over the `dt` seconds between two
+    * [[cpuJiffies]] samples: Δ(all-CPU user+nice) − Δ(own utime), at
+    * least 0. The two counters are read at different instants at 10 ms
+    * granularity, so over a short window the own delta can exceed the
+    * host's; that means no foreign load, not a negative one. -1 where
+    * either sample lacks /proc.
+    */
+  def foreign(j0: (Long, Long, Long, Long, Long), j1: (Long, Long, Long, Long, Long),
+              dt: Double): Double =
+    if (j0._1 < 0 || j1._1 < 0) -1.0
+    else math.max(0.0, cores((j1._1 - j0._1) - (j1._2 - j0._2), dt))
+
   /** Whole-run watermarks: a daemon thread samples every 15 s and keeps
     * the maxima of the load average, foreign user cores, foreign system
     * cores (advisory) and stolen cores over each window.
@@ -112,7 +124,7 @@ private[graft] object HostLoad {
         val curT = System.nanoTime()
         if (prev._1 >= 0 && cur._1 >= 0) {
           val dt = (curT - prevT) / 1e9
-          raise(foreignMax, cores((cur._1 - prev._1) - (cur._2 - prev._2), dt))
+          raise(foreignMax, foreign(prev, cur, dt))
           raise(foreignSysMax, cores((cur._3 - prev._3) - (cur._4 - prev._4), dt))
           raise(stealMax, cores(cur._5 - prev._5, dt))
         }

@@ -29,9 +29,10 @@ object Metrics {
     * not this); `peakTaskMemBytes` is the largest single-task
     * execution-memory peak. The host probe (see [[HostLoad]]) reads
     * -1 where /proc is unavailable: `foreignCores` is other processes'
-    * user CPU over the window, `stealCores` the hypervisor's, and
-    * `peakHeapMb` the heap pools' peak since the latest window opened
-    * (in a window with inner windows, since the last inner one opened).
+    * user CPU over the window (never below 0), `stealCores` the
+    * hypervisor's, and `peakHeapMb` the heap pools' peak since the
+    * latest window opened (in a window with inner windows, since the
+    * last inner one opened).
     */
   final case class Window(
       wallS: Double,
@@ -126,7 +127,7 @@ object Metrics {
       val d = c.totals.zip(before).map { case (a, b) => a - b }
       val jiffiesOk = j0._1 >= 0 && j1._1 >= 0
       (out, Window(dt, d(0), d(1), d(2), d(3), d(4), d(5), d(6), peak.get(),
-        if (jiffiesOk) HostLoad.cores((j1._1 - j0._1) - (j1._2 - j0._2), dt) else -1.0,
+        HostLoad.foreign(j0, j1, dt),
         if (io0._1 < 0) -1L else io1._1 - io0._1,
         if (io0._2 < 0) -1.0 else (io1._2 - io0._2) / 1e6,
         if (b0 < 0) -1.0 else (b1 - b0) / 100.0,

@@ -40,10 +40,11 @@ object Pins {
   private val pinned = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, java.util.Queue[DataFrame]]())
 
-  /** Register a frame the caller just persisted; returns it unchanged.
+  /** Persist `df` (MEMORY_AND_DISK) and register it; returns it.
     * Thread-safe (bulkImportAll runs builders concurrently).
     */
   private[graft] def pin(df: DataFrame): DataFrame = {
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     pinned
       .computeIfAbsent(df.sparkSession,
         _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]())

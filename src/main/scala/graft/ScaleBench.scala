@@ -216,8 +216,9 @@ object ScaleBench {
     * claim measured: build the postings index at this corpus size
     * (expected ~linear), then upsert a FIXED 100-doc batch (expected
     * ~flat: the segment write is O(batch); the one corpus-coupled
-    * term is the stats-delta probe, a 2-column column-pruned scan of
-    * the postings for the replaced docs' length contribution — tiny
+    * term is the stats-delta probe, a read of the doc-sorted `_doclen`
+    * table with the batch's 100 ids pushed into the scan as an In
+    * filter, for the replaced docs' length contribution — tiny
     * constant, reported honestly by this very measurement). The
     * artifact is deleted after timing so downstream runs see no
     * maintained state.

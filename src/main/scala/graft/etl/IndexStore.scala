@@ -827,8 +827,9 @@ class IndexStore(spark: SparkSession, root: String) {
     * layout): a reader's filter on those columns becomes partition
     * pruning — directories that never open a footer. This is how the
     * IVF cell id turns into physical data skipping at query time.
-    * `rangeSortCols` instead range-partitions AND sorts the artifact by
-    * the given key — right for HIGH-cardinality keys (a term column
+    * `rangeSortCols` lays the files out by [[IndexStore.rangeSorted]]
+    * on the given key, within each hive partition when there are
+    * `partitionCols` — right for HIGH-cardinality keys (a term column
     * would explode a hive layout into millions of dirs): parquet
     * min/max row-group stats then skip everything outside a key
     * filter's range. `sidecars` are extra underscore-prefixed metadata
@@ -843,15 +844,13 @@ class IndexStore(spark: SparkSession, root: String) {
                     sidecars: Map[String, String] = Map.empty): Unit =
     swapIn(name) { tmp =>
       val writer =
-        if (partitionCols.nonEmpty && rangeSortCols.nonEmpty)
-          // Combined layout (segmented artifacts): hive-partitioned on
-          // partitionCols with every FILE range-sorted on rangeSortCols
-          // — each range task writes its slice under the (usually
-          // constant) partition value, so within every partition dir
-          // the files tile the sort-key space and min/max row-group
-          // skipping works exactly as in the flat range layout.
-          df.repartitionByRange(numShards, rangeSortCols.map(col): _*)
-            .sortWithinPartitions(rangeSortCols.map(col): _*)
+        if (rangeSortCols.nonEmpty)
+          // With partitionCols too (segmented artifacts), each range
+          // task writes its slice under the (usually constant)
+          // partition value, so within every partition dir the files
+          // tile the sort-key space and min/max row-group skipping
+          // works as in a flat range layout.
+          IndexStore.rangeSorted(df, numShards, rangeSortCols)
             .write.partitionBy(partitionCols: _*)
         else if (partitionCols.nonEmpty)
           // EXPLICIT partition count: a bare repartition(cols) is an
@@ -869,7 +868,7 @@ class IndexStore(spark: SparkSession, root: String) {
           // hive columns stays the primary skip, and a pushed
           // key-filter (the maintenance probes' In(id) list) then
           // prunes ROW GROUPS inside each cell file via min/max stats.
-          // Unlike the combined range layout above, the tasks stay
+          // Unlike the range layout above, the tasks stay
           // partition-spread, so cell-writer creation keeps its
           // parallelism (the 17 s single-task lesson).
           df.repartition(
@@ -878,10 +877,6 @@ class IndexStore(spark: SparkSession, root: String) {
             .sortWithinPartitions(
               (partitionCols ++ withinFileSortCols).map(col): _*)
             .write.partitionBy(partitionCols: _*)
-        else if (rangeSortCols.nonEmpty)
-          df.repartitionByRange(numShards, rangeSortCols.map(col): _*)
-            .sortWithinPartitions(rangeSortCols.map(col): _*)
-            .write
         else df.repartition(numShards).write
       writer.mode(SaveMode.Overwrite).parquet(tmp.toString)
       writeSidecars(tmp, sidecars + (MetaFile -> fingerprint))
@@ -1011,7 +1006,7 @@ class IndexStore(spark: SparkSession, root: String) {
   }
 
   /** Clear an artifact's provenance fingerprint — the FIRST step of a
-    * multi-write maintenance bracket (segment append + tombstones +
+    * multi-write maintenance bracket (segment append + doclen segment +
     * sidecar updates): with the fingerprint gone, a crash anywhere
     * before [[stampArtifact]] leaves a mismatch that forces readers to
     * REBUILD rather than serve a half-applied batch.
@@ -1161,39 +1156,33 @@ class IndexStore(spark: SparkSession, root: String) {
     * artifact without touching any existing file: the Lucene-style
     * maintenance primitive (new postings land as a fresh range-sorted
     * segment dir; existing segments are immutable until compaction).
-    * With `rangeSortCols`, the segment is `numShards` files that tile
-    * the sort-key space, placed by a range-partition sample; with
-    * `numShards = 1` it is one sorted file and no sample runs, the
-    * form for a small flush whose rows fit one file. The segment
-    * stages under an underscore-hidden dir inside the
-    * artifact and renames into place, so readers never see a partial
-    * segment. Does NOT manage the provenance fingerprint — callers
+    * The segment is laid out by [[IndexStore.rangeSorted]] on
+    * `sortCol`: `numShards` files that tile the sort-key space, or with
+    * `numShards = 1` one sorted file and no range sample, the form for
+    * a small flush whose rows fit one file. The segment stages under an
+    * underscore-hidden dir inside the artifact and renames into place,
+    * so readers never see a partial segment. Does NOT manage the provenance fingerprint — callers
     * bracket the whole batch with [[clearArtifactFingerprint]] /
     * [[stampArtifact]].
     */
   def appendPartition(df: DataFrame, name: String, partitionCol: String,
-                      value: String, numShards: Int = 5,
-                      rangeSortCols: Seq[String] = Nil): Unit = {
+                      value: String, sortCol: String, numShards: Int = 5): Unit = {
     val d = dir(name)
     require(fs.exists(d), s"appendPartition: no artifact $name")
     val target = new Path(d, s"$partitionCol=$value")
     require(!fs.exists(target), s"appendPartition: $target already exists")
     val stage = new Path(d, s"__append_$value")
     fs.delete(stage, true)
-    val w =
-      if (rangeSortCols.nonEmpty)
-        (if (numShards == 1) df.coalesce(1)
-         else df.repartitionByRange(numShards, rangeSortCols.map(col): _*))
-          .sortWithinPartitions(rangeSortCols.map(col): _*)
-      else df.repartition(numShards)
-    w.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    IndexStore.rangeSorted(df, numShards, Seq(sortCol))
+      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
     fs.delete(new Path(stage, "_SUCCESS"), false)
     require(fs.rename(stage, target), s"appendPartition: rename failed: $target")
   }
 
   /** Absolute path of an artifact/index directory — for maintenance
     * structures that live INSIDE it under underscore-hidden names
-    * (e.g. a tombstone set), which plain [[read]] scans never see.
+    * (e.g. the postings' `_doclen` table), which plain [[read]] scans
+    * never see.
     */
   def artifactPath(name: String): String = dir(name).toString
 
@@ -1229,11 +1218,23 @@ object IndexStore {
   /** Driver push cap of the keyed probes ([[IndexStore.upsertKeyed]],
     * `upsertPostings`): a batch of at most this many rows collects its
     * keys to the driver and pushes them into scans as In filters; a
-    * larger one stays distributed. The postings tombstone set is read
-    * on the driver and applied as a Filter up to the same size. Sized
-    * above the ~20k-row triggers of the `_stream_latency` events drain.
+    * larger one stays distributed. The postings kill set (the `_doclen`
+    * rows of segments past 0) is read on the driver and applied as a
+    * Filter up to the same size. Sized above the ~20k-row triggers of
+    * the `_stream_latency` events drain.
     */
   private[graft] val MaxInPush = 50000
+
+  /** The range-sorted layout: `df` as `numShards` partitions that tile
+    * the `sortCols` key space (placed by a range-partition sample), each
+    * sorted, so min/max row-group stats skip everything outside a key
+    * filter's range. One shard is one sorted partition, with no sample.
+    */
+  private[graft] def rangeSorted(df: DataFrame, numShards: Int,
+                                 sortCols: Seq[String]): DataFrame =
+    (if (numShards == 1) df.coalesce(1)
+     else df.repartitionByRange(numShards, sortCols.map(col): _*))
+      .sortWithinPartitions(sortCols.map(col): _*)
 
   /** Live maintenance leases held by THIS JVM: (artifact root, name) →
     * owner token. [[IndexStore.stampArtifact]] consults it to refuse

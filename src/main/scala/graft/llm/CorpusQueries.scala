@@ -461,7 +461,7 @@ object CorpusQueries {
           greatest(size(tks) - 2, lit(0)).as("total3"),
           size(DedupQueries.shingles3(col("text"))).as("uniq3"),
           PipelineQueries.splitBucket(col("text")).as("split"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(graft.Pins.pin)
+        .transform(graft.Pins.pin)
       scored
         .join(survivors, Seq("doc_id")) // keep canonical members only
         .filter(col("total3") > 0 &&
@@ -497,7 +497,7 @@ object CorpusQueries {
           .cast("long"), lit(w))
       val cnts = corpusTokens(s, dir)
         .groupBy(col("token")).agg(count(lit(1)).as("exact_cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(graft.Pins.pin)
+        .transform(graft.Pins.pin)
       val cells = cnts
         .select(col("token"), col("exact_cnt"),
           explode(sequence(lit(0), lit(d - 1))).as("i"))

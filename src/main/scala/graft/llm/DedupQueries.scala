@@ -177,7 +177,7 @@ object DedupQueries {
     // filter is a trivial scan over the cached arrays.
     val cached = docsRaw
       .select(col("doc_id"), shingles3(col("text")).as("shingles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(graft.Pins.pin)
+      .transform(graft.Pins.pin)
     val docs = cached.filter(size(col("shingles")) > 0)
     bandedCandidates(docs, bands, rowsPerBand)
       .join(docs.select(col("doc_id").as("doc_a"), col("shingles").as("sha")), "doc_a")
@@ -213,7 +213,7 @@ object DedupQueries {
     // sizes and the pair generation (at cluster scale: a checkpointed
     // table — the standard reusable-index shape).
     val posts = postings(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(graft.Pins.pin)
+      .transform(graft.Pins.pin)
     val hot = posts.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") > MaxShingleDf)
@@ -228,7 +228,7 @@ object DedupQueries {
     // only from the actual runtime size.
     val lists = posts.join(hot, Seq("shingle"), "left_anti")
       .groupBy(col("shingle")).agg(collect_list(col("doc_id")).as("ids"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(graft.Pins.pin)
+      .transform(graft.Pins.pin)
     val sizes = lists.select(explode(col("ids")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
     // All in-list ordered pairs (a < b): O(df²) per shingle with
@@ -625,7 +625,6 @@ object DedupQueries {
     // corpus) persist — the full per-gram stats frame is
     // positions-scale and is never materialized.
     val candGrams = substrCandGrams(posGrams)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(graft.Pins.pin)
     val hot = candGrams.filter(col("d") > MaxSpanGramDf).select(col("gh"))
     // Pairable grams → a broadcast Bloom filter evaluated INSIDE the
@@ -729,7 +728,7 @@ object DedupQueries {
     // WITNESSED instead of argued (ScaleBench winnowcap mode). The
     // registered query and its DuckDB twin always run the default.
     val posts = winnowCposts(Tables.forCompute(s, dir, "documents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(graft.Pins.pin)
+      .transform(graft.Pins.pin)
     val hot = posts.groupBy(col("fp"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") > dfCap)
@@ -1164,7 +1163,7 @@ object DedupQueries {
           call_function("simhash_md5", col("text")).as("sig"))
         .select(col("doc_id"),
           element_at(col("sig"), 1).as("lo"), element_at(col("sig"), 2).as("hi"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(graft.Pins.pin)
+        .transform(graft.Pins.pin)
       val banded = sh.select(col("doc_id"), col("lo"), col("hi"),
         explode(array(
           struct(lit(0).as("band"), col("lo").bitwiseAND(lit(0xFFFFL)).as("key")),
@@ -1238,7 +1237,7 @@ object DedupQueries {
       // banded variant above.
       val cached = Tables.forCompute(s, dir, "documents")
         .select(col("doc_id"), shingles3(col("text")).as("shingles"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(graft.Pins.pin)
+        .transform(graft.Pins.pin)
       val docs = cached.filter(size(col("shingles")) > 0)
       val tf = new HashingTF().setInputCol("shingles").setOutputCol("features")
         .setNumFeatures(1 << 18).setBinary(true)
@@ -1248,7 +1247,7 @@ object DedupQueries {
       // tables only multiply candidate pairs (recall floor is spec'd
       // in LlmSpec).
       val feat = tf.transform(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(graft.Pins.pin)
+        .transform(graft.Pins.pin)
       val lsh = new MinHashLSH().setInputCol("features").setOutputCol("sig")
         .setNumHashTables(4).setSeed(42L)
       val model = lsh.fit(feat)

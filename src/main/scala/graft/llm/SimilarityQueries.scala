@@ -635,7 +635,6 @@ object SimilarityQueries {
         // Pinned (Pins.release is the library cleanup contract): the
         // slim frame feeds both join sides — without the pin the
         // k-cell distance pass runs twice over the corpus.
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .transform(graft.Pins.pin)
       val cand = withCells.as("a").join(withCells.as("b"),
           col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
@@ -768,7 +767,6 @@ object SimilarityQueries {
         .withColumn("__d2", element_at(col("__cd"),
           argminCell(col("__cd"), nList, excl = Seq(col("cell"))) + 1))
         .drop("__cd")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .transform(graft.Pins.pin)
       // Defensive read (ADVICE r13): an embeddings table holding ONLY
       // the query vector leaves the assigned frame empty and avg()
@@ -992,7 +990,6 @@ object SimilarityQueries {
         .withColumn("__d2", element_at(col("__cd"),
           argminCell(col("__cd"), model.nList, excl = Seq(col("cell"))) + 1))
         .drop("__cd")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .transform(graft.Pins.pin)
       // Defensive read (ADVICE r13): an embeddings table holding ONLY
       // the query vector leaves the assigned frame empty and avg()

@@ -331,7 +331,6 @@ object TextQueries {
         .select(col("doc_id"), explode(pairs).as("b"))
         .select(col("doc_id"), col("b.w1"), col("b.w2"))
       val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .transform(graft.Pins.pin)
       val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
       val vocab = broadcast(c1.agg(count(lit(1)).as("vocab_sz")))
@@ -452,7 +451,6 @@ object TextQueries {
       // 3 scans; now 2 (unigrams + bigrams), same aggregate-only
       // persist policy as the LM/type tables.
       val uni = words.groupBy(col("w")).agg(count(lit(1)).as("c1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .transform(graft.Pins.pin)
       // coalesce keeps the old count(*) non-null contract on an empty
       // corpus (sum() is NULL over zero rows; r14 ADVICE #3).
@@ -614,7 +612,6 @@ object TextQueries {
     // plans/r14/llm_kneser_ney_quality_before.txt.
     val types = bg.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(graft.Pins.pin)
     val ctx = types.groupBy(col("w1"))
       .agg(sum(col("c12")).cast(LongType).as("c1"),

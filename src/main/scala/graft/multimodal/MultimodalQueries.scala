@@ -285,7 +285,7 @@ object MultimodalQueries {
           MediaSig(r.doc_id, blockSig(r.payload)),
           MediaSig(r.doc_id + ReplicaIdOffset, blockSig(perturb(r.payload))))))
         .toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(graft.Pins.pin)
+        .transform(graft.Pins.pin)
       val banded = sigs.select(col("doc_id"), col("sig"),
         explode(array((0 until 9).map(b =>
           struct(lit(b).as("band"),

@@ -209,7 +209,6 @@ object AdvancedQueries {
       // histogram's (2 scans; see plans/r15/rel_hdr_quantiles_*).
       val exHist = cents.groupBy(col("v")).agg(count(lit(1)).as("c"))
         .withColumn("hi", expr("shiftright(v, 16)"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .transform(graft.Pins.pin)
       val bucketed = exHist
         .withColumn("e", length(bin(col("v"))) - 1)

@@ -679,7 +679,6 @@ object SqlQueries {
             |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
             |  AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
             |GROUP BY l_suppkey""".stripMargin)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           .transform(graft.Pins.pin)
         val maxRev = broadcast(revenue.agg(
           max(col("total_revenue")).as("max_revenue")))
@@ -715,7 +714,6 @@ object SqlQueries {
             |              JOIN nation ON s_nationkey = n_nationkey
             |WHERE n_name < 'NATION_2'
             |GROUP BY l_partkey""".stripMargin)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           .transform(graft.Pins.pin)
         val threshold = broadcast(t.agg(
           (sum(col("value")) * expr("CAST(0.0001 AS DECIMAL(7,6))")).as("threshold")))

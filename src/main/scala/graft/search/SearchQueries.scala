@@ -215,7 +215,7 @@ object SearchQueries {
       // The doclen sidecar table (Lucene norms): crash between the
       // stamp above and this write is covered by resolvedDoclen's
       // derive-from-postings fallback.
-      writeDoclenSeg(store, docs, 0)
+      writeDoclenRows(store, doclenOf(docs), 0)
     }
     val Array(nDocs, sumDl) = store.artifactSidecar(PostingsName, PostingsStatsSidecar)
       .getOrElse(sys.error(s"$PostingsName has no corpus-stats sidecar"))
@@ -223,33 +223,25 @@ object SearchQueries {
     (resolvedPostings(store), nDocs, sumDl)
   }
 
-  /** Tombstone set of the segmented postings artifact: (doc_id,
-    * kill_seg) rows under the underscore-hidden `_deleted` dir inside
-    * the artifact — invisible to plain scans, applied by
-    * [[resolvedPostings]]. Bounded by update volume since the last
-    * [[compactPostings]], the Lucene deleted-docs model.
+  /** The hidden dir where earlier builds kept a tombstone table of
+    * deleted doc ids. Nothing writes or reads it now:
+    * [[withoutTombstoned]] takes its kill set from `_doclen`. The
+    * benchmark's gauge still counts its rows, and compaction's swap
+    * removes a leftover one.
     */
   private[graft] val PostingsDeleted = "_deleted"
-
-  /** Schema of the `_deleted` rows: every row of `doc_id` in a segment
-    * at or below `kill_seg` is dead. [[upsertPostings]] casts its
-    * tombstones to it.
-    */
-  private[graft] val DeletedSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("kill_seg", IntegerType)))
-
-  private def postingsDeletedPath(store: graft.etl.IndexStore): String =
-    s"${store.artifactPath(PostingsName)}/$PostingsDeleted"
 
   /** Doc-length sidecar TABLE of the segmented postings — Lucene's
     * norms file: ONE (doc_id, n_tokens) row per doc per segment,
     * doc_id-range-sorted within files, under the underscore-hidden
     * `_doclen/seg=k` dirs and maintained with the same segment-append
-    * + tombstone + compaction lifecycle as the postings themselves.
-    * Exists so [[upsertPostings]]'s stats-delta probe (the removed
-    * docs' length contribution) reads a 1-row-per-doc projection with
-    * the batch's ids PUSHED into the scan, instead of left-semi
-    * scanning the full postings (~60–100 rows per doc, term-sorted so
+    * + compaction lifecycle as the postings themselves. It is also the
+    * artifact's deleted-docs record: a doc's rows in a segment die once
+    * that doc has a `_doclen` row in a later segment
+    * ([[withoutTombstoned]]). It exists so [[upsertPostings]]'s
+    * stats-delta probe (the removed docs' length contribution) reads a
+    * 1-row-per-doc projection with the batch's ids PUSHED into the
+    * scan, instead of left-semi scanning the full postings (~60–100 rows per doc, term-sorted so
     * doc_id row-group stats prune nothing) — measured 4.1 s → O(batch)
     * at the 100× corpus, and the difference between a micro-batch
     * costing O(batch) and O(corpus/100) at 100 TB.
@@ -276,16 +268,10 @@ object SearchQueries {
     */
   private def writeDoclenRows(store: graft.etl.IndexStore, rows: DataFrame,
                               seg: Int, numShards: Int = 4): Unit = {
-    val cast = castTo(DoclenSchema)(rows)
-    (if (numShards == 1) cast.coalesce(1) else cast.repartitionByRange(numShards, col("doc_id")))
-      .sortWithinPartitions("doc_id")
+    graft.etl.IndexStore.rangeSorted(castTo(DoclenSchema)(rows), numShards, Seq("doc_id"))
       .write.mode("overwrite")
       .parquet(s"${postingsDoclenPath(store)}/seg=$seg")
   }
-
-  private def writeDoclenSeg(store: graft.etl.IndexStore, docs: DataFrame,
-                             seg: Int): Unit =
-    writeDoclenRows(store, doclenOf(docs), seg)
 
   private def fsOf(store: graft.etl.IndexStore): org.apache.hadoop.fs.FileSystem =
     org.apache.hadoop.fs.FileSystem.get(
@@ -301,83 +287,86 @@ object SearchQueries {
       .map(_.getPath.getName.stripPrefix("seg=").toInt).toSet
   }
 
-  /** The `_deleted` set as doc_id → its highest kill_seg, read on the
-    * driver with parquet-mr (no Spark job), or None once more than
-    * [[graft.etl.IndexStore.MaxInPush]] rows have been read. A doc's
-    * highest kill_seg covers its lower ones, and a NULL doc_id or
-    * kill_seg matches no row, so those rows leave the set.
+  /** The kill set as doc_id → the newest segment that holds a row for
+    * it, read from `parts` (each a `_doclen` part file with its segment)
+    * on the driver with parquet-mr (no Spark job), or None once more
+    * than [[graft.etl.IndexStore.MaxInPush]] rows have been read. A NULL
+    * doc_id matches no row, so such a row kills nothing.
     */
-  private def tombstonesOnDriver(store: graft.etl.IndexStore,
-                                 parts: Seq[org.apache.hadoop.fs.Path]): Option[Map[Long, Int]] = {
+  private def newestSegOnDriver(store: graft.etl.IndexStore,
+                                parts: Seq[(Int, org.apache.hadoop.fs.Path)]): Option[Map[Long, Int]] = {
     import org.apache.parquet.hadoop.ParquetReader
     import org.apache.parquet.hadoop.example.GroupReadSupport
     val conf = store.session.sparkContext.hadoopConfiguration
     val cap = graft.etl.IndexStore.MaxInPush
     val files = parts.iterator
-    val kill = scala.collection.mutable.HashMap.empty[Long, Int]
+    val newest = scala.collection.mutable.HashMap.empty[Long, Int]
     var n = 0
     while (n <= cap && files.hasNext) {
-      val reader = ParquetReader.builder(new GroupReadSupport, files.next()).withConf(conf).build()
+      val (seg, file) = files.next()
+      val reader = ParquetReader.builder(new GroupReadSupport, file).withConf(conf).build()
       try {
         var g = reader.read()
         while (g != null && n <= cap) {
           n += 1
-          if (g.getFieldRepetitionCount("doc_id") > 0 && g.getFieldRepetitionCount("kill_seg") > 0) {
-            val (id, k) = (g.getLong("doc_id", 0), g.getInteger("kill_seg", 0))
-            kill(id) = kill.get(id).fold(k)(math.max(_, k))
+          if (g.getFieldRepetitionCount("doc_id") > 0) {
+            val id = g.getLong("doc_id", 0)
+            newest(id) = newest.get(id).fold(seg)(math.max(_, seg))
           }
           g = reader.read()
         }
       } finally reader.close()
     }
-    if (n > cap) None else Some(kill.toMap)
+    if (n > cap) None else Some(newest.toMap)
   }
 
   /** `rows` of a segmented table of the artifact (postings or doclen)
-    * minus the tombstoned ones: a row dies when some `_deleted` row has
-    * its doc_id and a kill_seg at or above its seg. Below the push cap
-    * the set is read on the driver and applied as a plain Filter — per
-    * kill_seg k, `seg <= k AND doc_id IN ids_k`, negated null-safely so
-    * a NULL-doc_id row survives — which adds no Spark job to any read,
-    * upsert probe or compaction. Past the cap the raw tombstones are
-    * broadcast and anti-joined; both forms keep exactly the rows a join
-    * against max(kill_seg) per doc would keep. The set grows with the
-    * updates since the last compaction. With no tombstones (the
-    * built-once case and every driver-gate query) the rows come back
-    * unfiltered, so plans change only once maintenance has happened.
+    * minus the dead ones, under the newest-segment rule: a row
+    * (doc_id, seg) is dead when its doc has a `_doclen` row in a later
+    * segment. Every upsert writes its docs' `_doclen` segment, so the
+    * kill set is the `_doclen/seg=g` rows for g >= 1 (segment 0 kills
+    * nothing). Below the push cap the set is read on the driver, `seg`
+    * taken from the directory name, and applied as a plain Filter —
+    * per newest segment g, `seg < g AND doc_id IN ids_g`, negated
+    * null-safely so a NULL-doc_id row survives — which adds no Spark
+    * job to any read, upsert probe or compaction. Past the cap those
+    * `_doclen` rows are broadcast and anti-joined on `seg < t.seg`;
+    * both forms keep the same rows. The set grows with the updates
+    * since the last compaction. With no segment past 0 (the built-once
+    * case and every driver-gate query) the rows come back unfiltered,
+    * so plans change only once maintenance has happened.
     *
-    * Snapshot rule: the frame carries the tombstone set as it was when
-    * the frame was built, as its scan carries the file listing of that
-    * moment. Tombstone files are only ever appended, and compaction
-    * swaps the whole artifact directory, so a built frame never mixes
-    * the segments of one state with the tombstones of another.
+    * Snapshot rule: the frame carries the kill set as it was when the
+    * frame was built, as its scan carries the file listing of that
+    * moment. Segments are only ever appended, and compaction swaps the
+    * whole artifact directory, so a built frame never mixes the
+    * segments of one state with the kill set of another.
     */
   private def withoutTombstoned(store: graft.etl.IndexStore,
                                 rows: DataFrame): DataFrame = {
-    val deleted = new org.apache.hadoop.fs.Path(postingsDeletedPath(store))
-    // Its part files, listed: Spark ignores (and warns about) a root
+    val dl = postingsDoclenPath(store)
+    val later = segsOf(store, dl).filter(_ >= 1).toSeq.sorted
+    // Their part files, listed: Spark ignores (and warns about) a root
     // path whose own name starts with `_`.
-    val parts =
-      if (!fsOf(store).exists(deleted)) Nil
-      else fsOf(store).listStatus(deleted).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    val parts = later.flatMap(g => fsOf(store).listStatus(new org.apache.hadoop.fs.Path(s"$dl/seg=$g"))
+      .toSeq.map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName).map(g -> _))
     if (parts.isEmpty) rows
-    else tombstonesOnDriver(store, parts) match {
-      case Some(kill) if kill.isEmpty => rows
-      case Some(kill) =>
-        val dies = kill.groupMap(_._2)(_._1).toSeq.sortBy(_._1).map { case (k, ids) =>
-          col("seg") <= k && col("doc_id").isin(ids.toSeq.sorted: _*)
+    else newestSegOnDriver(store, parts) match {
+      case Some(newest) if newest.isEmpty => rows
+      case Some(newest) =>
+        val dies = newest.groupMap(_._2)(_._1).toSeq.sortBy(_._1).map { case (g, ids) =>
+          col("seg") < g && col("doc_id").isin(ids.toSeq.sorted: _*)
         }.reduce(_ || _)
         rows.filter(!coalesce(dies, lit(false)))
       case None =>
-        val tomb = store.session.read.schema(DeletedSchema).parquet(parts.map(_.toString): _*)
-        rows.join(broadcast(tomb),
-          rows("doc_id") === tomb("doc_id") && rows("seg") <= tomb("kill_seg"),
-          "left_anti")
+        val t = store.session.read.schema(DoclenSchema).option("basePath", dl)
+          .parquet(later.map(g => s"$dl/seg=$g"): _*)
+        rows.join(broadcast(t),
+          rows("doc_id") === t("doc_id") && rows("seg") < t("seg"), "left_anti")
     }
   }
 
-  /** The resolved doclen view (tombstones applied — same rule as
+  /** The resolved doclen view (dead rows dropped — same rule as
     * [[resolvedPostings]]). Falls back to deriving from the resolved
     * postings when the `_doclen` dirs are absent (an artifact written
     * by a pre-doclen build, or a crash after the fingerprint stamp):
@@ -407,9 +396,10 @@ object SearchQueries {
 
   /** The SERVED view of the segmented postings, read with the fixed
     * [[PostingsSchema]] (no schema-inference job): every segment's rows
-    * minus tombstoned (doc, seg<=kill_seg) rows — a doc updated in a
-    * later segment leaves its old rows physically in place (segments
-    * are immutable) but logically dead. Building it runs no Spark job.
+    * minus the rows of docs that have a `_doclen` row in a later
+    * segment — a doc updated in a later segment leaves its old rows
+    * physically in place (segments are immutable) but logically dead.
+    * Building it runs no Spark job.
     */
   private[graft] def resolvedPostings(store: graft.etl.IndexStore): DataFrame =
     withoutTombstoned(store, store.session.read.schema(PostingsSchema)
@@ -419,9 +409,9 @@ object SearchQueries {
     * Lucene continuous-indexing loop for the SEARCH index, SEGMENT-
     * APPEND shaped: the batch's postings land as one new immutable
     * term-sorted segment (O(batch) write — no existing file is
-    * touched), the batch's doc ids tombstone their rows in every
-    * older segment (so a changed doc that lost a term serves no stale
-    * posting), and the corpus-stats sidecar advances by the batch
+    * touched), the batch's `_doclen` segment kills its docs' rows in
+    * every older segment (so a changed doc that lost a term serves no
+    * stale posting), and the corpus-stats sidecar advances by the batch
     * DELTA (removed docs' contribution comes from the resolved doclen
     * table, one row per doc — never a corpus rescan). At 100 TB a
     * micro-batch therefore costs its own size, not a corpus rewrite —
@@ -433,14 +423,15 @@ object SearchQueries {
     * micro-batch case) is handled like a Lucene flush: its
     * (doc_id, n_tokens) rows are collected once, the removed docs'
     * stats are summed here from the at most |batch| probed doclen
-    * rows, and the postings, doclen and tombstone segments are each
-    * written as ONE sorted file with no range-sampling job. A larger
-    * batch keeps its ids and stats distributed and writes range-
-    * partitioned segments.
+    * rows, and the postings and doclen segments are each written as
+    * ONE sorted file with no range-sampling job. A larger batch keeps
+    * its ids and stats distributed and writes range-partitioned
+    * segments.
     *
     * Crash contract: the whole batch runs inside a fingerprint
-    * cleared-first bracket — segment, tombstones, or sidecar missing
-    * at a crash leaves a mismatch that forces readers to rebuild.
+    * cleared-first bracket — postings segment, doclen segment or
+    * sidecar missing at a crash leaves a mismatch that forces readers
+    * to rebuild.
     * Retokenization policy changes are a rebuild
     * ([[materializedPostings]] fingerprint), not an upsert.
     */
@@ -459,7 +450,7 @@ object SearchQueries {
     val raw = doclenOf(batch).limit(graft.etl.IndexStore.MaxInPush + 1).collect()
     val capped = raw.length <= graft.etl.IndexStore.MaxInPush
     // An empty micro-batch (routine under foreachBatch) must not burn
-    // a segment generation or write empty segment/tombstone files —
+    // a segment generation or write empty segment files —
     // return the current max gen untouched (if/else, not `return`:
     // the lock body is by-name).
     if (raw.isEmpty) topGen.getOrElse(0).toLong
@@ -471,21 +462,15 @@ object SearchQueries {
     // the push cap falls back to the distributed semi-join, still
     // over the 1-row-per-doc table rather than the full postings.
     val doclen = resolvedDoclen(store)
-    val idList = raw.map(_.getLong(0)).distinct.toSeq
-    // Below the cap the tombstones come from the collected list, as
-    // one file (a local frame would otherwise write one per core).
-    val ids =
-      if (capped) { val s = store.session; import s.implicits._; idList.toDF("doc_id").coalesce(1) }
-      else batch.select(col("doc_id")).distinct()
     // The removed docs' (count, token sum), over distinct
     // (doc_id, n_tokens) pairs either way.
     val (removedN, removedDl) =
       if (capped) {
-        val live = doclen.filter(col("doc_id").isin(idList: _*))
+        val live = doclen.filter(col("doc_id").isin(raw.map(_.getLong(0)).distinct.toSeq: _*))
           .select(col("doc_id"), col("n_tokens")).collect().distinct
         (live.length.toDouble, live.filterNot(_.isNullAt(1)).map(_.getInt(1).toLong).sum.toDouble)
       } else {
-        val r = doclen.join(ids, Seq("doc_id"), "left_semi")
+        val r = doclen.join(batch.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
           .select(col("doc_id"), col("n_tokens")).distinct()
           .agg(coalesce(count(lit(1)), lit(0L)).cast(DoubleType),
             coalesce(sum(col("n_tokens")), lit(0L)).cast(DoubleType)).head
@@ -498,14 +483,12 @@ object SearchQueries {
     val gen = topGen.getOrElse(-1) + 1
     store.clearArtifactFingerprint(PostingsName)
     store.appendPartition(postingsOf(batch), PostingsName, "seg",
-      gen.toString, numShards = if (capped) 1 else 5, rangeSortCols = Seq("term"))
+      gen.toString, sortCol = "term", numShards = if (capped) 1 else 5)
     if (capped) {
       val rows = java.util.Arrays.asList(raw.toSeq: _*)
       writeDoclenRows(store, store.session.createDataFrame(rows, raw.head.schema), gen,
         numShards = 1)
-    } else writeDoclenSeg(store, batch, gen)
-    castTo(DeletedSchema)(ids.withColumn("kill_seg", lit(gen - 1)))
-      .write.mode("append").parquet(postingsDeletedPath(store))
+    } else writeDoclenRows(store, doclenOf(batch), gen)
     store.stampArtifact(PostingsName, fingerprint,
       sidecars = Map(PostingsStatsSidecar -> statsSidecarText(
         oldN - removedN + batchN, oldDl - removedDl + batchDl)))
@@ -513,13 +496,13 @@ object SearchQueries {
     }
     }
 
-  /** Fold the maintained postings back to a single segment: resolve
-    * tombstones, rewrite as seg=0 through the crash-safe swap (the
-    * swap replaces the whole artifact dir, so the tombstone set
-    * vanishes with the dead rows), carry the stats sidecar and the
-    * current fingerprint. The Lucene force-merge — run it when the
-    * per-query segment fan-in or the tombstone set has grown past
-    * taste; the resolved CONTENT is unchanged by construction.
+  /** Fold the maintained postings back to a single segment: drop the
+    * dead rows, rewrite as seg=0 through the crash-safe swap (the swap
+    * replaces the whole artifact dir, so the later `_doclen` segments
+    * that killed them vanish with them), carry the stats sidecar and
+    * the current fingerprint. The Lucene force-merge — run it when the
+    * per-query segment fan-in or the kill set has grown past taste;
+    * the resolved CONTENT is unchanged by construction.
     */
   private[graft] def compactPostings(store: graft.etl.IndexStore): Unit =
     store.withMaintenanceLock(PostingsName) {
@@ -532,8 +515,8 @@ object SearchQueries {
     store.writeArtifact(folded, PostingsName, fp,
       partitionCols = Seq("seg"), rangeSortCols = Seq("term"),
       sidecars = Map(PostingsStatsSidecar -> stats))
-    // The swap replaced the artifact dir wholesale, taking `_deleted`
-    // and the old `_doclen` segments with it — rebuild doclen seg=0
+    // The swap replaced the artifact dir wholesale, taking the old
+    // `_doclen` segments with it — rebuild doclen seg=0
     // from the freshly compacted postings (a column-pruned distinct
     // scan, within compaction's full-rewrite cost class; a crash
     // before this write is covered by resolvedDoclen's
@@ -551,8 +534,8 @@ object SearchQueries {
     * the count of those groups with tf > 0, a 1-row ungrouped aggregate
     * of the SAME frame broadcast back. That is exact because live
     * postings are unique per (term, doc_id, n_tokens): [[postingsOf]]
-    * groups on that key, and every upsert tombstones all older
-    * segments of its docs. Both consumers share one exchange, so Spark
+    * groups on that key, and every upsert's `_doclen` segment kills
+    * its docs' rows in all older segments. Both consumers share one exchange, so Spark
     * reuses it and reads the postings once; building the frame runs no
     * Spark job.
     */

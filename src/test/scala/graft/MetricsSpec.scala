@@ -81,4 +81,13 @@ class MetricsSpec extends AnyFunSuite {
     assert(outer.jobs == 2 * inner.jobs && outer.tasks == 2 * inner.tasks)
     assert(outer.cpuNs >= inner.cpuNs && outer.peakTaskMemBytes >= inner.peakTaskMemBytes)
   }
+
+  test("foreign cores read 0, not negative, when the own delta outruns the host's") {
+    // Over 10 ms the own utime moved 3 jiffies and the host's user+nice
+    // total only 1: the two counters were read at different instants.
+    val (j0, j1) = ((100L, 50L, 0L, 0L, 0L), (101L, 53L, 0L, 0L, 0L))
+    assert(HostLoad.foreign(j0, j1, 0.01) == 0.0)
+    assert(HostLoad.foreign(j0, (300L, 60L, 0L, 0L, 0L), 1.0) == 1.9)
+    assert(HostLoad.foreign((-1L, -1L, -1L, -1L, -1L), j1, 0.01) == -1.0)
+  }
 }

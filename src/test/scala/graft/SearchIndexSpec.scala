@@ -214,8 +214,8 @@ class SearchIndexSpec extends AnyFunSuite {
       .get.split(' ').map(_.toDouble)
     assert(nDocs == 55.0, s"stats sidecar nDocs=$nDocs")
     // Changed docs must serve NO stale postings: old-segment rows are
-    // physically present (segments are immutable) but tombstoned out
-    // of the RESOLVED view — their served term set is now exactly
+    // physically present (segments are immutable) but, killed by the
+    // batch's `_doclen` segment, dropped from the RESOLVED view — their served term set is now exactly
     // {table, row, fast}.
     val staleTerms = SearchQueries.resolvedPostings(store)
       .filter(col("doc_id") >= 35 && col("doc_id") < 40)
@@ -235,17 +235,20 @@ class SearchIndexSpec extends AnyFunSuite {
     assert(served.map(_.toString).toSeq == scanned.map(_.toString).toSeq,
       s"served=${served.mkString("; ")}\nscanned=${scanned.mkString("; ")}")
 
-    // COMPACTION (the Lucene force-merge): folds every segment +
-    // tombstone back to a single seg=0 with identical resolved content
-    // — BM25 byte-identical before/after — and the tombstone set gone.
+    // COMPACTION (the Lucene force-merge): folds every segment back to
+    // a single seg=0 with identical resolved content — BM25
+    // byte-identical before/after — and `_doclen` back to seg=0 alone,
+    // so no kill set is left.
     def servedContent: Seq[String] = SearchQueries.resolvedPostings(store)
       .select("term", "doc_id", "n_tokens", "tf", "positions") // seg is physical
       .orderBy(col("term"), col("doc_id")).collect().map(_.toString).toSeq
     val resolvedBefore = servedContent
+    assert(!new java.io.File(root, SearchQueries.PostingsDeleted).exists(),
+      "an upsert wrote a _deleted dir")
     SearchQueries.compactPostings(store)
     assert(segMtimes.keySet == Set("seg=0"), s"compaction layout: $segMtimes")
-    assert(!new java.io.File(root, SearchQueries.PostingsDeleted).exists(),
-      "compaction must clear the tombstone set")
+    assert(new java.io.File(root, SearchQueries.PostingsDoclen).list().toSeq
+      .filter(_.startsWith("seg=")) == Seq("seg=0"), "compaction must clear the kill set")
     val resolvedAfter = servedContent
     assert(resolvedAfter == resolvedBefore, "compaction changed served content")
     val servedCompact = SearchQueries.bm25FromPostings(
@@ -270,30 +273,31 @@ class SearchIndexSpec extends AnyFunSuite {
     assert(fromIndex.getDouble(0) == nDocs && fromIndex.getDouble(1) == sumDl)
   }
 
-  test("the postings, _doclen and _deleted schemas are what the writers leave on disk") {
+  test("the postings and _doclen schemas match their writers; no _deleted dir appears") {
     // The readers pass these constants to .schema(...) instead of
     // inferring; they must stay equal to what every writer produces.
     val (_, store) = builtCorpus("graft_schemas", 30)
     val root = store.artifactPath(SearchQueries.PostingsName)
     val doclen = s"$root/${SearchQueries.PostingsDoclen}"
-    val deleted = s"$root/${SearchQueries.PostingsDeleted}"
-    // The hidden tables are read the way the program reads them: their
-    // `seg=*` dirs under a base path, and their part files.
+    // The hidden table is read the way the program reads it: its
+    // `seg=*` dirs under a base path.
     val tables = Seq[(String, () => DataFrame, org.apache.spark.sql.types.StructType)](
       (root, () => spark.read.parquet(root), SearchQueries.PostingsSchema),
       (doclen, () => spark.read.option("basePath", doclen).parquet(s"$doclen/seg=*"),
-        SearchQueries.DoclenSchema),
-      (deleted, () => spark.read.parquet(s"$deleted/*.parquet"), SearchQueries.DeletedSchema))
-    def check(stage: String): Int = tables.count { case (path, read, want) =>
-      val present = new java.io.File(path).isDirectory
-      if (present) assert(read().schema == want, s"$path after $stage")
-      present
+        SearchQueries.DoclenSchema))
+    def check(stage: String): Unit = {
+      tables.foreach { case (path, read, want) =>
+        assert(new java.io.File(path).isDirectory, s"no $path after $stage")
+        assert(read().schema == want, s"$path after $stage")
+      }
+      assert(!new java.io.File(root, SearchQueries.PostingsDeleted).exists(),
+        s"a _deleted dir after $stage")
     }
-    assert(check("build") == 2)
+    check("build")
     SearchQueries.upsertPostings(store, docsDf(20, 35))
-    assert(check("upsert") == 3)
+    check("upsert")
     SearchQueries.compactPostings(store)
-    assert(check("compaction") == 2)
+    check("compaction")
   }
 
   test("building search_topk_bm25_indexed over a built artifact runs no Spark job") {
@@ -323,10 +327,16 @@ class SearchIndexSpec extends AnyFunSuite {
     val v2 = docsDf(35, 45).withColumn("text", lit("vector join vector row"))
     SearchQueries.upsertPostings(store, v1)
     SearchQueries.upsertPostings(store, v2)
-    val tomb = spark.read.schema(SearchQueries.DeletedSchema).parquet(
-      s"${store.artifactPath(SearchQueries.PostingsName)}/${SearchQueries.PostingsDeleted}/*.parquet")
-    assert(tomb.filter(col("doc_id") === 37).count() == 2,
-      "a doc upserted twice must leave one tombstone row per upsert")
+    // Each upsert's `_doclen` segment is its docs' tombstone for every
+    // older segment.
+    val root = store.artifactPath(SearchQueries.PostingsName)
+    val dl = s"$root/${SearchQueries.PostingsDoclen}"
+    val later = spark.read.schema(SearchQueries.DoclenSchema).option("basePath", dl)
+      .parquet(s"$dl/seg=1", s"$dl/seg=2")
+    assert(later.filter(col("doc_id") === 37).select("seg").collect().map(_.getInt(0))
+      .sorted.toSeq == Seq(1, 2), "a doc upserted twice must have a _doclen row per upsert")
+    assert(!new java.io.File(root, SearchQueries.PostingsDeleted).exists(),
+      "an upsert wrote a _deleted dir")
     // The corpus those upserts describe: 0..29, v1's 30..34, v2's 35..44.
     docsDf(0, 30).unionByName(v1.filter(col("doc_id") < 35)).unionByName(v2)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -357,7 +367,8 @@ class SearchIndexSpec extends AnyFunSuite {
       classOf[org.apache.spark.sql.execution.datasources.DataSource]).asInstanceOf[CoreLogger]
     logger.addAppender(appender)
     try {
-      // Two upserts: the second reads the first's tombstones and doclen.
+      // Two upserts: the second reads the first's `_doclen` segment, as
+      // kill set and stats probe.
       SearchQueries.upsertPostings(store, docsDf(30, 45))
       SearchQueries.upsertPostings(store, docsDf(40, 50))
       val Array(nDocs, sumDl) = store.artifactSidecar(SearchQueries.PostingsName,
@@ -366,8 +377,8 @@ class SearchIndexSpec extends AnyFunSuite {
         nDocs, sumDl, Seq("spark", "vector")).collect().nonEmpty)
       assert(ignored.isEmpty, s"hidden-path warnings: ${ignored.toArray.mkString("; ")}")
       // The capture itself works: reading the hidden root directly warns.
-      spark.read.schema(SearchQueries.DeletedSchema).parquet(
-        s"${store.artifactPath(SearchQueries.PostingsName)}/${SearchQueries.PostingsDeleted}")
+      spark.read.schema(SearchQueries.DoclenSchema).parquet(
+        s"${store.artifactPath(SearchQueries.PostingsName)}/${SearchQueries.PostingsDoclen}")
       assert(ignored.size == 1, "the logger capture saw no warning from a hidden root")
     } finally {
       logger.removeAppender(appender)
@@ -375,16 +386,18 @@ class SearchIndexSpec extends AnyFunSuite {
     }
   }
 
-  /** The tombstone rule as the broadcast anti-join states it, over the
-    * raw segments and `_deleted` part files of the artifact.
+  /** The newest-segment rule as a broadcast anti-join states it, over
+    * the raw segments and the `_doclen` rows of every segment past 0.
     */
   private def antiJoined(store: etl.IndexStore): DataFrame = {
     val root = store.artifactPath(SearchQueries.PostingsName)
+    val dl = s"$root/${SearchQueries.PostingsDoclen}"
     val rows = spark.read.schema(SearchQueries.PostingsSchema).parquet(root)
-    val tomb = spark.read.schema(SearchQueries.DeletedSchema)
-      .parquet(s"$root/${SearchQueries.PostingsDeleted}/*.parquet")
-    rows.join(broadcast(tomb),
-      rows("doc_id") === tomb("doc_id") && rows("seg") <= tomb("kill_seg"), "left_anti")
+    val later = new java.io.File(dl).list().toSeq.filter(d => d.startsWith("seg=") && d != "seg=0")
+    val t = spark.read.schema(SearchQueries.DoclenSchema).option("basePath", dl)
+      .parquet(later.map(d => s"$dl/$d"): _*)
+    rows.join(broadcast(t),
+      rows("doc_id") === t("doc_id") && rows("seg") < t("seg"), "left_anti")
   }
 
   private def sortedRows(df: DataFrame): Seq[String] =
@@ -396,43 +409,45 @@ class SearchIndexSpec extends AnyFunSuite {
   test("driver-applied tombstones keep exactly the anti-join's rows, also past the cap") {
     val (_, store) = builtCorpus("graft_tomb_rule", 40)
     val root = store.artifactPath(SearchQueries.PostingsName)
-    val deleted = s"$root/${SearchQueries.PostingsDeleted}"
-    // Docs 30..39 die in seg=0 and docs 35..44 in seg<=1: docs 35..39
-    // carry two kill_seg values.
+    val dl = s"$root/${SearchQueries.PostingsDoclen}"
+    // Docs 30..39 get a `_doclen` row in seg=1 and docs 35..44 one in
+    // seg=2: docs 35..39 have rows in two later segments.
     SearchQueries.upsertPostings(store, docsDf(30, 40).withColumn("text", lit("table row fast")))
     SearchQueries.upsertPostings(store, docsDf(35, 45).withColumn("text", lit("vector join")))
-    // A NULL-doc_id posting in seg=0; tombstones with a NULL doc_id,
-    // a NULL kill_seg, and a file with zero rows.
+    // A NULL-doc_id posting in seg=0, a NULL-doc_id `_doclen` row in
+    // seg=1, and a `_doclen` file with zero rows in seg=2.
     val posting = org.apache.spark.sql.Row("spark", null, 3, 1L, Seq(0))
     spark.createDataFrame(java.util.Arrays.asList(posting),
         org.apache.spark.sql.types.StructType(SearchQueries.PostingsSchema.dropRight(1)))
       .coalesce(1).write.mode("append").parquet(s"$root/seg=0")
-    def appendTomb(rows: org.apache.spark.sql.Row*): Unit =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), SearchQueries.DeletedSchema)
-        .coalesce(1).write.mode("append").parquet(deleted)
-    appendTomb(org.apache.spark.sql.Row(null, 5), org.apache.spark.sql.Row(3L, null))
-    def parts = new java.io.File(deleted).listFiles().count(_.getName.endsWith(".parquet"))
+    def appendDoclen(seg: Int, rows: org.apache.spark.sql.Row*): Unit =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+          org.apache.spark.sql.types.StructType(SearchQueries.DoclenSchema.dropRight(1)))
+        .coalesce(1).write.mode("append").parquet(s"$dl/seg=$seg")
+    appendDoclen(1, org.apache.spark.sql.Row(null, 5))
+    def parts = new java.io.File(s"$dl/seg=2").listFiles().count(_.getName.endsWith(".parquet"))
     val before = parts
-    appendTomb()
-    assert(parts == before + 1, "the empty append wrote no zero-row tombstone file")
+    appendDoclen(2)
+    assert(parts == before + 1, "the empty append wrote no zero-row _doclen file")
 
     val want = sortedRows(antiJoined(store))
     val resolved = SearchQueries.resolvedPostings(store)
-    assert(!hasJoin(resolved), s"a small tombstone set was joined:\n${resolved.queryExecution.optimizedPlan}")
+    assert(!hasJoin(resolved), s"a small kill set was joined:\n${resolved.queryExecution.optimizedPlan}")
     assert(sortedRows(resolved) == want)
     assert(resolved.filter(col("doc_id").isNull).count() == 1,
       "the NULL-doc_id posting must survive")
     assert(resolved.filter(col("doc_id") === 37).select("seg").distinct()
       .collect().map(_.getInt(0)).toSeq == Seq(2),
-      "a doc killed under two kill_segs must keep only its newest segment")
+      "a doc with rows in two later segments must keep only its newest")
 
-    // Past the cap: MaxInPush + 1 rows in all take the broadcast path.
-    val have = spark.read.parquet(s"$deleted/*.parquet").count()
+    // Past the cap: MaxInPush + 1 `_doclen` rows past seg=0 take the
+    // broadcast path.
+    val have = Seq(1, 2).map(g => spark.read.parquet(s"$dl/seg=$g").count()).sum
     spark.range(etl.IndexStore.MaxInPush + 1 - have)
-      .select((col("id") + 1000000L).as("doc_id"), lit(0).as("kill_seg"))
-      .coalesce(1).write.mode("append").parquet(deleted)
+      .select((col("id") + 1000000L).as("doc_id"), lit(1).as("n_tokens"))
+      .coalesce(1).write.mode("append").parquet(s"$dl/seg=2")
     val pastCap = SearchQueries.resolvedPostings(store)
-    assert(hasJoin(pastCap), "a tombstone set past the cap must be anti-joined")
+    assert(hasJoin(pastCap), "a kill set past the cap must be anti-joined")
     assert(sortedRows(pastCap) == want)
   }
 
@@ -445,14 +460,16 @@ class SearchIndexSpec extends AnyFunSuite {
       SearchQueries.resolvedPostings(store), nDocs, sumDl, Seq("spark", "vector")).collect())
     assert(hits.nonEmpty)
     // The tf exchange, the df aggregate, its broadcast and the top-k:
-    // the tombstone set is applied on the driver, with no broadcast job.
+    // the kill set is applied on the driver, with no broadcast job.
     assert(jobs == 4, s"a tombstoned BM25 read ran $jobs Spark jobs")
   }
 
-  test("a small postings upsert runs at most 8 jobs and writes one file per segment") {
+  test("a small postings upsert runs at most 4 jobs and writes one file per segment") {
     val (_, store) = builtCorpus("graft_upsert_jobs", 40)
     val (gen, jobs) = jobsRunBy(SearchQueries.upsertPostings(store, docsDf(30, 45)))
-    assert(jobs <= 8, s"a 15-doc postings upsert ran $jobs Spark jobs")
+    // The batch's (doc_id, n_tokens) collect, the removed docs' probe,
+    // the postings segment and the `_doclen` segment.
+    assert(jobs <= 4, s"a 15-doc postings upsert ran $jobs Spark jobs")
     val root = store.artifactPath(SearchQueries.PostingsName)
     Seq(s"$root/seg=$gen", s"$root/${SearchQueries.PostingsDoclen}/seg=$gen").foreach { d =>
       val files = new java.io.File(d).listFiles().map(_.getName).filter(_.endsWith(".parquet"))
