@@ -133,14 +133,16 @@ class IndexStore(spark: SparkSession, root: String) {
     * a window where the only copy is gone, which is unrecoverable data
     * loss under a streaming checkpoint that already marked the batch
     * committed). Unique suffixes also keep concurrent operations on
-    * one index from colliding on a shared tmp path.
+    * one index from colliding on a shared tmp path. A `write` that
+    * fails removes its tmp dir and leaves the live dir as it was.
     */
   private def swapIn(indexName: String)(write: Path => Unit): Unit = {
     val id = java.util.UUID.randomUUID().toString.take(8)
     val live = dir(indexName)
     val tmp = new Path(root, s".tmp_${indexName.toLowerCase}_$id")
     val bak = new Path(root, s".old_${indexName.toLowerCase}_$id")
-    write(tmp)
+    try write(tmp)
+    catch { case t: Throwable => fs.delete(tmp, true); throw t }
     // Hadoop FileSystem.rename reports failure by returning FALSE, not
     // throwing — an unchecked failed rename-aside would leave `live` in
     // place and the next rename would nest tmp INSIDE it, silently
@@ -827,32 +829,18 @@ class IndexStore(spark: SparkSession, root: String) {
     * layout): a reader's filter on those columns becomes partition
     * pruning — directories that never open a footer. This is how the
     * IVF cell id turns into physical data skipping at query time.
-    * `rangeSortCols` lays the files out by [[IndexStore.rangeSorted]]
-    * on the given key, within each hive partition when there are
-    * `partitionCols` — right for HIGH-cardinality keys (a term column
-    * would explode a hive layout into millions of dirs): parquet
-    * min/max row-group stats then skip everything outside a key
-    * filter's range. `sidecars` are extra underscore-prefixed metadata
+    * `sidecars` are extra underscore-prefixed metadata
     * files (e.g. a serialized quantizer model) swapped atomically WITH
     * the data they describe — invisible to parquet scans like the
     * provenance tag.
     */
   def writeArtifact(df: DataFrame, name: String, fingerprint: String,
                     numShards: Int = 5, partitionCols: Seq[String] = Nil,
-                    rangeSortCols: Seq[String] = Nil,
                     withinFileSortCols: Seq[String] = Nil,
                     sidecars: Map[String, String] = Map.empty): Unit =
-    swapIn(name) { tmp =>
+    swapArtifact(name, fingerprint, sidecars) { tmp =>
       val writer =
-        if (rangeSortCols.nonEmpty)
-          // With partitionCols too (segmented artifacts), each range
-          // task writes its slice under the (usually constant)
-          // partition value, so within every partition dir the files
-          // tile the sort-key space and min/max row-group skipping
-          // works as in a flat range layout.
-          IndexStore.rangeSorted(df, numShards, rangeSortCols)
-            .write.partitionBy(partitionCols: _*)
-        else if (partitionCols.nonEmpty)
+        if (partitionCols.nonEmpty)
           // EXPLICIT partition count: a bare repartition(cols) is an
           // AQE-coalescible shuffle, and a small-SF build collapses to
           // ONE task that then opens every hive-partition's parquet
@@ -868,9 +856,8 @@ class IndexStore(spark: SparkSession, root: String) {
           // hive columns stays the primary skip, and a pushed
           // key-filter (the maintenance probes' In(id) list) then
           // prunes ROW GROUPS inside each cell file via min/max stats.
-          // Unlike the range layout above, the tasks stay
-          // partition-spread, so cell-writer creation keeps its
-          // parallelism (the 17 s single-task lesson).
+          // The tasks stay partition-spread, so cell-writer creation
+          // keeps its parallelism (the 17 s single-task lesson).
           df.repartition(
             spark.conf.get("spark.sql.shuffle.partitions").toInt,
             partitionCols.map(col): _*)
@@ -878,7 +865,18 @@ class IndexStore(spark: SparkSession, root: String) {
               (partitionCols ++ withinFileSortCols).map(col): _*)
             .write.partitionBy(partitionCols: _*)
         else df.repartition(numShards).write
-      writer.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      writer.mode(SaveMode.Overwrite).parquet(tmp)
+    }
+
+  /** The artifact swap itself: `write` fills the tmp dir it is given,
+    * the `sidecars` and the fingerprint are written next to its data,
+    * and only then is the tmp dir renamed live — a failure anywhere
+    * before leaves the previous artifact untouched.
+    */
+  private[etl] def swapArtifact(name: String, fingerprint: String,
+                                sidecars: Map[String, String])(write: String => Unit): Unit =
+    swapIn(name) { tmp =>
+      write(tmp.toString)
       writeSidecars(tmp, sidecars + (MetaFile -> fingerprint))
     }
 
@@ -910,7 +908,7 @@ class IndexStore(spark: SparkSession, root: String) {
     * vector indexes lives; at 100 TB a moved point costs its source and
     * target CELL rewrites, never a corpus rebuild.
     *
-    * Failure contract (the upsertPostings discipline, made
+    * Failure contract ([[SegmentedArtifact.append]]'s bracket, made
     * partition-granular): partition swaps commit PER PARTITION, so a
     * crash mid-commit can leave a subset of touched partitions
     * updated. The provenance fingerprint is therefore cleared BEFORE
@@ -1006,8 +1004,8 @@ class IndexStore(spark: SparkSession, root: String) {
   }
 
   /** Clear an artifact's provenance fingerprint — the FIRST step of a
-    * multi-write maintenance bracket (segment append + doclen segment +
-    * sidecar updates): with the fingerprint gone, a crash anywhere
+    * multi-write maintenance bracket ([[SegmentedArtifact.append]]):
+    * with the fingerprint gone, a crash anywhere
     * before [[stampArtifact]] leaves a mismatch that forces readers to
     * REBUILD rather than serve a half-applied batch.
     */
@@ -1152,33 +1150,6 @@ class IndexStore(spark: SparkSession, root: String) {
     writeSidecars(dir(name), sidecars + (MetaFile -> fingerprint))
   }
 
-  /** Append ONE new hive partition — a SEGMENT — to a partitioned
-    * artifact without touching any existing file: the Lucene-style
-    * maintenance primitive (new postings land as a fresh range-sorted
-    * segment dir; existing segments are immutable until compaction).
-    * The segment is laid out by [[IndexStore.rangeSorted]] on
-    * `sortCol`: `numShards` files that tile the sort-key space, or with
-    * `numShards = 1` one sorted file and no range sample, the form for
-    * a small flush whose rows fit one file. The segment stages under an
-    * underscore-hidden dir inside the artifact and renames into place,
-    * so readers never see a partial segment. Does NOT manage the provenance fingerprint — callers
-    * bracket the whole batch with [[clearArtifactFingerprint]] /
-    * [[stampArtifact]].
-    */
-  def appendPartition(df: DataFrame, name: String, partitionCol: String,
-                      value: String, sortCol: String, numShards: Int = 5): Unit = {
-    val d = dir(name)
-    require(fs.exists(d), s"appendPartition: no artifact $name")
-    val target = new Path(d, s"$partitionCol=$value")
-    require(!fs.exists(target), s"appendPartition: $target already exists")
-    val stage = new Path(d, s"__append_$value")
-    fs.delete(stage, true)
-    IndexStore.rangeSorted(df, numShards, Seq(sortCol))
-      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    fs.delete(new Path(stage, "_SUCCESS"), false)
-    require(fs.rename(stage, target), s"appendPartition: rename failed: $target")
-  }
-
   /** Absolute path of an artifact/index directory — for maintenance
     * structures that live INSIDE it under underscore-hidden names
     * (e.g. the postings' `_doclen` table), which plain [[read]] scans
@@ -1218,17 +1189,17 @@ object IndexStore {
   /** Driver push cap of the keyed probes ([[IndexStore.upsertKeyed]],
     * `upsertPostings`): a batch of at most this many rows collects its
     * keys to the driver and pushes them into scans as In filters; a
-    * larger one stays distributed. The postings kill set (the `_doclen`
-    * rows of segments past 0) is read on the driver and applied as a
-    * Filter up to the same size. Sized above the ~20k-row triggers of
-    * the `_stream_latency` events drain.
+    * larger one stays distributed. [[SegmentedArtifact.resolved]] reads
+    * its kill set on the driver up to the same size. Sized above the
+    * ~20k-row triggers of the `_stream_latency` events drain.
     */
   private[graft] val MaxInPush = 50000
 
-  /** The range-sorted layout: `df` as `numShards` partitions that tile
-    * the `sortCols` key space (placed by a range-partition sample), each
-    * sorted, so min/max row-group stats skip everything outside a key
-    * filter's range. One shard is one sorted partition, with no sample.
+  /** The range-sorted layout of every [[SegmentedArtifact]] segment:
+    * `df` as `numShards` partitions that tile the `sortCols` key space
+    * (placed by a range-partition sample), each sorted, so min/max
+    * row-group stats skip everything outside a key filter's range. One
+    * shard is one sorted partition, with no sample.
     */
   private[graft] def rangeSorted(df: DataFrame, numShards: Int,
                                  sortCols: Seq[String]): DataFrame =

@@ -150,33 +150,25 @@ object SearchQueries {
     * index (ES stores the same; Lucene's "positions" index option).
     */
   private[graft] def postingsOf(docs: DataFrame): DataFrame =
-    castTo(PostingsSchema)(
-      docs.select(col("doc_id"), size(tokens(col("text"))).as("n_tokens"),
-          posexplode(tokens(col("text"))).as(Seq("pos", "term")))
-        .groupBy(col("term"), col("doc_id"), col("n_tokens"))
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions")))
+    docs.select(col("doc_id"), size(tokens(col("text"))).as("n_tokens"),
+        posexplode(tokens(col("text"))).as(Seq("pos", "term")))
+      .groupBy(col("term"), col("doc_id"), col("n_tokens"))
+      .agg(count(lit(1)).as("tf"),
+        sort_array(collect_list(col("pos"))).as("positions"))
 
   /** The `seg=k` hive partition every table of the postings artifact
     * carries in its directory names.
     */
   private val SegField = StructField("seg", IntegerType)
 
-  /** Schema of the postings artifact as read, `seg` last. [[postingsOf]]
-    * casts to it and [[resolvedPostings]] reads with it, so a read opens
-    * no footer to infer what the writer already fixed.
+  /** Schema of the postings table as read, `seg` last. The artifact's
+    * writes cast to it and [[resolvedPostings]] reads with it, so a read
+    * opens no footer to infer what the writer already fixed.
     */
   private[graft] val PostingsSchema = StructType(Seq(
     StructField("term", StringType), StructField("doc_id", LongType),
     StructField("n_tokens", IntegerType), StructField("tf", LongType),
     StructField("positions", ArrayType(IntegerType)), SegField))
-
-  /** `df`'s columns named by `schema`, in its order and cast to its
-    * types — every field but `seg`, which the partition directory holds.
-    */
-  private def castTo(schema: StructType)(df: DataFrame): DataFrame =
-    df.select(schema.fields.toSeq.filter(_ != SegField)
-      .map(f => col(f.name).cast(f.dataType)): _*)
 
   /** (doc count, total token count) of a document frame. */
   private[graft] def corpusStatsOf(docs: DataFrame): (Double, Double) = {
@@ -199,23 +191,18 @@ object SearchQueries {
     * hive partitioning), with the two corpus scalars BM25 needs
     * (doc count, total token count) in a sidecar. Query cost is then
     * proportional to the probed terms' posting lists, not the corpus —
-    * the ES serving model. Returns (postings, nDocs, sumDl).
+    * the ES serving model. The build writes the postings and `_doclen`
+    * as one [[postingsArtifact]]. Returns (postings, nDocs, sumDl).
     */
   private[graft] def materializedPostings(s: SparkSession, dir: String): (DataFrame, Double, Double) = {
     val store = new graft.etl.IndexStore(s, graft.etl.IndexStore.artifactRoot(dir))
-    val fp = "postings_v3_segmented:" +
+    val fp = "postings_v4_segmented:" +
       graft.etl.IndexStore.pathFingerprint(s, s"$dir/documents.parquet")
     if (!store.artifactFingerprint(PostingsName).contains(fp)) {
       val docs = Tables.forCompute(s, dir, "documents")
       val (nDocs, sumDl) = corpusStatsOf(docs)
-      store.writeArtifact(postingsOf(docs).withColumn("seg", lit(0)),
-        PostingsName, fp,
-        partitionCols = Seq("seg"), rangeSortCols = Seq("term"),
-        sidecars = Map(PostingsStatsSidecar -> statsSidecarText(nDocs, sumDl)))
-      // The doclen sidecar table (Lucene norms): crash between the
-      // stamp above and this write is covered by resolvedDoclen's
-      // derive-from-postings fallback.
-      writeDoclenRows(store, doclenOf(docs), 0)
+      postingsArtifact(store).build(Seq(postingsOf(docs), doclenOf(docs)), fp,
+        Map(PostingsStatsSidecar -> statsSidecarText(nDocs, sumDl)))
     }
     val Array(nDocs, sumDl) = store.artifactSidecar(PostingsName, PostingsStatsSidecar)
       .getOrElse(sys.error(s"$PostingsName has no corpus-stats sidecar"))
@@ -224,21 +211,18 @@ object SearchQueries {
   }
 
   /** The hidden dir where earlier builds kept a tombstone table of
-    * deleted doc ids. Nothing writes or reads it now:
-    * [[withoutTombstoned]] takes its kill set from `_doclen`. The
-    * benchmark's gauge still counts its rows, and compaction's swap
-    * removes a leftover one.
+    * deleted doc ids. Nothing writes or reads it now: the
+    * [[postingsArtifact]] takes its kill set from `_doclen`. The
+    * benchmark's gauge still counts its rows, and a build's or
+    * compaction's swap removes a leftover one.
     */
   private[graft] val PostingsDeleted = "_deleted"
 
-  /** Doc-length sidecar TABLE of the segmented postings — Lucene's
-    * norms file: ONE (doc_id, n_tokens) row per doc per segment,
-    * doc_id-range-sorted within files, under the underscore-hidden
-    * `_doclen/seg=k` dirs and maintained with the same segment-append
-    * + compaction lifecycle as the postings themselves. It is also the
-    * artifact's deleted-docs record: a doc's rows in a segment die once
-    * that doc has a `_doclen` row in a later segment
-    * ([[withoutTombstoned]]). It exists so [[upsertPostings]]'s
+  /** Doc-length TABLE of the postings artifact — Lucene's norms file:
+    * ONE (doc_id, n_tokens) row per doc per segment, doc_id-range-sorted
+    * within files, under the underscore-hidden `_doclen/seg=k` dirs. It
+    * is the artifact's key table, so also its deleted-docs record (see
+    * [[graft.etl.SegmentedArtifact]]). It exists so [[upsertPostings]]'s
     * stats-delta probe (the removed docs' length contribution) reads a
     * 1-row-per-doc projection with the batch's ids PUSHED into the
     * scan, instead of left-semi scanning the full postings (~60–100 rows per doc, term-sorted so
@@ -248,170 +232,40 @@ object SearchQueries {
     */
   private[graft] val PostingsDoclen = "_doclen"
 
-  /** Schema of the `_doclen` table as read, `seg` last; its writer
-    * [[writeDoclenRows]] casts to it.
-    */
+  /** Schema of the `_doclen` table as read, `seg` last. */
   private[graft] val DoclenSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("n_tokens", IntegerType),
     SegField))
-
-  private def postingsDoclenPath(store: graft.etl.IndexStore): String =
-    s"${store.artifactPath(PostingsName)}/$PostingsDoclen"
 
   /** One (doc_id, n_tokens) row per doc of a document frame. */
   private def doclenOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), size(tokens(col("text"))).as("n_tokens"))
 
-  /** Write one doclen SEGMENT (doc-sorted so a pushed In(doc_id) list
-    * prunes row groups to O(batch)) as `numShards` doc_id-range files;
-    * one shard is one sorted file, with no range boundaries to sample.
+  private[graft] val PostingsTable = graft.etl.SegmentedArtifact.Table("", PostingsSchema, "term", 5)
+  private[graft] val DoclenTable = graft.etl.SegmentedArtifact.Table(PostingsDoclen, DoclenSchema, "doc_id", 4)
+
+  /** The postings as a [[graft.etl.SegmentedArtifact]]: the postings
+    * table at the root, `_doclen` as the key table on `doc_id`, and the
+    * corpus-stats sidecar carried through compaction.
     */
-  private def writeDoclenRows(store: graft.etl.IndexStore, rows: DataFrame,
-                              seg: Int, numShards: Int = 4): Unit = {
-    graft.etl.IndexStore.rangeSorted(castTo(DoclenSchema)(rows), numShards, Seq("doc_id"))
-      .write.mode("overwrite")
-      .parquet(s"${postingsDoclenPath(store)}/seg=$seg")
-  }
+  private[graft] def postingsArtifact(store: graft.etl.IndexStore): graft.etl.SegmentedArtifact =
+    new graft.etl.SegmentedArtifact(store, PostingsName, Seq(PostingsTable, DoclenTable),
+      DoclenTable, "doc_id", Seq(PostingsStatsSidecar))
 
-  private def fsOf(store: graft.etl.IndexStore): org.apache.hadoop.fs.FileSystem =
-    org.apache.hadoop.fs.FileSystem.get(
-      store.session.sparkContext.hadoopConfiguration)
-
-  /** The `seg=k` segment ids directly under `dir` (none if it is absent). */
-  private def segsOf(store: graft.etl.IndexStore, dir: String): Set[Int] = {
-    val fs = fsOf(store)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg="))
-      .map(_.getPath.getName.stripPrefix("seg=").toInt).toSet
-  }
-
-  /** The kill set as doc_id → the newest segment that holds a row for
-    * it, read from `parts` (each a `_doclen` part file with its segment)
-    * on the driver with parquet-mr (no Spark job), or None once more
-    * than [[graft.etl.IndexStore.MaxInPush]] rows have been read. A NULL
-    * doc_id matches no row, so such a row kills nothing.
-    */
-  private def newestSegOnDriver(store: graft.etl.IndexStore,
-                                parts: Seq[(Int, org.apache.hadoop.fs.Path)]): Option[Map[Long, Int]] = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    val conf = store.session.sparkContext.hadoopConfiguration
-    val cap = graft.etl.IndexStore.MaxInPush
-    val files = parts.iterator
-    val newest = scala.collection.mutable.HashMap.empty[Long, Int]
-    var n = 0
-    while (n <= cap && files.hasNext) {
-      val (seg, file) = files.next()
-      val reader = ParquetReader.builder(new GroupReadSupport, file).withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null && n <= cap) {
-          n += 1
-          if (g.getFieldRepetitionCount("doc_id") > 0) {
-            val id = g.getLong("doc_id", 0)
-            newest(id) = newest.get(id).fold(seg)(math.max(_, seg))
-          }
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    if (n > cap) None else Some(newest.toMap)
-  }
-
-  /** `rows` of a segmented table of the artifact (postings or doclen)
-    * minus the dead ones, under the newest-segment rule: a row
-    * (doc_id, seg) is dead when its doc has a `_doclen` row in a later
-    * segment. Every upsert writes its docs' `_doclen` segment, so the
-    * kill set is the `_doclen/seg=g` rows for g >= 1 (segment 0 kills
-    * nothing). Below the push cap the set is read on the driver, `seg`
-    * taken from the directory name, and applied as a plain Filter —
-    * per newest segment g, `seg < g AND doc_id IN ids_g`, negated
-    * null-safely so a NULL-doc_id row survives — which adds no Spark
-    * job to any read, upsert probe or compaction. Past the cap those
-    * `_doclen` rows are broadcast and anti-joined on `seg < t.seg`;
-    * both forms keep the same rows. The set grows with the updates
-    * since the last compaction. With no segment past 0 (the built-once
-    * case and every driver-gate query) the rows come back unfiltered,
-    * so plans change only once maintenance has happened.
-    *
-    * Snapshot rule: the frame carries the kill set as it was when the
-    * frame was built, as its scan carries the file listing of that
-    * moment. Segments are only ever appended, and compaction swaps the
-    * whole artifact directory, so a built frame never mixes the
-    * segments of one state with the kill set of another.
-    */
-  private def withoutTombstoned(store: graft.etl.IndexStore,
-                                rows: DataFrame): DataFrame = {
-    val dl = postingsDoclenPath(store)
-    val later = segsOf(store, dl).filter(_ >= 1).toSeq.sorted
-    // Their part files, listed: Spark ignores (and warns about) a root
-    // path whose own name starts with `_`.
-    val parts = later.flatMap(g => fsOf(store).listStatus(new org.apache.hadoop.fs.Path(s"$dl/seg=$g"))
-      .toSeq.map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName).map(g -> _))
-    if (parts.isEmpty) rows
-    else newestSegOnDriver(store, parts) match {
-      case Some(newest) if newest.isEmpty => rows
-      case Some(newest) =>
-        val dies = newest.groupMap(_._2)(_._1).toSeq.sortBy(_._1).map { case (g, ids) =>
-          col("seg") < g && col("doc_id").isin(ids.toSeq.sorted: _*)
-        }.reduce(_ || _)
-        rows.filter(!coalesce(dies, lit(false)))
-      case None =>
-        val t = store.session.read.schema(DoclenSchema).option("basePath", dl)
-          .parquet(later.map(g => s"$dl/seg=$g"): _*)
-        rows.join(broadcast(t),
-          rows("doc_id") === t("doc_id") && rows("seg") < t("seg"), "left_anti")
-    }
-  }
-
-  /** The resolved doclen view (dead rows dropped — same rule as
-    * [[resolvedPostings]]). Falls back to deriving from the resolved
-    * postings when the `_doclen` dirs are absent (an artifact written
-    * by a pre-doclen build, or a crash after the fingerprint stamp):
-    * correct under every history, fast on the normal path.
-    */
-  private def resolvedDoclen(store: graft.etl.IndexStore): DataFrame = {
-    val dl = postingsDoclenPath(store)
-    // The doclen table is usable only when it covers EVERY live
-    // postings segment — a pre-doclen artifact that received one
-    // upsert has `_doclen/seg=<new>` but not the older segments, and
-    // reading the partial table would silently under-count removed
-    // docs. Coverage gaps (also: any crash window) fall back to
-    // deriving from the postings; the next compaction heals the table.
-    val dlSegs = segsOf(store, dl)
-    val covered = dlSegs.nonEmpty &&
-      segsOf(store, store.artifactPath(PostingsName)).subsetOf(dlSegs)
-    if (covered)
-      // Through the `seg=k` dirs just listed, with `_doclen` as the
-      // base path the `seg` partition is parsed from: Spark ignores a
-      // root whose own name starts with `_`, and warns with a stack
-      // trace when it probes a glob for a streaming-sink log.
-      withoutTombstoned(store, store.session.read.schema(DoclenSchema)
-        .option("basePath", dl).parquet(dlSegs.toSeq.sorted.map(g => s"$dl/seg=$g"): _*))
-        .select(col("doc_id"), col("n_tokens"))
-    else resolvedPostings(store).select(col("doc_id"), col("n_tokens")).distinct()
-  }
-
-  /** The SERVED view of the segmented postings, read with the fixed
-    * [[PostingsSchema]] (no schema-inference job): every segment's rows
-    * minus the rows of docs that have a `_doclen` row in a later
-    * segment — a doc updated in a later segment leaves its old rows
-    * physically in place (segments are immutable) but logically dead.
-    * Building it runs no Spark job.
+  /** The SERVED view of the segmented postings: every segment's rows
+    * minus those of docs updated in a later segment (the artifact's
+    * newest-segment rule). Building it runs no Spark job.
     */
   private[graft] def resolvedPostings(store: graft.etl.IndexStore): DataFrame =
-    withoutTombstoned(store, store.session.read.schema(PostingsSchema)
-      .parquet(store.artifactPath(PostingsName)))
+    postingsArtifact(store).resolved(PostingsTable)
 
   /** Incremental postings maintenance for one ingest batch — the ES/
     * Lucene continuous-indexing loop for the SEARCH index, SEGMENT-
-    * APPEND shaped: the batch's postings land as one new immutable
-    * term-sorted segment (O(batch) write — no existing file is
-    * touched), the batch's `_doclen` segment kills its docs' rows in
-    * every older segment (so a changed doc that lost a term serves no
-    * stale posting), and the corpus-stats sidecar advances by the batch
+    * APPEND shaped: the batch's postings and `_doclen` rows land as one
+    * new immutable segment of the [[postingsArtifact]] (O(batch) write —
+    * no existing file is touched), which kills its docs' rows in every
+    * older segment (so a changed doc that lost a term serves no stale
+    * posting), and the corpus-stats sidecar advances by the batch
     * DELTA (removed docs' contribution comes from the resolved doclen
     * table, one row per doc — never a corpus rescan). At 100 TB a
     * micro-batch therefore costs its own size, not a corpus rewrite —
@@ -423,26 +277,21 @@ object SearchQueries {
     * micro-batch case) is handled like a Lucene flush: its
     * (doc_id, n_tokens) rows are collected once, the removed docs'
     * stats are summed here from the at most |batch| probed doclen
-    * rows, and the postings and doclen segments are each written as
-    * ONE sorted file with no range-sampling job. A larger batch keeps
-    * its ids and stats distributed and writes range-partitioned
-    * segments.
-    *
-    * Crash contract: the whole batch runs inside a fingerprint
-    * cleared-first bracket — postings segment, doclen segment or
-    * sidecar missing at a crash leaves a mismatch that forces readers
-    * to rebuild.
-    * Retokenization policy changes are a rebuild
-    * ([[materializedPostings]] fingerprint), not an upsert.
+    * rows, and each table's segment is written as ONE sorted file with
+    * no range-sampling job. A larger batch keeps its ids and stats
+    * distributed and writes range-partitioned segments. The append's
+    * fingerprint bracket is the crash contract. Retokenization policy
+    * changes are a rebuild ([[materializedPostings]] fingerprint), not
+    * an upsert.
     */
   private[graft] def upsertPostings(store: graft.etl.IndexStore,
                                     batch: DataFrame,
                                     fingerprint: String = "stream-maintained"): Long =
     store.withMaintenanceLock(PostingsName) {
+    val art = postingsArtifact(store)
     val Array(oldN, oldDl) = store.artifactSidecar(PostingsName, PostingsStatsSidecar)
       .getOrElse(sys.error(s"$PostingsName has no corpus-stats sidecar"))
       .split(' ').map(_.toDouble)
-    val topGen = segsOf(store, store.artifactPath(PostingsName)).maxOption
     // ONE bounded single-stage job over the batch's (doc_id, n_tokens)
     // rows answers whether it is empty, which ids it carries and its
     // (doc count, token sum) — exact, as sums of integer lengths. Past
@@ -453,15 +302,15 @@ object SearchQueries {
     // a segment generation or write empty segment files —
     // return the current max gen untouched (if/else, not `return`:
     // the lock body is by-name).
-    if (raw.isEmpty) topGen.getOrElse(0).toLong
+    if (raw.isEmpty) art.segments().lastOption.getOrElse(0).toLong
     else {
-    // Stats-delta probe against the DOCLEN sidecar table, with the
-    // batch's id list PUSHED into its doc-sorted scan when the batch
-    // is micro-batch-sized (the normal streaming case — row-group
-    // stats then prune the read to O(batch)); a bulk re-import past
-    // the push cap falls back to the distributed semi-join, still
-    // over the 1-row-per-doc table rather than the full postings.
-    val doclen = resolvedDoclen(store)
+    // Stats-delta probe against the DOCLEN table, with the batch's id
+    // list PUSHED into its doc-sorted scan when the batch is
+    // micro-batch-sized (the normal streaming case — row-group stats
+    // then prune the read to O(batch)); a bulk re-import past the push
+    // cap falls back to the distributed semi-join, still over the
+    // 1-row-per-doc table rather than the full postings.
+    val doclen = art.resolved(DoclenTable)
     // The removed docs' (count, token sum), over distinct
     // (doc_id, n_tokens) pairs either way.
     val (removedN, removedDl) =
@@ -480,51 +329,23 @@ object SearchQueries {
       if (capped) (raw.length.toDouble,
         raw.filterNot(_.isNullAt(1)).map(_.getInt(1).toDouble).sum)
       else corpusStatsOf(batch)
-    val gen = topGen.getOrElse(-1) + 1
-    store.clearArtifactFingerprint(PostingsName)
-    store.appendPartition(postingsOf(batch), PostingsName, "seg",
-      gen.toString, sortCol = "term", numShards = if (capped) 1 else 5)
-    if (capped) {
-      val rows = java.util.Arrays.asList(raw.toSeq: _*)
-      writeDoclenRows(store, store.session.createDataFrame(rows, raw.head.schema), gen,
-        numShards = 1)
-    } else writeDoclenRows(store, doclenOf(batch), gen)
-    store.stampArtifact(PostingsName, fingerprint,
-      sidecars = Map(PostingsStatsSidecar -> statsSidecarText(
-        oldN - removedN + batchN, oldDl - removedDl + batchDl)))
-    gen.toLong // the new segment's id — O(1), unlike a resolved count
+    art.append(Seq(postingsOf(batch),
+        if (capped) store.session.createDataFrame(java.util.Arrays.asList(raw.toSeq: _*), raw.head.schema)
+        else doclenOf(batch)), fingerprint,
+      Map(PostingsStatsSidecar -> statsSidecarText(
+        oldN - removedN + batchN, oldDl - removedDl + batchDl)),
+      oneFile = capped).toLong // the new segment's id — O(1), unlike a resolved count
     }
     }
 
-  /** Fold the maintained postings back to a single segment: drop the
-    * dead rows, rewrite as seg=0 through the crash-safe swap (the swap
-    * replaces the whole artifact dir, so the later `_doclen` segments
-    * that killed them vanish with them), carry the stats sidecar and
-    * the current fingerprint. The Lucene force-merge — run it when the
-    * per-query segment fan-in or the kill set has grown past taste;
-    * the resolved CONTENT is unchanged by construction.
+  /** Fold the maintained postings back to a single segment — the Lucene
+    * force-merge, run when the per-query segment fan-in or the kill set
+    * has grown past taste. Both tables keep their resolved content,
+    * one `_doclen` row per live doc included (see
+    * [[graft.etl.SegmentedArtifact.compact]]).
     */
   private[graft] def compactPostings(store: graft.etl.IndexStore): Unit =
-    store.withMaintenanceLock(PostingsName) {
-    val fp = store.artifactFingerprint(PostingsName)
-      .getOrElse(sys.error(s"compactPostings: $PostingsName has no " +
-        "fingerprint — a crashed upsert must rebuild, not compact"))
-    val stats = store.artifactSidecar(PostingsName, PostingsStatsSidecar)
-      .getOrElse(sys.error(s"$PostingsName has no corpus-stats sidecar"))
-    val folded = resolvedPostings(store).drop("seg").withColumn("seg", lit(0))
-    store.writeArtifact(folded, PostingsName, fp,
-      partitionCols = Seq("seg"), rangeSortCols = Seq("term"),
-      sidecars = Map(PostingsStatsSidecar -> stats))
-    // The swap replaced the artifact dir wholesale, taking the old
-    // `_doclen` segments with it — rebuild doclen seg=0
-    // from the freshly compacted postings (a column-pruned distinct
-    // scan, within compaction's full-rewrite cost class; a crash
-    // before this write is covered by resolvedDoclen's
-    // derive-from-postings fallback).
-    writeDoclenRows(store,
-      resolvedPostings(store).select(col("doc_id"), col("n_tokens")).distinct(),
-      0)
-    }
+    postingsArtifact(store).compact()
 
   /** BM25 top-k computed FROM postings, as ONE lazy query with one
     * postings scan (shared by the registered indexed query, the
@@ -534,10 +355,10 @@ object SearchQueries {
     * the count of those groups with tf > 0, a 1-row ungrouped aggregate
     * of the SAME frame broadcast back. That is exact because live
     * postings are unique per (term, doc_id, n_tokens): [[postingsOf]]
-    * groups on that key, and every upsert's `_doclen` segment kills
-    * its docs' rows in all older segments. Both consumers share one exchange, so Spark
-    * reuses it and reads the postings once; building the frame runs no
-    * Spark job.
+    * groups on that key, and the [[postingsArtifact]]'s newest-segment
+    * rule serves one version of each doc. Both consumers share one
+    * exchange, so Spark reuses it and reads the postings once; building
+    * the frame runs no Spark job.
     */
   private[graft] def bm25FromPostings(postings: DataFrame, nDocs: Double,
                                       sumDl: Double, terms: Seq[String]): DataFrame = {

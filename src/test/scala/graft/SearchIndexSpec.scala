@@ -55,12 +55,11 @@ class SearchIndexSpec extends AnyFunSuite {
       s"term filter not pushed: ${scanLine.get}")
   }
 
-  test("doclen sidecar: maintained per segment, coverage-gap fallback, compaction heals") {
+  test("doclen table: maintained per segment, compaction folds it to seg=0") {
     // The stats-delta probe reads the 1-row-per-doc `_doclen` table
-    // instead of semi-scanning the full postings. The sidecar follows
-    // the same segment lifecycle; a PARTIAL table (e.g. a pre-doclen
-    // artifact that received one upsert) must NOT be trusted — the
-    // stats would silently under-count removed docs.
+    // instead of semi-scanning the full postings. The table follows
+    // the same segment lifecycle as the postings, and every build and
+    // compaction writes its seg=0 before the artifact goes live.
     val (_, store) = builtCorpus("graft_doclen", 40)
     val doclenDir = new java.io.File(
       store.artifactPath(SearchQueries.PostingsName), "_doclen")
@@ -80,14 +79,9 @@ class SearchIndexSpec extends AnyFunSuite {
     assert(new java.io.File(doclenDir, "seg=1").isDirectory,
       "upsert must append its doclen segment")
     statsOk()
-    // Coverage gap: nuke seg=0's doclen only — the probe must fall
-    // back to derive-from-postings and stats stay exact.
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }
-    rm(new java.io.File(doclenDir, "seg=0"))
     SearchQueries.upsertPostings(store, docsDf(10, 20))
     statsOk()
-    // Compaction heals: one seg=0 doclen table again, covering all.
+    // Compaction: one seg=0 doclen table again, covering all.
     SearchQueries.compactPostings(store)
     assert(new java.io.File(doclenDir, "seg=0").isDirectory)
     assert(!new java.io.File(doclenDir, "seg=1").exists(),
@@ -276,19 +270,20 @@ class SearchIndexSpec extends AnyFunSuite {
   test("the postings and _doclen schemas match their writers; no _deleted dir appears") {
     // The readers pass these constants to .schema(...) instead of
     // inferring; they must stay equal to what every writer produces.
+    // Each table is read the way the program reads it, and the footers
+    // of the files that read covers are inferred.
     val (_, store) = builtCorpus("graft_schemas", 30)
     val root = store.artifactPath(SearchQueries.PostingsName)
-    val doclen = s"$root/${SearchQueries.PostingsDoclen}"
-    // The hidden table is read the way the program reads it: its
-    // `seg=*` dirs under a base path.
-    val tables = Seq[(String, () => DataFrame, org.apache.spark.sql.types.StructType)](
-      (root, () => spark.read.parquet(root), SearchQueries.PostingsSchema),
-      (doclen, () => spark.read.option("basePath", doclen).parquet(s"$doclen/seg=*"),
-        SearchQueries.DoclenSchema))
+    val art = SearchQueries.postingsArtifact(store)
     def check(stage: String): Unit = {
-      tables.foreach { case (path, read, want) =>
-        assert(new java.io.File(path).isDirectory, s"no $path after $stage")
-        assert(read().schema == want, s"$path after $stage")
+      Seq(SearchQueries.PostingsTable, SearchQueries.DoclenTable).foreach { t =>
+        val read = art.read(t)
+        assert(read.schema == t.schema, s"${t.dir} after $stage")
+        val files = read.inputFiles
+        assert(files.nonEmpty, s"no ${t.dir} files after $stage")
+        assert(spark.read.parquet(files: _*).schema ==
+          org.apache.spark.sql.types.StructType(t.schema.filter(_.name != "seg")),
+          s"${t.dir} footers after $stage")
       }
       assert(!new java.io.File(root, SearchQueries.PostingsDeleted).exists(),
         s"a _deleted dir after $stage")
@@ -298,6 +293,34 @@ class SearchIndexSpec extends AnyFunSuite {
     check("upsert")
     SearchQueries.compactPostings(store)
     check("compaction")
+  }
+
+  test("a NULL-text doc keeps its _doclen row through compaction; n_docs stays exact") {
+    // A doc whose text is NULL has a `_doclen` row (n_tokens NULL) but
+    // no postings. Compaction must keep that row, or the doc's next
+    // upsert finds nothing to remove and the stats over-count it.
+    val dir = java.nio.file.Files.createTempDirectory("graft_null_text").toString
+    def withText5 = docsDf(5, 6)
+    def nullText5 = docsDf(5, 6).withColumn("text", lit(null).cast("string"))
+    docsDf(0, 5).unionByName(nullText5).unionByName(docsDf(6, 20))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    SearchQueries.materializedPostings(spark, dir)
+    val store = new etl.IndexStore(spark, etl.IndexStore.artifactRoot(dir))
+    SearchQueries.upsertPostings(store, withText5)
+    SearchQueries.compactPostings(store)
+    SearchQueries.upsertPostings(store, nullText5)
+    SearchQueries.compactPostings(store)
+    SearchQueries.upsertPostings(store, withText5)
+    docsDf(0, 20).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val Array(nDocs, sumDl) = store.artifactSidecar(SearchQueries.PostingsName,
+      SearchQueries.PostingsStatsSidecar).get.split(' ').map(_.toDouble)
+    assert(nDocs == 20.0, s"stats sidecar reads $nDocs $sumDl for a 20-doc corpus")
+    val served = SearchQueries.bm25FromPostings(SearchQueries.resolvedPostings(store),
+      nDocs, sumDl, Seq("spark", "vector", "join")).collect()
+    val scanned = SparkEntry.queries("search_topk_bm25")(spark, dir).collect()
+    assert(scanned.nonEmpty)
+    assert(served.map(_.toString).toSeq == scanned.map(_.toString).toSeq,
+      s"served=${served.mkString("; ")}\nscanned=${scanned.mkString("; ")}")
   }
 
   test("building search_topk_bm25_indexed over a built artifact runs no Spark job") {
