@@ -915,7 +915,9 @@ class IndexStore(spark: SparkSession, root: String) {
     * any data moves and restamped only after the last partition
     * commits + empties drop — a crashed upsert leaves a fingerprint
     * mismatch that forces readers to REBUILD rather than serve a
-    * half-applied batch. `df` is staged to a sibling directory first
+    * half-applied batch — and the restamp is [[stampArtifact]], so a
+    * batch whose maintenance lease was lost mid-commit is refused
+    * certification too. `df` is staged to a sibling directory first
     * (ONE materialization of the touched partitions, hive-partitioned
     * and key-sorted in the same write), so its lineage may freely
     * READ the artifact being rewritten; the commit itself is pure
@@ -937,7 +939,7 @@ class IndexStore(spark: SparkSession, root: String) {
                           dropEmptiedOf: Set[String] = Set.empty): Unit = {
     val d = dir(name)
     require(fs.exists(d), s"overwritePartitions: no artifact $name")
-    fs.delete(new Path(d, MetaFile), false)
+    clearArtifactFingerprint(name)
     // `.tmp_` prefix: hidden from listIndexes/catalog scans, and a
     // crash mid-upsert leaves a dir the age-guarded recoverOrphans GC
     // sweep already collects (a bare-named stage dir would masquerade
@@ -1000,7 +1002,7 @@ class IndexStore(spark: SparkSession, root: String) {
         }
       }
     } finally fs.delete(stage, true)
-    writeSidecars(d, Map(MetaFile -> fingerprint))
+    stampArtifact(name, fingerprint)
   }
 
   /** Clear an artifact's provenance fingerprint — the FIRST step of a

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.search.SearchQueries.tokens
 
 /** Distributed BPE tokenizer training (Sennrich et al. 2016, ACL —
   * arXiv:1508.07909): the merge-learning loop a pre-training pipeline
@@ -34,7 +35,7 @@ object BpeQueries {
     */
   private[graft] def wordTable(docs: DataFrame): DataFrame =
     docs
-      .select(explode(split(lower(col("text")), "\\s+")).as("word"))
+      .select(explode(tokens(col("text"))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word"))
       .agg(count(lit(1)).as("freq"))
@@ -288,7 +289,7 @@ object BpeQueries {
           size(split(trim(col("seg")), " ")).cast(LongType).as("toks"))
       Tables.forCompute(s, dir, "documents")
         .select(col("lang"),
-          explode(split(lower(col("text")), "\\s+")).as("word"))
+          explode(tokens(col("text"))).as("word"))
         .filter(length(col("word")) > 0)
         .join(dict, "word")
         .groupBy(col("lang"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.search.SearchQueries.tokens
 
 /** Corpus-structure operators for a training-data pipeline (SURVEY.md
   * §2.4 family): near-dup cluster resolution (the stage AFTER pair
@@ -135,12 +136,12 @@ object CorpusQueries {
   }
 
   /** The exploded corpus token stream (shared tokenizer —
-    * [[DedupQueries.toks]] — so vocab/sketch/quality oracles can never
+    * [[graft.search.SearchQueries.tokens]] — so vocab/sketch/quality oracles can never
     * drift apart).
     */
   private def corpusTokens(s: SparkSession, dir: String): DataFrame =
     Tables.forCompute(s, dir, "documents")
-      .select(explode(DedupQueries.toks(col("text"))).as("token"))
+      .select(explode(tokens(col("text"))).as("token"))
 
   /** Deterministic token top-100: partial+final hash agg, then
     * per-partition top-k heaps (TakeOrderedAndProject) under the
@@ -249,7 +250,7 @@ object CorpusQueries {
     // multi-document clusters surface (singletons need no decision).
     "llm_dedup_survivors" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val t = DedupQueries.toks(col("text"))
+      val t = tokens(col("text"))
       val docs = Tables.forCompute(s, dir, "documents")
         .select(col("doc_id"),
           size(array_distinct(t)).cast("long").as("__nd"),
@@ -283,7 +284,7 @@ object CorpusQueries {
     // CTE levels in the DuckDB twin → hash-exact.
     "llm_label_propagation" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val t = DedupQueries.toks(col("text"))
+      val t = tokens(col("text"))
       val seeds = Tables.forCompute(s, dir, "documents")
         .filter(col("doc_id") % 5 === 0)
         .select(col("doc_id"),
@@ -348,7 +349,7 @@ object CorpusQueries {
     "llm_source_entropy" -> ((s, dir) => {
       val perSrc = Tables.forCompute(s, dir, "documents")
         .select(col("source"),
-          size(split(lower(col("text")), "\\s+")).cast("long").as("toks"))
+          size(tokens(col("text"))).cast("long").as("toks"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens"))
       val tot = perSrc.agg(sum(col("n_tokens")).as("total_tokens"))
@@ -381,7 +382,7 @@ object CorpusQueries {
       val pairs = DedupQueries.materializedPairs(s, dir)
         .select(col("doc_a"), col("doc_b"))
       val tf = Tables.forCompute(s, dir, "documents")
-        .select(col("doc_id"), explode(split(lower(col("text")), "\\s+")).as("term"))
+        .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .filter(length(col("term")) > 0)
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("c"))
       val lens = tf.groupBy(col("doc_id")).agg(sum(col("c")).as("len"))
@@ -403,7 +404,7 @@ object CorpusQueries {
     // Per-row sequence+explode+slice, no shuffle; chunk text leaves
     // the operator as md5 so the comparison surface stays narrow.
     "llm_chunk_docs" -> ((s, dir) => {
-      val w = DedupQueries.toks(col("text"))
+      val w = tokens(col("text"))
       Tables.forCompute(s, dir, "documents")
         .select(col("doc_id"), w.as("w"))
         .select(col("doc_id"), col("w"),
@@ -442,7 +443,7 @@ object CorpusQueries {
       val survivors = clusterLabels(s, dir)
         .filter(col("doc_id") === col("cluster_id"))
         .select(col("doc_id"))
-      val tks = DedupQueries.toks(col("text"))
+      val tks = tokens(col("text"))
       // Quality stats as a PERSISTED projection: the quality filter
       // below would otherwise be pushed through the survivor join and
       // the forCompute repartition onto the single-partition scan,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.search.SearchQueries.tokens
 
 /** Mergeable sketches + corpus scaling-law diagnostics.
   *
@@ -32,13 +33,11 @@ import graft.Tables
   */
 object CorpusStatsQueries {
 
-  private def toksCol(c: org.apache.spark.sql.Column) = split(lower(c), "\\s+")
-
   /** Nonempty whitespace tokens with their source/doc. */
   private def srcTokens(s: SparkSession, dir: String): DataFrame =
     Tables.forCompute(s, dir, "documents")
       .select(col("source"), col("doc_id"),
-        explode(toksCol(col("text"))).as("token"))
+        explode(tokens(col("text"))).as("token"))
       .filter(length(col("token")) > 0)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -192,7 +191,7 @@ object CorpusStatsQueries {
     "llm_vocab_growth" -> ((s, dir) => {
       val docs = Tables.forCompute(s, dir, "documents")
         .select(col("doc_id"),
-          size(filter(toksCol(col("text")), t => length(t) > 0)).as("n_toks"))
+          size(filter(tokens(col("text")), t => length(t) > 0)).as("n_toks"))
       val mx = docs.agg(max(col("doc_id")).as("mx"))
       val docSide = docs.crossJoin(broadcast(mx))
         .select(col("doc_id"), col("n_toks"), col("mx"),

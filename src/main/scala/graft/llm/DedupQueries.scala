@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.search.SearchQueries.tokens
 
 /** Deduplication operators for a training-data pipeline (SURVEY.md §2.4):
   * exact, n-gram Jaccard, MinHash+LSH, SimHash.
@@ -39,12 +40,6 @@ object DedupQueries {
     */
   val MaxShingleDf = 50
 
-  /** THE whitespace tokenizer — every token-derived operator (shingles,
-    * vocab, chunking, quality ratios) must share one definition or
-    * their oracles drift apart.
-    */
-  private[graft] def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** Distinct word-3-shingles of the text, as strings (n tokens →
     * n-2 shingles; empty for n<3). r15: the gram construction is the
     * native one-pass [[graft.functions.NgramsWsExpr]] kernel — the
@@ -65,7 +60,7 @@ object DedupQueries {
     * n = 3.
     */
   private[graft] def ngramsWsHof(c: Column, n: Int): Column = {
-    val t = toks(c)
+    val t = tokens(c)
     when(size(t) >= n,
       transform(
         sequence(lit(1), size(t) - (n - 1)),
@@ -962,7 +957,7 @@ object DedupQueries {
     "llm_dedup_segments" -> ((s, dir) => {
       val w = SegTokens
       val segs = Tables.forCompute(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("t"))
+        .select(col("doc_id"), tokens(col("text")).as("t"))
         .select(col("doc_id"), posexplode(transform(
           sequence(lit(0), ((size(col("t")) - 1) / w).cast(IntegerType)),
           i => array_join(slice(col("t"), i * w + 1, lit(w)), " "))))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.search.SearchQueries.tokens
 
 /** Remaining training-data-pipeline stages (SURVEY.md §2.4 family):
   * PII scrubbing, deterministic corpus splitting, hash-bucket
@@ -59,7 +60,7 @@ object PipelineQueries {
     // linear shape); exact integer accounting incl. a DIV-ppm drop
     // rate.
     "llm_blocklist_filter" -> ((s, dir) => {
-      val nBlocked = size(filter(split(lower(col("text")), "\\s+"),
+      val nBlocked = size(filter(tokens(col("text")),
         t => t.isin(Blocklist: _*)))
       Tables.forCompute(s, dir, "documents")
         .withColumn("n_blocked", nBlocked)
@@ -169,7 +170,7 @@ object PipelineQueries {
     // (docs beginning in each sequence + their token mass).
     "llm_pack_sequences" -> ((s, dir) => {
       val B = 512
-      val nToks = size(split(lower(col("text")), "\\s+"))
+      val nToks = size(tokens(col("text")))
       val tokd = Tables(s, dir, "documents")
         .select(col("doc_id"), col("lang"), nToks.as("n_toks"),
           md5(lower(trim(col("text")))).as("__h"))
@@ -231,7 +232,7 @@ object PipelineQueries {
     "llm_span_corruption" -> ((s, dir) => {
       val block = 20
       val span = 3
-      val t = split(lower(col("text")), "\\s+")
+      val t = tokens(col("text"))
       Tables.forCompute(s, dir, "documents")
         .select(col("doc_id"), t.as("t"))
         .filter(size(col("t")) >= block)
@@ -294,7 +295,7 @@ object PipelineQueries {
     // edges, all exact integers.
     "llm_curriculum_shards" -> ((s, dir) => {
       val NShards = 8
-      val t = split(lower(col("text")), "\\s+")
+      val t = tokens(col("text"))
       val docs = Tables.forCompute(s, dir, "documents")
         .select(col("doc_id"),
           expr("CAST(1 AS BIGINT)").as("__one"),
@@ -370,7 +371,7 @@ object PipelineQueries {
     // counts, target counts, per-doc tf) — recomputed rather than
     // checkpointed, per the no-corpus-sized-materialization rule.
     "llm_dsir_weights" -> ((s, dir) => {
-      val toksOf = split(lower(col("text")), "\\s+")
+      val toksOf = tokens(col("text"))
       def stream(s2: SparkSession) = Tables.forCompute(s2, dir, "documents")
         .select(col("doc_id"), col("lang"), explode(toksOf).as("term"))
       val raw = stream(s).groupBy(col("term")).agg(count(lit(1)).as("c_r"))

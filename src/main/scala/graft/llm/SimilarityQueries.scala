@@ -25,14 +25,6 @@ import graft.functions.BroadcastArrayExpr
   */
 object SimilarityQueries {
 
-  /** Null-safe read of a 1-row avg() aggregate: an empty input frame
-    * (e.g. an embeddings table holding only the query vector, after
-    * the vec_id =!= 0 filter) yields avg() = null — read as 0.0
-    * ("no low-margin mass") rather than NPE (ADVICE r13).
-    */
-  private def nullSafeAvg(r: org.apache.spark.sql.Row): Double =
-    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-
   /** Sequential-fold dot product of two array<double> columns. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
@@ -328,15 +320,102 @@ object SimilarityQueries {
       (c.zip(q).map { case (x, y) => val d = x - y; d * d }.sum, i)
     }.sorted.take(nProbe).map(_._2).toSeq
 
+  /** The query point on the driver: the `c` vector of row `vec_id = 0`,
+    * one 1-row collect (the ANN query pattern; same boundary as the
+    * broadcast [[queryVec]]).
+    */
+  private def queryPoint(e: DataFrame, c: String = "emb"): Array[Double] =
+    e.filter(col("vec_id") === 0).select(col(c)).head.getSeq[Double](0).toArray
+
+  /** Coarse assignment of `e`'s `emb` to its nearest of the `k` cells of
+    * codebook `cb`, as column `cellCol`, plus the squared distances to
+    * the nearest (`__d1`) and second-nearest (`__d2`) centroid that
+    * [[lowMarginFrac]] reads. ONE evaluation of the O(k·dim) distance
+    * kernel per row feeds all three (a multi-referenced attribute —
+    * CollapseProject's cost check keeps the fold from duplicating).
+    */
+  private[graft] def assignWithMargin(e: DataFrame, cb: Column, k: Int,
+                                      cellCol: String): DataFrame =
+    e.withColumn("__cd", cellDistances(col("emb"), cb, k))
+      .withColumn(cellCol, argminCell(col("__cd"), k))
+      .withColumn("__d1", element_at(col("__cd"), col(cellCol) + 1))
+      .withColumn("__d2", element_at(col("__cd"),
+        argminCell(col("__cd"), k, excl = Seq(col(cellCol))) + 1))
+      .drop("__cd")
+
+  /** The SOAR spill census over an [[assignWithMargin]] frame: the
+    * fraction of rows whose second-nearest cell lies within
+    * τ² = [[MarginSpillTau2]] of their nearest. An empty frame (an
+    * embeddings table holding only the query vector) has a null avg(),
+    * read as 0.0 — no low-margin mass — rather than an NPE.
+    */
+  private def lowMarginFrac(assigned: DataFrame): Double = {
+    val r = assigned.agg(avg(
+      when(col("__d2") <= lit(MarginSpillTau2) * col("__d1"), 1.0).otherwise(0.0))).head
+    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+  }
+
+  /** The cells a probed query serves: None — no cell filter, every cell
+    * scanned — when the margin census escalates (see
+    * [[MarginEscalateFrac]]), else the query's nProbe nearest. Every
+    * probed ANN query decides its cells here, so a different probe rule
+    * (say, exact distance-bound probing) changes this one function.
+    */
+  private def servedCells(q: Array[Double], coarse: Array[Array[Double]],
+                          nProbe: Int, lowMargin: Double): Option[Seq[Int]] =
+    if (lowMargin >= MarginEscalateFrac) None else Some(probeCells(q, coarse, nProbe))
+
+  /** `df` restricted to the served cells (no filter when escalated). */
+  private def inServed(df: DataFrame, served: Option[Seq[Int]]): DataFrame =
+    served.fold(df)(cells => df.filter(col("cell").isin(cells: _*)))
+
+  /** Shortlist length R of the quantized scans (PQ, SQ8, IVFADC, the
+    * served index): max(200, N/50), capped at 100k so the re-rank
+    * broadcast and the per-partition top-R forwarding stay bounded at
+    * billion-vector scale. A FIXED 100-row shortlist starves once the
+    * corpus outgrows it — measured overlap@10 fell 10/10 → 5/10 from
+    * sf0.01 to sf0.1 at R=100 for PQ, and R=N/100 still left a
+    * rank-(100..200) true neighbor behind at sf0.1 (9/10); 2% of the
+    * corpus keeps the re-rank fetch point lookups, never a scan.
+    */
+  private def shortlistSize(s: SparkSession, dir: String): Int =
+    math.min(100000L, math.max(200L, Tables.rowCount(s, dir, "embeddings") / 50L)).toInt
+
+  /** Exact re-rank of a `vec_id` shortlist: ONLY the shortlisted ids
+    * fetch their raw vectors, scored by exact rounded L2 against the
+    * query vector; `extra` shortlist columns ride along into the
+    * output. The served contract is "exact distances over a shortlist
+    * that contains the true top-k", so the output is oracle-checkable
+    * against the brute-force top-10 (no quantizer-dependent column).
+    */
+  private def exactL2Top10(e: DataFrame, shortlist: DataFrame, extra: Column*): DataFrame =
+    e.join(broadcast(shortlist), "vec_id")
+      .crossJoin(queryVec(e))
+      .select(Seq(col("vec_id"), col("label")) ++ extra :+
+        round(sqrt(l2sq(col("emb"), col("qv"))), 6).as("l2_dist"): _*)
+      .orderBy(col("l2_dist"), col("vec_id"))
+      .limit(10)
+
+  /** Exact cosine top-10 of the candidate rows `cands` against the
+    * broadcast query vector of `e`.
+    */
+  private def cosineTop10(e: DataFrame, cands: DataFrame): DataFrame =
+    cands.crossJoin(queryVec(e))
+      .select(col("vec_id"), col("label"),
+        round(cosineNative(col("emb"), col("qv")), 9).as("cos_sim"))
+      .orderBy(col("cos_sim").desc, col("vec_id"))
+      .limit(10)
+
   /** Per-cell ADC lookup tables for a query: table[cell][j][c] =
-    * ‖(q − coarse(cell))_sub_j − codebook(j)(c)‖². Unprobed cells keep
-    * zero tables (never read — the cell filter runs first); indexing
-    * stays direct [cell].
+    * ‖(q − coarse(cell))_sub_j − codebook(j)(c)‖², for every cell when
+    * `served` is None (escalated). Unserved cells keep zero tables
+    * (never read — the cell filter runs first); indexing stays direct
+    * [cell].
     */
   private def adcTablesPerCell(q: Array[Double], model: IvfPqModel,
-                               probed: Seq[Int]): Seq[Seq[Seq[Double]]] =
+                               served: Option[Seq[Int]]): Seq[Seq[Seq[Double]]] =
     (0 until model.nList).map { cell =>
-      if (!probed.contains(cell)) Seq.fill(model.m)(Seq.fill(model.nCent)(0.0))
+      if (served.exists(!_.contains(cell))) Seq.fill(model.m)(Seq.fill(model.nCent)(0.0))
       else {
         val qres = Array.tabulate(q.length)(i => q(i) - model.coarse(cell)(i))
         (0 until model.m).map { j =>
@@ -390,12 +469,7 @@ object SimilarityQueries {
     // per-row cosine → TakeOrderedAndProject(10).
     "llm_cosine_topk" -> ((s, dir) => {
       val e = embDouble(Tables(s, dir, "embeddings"))
-      e.crossJoin(queryVec(e))
-        .filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("label"),
-          round(cosineNative(col("emb"), col("qv")), 9).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(10)
+      cosineTop10(e, e.filter(col("vec_id") =!= 0))
     }),
 
     // FILTERED top-k — metadata-constrained vector search ("nearest
@@ -409,12 +483,7 @@ object SimilarityQueries {
     // oracle-checked; the IVF composition below is the scale path.
     "llm_cosine_topk_filtered" -> ((s, dir) => {
       val e = embDouble(Tables(s, dir, "embeddings"))
-      e.crossJoin(queryVec(e))
-        .filter(col("vec_id") =!= 0 && col("label") === 3)
-        .select(col("vec_id"), col("label"),
-          round(cosineNative(col("emb"), col("qv")), 9).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(10)
+      cosineTop10(e, e.filter(col("vec_id") =!= 0 && col("label") === 3))
     }),
 
     // Filtered ANN — the same metadata predicate composed with IVF
@@ -454,8 +523,7 @@ object SimilarityQueries {
       val centroids =
         trainCentroids(eU.withColumn("emb", col("unit")), nList)
       val cb = bcastModel(s, centroids, 2, s"ivf_coarse_unit[$nList]")
-      val q: Seq[Double] = eU.filter(col("vec_id") === 0)
-        .select(col("unit")).head.getSeq[Double](0)
+      val q = queryPoint(eU, "unit")
       val celled = eU
         .withColumn("__cd", cellDistances(col("unit"), cb, nList))
         .withColumn("cell", argminCell(col("__cd"), nList))
@@ -465,11 +533,7 @@ object SimilarityQueries {
       // histogram a served index would read from partition metadata.
       val eligible: Map[Int, Long] = celled.groupBy(col("cell")).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val ordered: Seq[Int] = centroids.zipWithIndex
-        .map { case (cent, i) =>
-          (cent.zip(q).map { case (c, x) => val d = c - x; d * d }.sum, i)
-        }
-        .sorted.map(_._2)
+      val ordered = probeCells(q, centroids.map(_.toArray).toArray, nList)
       val target = candidateFactor.toLong * k
       // Cardinality cutover: when the whole eligible set is small
       // (≤ ExactCutover·k rows), cell pruning saves nothing and costs
@@ -487,13 +551,7 @@ object SimilarityQueries {
         else ordered.zipWithIndex
           .takeWhile { case (_, i) => i < minProbe || cumBefore(i) < target }
           .map(_._1)
-      celled
-        .filter(col("cell").isin(probed: _*))
-        .crossJoin(queryVec(e))
-        .select(col("vec_id"), col("label"),
-          round(cosineNative(col("emb"), col("qv")), 9).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(10)
+      cosineTop10(e, celled.filter(col("cell").isin(probed: _*)))
     }),
 
     // RANGE (radius) search — the vector-DB twin of top-k: ALL vectors
@@ -591,9 +649,9 @@ object SimilarityQueries {
     // (~2000 vectors; a fixed k would silently revert to quadratic as
     // the corpus grows), capped at MaxTrainSample/8 so single-level
     // training stays bounded — beyond that, re-split oversized cells
-    // with a second-level codebook (two-level IVF) built from the same
-    // trainCentroids primitive — implemented as [[twoLevelCells]],
-    // spec'd on a planted-skew corpus. Verification is the exact fused-kernel
+    // with a second-level codebook (two-level IVF): the served vector
+    // index's [[trainSubCodebooks]] + [[withSubCells]], spec'd on a
+    // planted-skew corpus. Verification is the exact fused-kernel
     // cosine, so emitted pairs are never false. Threshold 0.4 is
     // calibrated to this fixture (near-orthogonal random vectors, max
     // pairwise cosine ~0.5); a real near-dup corpus runs the same
@@ -743,48 +801,20 @@ object SimilarityQueries {
       val e = embDouble(Tables.forCompute(s, dir, "embeddings"))
       val centroids = trainCentroids(e, nList)
       val cb = bcastModel(s, centroids, 2, s"ivf_coarse[$nList]")
-      // Query's nProbe nearest cells — driver arithmetic over the
-      // bounded codebook (same boundary as training it).
-      val q: Seq[Double] = e.filter(col("vec_id") === 0)
-        .select(col("emb")).head.getSeq[Double](0)
-      val probedCells: Seq[Int] = centroids.zipWithIndex
-        .map { case (cent, i) =>
-          (cent.zip(q).map { case (c, x) => val d = c - x; d * d }.sum, i)
-        }
-        .sorted.take(nProbe).map(_._2)
+      val q = queryPoint(e)
       // ONE assignment pass (the O(N·nList·dim) kernel) carries cell +
       // margin; persisted because the census aggregate and the serving
       // filter both read it — recomputing the kernel per consumer was
       // the round-5 build regression.
       // Corpus rows only (vec_id 0 is the query vector) — the census
-      // below averages over CORPUS geometry, matching the ivfpq
-      // variant exactly; including the query row biased lowMargin by
-      // one row on tiny fixtures (round-12 advice).
-      val assigned = e.filter(col("vec_id") =!= 0)
-        .withColumn("__cd", cellDistances(col("emb"), cb, nList))
-        .withColumn("cell", argminCell(col("__cd"), nList))
-        .withColumn("__d1", element_at(col("__cd"), col("cell") + 1))
-        .withColumn("__d2", element_at(col("__cd"),
-          argminCell(col("__cd"), nList, excl = Seq(col("cell"))) + 1))
-        .drop("__cd")
+      // averages over CORPUS geometry, matching the ivfpq variant
+      // exactly; including the query row biased lowMargin by one row
+      // on tiny fixtures (round-12 advice).
+      val assigned = assignWithMargin(e.filter(col("vec_id") =!= 0), cb, nList, "cell")
         .transform(graft.Pins.pin)
-      // Defensive read (ADVICE r13): an embeddings table holding ONLY
-      // the query vector leaves the assigned frame empty and avg()
-      // null — read as "no low-margin mass" rather than NPE.
-      val lowMargin = nullSafeAvg(assigned
-        .agg(avg(when(col("__d2") <= lit(MarginSpillTau2) * col("__d1"), 1.0)
-          .otherwise(0.0)))
-        .head)
-      val serveFilter =
-        if (lowMargin >= MarginEscalateFrac) lit(true)
-        else col("cell").isin(probedCells: _*)
-      assigned
-        .filter(serveFilter)
-        .crossJoin(queryVec(e))
-        .select(col("vec_id"), col("label"),
-          round(cosineNative(col("emb"), col("qv")), 9).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(10)
+      val served = servedCells(q, centroids.map(_.toArray).toArray, nProbe,
+        lowMarginFrac(assigned))
+      cosineTop10(e, inServed(assigned, served))
     }),
 
     // Product Quantization (PQ) ANN: each 64-dim vector compresses to
@@ -843,8 +873,7 @@ object SimilarityQueries {
       // ||q_sub_j - centroid_jc||² — m×nCent doubles, computed once
       // on the driver from the collected 1-row query (the ANN query
       // pattern; same boundary as the broadcast query vector).
-      val q: Seq[Double] = e.filter(col("vec_id") === 0)
-        .select(col("emb")).head.getSeq[Double](0)
+      val q = queryPoint(e)
       val adc: Seq[Seq[Double]] = (0 until m).map { j =>
         codebooks(j).map { cent =>
           (0 until subDim).map { d =>
@@ -856,44 +885,25 @@ object SimilarityQueries {
       val codes = pqCodes(col("emb"), cb, m, subDim, nCent)
       val score = adcScore(col("codes"), table, m)
       // SHORTLIST + EXACT RE-RANK — the production PQ architecture
-      // (IVFADC's refinement stage): the 32×-cheaper ADC scan selects a
-      // k×10 shortlist (TakeOrderedAndProject — each partition forwards
-      // ≤100 rows), then ONLY those 100 ids fetch their raw vectors for
+      // (IVFADC's refinement stage): the 32×-cheaper ADC scan selects an
+      // R-row shortlist (TakeOrderedAndProject — each partition forwards
+      // ≤R rows), then ONLY those R ids fetch their raw vectors for
       // exact distances. At 100 TB the codes scan never touches raw
-      // floats and the re-rank is 100 point lookups; quantization noise
-      // then costs recall only past rank 100, not rank 10 (overlap@10
+      // floats and the re-rank is R point lookups; quantization noise
+      // then costs recall only past rank R, not rank 10 (overlap@10
       // measured 4/10 ADC-only → re-ranked recovery measured in RECALL_r04 on this
-      // distance-concentrated fixture).
-      // R scales with the corpus (max(200, N/50), capped at 100k so
-      // the re-rank shortlist broadcast and the per-partition top-R
-      // forwarding stay bounded at billion-vector scale — past the
-      // cap the IVF-probed/indexed forms are the serving path
-      // anyway): a FIXED 100-row
-      // shortlist starves once the corpus outgrows it — measured
-      // overlap@10 fell 10/10 → 5/10 from sf0.01 to sf0.1 at R=100,
-      // and R=N/100 still left a rank-(100..200) true neighbor behind
-      // at sf0.1 (9/10); 2% of the corpus keeps the re-rank fetch
-      // point lookups, never a scan, and restores the overlap.
-      val r = math.min(100000L,
-        math.max(200L, Tables.rowCount(s, dir, "embeddings") / 50L)).toInt
+      // distance-concentrated fixture). R scales with the corpus
+      // ([[shortlistSize]]).
       val shortlist = e.filter(col("vec_id") =!= 0)
         .withColumn("codes", codes)
         .select(col("vec_id"), round(score, 9).as("pq_dist"))
         .orderBy(col("pq_dist"), col("vec_id"))
-        .limit(r)
-      // Output = the EXACT re-rank only (no quantizer-dependent pq_dist
-      // column): the served contract is "exact distances over a
-      // shortlist that contains the true top-k", which makes the whole
-      // query DuckDB-oracle-checkable against the brute-force top-10 —
-      // the oracle asserts both the exact scoring AND that the ADC
-      // shortlist recalled the true neighbors at the gate SF (overlap
-      // is additionally measured at both SFs in RECALL).
-      e.join(broadcast(shortlist), "vec_id")
-        .crossJoin(queryVec(e))
-        .select(col("vec_id"), col("label"),
-          round(sqrt(l2sq(col("emb"), col("qv"))), 6).as("l2_dist"))
-        .orderBy(col("l2_dist"), col("vec_id"))
-        .limit(10)
+        .limit(shortlistSize(s, dir))
+      // Output = the EXACT re-rank only: the oracle asserts both the
+      // exact scoring AND that the ADC shortlist recalled the true
+      // neighbors at the gate SF (overlap is additionally measured at
+      // both SFs in RECALL).
+      exactL2Top10(e, shortlist)
     }),
 
     // Scalar quantization (SQ8) ANN — the QT_8bit scheme of faiss's
@@ -908,7 +918,7 @@ object SimilarityQueries {
     // is asymmetric (exact query against the decoded corpus byte);
     // out-of-range values clamp to the byte edges — standard SQ
     // saturation. Same shortlist + exact-re-rank refinement as PQ:
-    // quantization noise costs recall only past rank 100.
+    // quantization noise costs recall only past the shortlist.
     // Exact-re-rank output -> DuckDB brute-force-top-10 oracle + Recall.
     "llm_ann_sq8_topk" -> ((s, dir) => {
       val e = embDouble(Tables.forCompute(s, dir, "embeddings"))
@@ -923,9 +933,7 @@ object SimilarityQueries {
       }
       val minLit = typedlit(vmin)
       val scaleLit = typedlit(scale)
-      val q: Seq[Double] = e.filter(col("vec_id") === 0)
-        .select(col("emb")).head.getSeq[Double](0)
-      val qLit = typedlit(q)
+      val qLit = typedlit(queryPoint(e).toSeq)
       val codes = transform(col("emb"), (x, i) =>
         least(lit(255.0), greatest(lit(0.0),
           round((x - element_at(minLit, i + 1)) / element_at(scaleLit, i + 1), 0))))
@@ -940,15 +948,10 @@ object SimilarityQueries {
         .withColumn("codes", codes)
         .select(col("vec_id"), round(dist, 9).as("sq_dist"))
         .orderBy(col("sq_dist"), col("vec_id"))
-        .limit(100)
+        .limit(shortlistSize(s, dir))
       // Exact-re-rank-only output — same oracle contract as the PQ
       // variant above.
-      e.join(broadcast(shortlist), "vec_id")
-        .crossJoin(queryVec(e))
-        .select(col("vec_id"), col("label"),
-          round(sqrt(l2sq(col("emb"), col("qv"))), 6).as("l2_dist"))
-        .orderBy(col("l2_dist"), col("vec_id"))
-        .limit(10)
+      exactL2Top10(e, shortlist)
     }),
 
     // IVFADC — the full production ANN composition (Jégou et al.
@@ -961,7 +964,7 @@ object SimilarityQueries {
     // cell = write-time partition key (the probe filter is partition
     // pruning), codes column ≈ 8 logical bytes/vector scanned
     // (sub-byte values dictionary/bit-packed by parquet), raw floats
-    // touched only for the 100-row shortlist. All model artifacts
+    // touched only for the shortlist. All model artifacts
     // (coarse codebook nList×64, residual codebooks m×nCent×8, ADC
     // tables nList×m×nCent) are O(1) broadcasts from the same bounded
     // sample — plan size stays independent of codebook size.
@@ -974,8 +977,7 @@ object SimilarityQueries {
         s"ivfpq_coarse[${model.nList}]")
       val cbLit = bcastModel(s, model.codebooks.map(_.map(_.toSeq).toSeq).toSeq, 3,
         s"ivfpq_codebooks[${model.m}x${model.nCent}]")
-      val q: Array[Double] = e.filter(col("vec_id") === 0)
-        .select(col("emb")).head.getSeq[Double](0).toArray
+      val q = queryPoint(e)
       // Geometry-aware escalation, same protocol as the served index
       // and the inline IVF demo above: the assignment pass carries the
       // d1/d2 margin, one aggregate runs the SOAR spill census, and a
@@ -983,54 +985,27 @@ object SimilarityQueries {
       // ADC over every cell's codes (raw floats still only at the
       // re-rank; the llm_ann_pq_topk full-scan shape, which reads
       // 10/10 at both SFs). Clustered corpora keep the nProbe probe.
-      val assigned = e.filter(col("vec_id") =!= 0)
-        .withColumn("__cd", cellDistances(col("emb"), coarseLit, model.nList))
-        .withColumn("cell", argminCell(col("__cd"), model.nList))
-        .withColumn("__d1", element_at(col("__cd"), col("cell") + 1))
-        .withColumn("__d2", element_at(col("__cd"),
-          argminCell(col("__cd"), model.nList, excl = Seq(col("cell"))) + 1))
-        .drop("__cd")
+      val assigned = assignWithMargin(e.filter(col("vec_id") =!= 0), coarseLit,
+          model.nList, "cell")
         .transform(graft.Pins.pin)
-      // Defensive read (ADVICE r13): an embeddings table holding ONLY
-      // the query vector leaves the assigned frame empty and avg()
-      // null — read as "no low-margin mass" rather than NPE.
-      val lowMargin = nullSafeAvg(assigned
-        .agg(avg(when(col("__d2") <= lit(MarginSpillTau2) * col("__d1"), 1.0)
-          .otherwise(0.0)))
-        .head)
-      val escalate = lowMargin >= MarginEscalateFrac
-      // Query-side driver math over the O(1) codebooks: probed cells
-      // (every cell when escalated), then one ADC table per probed
-      // cell from the query's residual in THAT cell.
-      val probed =
-        if (escalate) (0 until model.nList).toList
-        else probeCells(q, model.coarse, nProbe)
-      val tables = bcastModel(s, adcTablesPerCell(q, model, probed), 3,
+      val served = servedCells(q, model.coarse, nProbe, lowMarginFrac(assigned))
+      // One ADC table per served cell (every cell when escalated) from
+      // the query's residual in THAT cell.
+      val tables = bcastModel(s, adcTablesPerCell(q, model, served), 3,
         s"ivfpq_adc_tables[${model.nList}]")
-      // Scan: PRUNE to probed cells (at write-time layout this is
-      // partition pruning — llm_ann_indexed_topk IS that layout; a
-      // no-op when escalated), residual-encode survivors, ADC.
-      val probedRows = assigned
-        .filter(if (escalate) lit(true) else col("cell").isin(probed: _*))
+      // Scan: PRUNE to served cells (at write-time layout this is
+      // partition pruning — llm_ann_indexed_topk IS that layout),
+      // residual-encode survivors, ADC.
+      val shortlist = inServed(assigned, served)
         .withColumn("res",
           zip_with(col("emb"), element_at(coarseLit, col("cell") + 1), (x, y) => x - y))
         .withColumn("codes", pqCodes(col("res"), cbLit, model.m, model.subDim, model.nCent))
-      val r = math.min(100000L,
-        math.max(200L, Tables.rowCount(s, dir, "embeddings") / 50L)).toInt
-      val shortlist = probedRows
         .select(col("vec_id"),
           round(adcScore(col("codes"), element_at(tables, col("cell") + 1), model.m), 9)
             .as("adc_dist"))
         .orderBy(col("adc_dist"), col("vec_id"))
-        .limit(r)
-      // Exact-re-rank-only output — same oracle contract as the PQ
-      // variant above.
-      e.join(broadcast(shortlist), "vec_id")
-        .crossJoin(queryVec(e))
-        .select(col("vec_id"), col("label"),
-          round(sqrt(l2sq(col("emb"), col("qv"))), 6).as("l2_dist"))
-        .orderBy(col("l2_dist"), col("vec_id"))
-        .limit(10)
+        .limit(shortlistSize(s, dir))
+      exactL2Top10(e, shortlist)
     }),
 
     // MATERIALIZED-index ANN — the production serving shape the other
@@ -1044,29 +1019,25 @@ object SimilarityQueries {
     // scan), the pruned scan reads ~8-logical-byte codes instead of
     // 256-byte vectors (the 32× bandwidth argument, physical up to
     // parquet's dictionary/bit-packing of the sub-byte values), and only the
-    // 100-row shortlist fetches vectors for exact distances. At 100 TB
+    // shortlist fetches vectors for exact distances. At 100 TB
     // this is the difference between an ANN *query* (ms — prune, scan
-    // codes, 100 lookups) and an ANN *ingest* (the one-time encode).
+    // codes, R lookups) and an ANN *ingest* (the one-time encode).
     // Exact-re-rank output -> DuckDB top-10 oracle + RECALL + spec.
     "llm_ann_indexed_topk" -> ((s, dir) => {
       val (idx, model) = materializedVecIndex(s, dir)
       val nProbe = adaptiveNProbe(Tables.rowCount(s, dir, "embeddings"), model.nList)
       val e = embDouble(Tables(s, dir, "embeddings"))
-      val q: Array[Double] = e.filter(col("vec_id") === 0)
-        .select(col("emb")).head.getSeq[Double](0).toArray
+      val q = queryPoint(e)
       // Geometry-aware escalation (see [[MarginEscalateFrac]]): a
       // low-margin index (the build-time sidecar diagnostic says its
       // Voronoi boundaries cannot support a reliable probe — the
       // i.i.d.-fixture geometry) serves the EXHAUSTIVE quantized path
-      // — ADC over every cell's codes, exact re-rank unchanged — so
-      // answer quality never silently depends on geometry the caller
-      // can't see. A clustered corpus (margin frac ≈ 0) keeps the
-      // partition-pruned nProbe probe below untouched.
-      val escalate = model.lowMarginFrac >= MarginEscalateFrac
-      val probed =
-        if (escalate) (0 until model.nList).toList
-        else probeCells(q, model.coarse, nProbe)
-      // Two-level layout: each probed level-1 cell expands to its
+      // — NO cell filter, ADC over every partition's codes, exact
+      // re-rank unchanged — so answer quality never silently depends
+      // on geometry the caller can't see. A clustered corpus (margin
+      // frac ≈ 0) keeps the partition-pruned nProbe probe.
+      val served = servedCells(q, model.coarse, nProbe, model.lowMarginFrac)
+      // Two-level layout: each served level-1 cell expands to its
       // composite partition values — a SPLIT cell contributes only the
       // query's IdxSubProbe nearest sub-cells (driver arithmetic over
       // the O(1) sidecar sub-codebook), so the pruning that used to
@@ -1074,9 +1045,9 @@ object SimilarityQueries {
       // cells at directory granularity. ADC scoring is untouched:
       // codes are level-1 residuals, the per-row table lookup just
       // recovers c1 = cell DIV 4096.
-      val probedParts: Seq[Int] =
-        if (model.sub.isEmpty) probed
-        else probed.flatMap { c1 =>
+      def partsOf(cells: Seq[Int]): Seq[Int] =
+        if (model.sub.isEmpty) cells
+        else cells.flatMap { c1 =>
           model.sub.get(c1) match {
             case None => Seq(c1 * 4096)
             case Some(cb2) =>
@@ -1087,31 +1058,17 @@ object SimilarityQueries {
       val rowC1 =
         if (model.sub.isEmpty) col("cell")
         else (col("cell") / 4096).cast(org.apache.spark.sql.types.IntegerType)
-      val tables = bcastModel(s, adcTablesPerCell(q, model, probed), 3,
+      val tables = bcastModel(s, adcTablesPerCell(q, model, served), 3,
         s"idx_adc_tables[${model.nList}]")
-      val r = math.min(100000L,
-        math.max(200L, Tables.rowCount(s, dir, "embeddings") / 50L)).toInt
-      // Escalated: NO cell filter — every partition's codes scan
-      // through ADC (the llm_ann_pq_topk full-scan shape, raw floats
-      // still only at the re-rank). Probed: the composite partition
-      // values prune directories as before.
-      val scanned =
-        if (escalate) idx.filter(col("vec_id") =!= 0)
-        else idx.filter(col("cell").isin(probedParts: _*) && col("vec_id") =!= 0)
+      val scanned = served.fold(idx.filter(col("vec_id") =!= 0))(cells =>
+        idx.filter(col("cell").isin(partsOf(cells): _*) && col("vec_id") =!= 0))
       val shortlist = scanned
         .select(col("vec_id"),
           round(adcScore(col("codes"), element_at(tables, rowC1 + 1), model.m), 9)
             .as("adc_dist"))
         .orderBy(col("adc_dist"), col("vec_id"))
-        .limit(r)
-      // Exact-re-rank-only output — same oracle contract as the PQ
-      // variant above.
-      e.join(broadcast(shortlist), "vec_id")
-        .crossJoin(queryVec(e))
-        .select(col("vec_id"), col("label"),
-          round(sqrt(l2sq(col("emb"), col("qv"))), 6).as("l2_dist"))
-        .orderBy(col("l2_dist"), col("vec_id"))
-        .limit(10)
+        .limit(shortlistSize(s, dir))
+      exactL2Top10(e, shortlist)
     }),
 
     // 1-bit (sign) binary quantization + Hamming shortlist — the
@@ -1172,12 +1129,7 @@ object SimilarityQueries {
           asym.as("asym"))
         .orderBy(col("asym").desc, col("vec_id"))
         .limit(r)
-      e.join(broadcast(shortlist), "vec_id")
-        .crossJoin(queryVec(e))
-        .select(col("vec_id"), col("label"), col("hamming"),
-          round(sqrt(l2sq(col("emb"), col("qv"))), 6).as("l2_dist"))
-        .orderBy(col("l2_dist"), col("vec_id"))
-        .limit(10)
+      exactL2Top10(e, shortlist, col("hamming"))
     }),
 
     // MMR diversified re-rank (Carbonell & Goldstein, SIGIR'98) — the
@@ -1244,7 +1196,8 @@ object SimilarityQueries {
     // exactly one), so the candidate join is a single equi-join on the
     // bucket key — never corpus²; per-bucket work is |bucket|², kept
     // bounded exactly like the IVF cell family (oversized buckets
-    // re-split on more sign bits — the twoLevelCells pattern). Ranking
+    // re-split on more sign bits — the vector index's two-level
+    // trainSubCodebooks/withSubCells pattern). Ranking
     // is exact cosine inside the bucket with the rank filter directly
     // on row_number → WindowGroupLimit keeps k rows per vector per
     // partition before the exchange. Fully deterministic (sign bits +
@@ -1319,104 +1272,6 @@ object SimilarityQueries {
   private[graft] val VecIndexName = "vec_ivfpq_index"
   private[graft] val ModelSidecar = "_graft_ivfpq_model"
 
-  /** Two-level coarse quantization — the documented scale path for
-    * cell blocking past the single-level cap (k1 ≤ MaxTrainSample/8
-    * means cells grow linearly once the corpus passes ~k1·target; a
-    * growing cell silently degrades the within-cell pair join toward
-    * quadratic). Level 1 assigns as usual; cells measured OVERSIZED
-    * (> 4×target — one count() aggregation) get a second-level
-    * codebook trained on a bounded hash-rank sample of THAT CELL's
-    * members (same content-hash policy as [[sampleVectors]], ranked
-    * per cell by ONE window in ONE job — the collect is bounded by
-    * max(MaxTrainSample, 8·k2·|oversized|) rows total regardless of
-    * how many cells oversize). Composite id = c1·4096 + c2 + 1; cells
-    * already small keep c1·4096. The level-2 assignment is the same
-    * codegen'd argmin, with each row's sub-codebook selected from one
-    * broadcast literal by c1 — no join, no shuffle beyond level 1's.
-    * Returns (vec_id, emb, cell).
-    */
-  private[graft] def twoLevelCells(e: DataFrame, targetCellSize: Int,
-                                   k2: Int = 16,
-                                   k1Cap: Int = (MaxTrainSample / 8).toInt): DataFrame = {
-    require(k2 > 1 && k2 < 4096, s"k2 must fit the composite id space, got $k2")
-    // An oversized cell has > 4·target members, which must cover k2
-    // training points (trainCentroids requires sample >= k).
-    require(4L * targetCellSize >= k2,
-      s"targetCellSize=$targetCellSize too small to train k2=$k2 sub-cells")
-    val n = e.count()
-    val k1 = math.min(k1Cap.toLong,
-      math.max(4L, n / targetCellSize)).toInt
-    val cb1 = bcastModel(e.sparkSession, trainCentroids(e, k1), 2, s"l1_coarse[$k1]")
-    // Eager local checkpoint, not persist: the level-1 assignment feeds
-    // the size count, the sub-codebook sample, and the final level-2
-    // projection — computed once, and the ContextCleaner frees the
-    // checkpointed partitions when the returned frame is dropped (a
-    // cache entry would leak: library callers never see l1).
-    //
-    // FAILURE-MODE CONTRACT (this is one of the repo's two
-    // corpus-proportional checkpoint sites — PlanSpec audits the set):
-    // localCheckpoint materializes at replication 1 on executor-local
-    // disk with lineage truncated, so losing an executor mid-build
-    // fails THIS JOB with "Checkpoint block not found" — loudly, never
-    // with wrong answers — and the caller (an idempotent ingest-time
-    // index build) simply reruns. The trade is deliberate: replicated
-    // storage would double the write cost of a frame that exists for
-    // one build, and the belt-and-braces alternative (routing through
-    // a fingerprinted IndexStore artifact) is exactly what
-    // materializedVecIndex's OUTPUT already is — a transient input
-    // frame does not warrant a second durable artifact.
-    val l1 = e.select(col("vec_id"), col("emb"))
-      .withColumn("__cd", cellDistances(col("emb"), cb1, k1))
-      .withColumn("c1", argminCell(col("__cd"), k1))
-      .drop("__cd")
-      .localCheckpoint(true)
-    val sizes = l1.groupBy(col("c1")).agg(count(lit(1)).as("cnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val oversized = sizes.filter(_._2 > 4L * targetCellSize).keys.toSeq.sorted
-    if (oversized.isEmpty)
-      return l1.withColumn("cell", col("c1").cast("long") * 4096L).drop("c1")
-    // ALL sub-codebook samples in ONE job (not one Spark job per
-    // oversized cell — at the k1Cap that was up to 512 serial jobs of
-    // driver-orchestration latency): a window ranked by the same
-    // content-hash policy as [[sampleVectors]] takes the top rows PER
-    // CELL, one collect bounded by max(MaxTrainSample, 8·k2·|oversized|)
-    // rows total (the per-cell cap shrinks as cells multiply, never
-    // below the ≥8-points-per-centroid training floor), then per-cell
-    // Lloyd runs as driver arithmetic on the grouped sample.
-    val perCellCap = math.max(8 * k2, MaxTrainSample / math.max(1, oversized.size))
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c1")).orderBy(xxhash64(col("vec_id")), col("vec_id"))
-    val sampled = l1.filter(col("c1").isin(oversized: _*))
-      .withColumn("__rk", row_number().over(rankW))
-      .filter(col("__rk") <= perCellCap)
-      .select(col("c1"), col("vec_id"), col("emb"))
-      .collect()
-    val subCodebooks: Map[Int, Seq[Seq[Double]]] =
-      sampled.groupBy(_.getInt(0)).map { case (c, rows) =>
-        c -> lloyd(rows.sortBy(_.getLong(1)).map(_.getSeq[Double](2).toArray),
-          k2, iters = 5).map(_.toSeq).toSeq
-      }
-    val dim = subCodebooks(oversized.head).head.length
-    // One literal indexed by c1; small cells carry a zero dummy that is
-    // never evaluated (CaseWhen branches evaluate lazily per row).
-    val cb2 = bcastModel(e.sparkSession,
-      (0 until k1).map(c =>
-        subCodebooks.getOrElse(c, Seq.fill(k2)(Seq.fill(dim)(0.0)))),
-      3, s"l2_codebooks[${k1}x$k2]")
-    // Distances as their own projection (the cellDistances rule: the
-    // O(k2·dim) fold must evaluate once, not in both argmin branches);
-    // small cells get null distances and never read them — the outer
-    // CaseWhen picks the otherwise branch.
-    l1.withColumn("__cd2",
-        when(col("c1").isin(oversized: _*),
-          cellDistances(col("emb"), element_at(cb2, col("c1") + 1), k2)))
-      .withColumn("cell",
-        when(col("c1").isin(oversized: _*),
-          col("c1").cast("long") * 4096L + argminCell(col("__cd2"), k2) + 1L)
-          .otherwise(col("c1").cast("long") * 4096L))
-      .drop("c1", "__cd2")
-  }
-
   /** IVFADC encode of an embedding frame under a (frozen) model: cell
     * assignment + residual PQ codes. Used by the index build AND by
     * incremental maintenance (a streaming micro-batch encodes with the
@@ -1458,27 +1313,38 @@ object SimilarityQueries {
       .withColumn("codes", pqCodes(col("res"), cbLit, model.m, model.subDim, model.nCent))
     if (model.sub.isEmpty)
       enc.select(col("vec_id"), col("label"), col("codes"), col("c1").as("cell"))
-    else {
-      val k2 = model.sub.head._2.length
-      val dim = model.coarse(0).length
-      val splitCells = model.sub.keys.toSeq.sorted
-      // One literal indexed by c1; unsplit cells carry a zero dummy
-      // that is never evaluated (CaseWhen branches evaluate lazily).
-      val cb2 = bcastModel(e.sparkSession,
-        (0 until model.nList).map(c =>
-          model.sub.get(c).map(_.map(_.toSeq).toSeq)
-            .getOrElse(Seq.fill(k2)(Seq.fill(dim)(0.0)))),
-        3, s"idx_l2_codebooks[${model.nList}x$k2]")
-      enc
-        .withColumn("__cd2",
-          when(col("c1").isin(splitCells: _*),
-            cellDistances(col("emb"), element_at(cb2, col("c1") + 1), k2)))
-        .withColumn("cell",
-          when(col("c1").isin(splitCells: _*),
-            col("c1") * 4096 + argminCell(col("__cd2"), k2) + 1)
-            .otherwise(col("c1") * 4096))
-        .select(col("vec_id"), col("label"), col("codes"), col("cell"))
-    }
+    else withSubCells(enc, model.sub, model.nList)
+      .select(col("vec_id"), col("label"), col("codes"), col("cell"))
+  }
+
+  /** The level-2 step of the two-level layout: a row whose level-1 cell
+    * `c1` is split (a key of `sub`, the [[trainSubCodebooks]] output)
+    * gets the composite cell `c1·4096 + c2 + 1`, c2 its nearest
+    * sub-centroid; a row of an unsplit cell gets `c1·4096`. Each row's
+    * sub-codebook is selected by c1 from ONE broadcast literal of
+    * `nList` entries — no join, no shuffle — where unsplit cells carry
+    * a zero dummy that is never evaluated (CaseWhen branches evaluate
+    * lazily per row). The distances are their own projection (the
+    * [[cellDistances]] rule: the O(k2·dim) fold evaluates once, not in
+    * both argmin branches).
+    */
+  private[graft] def withSubCells(l1: DataFrame, sub: Map[Int, Array[Array[Double]]],
+                                  nList: Int): DataFrame = {
+    val k2 = sub.head._2.length
+    val dim = sub.head._2.head.length
+    val splitCells = sub.keys.toSeq.sorted
+    val cb2 = bcastModel(l1.sparkSession,
+      (0 until nList).map(c =>
+        sub.get(c).map(_.map(_.toSeq).toSeq).getOrElse(Seq.fill(k2)(Seq.fill(dim)(0.0)))),
+      3, s"idx_l2_codebooks[${nList}x$k2]")
+    l1.withColumn("__cd2",
+        when(col("c1").isin(splitCells: _*),
+          cellDistances(col("emb"), element_at(cb2, col("c1") + 1), k2)))
+      .withColumn("cell",
+        when(col("c1").isin(splitCells: _*),
+          col("c1") * 4096 + argminCell(col("__cd2"), k2) + 1)
+          .otherwise(col("c1") * 4096))
+      .drop("__cd2")
   }
 
   /** The vector index as a first-class warehouse artifact (same
@@ -1541,15 +1407,18 @@ object SimilarityQueries {
     */
   private[graft] val IdxSubProbe = 8
 
-  /** Level-2 codebooks for every oversized level-1 cell, trained on a
-    * bounded per-cell content-hash sample — ALL cells sampled in ONE
-    * job (a window ranked per cell; the collect is bounded by
-    * max(MaxTrainSample, 8·k2·|oversized|) rows total), same policy as
-    * [[twoLevelCells]]. Takes the level-1 assignment `l1` (vec_id,
+  /** Level-2 codebooks for every oversized level-1 cell (more than
+    * 4×[[IdxTargetCellSize]] members — one count() aggregation),
+    * trained by per-cell Lloyd on a bounded per-cell content-hash
+    * sample (the [[sampleVectors]] policy, ranked per cell by ONE
+    * window in ONE job — the collect is bounded by
+    * max(MaxTrainSample, 8·k2·|oversized|) rows total, never one job
+    * per oversized cell). Takes the level-1 assignment `l1` (vec_id,
     * emb, c1) as input — the build path persists it once and shares it
     * with the encode, so the coarse-distance kernel never reruns here.
+    * [[withSubCells]] assigns the sub-cells.
     */
-  private def trainSubCodebooks(l1: DataFrame, model: IvfPqModel): Map[Int, Array[Array[Double]]] = {
+  private[graft] def trainSubCodebooks(l1: DataFrame): Map[Int, Array[Array[Double]]] = {
     val sizes = l1.groupBy(col("c1")).agg(count(lit(1)).as("cnt"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val oversized = sizes.filter(_._2 > 4L * IdxTargetCellSize).keys.toSeq.sorted
@@ -1594,22 +1463,12 @@ object SimilarityQueries {
       // transient cache.
       val coarseLit = bcastModel(s, model0.coarse.map(_.toSeq).toSeq, 2,
         s"build_coarse[${model0.nList}]")
-      val l1 = e
-        .withColumn("__cd", cellDistances(col("emb"), coarseLit, model0.nList))
-        .withColumn("c1", argminCell(col("__cd"), model0.nList))
-        .withColumn("__d1", element_at(col("__cd"), col("c1") + 1))
-        .withColumn("__d2", element_at(col("__cd"),
-          argminCell(col("__cd"), model0.nList, excl = Seq(col("c1"))) + 1))
-        .drop("__cd")
+      val l1 = assignWithMargin(e, coarseLit, model0.nList, "c1")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // The SOAR spill-selectivity census as a build-time scalar: one
       // aggregation over the already-persisted assignment.
-      val lowMargin = nullSafeAvg(l1
-        .agg(avg(when(col("__d2") <= lit(MarginSpillTau2) * col("__d1"), 1.0)
-          .otherwise(0.0)))
-        .head)
-      val model = model0.copy(sub = trainSubCodebooks(l1, model0),
-        lowMarginFrac = lowMargin)
+      val model = model0.copy(lowMarginFrac = lowMarginFrac(l1),
+        sub = trainSubCodebooks(l1))
       val indexed = encodeAssigned(l1.drop("__d1", "__d2"), model)
       // Within-cell vec_id sort: partition pruning on `cell` stays the
       // probe-time skip; the maintenance key probe's pushed In(vec_id)

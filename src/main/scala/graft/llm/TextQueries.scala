@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.search.SearchQueries.tokens
 
 /** Text-analysis operators for a large-scale training-data pipeline
   * (SURVEY.md §2.4): language-ID, quality scoring, token counting,
@@ -18,14 +19,12 @@ import graft.Tables
   */
 object TextQueries {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** Stopword-hit count for a language's marker-word list — the n-gram
     * heuristic core of the language classifier. Exact token equality,
     * set-free (duplicates count) so common words dominate.
     */
   private def hits(c: Column, words: Seq[String]): Column =
-    size(filter(toks(c), t => words.map(w => t === lit(w)).reduce(_ || _)))
+    size(filter(tokens(c), t => words.map(w => t === lit(w)).reduce(_ || _)))
 
   private val enWords = Seq("the", "a", "and", "of", "to")
   private val deWords = Seq("der", "die", "das", "und", "ist")
@@ -59,7 +58,7 @@ object TextQueries {
     // Per-row array slice + rejoin: codegen'd, shuffle-free, scan
     // speed at 100 TB.
     "llm_truncate_to_budget" -> ((s, dir) => {
-      val t = toks(col("text"))
+      val t = tokens(col("text"))
       Tables(s, dir, "documents").select(
         col("doc_id"),
         size(t).cast(LongType).as("n_toks"),
@@ -77,7 +76,7 @@ object TextQueries {
     // The OOV rate is exact integer ppm — oracle-checkable.
     "llm_oov_rate" -> ((s, dir) => {
       val docs = Tables.forCompute(s, dir, "documents")
-      val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("tok"))
+      val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       val vocab = tok.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("tok")).limit(10)
         .select(col("tok").as("v_tok"))
@@ -93,8 +92,8 @@ object TextQueries {
     // char/token sums (map-side partial agg → final), type-token info.
     "llm_text_stats" -> ((s, dir) => {
       Tables.forCompute(s, dir, "documents")
-        .withColumn("n_tokens", size(toks(col("text"))))
-        .withColumn("n_distinct_tokens", size(array_distinct(toks(col("text")))))
+        .withColumn("n_tokens", size(tokens(col("text"))))
+        .withColumn("n_distinct_tokens", size(array_distinct(tokens(col("text")))))
         .groupBy(col("lang"))
         .agg(
           count(lit(1)).as("n_docs"),
@@ -111,7 +110,7 @@ object TextQueries {
     // Each ratio is one integer count over one integer count (single
     // IEEE division; byte-identical across engines).
     "llm_quality_score" -> ((s, dir) => {
-      val t = toks(col("text"))
+      val t = tokens(col("text"))
       val nTok = size(t).cast(DoubleType)
       val nStop = hits(col("text"), enWords).cast(DoubleType)
       val nPunct = size(regexp_extract_all(col("text"), lit("[.,;:!?]"), lit(0))).cast(DoubleType)
@@ -142,7 +141,7 @@ object TextQueries {
     // hash-oracle-checked. Per-row codegen'd, shuffle-free: at 100 TB
     // this fuses into the ingest scan like the other per-row filters.
     "llm_gopher_rules" -> ((s, dir) => {
-      val t = toks(col("text"))
+      val t = tokens(col("text"))
       Tables.forCompute(s, dir, "documents")
         .withColumn("n_words", size(t))
         .withColumn("sum_wlen",
@@ -203,7 +202,7 @@ object TextQueries {
         lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"), lit(0)))
       Tables.forCompute(s, dir, "documents")
         .select(col("doc_id"),
-          size(toks(col("text"))).as("ws_tokens"),
+          size(tokens(col("text"))).as("ws_tokens"),
           bpe.as("bpe_tokens"))
         .orderBy(col("doc_id"))
     }),
@@ -242,7 +241,7 @@ object TextQueries {
           col("doc_id"),
           md5(lower(trim(col("text")))).as("content_fp"),
           (col("n_chars") / 100).cast(IntegerType).as("len_bucket"),
-          element_at(toks(col("text")), 1).as("first_token"))
+          element_at(tokens(col("text")), 1).as("first_token"))
         .orderBy(col("doc_id"))
     }),
 
@@ -321,7 +320,7 @@ object TextQueries {
       //    t_types), and c1 pre-joins onto c2 VOCAB-side so the
       //    positions-scale probe stream shuffles ONCE on (w1, w2)
       //    instead of once per statistic (guide §2.3/§2.4).
-      val t = toks(col("text"))
+      val t = tokens(col("text"))
       val pairs = when(size(t) >= 2,
         transform(sequence(lit(1), size(t) - 1),
           i => struct(element_at(t, i).as("w1"), element_at(t, i + 1).as("w2"))))
@@ -410,7 +409,7 @@ object TextQueries {
     "llm_keyword_extract" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val tf = Tables.forCompute(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("term"))
+        .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .groupBy(col("doc_id"), col("term"))
         .agg(count(lit(1)).as("tf"))
       val df = tf.groupBy(col("term"))
@@ -441,7 +440,7 @@ object TextQueries {
     // isn't; min-support c₂ ≥ 5 prunes the hapax tail before the
     // joins. N is the only broadcast (one row).
     "llm_collocations_pmi" -> ((s, dir) => {
-      val t = toks(col("text"))
+      val t = tokens(col("text"))
       val words = Tables.forCompute(s, dir, "documents")
         .select(explode(t).as("w"))
       // Unigram table persisted (r14): vocabulary-shaped, feeds three
@@ -518,7 +517,7 @@ object TextQueries {
       val weight = pmod(conv(substring(md5(concat(lit("w#"), col("b"))), 1, 8), 16, 10)
         .cast(LongType), lit(2001)) - 1000
       Tables.forCompute(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
+        .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
         .withColumn("b", bucket)
         .withColumn("w", weight)
         .groupBy(col("doc_id"))
@@ -540,7 +539,7 @@ object TextQueries {
     // what keeps the shuffle vocabulary-shaped rather than
     // token-stream-shaped.
     "llm_cooccurrence" -> ((s, dir) => {
-      val t = toks(col("text"))
+      val t = tokens(col("text"))
       val emptyPairs = array().cast(ArrayType(StructType(Seq(
         StructField("w1", StringType), StructField("w2", StringType)))))
       def pairsAt(d: Int) = when(size(t) > d,
@@ -574,7 +573,7 @@ object TextQueries {
       val sgn = when(pmod(conv(substring(md5(col("term")), 9, 1), 16, 10)
         .cast(LongType), lit(2L)) === 0, lit(1L)).otherwise(lit(-1L))
       Tables.forCompute(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("term"))
+        .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .withColumn("dim", dim).withColumn("sgn", sgn)
         .groupBy(col("doc_id"), col("dim"))
         .agg(sum(col("sgn")).as("w"))
@@ -592,7 +591,7 @@ object TextQueries {
     * tokens contribute no bigrams and drop out, in both engines.
     */
   private def knDocScores(s: SparkSession, dir: String): DataFrame = {
-    val t = toks(col("text"))
+    val t = tokens(col("text"))
     val pairs = when(size(t) >= 2,
       transform(sequence(lit(1), size(t) - 1),
         i => struct(element_at(t, i).as("w1"), element_at(t, i + 1).as("w2"))))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.search.SearchQueries.tokens
 
 /** Distributed WordPiece tokenizer training (Schuster & Nakajima,
   * ICASSP'12; the BERT tokenizer, and the `WordPiece` trainer of the
@@ -49,7 +50,7 @@ object WordPieceQueries {
     */
   private[graft] def wordTable(docs: DataFrame): DataFrame =
     docs
-      .select(explode(split(lower(col("text")), "\\s+")).as("word"))
+      .select(explode(tokens(col("text"))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word"))
       .agg(count(lit(1)).as("freq"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.search.SearchQueries.tokens
 
 /** Scalar/aggregate function-library breadth (SURVEY.md §2.2 "scalar
   * function library: none" — owned natively here): exact percentiles,
@@ -65,7 +66,7 @@ object FunctionSweeps {
 
     // Array function sweep over tokenized documents.
     "rel_array_funcs" -> ((s, dir) => {
-      val toks = split(lower(col("text")), "\\s+")
+      val toks = tokens(col("text"))
       Tables(s, dir, "documents")
         .select(
           col("doc_id"),

@@ -244,7 +244,7 @@ object QueryString {
     val f = df.schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
       throw new IllegalArgumentException(
         s"query_string: unknown field <$name>; have ${df.columns.mkString(", ")}"))
-    split(lower(graft.etl.Stringify.column(col(f.name), f.dataType)), "\\s+")
+    SearchQueries.tokens(graft.etl.Stringify.column(col(f.name), f.dataType))
   }
 
   /** Per-field atom predicates, null-safe (a NULL field value is a

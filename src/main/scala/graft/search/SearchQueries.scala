@@ -33,8 +33,11 @@ object SearchQueries {
       .map(f => graft.etl.Stringify.column(col(f.name), f.dataType).contains(kw))
       .reduce(_ || _)
 
-  /** Whitespace tokenizer shared by match + rank queries. */
-  private[search] def tokens(c: Column): Column = split(lower(c), "\\s+")
+  /** THE whitespace tokenizer — every token-derived operator (match and
+    * rank queries, shingles, vocab, chunking, quality ratios) shares
+    * this one definition, so their oracles can never drift apart.
+    */
+  private[graft] def tokens(c: Column): Column = split(lower(c), "\\s+")
 
   /** Welch's t statistic as ONE fixed-order arithmetic string shared
     * verbatim by both engines — `wide` is the exact integer carrier
@@ -296,8 +299,20 @@ object SearchQueries {
     // rows answers whether it is empty, which ids it carries and its
     // (doc count, token sum) — exact, as sums of integer lengths. Past
     // the push cap the ids and stats stay distributed.
-    val raw = doclenOf(batch).limit(graft.etl.IndexStore.MaxInPush + 1).collect()
-    val capped = raw.length <= graft.etl.IndexStore.MaxInPush
+    val collected = doclenOf(batch).limit(graft.etl.IndexStore.MaxInPush + 1).collect()
+    val capped = collected.length <= graft.etl.IndexStore.MaxInPush
+    // A doc the batch carries twice keeps ONE version, by the keyed
+    // upserts' last-write-wins rule ([[graft.etl.IndexStore.dedupByKey]]);
+    // otherwise both versions' postings land in the segment and the doc
+    // counts twice in the stats. Below the cap only a batch whose ids
+    // repeat pays for the dedup and its re-collect.
+    val (b, raw) =
+      if (capped && collected.map(_.getLong(0)).distinct.length == collected.length)
+        (batch, collected)
+      else {
+        val deduped = store.dedupByKey(batch, "doc_id")
+        (deduped, if (capped) doclenOf(deduped).collect() else collected)
+      }
     // An empty micro-batch (routine under foreachBatch) must not burn
     // a segment generation or write empty segment files —
     // return the current max gen untouched (if/else, not `return`:
@@ -319,7 +334,7 @@ object SearchQueries {
           .select(col("doc_id"), col("n_tokens")).collect().distinct
         (live.length.toDouble, live.filterNot(_.isNullAt(1)).map(_.getInt(1).toLong).sum.toDouble)
       } else {
-        val r = doclen.join(batch.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
+        val r = doclen.join(b.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
           .select(col("doc_id"), col("n_tokens")).distinct()
           .agg(coalesce(count(lit(1)), lit(0L)).cast(DoubleType),
             coalesce(sum(col("n_tokens")), lit(0L)).cast(DoubleType)).head
@@ -328,10 +343,10 @@ object SearchQueries {
     val (batchN, batchDl) =
       if (capped) (raw.length.toDouble,
         raw.filterNot(_.isNullAt(1)).map(_.getInt(1).toDouble).sum)
-      else corpusStatsOf(batch)
-    art.append(Seq(postingsOf(batch),
+      else corpusStatsOf(b)
+    art.append(Seq(postingsOf(b),
         if (capped) store.session.createDataFrame(java.util.Arrays.asList(raw.toSeq: _*), raw.head.schema)
-        else doclenOf(batch)), fingerprint,
+        else doclenOf(b)), fingerprint,
       Map(PostingsStatsSidecar -> statsSidecarText(
         oldN - removedN + batchN, oldDl - removedDl + batchDl)),
       oneFile = capped).toLong // the new segment's id — O(1), unlike a resolved count
@@ -424,7 +439,7 @@ object SearchQueries {
     // (ES match_phrase). Normalized-whitespace contains — tokens glued
     // with single spaces on both sides.
     "search_phrase_match" -> ((s, dir) => {
-      val normalized = concat_ws(" ", split(lower(col("text")), "\\s+"))
+      val normalized = concat_ws(" ", tokens(col("text")))
       Tables(s, dir, "documents")
         .filter(normalized.contains("the table"))
         .select(col("doc_id"), col("lang"))

@@ -298,6 +298,33 @@ class MaintenanceConcurrencySpec extends AnyFunSuite {
     assert(lock.delete())
   }
 
+  test("a keyed upsert whose lease is lost mid-batch is not certified") {
+    // The keyed upsert's commit brackets the fingerprint like a segment
+    // append, so a batch whose lease was stolen mid-commit must be
+    // refused the stamp: readers then rebuild instead of serving it.
+    val whDir = java.nio.file.Files.createTempDirectory("graft_conc_keyed").toString
+    val store = new etl.IndexStore(spark, whDir)
+    def rows(from: Long, until: Long) = {
+      import SparkTestSession.spark.implicits._
+      (from until until).map(i => (i, (i % 3).toString, s"p$i"))
+        .toDF("doc_id", "part", "payload")
+    }
+    store.bulkImportPartitioned(rows(0, 30), "kidx", "doc_id", "part")
+    assert(store.artifactFingerprint("kidx").contains("live"))
+    val lock = new java.io.File(whDir, ".lock_kidx")
+    intercept[ConcurrentModificationException] {
+      store.upsertKeyed(etl.Stringify.all(rows(100, 110)), "kidx", "doc_id", "part",
+          "live") { batch =>
+        // `layout` runs inside the lock: a second writer takes it over.
+        java.nio.file.Files.write(lock.toPath, "thief-token".getBytes("UTF-8"))
+        batch
+      }
+    }
+    assert(store.artifactFingerprint("kidx").isEmpty,
+      "a batch whose lease was lost must leave the fingerprint cleared")
+    assert(lock.delete())
+  }
+
   test("maintenance locking refuses object-store schemes (non-atomic create)") {
     intercept[IllegalArgumentException] {
       etl.IndexStore.requireLockableScheme("s3a")

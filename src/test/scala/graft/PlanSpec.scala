@@ -278,7 +278,6 @@ class PlanSpec extends AnyFunSuite {
     // above.
     val allowed = Map(
       "relational/PrefixSum.scala" -> 1,      // O(numPartitions) subtotal frame
-      "llm/SimilarityQueries.scala" -> 1,     // KMeans cell-stats table, O(cells)
       "llm/BpeQueries.scala" -> 2,            // word-TYPE table, vocabulary-bounded
                                               // (loop entry + every-4 — r14: the entry
                                               // checkpoint stops pre-rank-4 iterations

@@ -323,6 +323,29 @@ class SearchIndexSpec extends AnyFunSuite {
       s"served=${served.mkString("; ")}\nscanned=${scanned.mkString("; ")}")
   }
 
+  test("a batch carrying a doc twice upserts one version of it; n_docs stays exact") {
+    // Two updates of one doc in one micro-batch: the postings must keep
+    // one version (the keyed upserts' last-write-wins), not both.
+    val (dir, store) = builtCorpus("graft_batch_dup", 20)
+    val batch = docsDf(5, 6).withColumn("text", lit("spark spark"))
+      .unionByName(docsDf(5, 6).withColumn("text", lit("vector join row")))
+    SearchQueries.upsertPostings(store, batch)
+    docsDf(0, 5).unionByName(store.dedupByKey(batch, "doc_id")).unionByName(docsDf(6, 20))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val Array(nDocs, sumDl) = store.artifactSidecar(SearchQueries.PostingsName,
+      SearchQueries.PostingsStatsSidecar).get.split(' ').map(_.toDouble)
+    assert(nDocs == 20.0, s"stats sidecar reads $nDocs $sumDl for a 20-doc corpus")
+    val lens = SearchQueries.resolvedPostings(store).filter(col("doc_id") === 5)
+      .select(col("n_tokens")).distinct().collect()
+    assert(lens.length == 1, s"doc 5 is served with n_tokens ${lens.mkString(", ")}")
+    val served = SearchQueries.bm25FromPostings(SearchQueries.resolvedPostings(store),
+      nDocs, sumDl, Seq("spark", "vector", "join")).collect()
+    val scanned = SparkEntry.queries("search_topk_bm25")(spark, dir).collect()
+    assert(scanned.nonEmpty)
+    assert(served.map(_.toString).toSeq == scanned.map(_.toString).toSeq,
+      s"served=${served.mkString("; ")}\nscanned=${scanned.mkString("; ")}")
+  }
+
   test("building search_topk_bm25_indexed over a built artifact runs no Spark job") {
     SearchQueries.materializedPostings(spark, sf)
     val (_, built) = jobsRunBy(SparkEntry.queries("search_topk_bm25_indexed")(spark, sf))

@@ -63,6 +63,15 @@ class VecIndexSpec extends AnyFunSuite {
     val pf = pfRe.findAllMatchIn(plan).map(_.group(1)).find(_.contains("cell"))
     assert(pf.isEmpty,
       s"escalated serve must not prune cells: ${pf.getOrElse("")}")
+    // The inline IVF and IVFADC demos run the same census on their own
+    // assignment pass: escalated, their plans carry no cell filter.
+    val cellFilter = """cell#\d+ (IN|INSET) """.r
+    def inlinePlan(name: String, d: String) =
+      SparkEntry.queries(name)(spark, d).queryExecution.executedPlan.toString
+    for (name <- Seq("llm_ann_ivf_topk", "llm_ann_ivfpq_topk")) {
+      val p = inlinePlan(name, sf)
+      assert(cellFilter.findFirstIn(p).isEmpty, s"escalated $name must not filter cells:\n$p")
+    }
 
     // Clustered geometry: wide margins -> the sidecar says the probe
     // is reliable and the scan must keep genuine partition pruning.
@@ -80,6 +89,11 @@ class VecIndexSpec extends AnyFunSuite {
     assert(cpf.isDefined, s"no PartitionFilters on cell in:\n$cPlan")
     assert(cpf.get.contains(" IN ") || cpf.get.contains("cell#"),
       s"cell probe not in PartitionFilters: ${cpf.get}")
+    // The inline demos measure the same wide margin and keep the probe.
+    for (name <- Seq("llm_ann_ivf_topk", "llm_ann_ivfpq_topk")) {
+      val p = inlinePlan(name, dir)
+      assert(cellFilter.findFirstIn(p).isDefined, s"wide-margin $name must filter cells:\n$p")
+    }
     // And the pruned probe on this geometry serves the exact top-10.
     val got = cdf.collect().map(_.getLong(0)).toSeq
     val e = SimilarityQueries.embDouble(Tables(spark, dir, "embeddings"))
